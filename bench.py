@@ -162,7 +162,18 @@ HEADLINE = [
 ]
 
 
+def reclaim_enabled() -> bool:
+    """SPARK_BENCH_RECLAIM: "1" (the default) releases blocks and frame
+    memos between HEADLINE keys, "0" keeps the warm-session mode.  Any
+    other value would silently pick one of the two, so it exits."""
+    value = os.environ.get("SPARK_BENCH_RECLAIM", "1")
+    if value not in ("0", "1"):
+        raise SystemExit(f"SPARK_BENCH_RECLAIM must be '0' or '1', got {value!r}")
+    return value == "1"
+
+
 def main() -> None:
+    reclaim = reclaim_enabled()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)/?$", sf_dir)
     sf = float(m.group(1)) if m else None
@@ -221,17 +232,12 @@ def main() -> None:
         # ~2000-char tail capture and made it unparseable) is why the
         # detail is per-line rather than one big dict.
         print(json.dumps({"query": key, "sec": round(best, 4)}))
-        if os.environ.get("SPARK_BENCH_RECLAIM", "1") != "0":
-            # Deterministic block + frame-cache reclaim between HEADLINE
-            # keys — ON by default as of r17 (VERDICT r16 #4: the
-            # session frame caches let graph_*/simhash_* keys reuse
-            # checkpointed edge/signature frames a PREVIOUS key built,
-            # blurring per-key attribution). Each key's min-of-2 now
-            # pays its own frame builds; the lazy table-relation memo
-            # (metadata only, no blocks) is kept — catalog resolution,
-            # not data state. SPARK_BENCH_RECLAIM=0 restores the
-            # r12-r16 warm-session mode; BASELINE.md round-17 records
-            # the gated A/B of both modes.
+        if reclaim:
+            # Between-key release: each key pays its own checkpointed
+            # frame builds (edge lists, signatures) instead of reusing a
+            # previous key's, so per-key times attribute cleanly; the
+            # lazy table-relation memos (catalog metadata, no blocks)
+            # are kept.
             from climateiq_pipelines_spark.session import release_blocks
 
             release_blocks(spark, keep_lazy_metadata=True)

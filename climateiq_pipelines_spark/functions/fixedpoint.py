@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from climateiq_pipelines_spark.session import checkpoint
+
 _S12 = 1_000_000_000_000  # 1e12 fixed-point scale for products
 _S9 = 1_000_000_000  # 1e9 scale for centroid component means
 
@@ -178,8 +180,8 @@ def assign_nearest_centroid(emb, keep_label: bool = False):
     ``exploded`` is localCheckpointed: it feeds BOTH the centroid
     aggregate (behind a broadcast boundary AQE will not reuse a
     shuffle across) and the distance join — without the barrier the
-    64x posexplode scan executes twice per consumer.  Trade-off note
-    (round-12 review): localCheckpoint truncates lineage to
+    64x posexplode scan executes twice per consumer.  Trade-off:
+    localCheckpoint truncates lineage to
     executor-local blocks, so on a real cluster an executor loss after
     materialization fails the job instead of recomputing — the
     engine-wide policy for these barrier sites (same as
@@ -188,9 +190,9 @@ def assign_nearest_centroid(emb, keep_label: bool = False):
     ``checkpoint()`` against a checkpoint dir, same plan shape."""
     from pyspark.sql import Window as W
 
-    exploded = emb.select(
+    exploded = checkpoint(emb.select(
         "label", "vec_id", F.posexplode("embedding").alias("pos", "x")
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     centroids = exploded.groupBy(F.col("label").alias("c_label"), "pos").agg(
         fixed_mean_1e9(F.col("x")).alias("c")
     )

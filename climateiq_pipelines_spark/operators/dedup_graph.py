@@ -26,6 +26,7 @@ from climateiq_pipelines_spark.operators.llm import (
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.session import checkpoint
 
 def connected_components_propagation(
     nodes: DataFrame, edges: DataFrame, node_col: str = "doc_id"
@@ -53,20 +54,20 @@ def connected_components_propagation(
     bi = edges.select(
         F.col("a_id").alias("src"), F.col("b_id").alias("dst")
     ).union(edges.select(F.col("b_id").alias("src"), F.col("a_id").alias("dst")))
-    bi = bi.localCheckpoint(eager=True)
+    bi = checkpoint(bi, eager=True)
 
     labels = nodes.select(node_col, F.col(node_col).alias("label"))
-    labels = labels.localCheckpoint(eager=True)
+    labels = checkpoint(labels, eager=True)
     prev_sum = None
     for _ in range(32):
         prop = bi.join(labels, bi.dst == F.col(node_col)).select(
             F.col("src").alias(node_col), F.col("label")
         )
-        labels = (
+        labels = checkpoint(
             prop.union(labels)
             .groupBy(node_col)
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("label").alias("label")),
+            eager=True,
         )
         # bounded driver action: ONE scalar row off the materialized
         # checkpoint (same class as the .count() convergence probes).
@@ -118,17 +119,17 @@ def connected_components(
     # per round are LAZY: each round's convergence-stat .first() is the
     # action that materializes the round's edge set, so one job per
     # round does both, where eager=True paid a separate blocking
-    # materialization job before every stats read (measured r9 at
+    # materialization job before every stats read (measured at
     # sf0.1: 4.04 s → 3.55 s warm, 7.31 s → 4.49 s cold for the full
     # loop; answers identical).
     raw = edges.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-    e = (
+    e = checkpoint(
         raw.where(F.col("u") != F.col("v"))
         .select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     prev_stat = None
     prev_e = None
@@ -160,13 +161,13 @@ def connected_components(
         # m = min(Γ⁻(u)).  (x, m) has x ≥ m with x = m only for the
         # min itself — dropped as a self-loop.
         mins2 = e.groupBy("u").agg(F.min("v").alias("m"))
-        e = (
+        e = checkpoint(
             e.join(mins2, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(mins2.select(F.col("u"), F.col("m").alias("v")))
             .where(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=False)  # materialized by the stats job
+            .distinct(),
+            eager=False,  # materialized by the stats job
         )
         # Bounded driver action: one scalar row — this job ALSO
         # materializes the round's lazy checkpoint (see loop header).

@@ -38,6 +38,7 @@ from climateiq_pipelines_spark.functions.fixedpoint import (
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table, widen_if_narrow
+from climateiq_pipelines_spark.session import checkpoint
 
 # VERDICT r9 task #2: memoized stop-round solutions per (key, sf_dir)
 # so sweep tooling + tests can call the oracle builders repeatedly
@@ -226,14 +227,13 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # next driver action that reads it (deg by the count below,
     # edge_deg by round 0's residual job, each round's ranks by its
     # residual .first()), so no separate blocking materialization job
-    # runs per round — the dedup_graph r9 measurement (two jobs/round
-    # -> one) applied to this loop.
-    edge_deg = (
+    # runs per round (two jobs/round -> one, as in dedup_graph).
+    edge_deg = checkpoint(
         sym.join(deg, sym["u"] == deg["node"])
-        .select("u", "v", "deg")
-        .localCheckpoint(eager=False)
+        .select("u", "v", "deg"),
+        eager=False,
     )
-    deg = deg.localCheckpoint(eager=False)
+    deg = checkpoint(deg, eager=False)
     n_nodes = deg.count()
 
     ranks = deg.select("node", F.lit(_PR_R0).cast("long").alias("r"))
@@ -242,14 +242,14 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         contribs = edge_deg.join(
             ranks, edge_deg["u"] == ranks["node"]
         ).select("v", F.expr("r div deg").alias("c"))
-        new_ranks = (
+        new_ranks = checkpoint(
             contribs.groupBy(F.col("v").alias("node"))
             .agg(
                 (F.lit(_PR_BASE) + F.expr("(sum(c) * 85) div 100")).alias(
                     "r"
                 )
-            )
-            .localCheckpoint(eager=False)  # materialized by the residual job
+            ),
+            eager=False,  # materialized by the residual job
         )
         # bounded driver action: ONE scalar row off the checkpointed
         # frames (the dedup_graph convergence-probe class).
@@ -464,12 +464,12 @@ def llm_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on one core (100 TB no-op).
     emb = widen_if_narrow(spark, load_table(spark, sf_dir, "embeddings"))
     n_vecs = emb.count()
-    frame = emb.select(
+    frame = checkpoint(emb.select(
         "vec_id",
         "embedding",
         F.col("label").alias("cluster"),
         F.lit(0).cast("long").alias("dist_fp"),
-    ).localCheckpoint(eager=False)
+    ), eager=False)
 
     n_rounds = 0
     for _ in range(_KM_MAX_ROUNDS):
@@ -487,10 +487,10 @@ def llm_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         cluster_col, dist_col = lloyd_assign_cols()
         cents_row = lloyd_centroid_row(centroids)
-        new_frame = (
+        new_frame = checkpoint(
             frame.crossJoin(F.broadcast(cents_row))
-            .select("vec_id", "embedding", cluster_col, dist_col)
-            .localCheckpoint(eager=False)  # materialized by the moved count
+            .select("vec_id", "embedding", cluster_col, dist_col),
+            eager=False,  # materialized by the moved count
         )
         moved = (
             new_frame.alias("a")

@@ -36,7 +36,7 @@ from climateiq_pipelines_spark.registry import (
     parquet_first_array_len,
     widen_if_narrow,
 )
-from climateiq_pipelines_spark.session import register_frame_cache
+from climateiq_pipelines_spark.session import checkpoint, memo
 
 # ---------------------------------------------------------------- helpers
 
@@ -1065,13 +1065,12 @@ def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One (doc_id, shingle-set array, n_sh) row per doc. Checkpointed
     # because THREE consumers read it (prefix explode + both
     # verification sides) and Catalyst does not reuse the scan across
-    # differently-aliased branches (the round-9 measurement that
-    # introduced the checkpoint here); the doc-level array rows are
+    # differently-aliased branches (measured); the doc-level array rows are
     # the same bytes as the old exploded form in fewer, wider rows.
     sets = word_shingle_sets(docs, 3).select(
         "doc_id", "arr", F.size("arr").alias("n_sh")
     )
-    sized = sets.filter(F.col("n_sh") > 0).localCheckpoint()
+    sized = checkpoint(sets.filter(F.col("n_sh") > 0))
     sh = sized.select(
         "doc_id", "n_sh", F.explode("arr").alias("shingle")
     )
@@ -1194,41 +1193,28 @@ _SIMHASH_NEARDUP_ORACLE = f"""
 """
 
 
-# Signature relations memoized per (application, input plan): the
-# 60-vote aggregate is the expensive half of every simhash consumer
-# (neardup, multiprobe, dedup clustering), and all of them want the
-# IDENTICAL (doc_id, sig) frame — the graph-edge memoization
-# discipline applied to the signature build. Keyed on the input
-# DataFrame's semanticHash so a different corpus/projection can never
-# alias a cache entry.
-# Registered with session.release_blocks — see graph_ext2._EDGE_CACHE.
-_SIG_CACHE: dict[tuple[str, int], DataFrame] = register_frame_cache({})
-
-
 def _simhash60_sigs(docs: DataFrame) -> DataFrame:
     """(doc_id, sig): 60-bit md5-token simhash — 60 codegen'd
     conditional vote sums in ONE hash aggregate, sign → bit. Shared by
     llm_simhash_neardup and the dedup-cluster operator; the
-    checkpointed result is memoized per session + input plan."""
-    cache_key = (
-        docs.sparkSession.sparkContext.applicationId,
-        docs.semanticHash(),
-    )
-    cached = _SIG_CACHE.get(cache_key)
-    if cached is not None:
-        return cached
+    checkpointed result is memoized until the next release, keyed on
+    the input plan's semanticHash so a different corpus/projection can
+    never alias it."""
+    return memo("simhash60_sigs", docs.semanticHash(), lambda: _build_simhash60_sigs(docs))
+
+
+def _build_simhash60_sigs(docs: DataFrame) -> DataFrame:
     # NOT widened (registry.widen_if_narrow measured 0.39 s → 0.48 s
     # here): _tokens' distinct already shuffles before the 60-way vote
     # aggregate, so the heavy stage is parallel and a pre-explode
     # repartition only adds a shuffle.
     #
-    # r16: the 60 vote sums and the 60-term sign fold are built as SQL
+    # The 60 vote sums and the 60-term sign fold are built as SQL
     # expr strings (integer-only text — no float literal round-trip),
     # not Column chains: the chained form cost 2.12 s of py4j
     # round-trips per construction vs 0.46 s for the parsed strings
     # (measured, outputs bit-identical) — the hyperplane_sig lesson
-    # applied to the 60-bit builder. Paid once per session (the memo
-    # above), i.e. once per bench/sim wall.
+    # applied to the 60-bit builder. Paid once per memo entry.
     toks = _tokens(docs)
     h = F.conv(F.substring(F.md5("token"), 1, 15), 16, 10).cast("long")
     votes = toks.select("doc_id", h.alias("h")).groupBy("doc_id").agg(
@@ -1245,9 +1231,7 @@ def _simhash60_sigs(docs: DataFrame) -> DataFrame:
         " ELSE CAST(0 AS BIGINT) END)"
         for j in range(60)
     )
-    sigs = votes.select("doc_id", F.expr(sig_expr).alias("sig")).localCheckpoint()
-    _SIG_CACHE[cache_key] = sigs
-    return sigs
+    return checkpoint(votes.select("doc_id", F.expr(sig_expr).alias("sig")))
 
 
 def _simhash60_pairs(sigs: DataFrame, dedup: bool = True) -> DataFrame:

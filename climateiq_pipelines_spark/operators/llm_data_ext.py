@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from climateiq_pipelines_spark.functions.fixedpoint import sql_cos_micros
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.session import checkpoint, memo
 
 # Shared by the engine and both oracles: RE2-compatible patterns (the
 # lowest-common-denominator regex dialect — DuckDB is RE2; these avoid
@@ -457,16 +458,16 @@ def llm_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to at most |docs| x B before the only data-sized shuffle. Both
     # the bucket stats and the per-doc counts derive from this small
     # relation, so grams (and their md5s) are computed exactly once.
-    db = (
+    # Materialized once: the stats side feeds a BROADCAST subtree,
+    # and AQE does not reuse a shuffle exchange across that
+    # boundary (verified in the executed plan) — without this the
+    # gram scan + md5 run twice. The checkpointed relation is at
+    # most |docs| x B x 2 counted rows (dedup_graph precedent).
+    db = checkpoint(
         grams.select("doc_id", bucket.alias("bucket"), is_target.alias("t"))
         .groupBy("doc_id", "bucket", "t")
-        .agg(F.count(F.lit(1)).alias("n"))
-        # Materialized once: the stats side feeds a BROADCAST subtree,
-        # and AQE does not reuse a shuffle exchange across that
-        # boundary (verified in the executed plan) — without this the
-        # gram scan + md5 run twice. The checkpointed relation is at
-        # most |docs| x B x 2 counted rows (dedup_graph precedent).
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("n")),
+        eager=False,
     )
     stats = db.groupBy("bucket").agg(
         F.sum(F.when(F.col("t"), F.col("n")).otherwise(0)).alias("t_b"),
@@ -576,10 +577,10 @@ def llm_semdedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Second diamond: emb2 feeds the Arrow scorer AND the final join —
     # checkpoint the small per-vector assignment so the whole distance/
     # argmin subtree runs once, not once per consumer.
-    assigned = (
+    assigned = checkpoint(
         assign_nearest_centroid(emb)
-        .select("vec_id", F.col("c_label").alias("cluster"))
-        .localCheckpoint(eager=False)
+        .select("vec_id", F.col("c_label").alias("cluster")),
+        eager=False,
     )
     emb2 = emb.select("vec_id", "embedding").join(assigned, "vec_id")
     dup_counts = emb2.groupBy("cluster").applyInPandas(
@@ -763,26 +764,24 @@ def llm_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     ws = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
     words = docs.select("doc_id", F.explode(ws).alias("w"))
-    dw = (
+    # Materialized once: the vocab side feeds a broadcast subtree
+    # and AQE will not reuse a shuffle exchange across that
+    # boundary (the llm_dsir_weights precedent) — without this the
+    # word explode runs twice.
+    dw = checkpoint(
         words.groupBy("doc_id", "w")
-        .agg(F.count(F.lit(1)).alias("n"))
-        # Materialized once: the vocab side feeds a broadcast subtree
-        # and AQE will not reuse a shuffle exchange across that
-        # boundary (the llm_dsir_weights precedent) — without this the
-        # word explode runs twice.
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("n")),
+        eager=False,
     )
     vocab = dw.groupBy("w").agg(F.sum("n").alias("cnt"))
     # Vocabulary grows with the corpus (Heaps ~n^0.5), so the broadcast
-    # is gated on the measured vocab size (round-12 review: the hint
+    # is gated on the measured vocab size (the hint
     # bypasses autoBroadcastJoinThreshold, and an ungated broadcast of
     # a 100 TB corpus's vocab pins hundreds of MB per executor); above
     # the bound the join shuffles on w — the standard plan.  The count
-    # is memoized per (session, sf_dir) so repeated evaluations skip
-    # the probe action (VERDICT r12 #4 — the gate stays).
-    from climateiq_pipelines_spark.session import gate_count
-
-    if gate_count(vocab, spark, sf_dir, "unigram_vocab") <= 2_000_000:
+    # is memoized until the next release, so repeated calls skip the
+    # probe action.
+    if memo("gate:unigram_vocab", sf_dir, vocab.count) <= 2_000_000:
         vocab = F.broadcast(vocab)
     bits = F.length(F.bin(F.col("cnt")))
     return (

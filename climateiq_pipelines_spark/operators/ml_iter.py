@@ -28,6 +28,7 @@ from climateiq_pipelines_spark.functions.fixedpoint import (
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table, widen_if_narrow
+from climateiq_pipelines_spark.session import checkpoint
 
 _N_ITER = 3
 
@@ -282,10 +283,10 @@ def llm_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Four aggregate consumers (codebook, lut, centroids, cell_dists)
     # read this 64x explode, each behind a broadcast boundary AQE will
     # not reuse a shuffle across — without the barrier the scan ran ~4
-    # times (round-12 review; the assign_nearest_centroid rule).
-    exploded = emb.select(
+    # times (the assign_nearest_centroid rule).
+    exploded = checkpoint(emb.select(
         "vec_id", "label", F.posexplode("embedding").alias("pos", "x")
-    ).localCheckpoint(eager=False)
+    ), eager=False)
     sub = exploded.withColumn("subspace", (F.col("pos") / 8).cast("int"))
     codebook = sub.groupBy(
         F.col("label").alias("code"), "subspace", "pos"

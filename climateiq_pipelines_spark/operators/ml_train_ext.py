@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.session import checkpoint
 
 _N_BUCKETS = 8  # hashed token-count buckets (features x1..x8; x0 = bias)
 _N_FEATS = _N_BUCKETS + 1
@@ -179,17 +180,16 @@ def llm_perceptron_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("y")
     )
-    feat = (
+    # Lazy: round 0's gradient .first() is the materializing job (one
+    # job per round); re-read every round, never re-tokenized.
+    feat = checkpoint(
         toks.select("doc_id", nib.alias("b"))
         .groupBy("doc_id")
         .agg(*xs[1:])
         .select(
             "doc_id", xs[0], *[f"x{j + 1}" for j in range(_N_BUCKETS)], y_col
-        )
-        # Lazy: round 0's gradient .first() is the materializing job
-        # (the r9 one-job-per-round discipline); re-read every round,
-        # never re-tokenized.
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     # Per-round all-reduce, folded (r17): ONE LINEAR chain of 1-row
     # states — round r's gradient aggregate consumes

@@ -201,10 +201,9 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from climateiq_pipelines_spark.session import register_temp_view
 
     token = uuid.uuid4().hex[:12]
-    # Registered for post-consumption reclaim (round-13 review batch F:
-    # the per-call uuid names defeated replace-reuse AND bypassed the
-    # batch-C SESSION_TEMP_VIEWS discipline — 2 dead catalog entries
-    # per evaluation for the session lifetime).
+    # Registered so the next release drops them: unregistered per-call
+    # names would leave 2 dead catalog entries per evaluation for the
+    # session lifetime.
     cust_v = register_temp_view(f"cps_q22_cust_{token}")
     ord_v = register_temp_view(f"cps_q22_ord_{token}")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView(cust_v)

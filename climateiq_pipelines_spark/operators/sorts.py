@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from climateiq_pipelines_spark.functions.helpers import REVENUE, revenue_col
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.session import checkpoint
 
 
 @register(
@@ -133,19 +134,18 @@ def sort_multikey_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.desc_nulls_last("open_price"),
         F.asc("o_orderkey"),
     ]
-    # localCheckpoint pins ONE evaluation of the sampled range
+    # The checkpoint pins ONE evaluation of the sampled range
     # boundaries + pid assignment: the rank branch and the offset
     # branch below would otherwise each execute their own range
     # exchange (Catalyst only ReuseExchanges IDENTICAL subtrees, and
     # column pruning can make them differ), and range boundaries are
     # SAMPLED per exchange — two independent samples give two
-    # different pid maps, i.e. a nondeterministically wrong rank (the
-    # r7 stream_watermark_late bug, measured). Ranks remain
+    # different pid maps, i.e. a nondeterministically wrong rank
+    # (measured). Ranks remain
     # boundary-independent; they are not evaluation-mismatch-proof.
-    ranged = (
+    ranged = checkpoint(
         orders.repartitionByRange(n_parts, *keys)
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     wp = W.partitionBy("pid").orderBy(*keys)
     local = ranged.withColumn("local_rank", F.row_number().over(wp))

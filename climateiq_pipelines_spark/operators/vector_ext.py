@@ -29,6 +29,7 @@ from climateiq_pipelines_spark.operators.llm import (
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.session import checkpoint
 
 
 def _multiprobe_oracle() -> str:
@@ -310,7 +311,7 @@ def llm_winnow_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BASELINE.md round-10), which is exactly the cost the docstring's
     # 100 TB stoplist note is about. The checkpoint still removes 2-3
     # executions of the fingerprint lineage at any scale.
-    sized = selected.join(sizes, "doc_id").localCheckpoint()
+    sized = checkpoint(selected.join(sizes, "doc_id"))
     a = sized.select(
         F.col("doc_id").alias("a_id"), "sel", F.col("n_sel").alias("a_sel")
     )

@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from climateiq_pipelines_spark.session import memo
+
 TABLES: tuple[str, ...] = (
     "region",
     "nation",
@@ -148,30 +150,6 @@ def _assert_schema(name: str, df: DataFrame, expected_schema: T.StructType) -> N
         )
 
 
-# Resolved-relation memo keyed by (Spark app id, sf_dir, table): the
-# r16 optimization round measured EVERY load_table call at ~0.1 s warm
-# — driver-side file listing + parquet footer schema read + the registry
-# schema assert — repeated on every call of every operator (q8 alone
-# resolves 8 relations per run; the 91-key bench pass pays hundreds of
-# calls). The memoized value is the LAZY relation plan (no data, no
-# blocks — nothing is materialized or reused across runs; every action
-# still scans the parquet), i.e. exactly what a catalog-backed
-# `spark.table(name)` gives for free: one metadata resolution per
-# session. Keyed by application id so a fresh session (the driver's own
-# sessions, driver_sim's per-config sessions) re-resolves; fixture dirs
-# are immutable within a session (the _FOOTER_NTZ_MEMO precedent — and
-# every test fixture dir is a written-once mktemp). Registered with
-# session.release_blocks via register_frame_cache: the entries are lazy
-# scans (no pinned blocks), but harness-level reclaim clearing them is
-# harmless — the next call re-resolves ~0.1 s of metadata — and keeps
-# the cache inside the reclaim discipline the meta-test enforces.
-from climateiq_pipelines_spark.session import register_frame_cache
-
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = register_frame_cache(
-    {}, materialized=False
-)
-
-
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, assert_schema: bool = True
 ) -> DataFrame:
@@ -179,63 +157,60 @@ def load_table(
     the pinned registry entry (loud failure on fixture drift). Filters and
     projections applied by callers are pushed into the parquet scan by
     Catalyst (predicate pushdown + column pruning) — callers should
-    filter/select as early as possible. The resolved relation (a lazy
-    plan) is memoized per (application, sf_dir, table) — see _TABLE_MEMO."""
+    filter/select as early as possible.
+
+    The resolved relation is a lazy plan (no data, no blocks: every
+    action still scans the parquet), memoized per session, sf_dir and
+    table — what a catalog-backed `spark.table(name)` gives for free,
+    instead of ~0.1 s of file listing + footer read + schema assert on
+    every call. Fixture dirs are immutable within a session, so the
+    memo is lazy and survives the between-key release."""
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    memo_key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_MEMO.get(memo_key)
-    if cached is not None:
-        if name == "events" and spark.conf.get(NANOS_CONF, "false") != "true":
-            # Belt-and-braces kept from the pre-memo body: a driver-owned
-            # session could reset the conf between calls; the relation
-            # resolution itself is immutable but later events reads are
-            # not, so re-pin it.
-            spark.conf.set(NANOS_CONF, "true")
-        return cached
-    if name == "events":
-        # The events fixture has shipped in two layouts across driver
-        # generations; the parquet footer is authoritative and we branch
-        # on it:
-        #   (a) micros TIMESTAMP — footer reads ts: TimestampNTZType;
-        #       already the registry type, return as-is.
-        #   (b) TIMESTAMP(NANOS) — Spark's vectorized reader rejects it
-        #       natively; read the physical INT64 (nanosAsLong is a
-        #       runtime SQL conf) and truncate to microseconds exactly as
-        #       the DuckDB oracle does (ns div 1000), yielding
-        #       timestamp_ntz. timestampadd on an NTZ literal stays NTZ
-        #       and never consults the session timezone, so this is
-        #       correct under any caller session.
-        #
+    if name == "events" and spark.conf.get(NANOS_CONF, "false") != "true":
         # The nanos conf is also declared in session.get_spark; it must
-        # additionally be ensured here because the driver calls queries()
-        # with its OWN session that never went through our factory. The
-        # set is idempotent (always "true", never varies) and is
-        # harmless for layout (a).
-        if spark.conf.get(NANOS_CONF, "false") != "true":
-            spark.conf.set(NANOS_CONF, "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        if isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
-            if assert_schema:
-                _assert_schema(name, df, SCHEMAS[name])
-            _TABLE_MEMO[memo_key] = df
-            return df
-        if assert_schema:
-            _assert_schema(name, df, RAW_EVENTS_SCHEMA)
-        df = df.withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, ts div 1000, "
-                "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ),
-        )
-        _TABLE_MEMO[memo_key] = df
-        return df
+        # additionally be ensured here, memo hit or not, because the
+        # driver calls queries() with its OWN session, which may never
+        # have gone through our factory or may reset the conf between
+        # calls. The set is idempotent and harmless for layout (a) below.
+        spark.conf.set(NANOS_CONF, "true")
+    return memo(
+        "table",
+        (sf_dir, name),
+        lambda: _resolve_table(spark, sf_dir, name, assert_schema),
+        lazy=True,
+    )
+
+
+def _resolve_table(
+    spark: SparkSession, sf_dir: str, name: str, assert_schema: bool
+) -> DataFrame:
     df = spark.read.parquet(table_path(sf_dir, name))
+    if name != "events" or isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
+        if assert_schema:
+            _assert_schema(name, df, SCHEMAS[name])
+        return df
+    # The events fixture has shipped in two layouts across driver
+    # generations; the parquet footer is authoritative and we branch on
+    # it:
+    #   (a) micros TIMESTAMP — footer reads ts: TimestampNTZType;
+    #       already the registry type, returned above as-is.
+    #   (b) TIMESTAMP(NANOS) — Spark's vectorized reader rejects it
+    #       natively; read the physical INT64 (nanosAsLong is a runtime
+    #       SQL conf) and truncate to microseconds exactly as the DuckDB
+    #       oracle does (ns div 1000), yielding timestamp_ntz.
+    #       timestampadd on an NTZ literal stays NTZ and never consults
+    #       the session timezone, so this is correct under any caller
+    #       session.
     if assert_schema:
-        _assert_schema(name, df, SCHEMAS[name])
-    _TABLE_MEMO[memo_key] = df
-    return df
+        _assert_schema(name, df, RAW_EVENTS_SCHEMA)
+    return df.withColumn(
+        "ts",
+        F.expr(
+            "timestampadd(MICROSECOND, ts div 1000, "
+            "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+        ),
+    )
 
 
 def widen_if_narrow(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -258,13 +233,6 @@ def widen_if_narrow(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
-# Footer-probe memo keyed by (Spark app id, sf_dir): the fixture layout
-# is immutable within a session, so one metadata read per (session, dir)
-# suffices — several streaming keys in one bench/driver session
-# previously re-probed per call (ADVICE r5).
-_FOOTER_NTZ_MEMO: dict[tuple[str, str], bool] = {}
-
-
 def _events_footer_is_ntz(spark: SparkSession, sf_dir: str) -> bool:
     """Probe the events parquet footer (metadata-only batch read) and
     report which fixture layout is on disk: True for micros TIMESTAMP
@@ -273,35 +241,35 @@ def _events_footer_is_ntz(spark: SparkSession, sf_dir: str) -> bool:
     user-declared schema, so every streaming caller MUST branch on this
     — a nanos fixture silently read under the ntz schema (or vice versa)
     yields 1000x-collapsed timestamps, which no row-count check catches.
-    Memoized per (application id, sf_dir); the NANOS conf re-set stays
-    unconditional because the driver may hand us a fresh session config
-    with a stale memo entry never can (app id changes with the session).
+    The layout is immutable within a session, so the probe is a lazy
+    memo per sf_dir; the NANOS conf re-set stays unconditional because
+    the driver may hand us a session whose conf was never set.
     """
     if spark.conf.get(NANOS_CONF, "false") != "true":
         spark.conf.set(NANOS_CONF, "true")
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    if memo_key not in _FOOTER_NTZ_MEMO:
-        footer = spark.read.parquet(table_path(sf_dir, "events")).schema
-        _FOOTER_NTZ_MEMO[memo_key] = isinstance(
-            footer["ts"].dataType, T.TimestampNTZType
-        )
-    return _FOOTER_NTZ_MEMO[memo_key]
+    return memo(
+        "events_footer_ntz",
+        sf_dir,
+        lambda: isinstance(
+            spark.read.parquet(table_path(sf_dir, "events")).schema["ts"].dataType,
+            T.TimestampNTZType,
+        ),
+        lazy=True,
+    )
 
 
 def parquet_first_array_len(
     sf_dir: str, name: str, column: str
 ) -> int | None:
     """Driver-side peek at the length of ``column``'s first non-null
-    array value — a bounded parquet read of one column of the first
-    row group, NO Spark job (the _FOOTER_NTZ_MEMO precedent: fixture
-    metadata is read driver-side where a Spark action would cost a
-    whole job). Used by the block-NL preludes to learn the embedding
-    dim without the old ``take(1)`` probe job (VERDICT r16 #5).
-    Returns None when the file is missing/unreadable/empty so callers
-    can fall back to the probe job; the first parquet row is the same
-    row ``take(1)`` reads on these single-file fixtures (and the dim
-    is a fixture-wide constant — the bound formula only needs A
-    representative dim, same as the old first-row probe)."""
+    array value: a parquet read of that one column, scanning forward
+    from the first row, with NO Spark job (fixture metadata is read
+    driver-side where a Spark action would cost a whole job). Used by
+    the block-NL preludes to learn the embedding dim without a
+    ``take(1)`` probe job; the dim is a fixture-wide constant, so any
+    non-null value is representative. Returns None when the file is
+    missing/unreadable or the column holds no non-null value, so
+    callers can fall back to the probe job."""
     import os as _os
 
     path = table_path(sf_dir, name)
@@ -311,11 +279,11 @@ def parquet_first_array_len(
         import pyarrow.dataset as _ds
 
         for batch in _ds.dataset(path, format="parquet").to_batches(
-            columns=[column], batch_size=1
+            columns=[column], batch_size=1024
         ):
-            if batch.num_rows:
-                v = batch.column(0)[0].as_py()
-                return len(v) if v is not None else None
+            values = batch.column(0).drop_null()
+            if len(values):
+                return len(values[0].as_py())
         return None
     except Exception:  # noqa: BLE001 — fall back to the Spark probe
         return None

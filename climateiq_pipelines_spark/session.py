@@ -1,4 +1,4 @@
-"""SparkSession factory.
+"""SparkSession factory and the session scope.
 
 Single shared session per process: BASELINE.md shows session startup
 (~4.3 s) dominates per-query time (~0.5 s warm) at bench scale, so every
@@ -13,13 +13,47 @@ Scale notes (100 TB target, local[N] test harness):
   a fixed partition count.
 - Arrow enabled so the few Pandas-UDF operators (SURVEY §2.11) move
   columnar batches, not pickled rows.
+
+The session scope
+-----------------
+This module is the only owner of state the engine keeps between calls
+on one session: memoized values (``memo``), the record that checkpoint
+blocks exist (``checkpoint``), temp dirs (``new_temp_dir``), catalog
+tables (``register_temp_table``) and memory-sink views
+(``register_temp_view``).  ``release_blocks`` frees them.  Its rules:
+
+1. Release only after the result is consumed.  Operators return lazy
+   frames that read checkpoint blocks and temp dirs, so a frame built
+   before a release and acted on after it fails.  Harnesses release
+   after ``toPandas``/``collect``, never between build and action.
+2. ``release_blocks(spark, keep_lazy_metadata=True)`` keeps the
+   ``lazy=True`` memos and nothing else.  A lazy memo holds a plan or a
+   scalar that pins no blocks and reads no temp dir (resolved table
+   relations, footer probes); its build may not call ``checkpoint``,
+   so no memo that survives a release can hold a frame whose blocks
+   that release unpersisted (the CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
+   class).  Eager memos, tables, views and temp dirs are all freed.
+3. The JVM sweep (unpersist every persistent RDD, clear the cache
+   manager) runs on every full release.  A keep-metadata release runs
+   it only when ``checkpoint`` was called since the last release, and
+   one on an empty scope makes no py4j call.
+4. The scope resets when the active SparkContext changes, compared with
+   ``is`` (no JVM call): memos, tables, views and the checkpoint record
+   of a stopped context are dropped.  Temp dirs are files, not context
+   state: they stay in ``SESSION_TEMP_DIRS`` until the next release or
+   process exit.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+from typing import Any, Callable
 
-from pyspark.sql import SparkSession
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -53,147 +87,93 @@ def get_spark(
     return spark
 
 
-# Module-level caches of CHECKPOINTED DataFrames (the session-memoized
-# derived frames: graph edge lists, simhash signature relations).
-# Registered here so release_blocks can drop the Python handles before
-# unpersisting — a cached DataFrame whose checkpoint blocks were
-# unpersisted is poison (lineage is truncated, so any reuse dies with
-# CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; measured on llm_dedup_clusters /
-# graph_label_propagation in the first round-12 reclaim sweep).  The
-# caches rebuild on next use — trading the ~2.5 s warm-reuse per
-# dependent key for deterministic reclaim.
-SESSION_FRAME_CACHES: list[dict] = []
+class _Scope:
+    """Per-SparkContext state; see the module docstring for its rules."""
 
-# Caches whose entries are LAZY plans only (no checkpoint blocks, no
-# materialized state — e.g. registry._TABLE_MEMO's resolved relations).
-# They are still cleared by a full release_blocks (the long-lived-
-# session hygiene the meta-test pins), but a caller reclaiming purely
-# for PER-KEY TIMING ATTRIBUTION (bench.py, VERDICT r16 #4) may keep
-# them: re-resolving table metadata is catalog work every key would
-# share on a real deployment, not a frame one key built for another.
-LAZY_METADATA_CACHES: list[dict] = []
+    def __init__(self) -> None:
+        self.reset(None)
+
+    def reset(self, sc: SparkContext | None) -> None:
+        self.sc = sc
+        # name -> {key: value}.  An eager memo keeps only its latest key,
+        # so a sweep over several sf_dirs pins one value per name.
+        self.memos: dict[str, dict[Any, Any]] = {}
+        self.lazy_memos: dict[str, dict[Any, Any]] = {}
+        self.checkpoints = 0  # checkpoint() calls since the last sweep
+        self.tables: list[str] = []
+        self.views: list[str] = []
 
 
-def register_frame_cache(cache: dict, *, materialized: bool = True) -> dict:
-    """Register a module-level {key: DataFrame} cache holding
-    checkpointed frames; release_blocks clears every registered cache
-    before unpersisting so no stale checkpoint handle survives.
-    ``materialized=False`` marks a cache holding only lazy plans (no
-    blocks) that release_blocks(keep_lazy_metadata=True) may retain."""
-    SESSION_FRAME_CACHES.append(cache)
-    if not materialized:
-        LAZY_METADATA_CACHES.append(cache)
-    return cache
+_SCOPE = _Scope()
 
-
-# Temp-dir registry (round-12 code review): scan/sink/txn operators
-# materialize fixture slices under tempfile.mkdtemp and RETURN a lazy
-# DataFrame that reads those files, so the operator itself can never
-# delete its directory — the caller consumes the result after the call
-# returns.  Without reclaim, every run of the 12 mkdtemp-using keys
-# leaks full parquet copies into /tmp for the life of the host (the
-# txn keys alone write ~6 file groups per call).  Operators register
-# their roots here; release_blocks purges them AFTER the harness has
-# consumed the key's result (the same lifecycle as checkpoint blocks),
-# and an atexit hook covers sessions that never reclaim (bench.py's
-# warm-session protocol, the external driver).
+# Temp roots of every context; perfbench reads this list live.
 SESSION_TEMP_DIRS: list[str] = []
 
 
-def register_temp_dir(path: str) -> str:
-    """Register a mkdtemp root for deterministic post-consumption
-    cleanup; returns the path unchanged so call sites stay one line."""
+def _scope(sc: SparkContext | None = None) -> _Scope:
+    if sc is None:
+        sc = SparkContext._active_spark_context
+    if sc is not _SCOPE.sc:
+        _SCOPE.reset(sc)
+    return _SCOPE
+
+
+def memo(name: str, key: Any, build: Callable[[], Any], *, lazy: bool = False) -> Any:
+    """``build()``'s value, computed once per (name, key) in this scope.
+    An eager memo holds one key per name and is freed by every release;
+    a ``lazy=True`` memo holds every key and survives a keep-metadata
+    release, so its build must not checkpoint."""
+    s = _scope()
+    entries = (s.lazy_memos if lazy else s.memos).setdefault(name, {})
+    if key in entries:
+        return entries[key]
+    n = s.checkpoints
+    value = build()
+    if lazy and s.checkpoints != n:
+        raise RuntimeError(f"lazy memo {name!r} built a checkpoint; use lazy=False")
+    if not lazy:
+        entries.clear()
+    entries[key] = value
+    return value
+
+
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, recorded so the next release
+    unpersists its blocks.  The blocks live until that release, so the
+    returned frame may be part of the operator's result."""
+    _scope(df.sparkSession.sparkContext).checkpoints += 1
+    return df.localCheckpoint(eager)
+
+
+def new_temp_dir(tag: str) -> str:
+    """Create a scratch dir the next release deletes: operators that
+    materialize files return lazy frames reading them, so only the
+    harness knows when the dir is dead.  The prefix is always
+    ``cps_{tag}_`` so every root can be attributed."""
+    path = tempfile.mkdtemp(prefix=f"cps_{tag}_")
     SESSION_TEMP_DIRS.append(path)
     return path
 
 
-def new_temp_dir(tag: str) -> str:
-    """Create AND register a session temp dir in one call (round-13
-    review batch B's recorded deferral): ``new_temp_dir("csv")`` is the
-    only sanctioned way an operator materializes scratch files — the
-    raw ``register_temp_dir(tempfile.mkdtemp(...))`` two-step left each
-    call site one forgotten wrap away from a /tmp leak.  The prefix is
-    always ``cps_{tag}_`` so purge audits can attribute every root."""
-    import tempfile
-
-    return register_temp_dir(tempfile.mkdtemp(prefix=f"cps_{tag}_"))
-
-
-# Broadcast-gate count memo (VERDICT r12 task #4): the round-12
-# measured-payload broadcast gates (graph adjacency / LPA labels /
-# unigram vocab) each cost one count() action per evaluation — ~0.3 s
-# across the bench's repeated HEADLINE runs.  The counted relations are
-# deterministic per (application, sf_dir) — fixture-derived, built from
-# already-checkpointed bases — so the scalar is memoized and repeated
-# evaluations skip the probe.  The GATES themselves stay: at 100 TB the
-# count is what stops a multi-hundred-MB relation from being pinned on
-# every executor (F.broadcast bypasses autoBroadcastJoinThreshold).
-# Values are plain ints (no filesystem or block state), but
-# release_blocks still CLEARS the memo (round-13 self-review): a
-# session that swaps the data behind an sf_dir must never gate a
-# broadcast on a stale count, and re-deriving the scalar costs one
-# aggregate per gate site per evaluation.  r17: bench.py now reclaims
-# between HEADLINE keys by default (VERDICT r16 #4), so each key's
-# min-of-2 re-derives its own gate counts — part of that key's work.
-_GATE_COUNT_MEMO: dict[tuple[str, str, str], int] = {}
-
-
-def gate_count(df, spark: SparkSession, sf_dir: str, site: str) -> int:
-    """Memoized df.count() for broadcast-payload gates.  ``site`` names
-    the gate (one relation per site), so the memo key is
-    (applicationId, sf_dir, site) — per-session, per-scale, never
-    shared across fixtures."""
-    key = (spark.sparkContext.applicationId, sf_dir, site)
-    n = _GATE_COUNT_MEMO.get(key)
-    if n is None:
-        n = df.count()
-        _GATE_COUNT_MEMO[key] = n
-    return n
-
-
-# Catalog-table registry (ADVICE r12): join_bucketed_colocated
-# saveAsTable's two per-invocation EXTERNAL tables whose backing files
-# live in a registered temp dir — purge_temp_dirs reclaims the files,
-# but the catalog entries survived, so a warm session accumulated
-# unbounded metastore rows pointing at deleted paths.  Same lifecycle
-# as the dirs: registered by the operator, dropped by release_blocks
-# after the key's result is consumed.
-SESSION_TEMP_TABLES: list[str] = []
-
-
 def register_temp_table(name: str) -> str:
-    """Register a saveAsTable name for deterministic post-consumption
-    DROP; returns the name unchanged so call sites stay one line."""
-    SESSION_TEMP_TABLES.append(name)
+    """Register a saveAsTable name the next release drops; its files
+    live in a temp dir, so a kept entry would point at a deleted path.
+    Returns the name unchanged."""
+    _scope().tables.append(name)
     return name
 
 
-# Memory-sink temp views (round-13 review batch C): the streaming demo
-# keys run availableNow queries into uniquely-named MEMORY sinks whose
-# full result rows live in driver memory behind a temp view for the
-# session lifetime — a warm many-key session accumulated 4 new views
-# per sweep, and stream_stream_join_demo's sink holds a data-sized
-# join result.  Same lifecycle as the dirs/tables: registered by the
-# operator, dropped by release_blocks after the key's result is
-# consumed.
-SESSION_TEMP_VIEWS: list[str] = []
-
-
 def register_temp_view(name: str) -> str:
-    """Register a memory-sink temp view for deterministic
-    post-consumption dropTempView; returns the name unchanged."""
-    SESSION_TEMP_VIEWS.append(name)
+    """Register a memory-sink temp view the next release drops; the
+    view holds its result rows in driver memory.  Returns the name
+    unchanged."""
+    _scope().views.append(name)
     return name
 
 
 def purge_temp_dirs() -> int:
     """Remove every registered temp root; returns how many were
-    purged.  Safe to call at any point where no live DataFrame still
-    reads from the registered dirs — i.e. after the current unit's
-    result is fully consumed (toPandas/collect), never between
-    building a frame and acting on it."""
-    import shutil
-
+    purged.  Only safe once no live frame reads them (rule 1)."""
     n = 0
     while SESSION_TEMP_DIRS:
         shutil.rmtree(SESSION_TEMP_DIRS.pop(), ignore_errors=True)
@@ -201,91 +181,52 @@ def purge_temp_dirs() -> int:
     return n
 
 
-import atexit as _atexit  # noqa: E402  (registry must exist first)
+# Sessions that never release (the external driver) still leave no dirs.
+atexit.register(purge_temp_dirs)
 
-_atexit.register(purge_temp_dirs)
+
+def _drop_each(names: list[str], drop: Callable[[str], Any]) -> None:
+    """Drop every name; one whose drop raised stays for the next release,
+    and the rest of the release still runs."""
+    failed = []
+    while names:
+        name = names.pop()
+        try:
+            drop(name)
+        except Exception:  # noqa: BLE001 — dead JVM; retry next release
+            failed.append(name)
+    names.extend(failed)
 
 
 def release_blocks(spark: SparkSession, *, keep_lazy_metadata: bool = False) -> int:
-    """Unpersist every persistent RDD and cached relation; returns how
-    many RDDs were released.
+    """Free what the scope holds; returns how many persistent RDDs were
+    unpersisted.  Call only after the unit's result is consumed.
 
-    ``keep_lazy_metadata=True`` (bench.py's between-key reclaim,
-    VERDICT r16 #4) retains caches registered with
-    ``materialized=False`` — lazy resolved-relation memos with no
-    blocks — while still clearing every checkpointed frame cache, all
-    persistent RDDs, the gate-count memo, temp dirs/tables/views.
-
-    Several operators localCheckpoint a relation they RETURN (diamond
-    reuse, fixpoint bases, optimization barriers) — the checkpoint must
-    outlive the call, so the operator itself cannot unpersist it.  The
-    blocks are reclaimed lazily by the ContextCleaner when the RDD is
-    garbage-collected, but a HARNESS that runs hundreds of keys in one
-    session (parity_sweep, driver_sim — or any long-lived production
-    session at 100 TB) should reclaim deterministically between units
-    of work: round-12 measured the leak making sweep timings
-    ORDER-DEPENDENT (llm_ann_recall_eval 13.4 s in r11's key order vs
-    40.5 s in r12's, on a quiet host, code untouched; 17.4 s cold /
-    3.5 s warm in a fresh session).  Call AFTER the unit's result is
-    fully consumed (e.g. toPandas) — never between building a
-    DataFrame and collecting it.
+    A full release also clears the lazy memos and always runs the JVM
+    sweep, so it reclaims blocks persisted outside ``checkpoint`` too.
+    ``keep_lazy_metadata=True`` is the between-key release: it keeps the
+    lazy memos and sweeps only if ``checkpoint`` ran since the last
+    release.  Deterministic reclaim keeps a long session's per-key
+    timing independent of key order: blocks left to the ContextCleaner
+    made one key 13.4 s in one sweep order and 40.5 s in another.
     """
-    for cache in SESSION_FRAME_CACHES:
-        if keep_lazy_metadata and any(cache is c for c in LAZY_METADATA_CACHES):
-            continue
-        cache.clear()
-    sc = spark.sparkContext
+    s = _scope(spark.sparkContext)
+    # Memos first: no handle to a checkpoint survives its blocks.
+    s.memos.clear()
+    if not keep_lazy_metadata:
+        s.lazy_memos.clear()
     released = 0
-    # JavaSparkContext.getPersistentRDDs returns a java.util.Map whose
-    # values are JavaRDDs; py4j exposes it dict-like.  Snapshot before
-    # iterating: unpersist mutates the underlying map.
-    # blocking=False: the JavaRDD overload defaults to a BLOCKING
-    # unpersist (waits for every block-removal ack), measured ~0.2 s
-    # per release_blocks call across a 232-key sweep (~46 s of pure
-    # wait).  Async removal is fine here — the next key never reuses
-    # these blocks (that is the point), and the BlockManager frees
-    # them in the background.
-    jmap = sc._jsc.getPersistentRDDs()
-    for jrdd in list(jmap.values()):
-        jrdd.unpersist(False)
-        released += 1
-    spark.catalog.clearCache()
-    # Registered catalog tables are metadata-only by now (external
-    # tables whose files the next line reclaims) — drop them so a warm
-    # many-key session's catalog stays bounded (ADVICE r12).
-    # Best-effort per table (round-13 self-review): a py4j/analysis
-    # failure mid-loop must neither lose the popped name (it goes back
-    # in the registry for the next reclaim) nor abort the rest of this
-    # function — the temp-dir purge below must run regardless.
-    drop_failed: list[str] = []
-    while SESSION_TEMP_TABLES:
-        name = SESSION_TEMP_TABLES.pop()
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-        except Exception:  # noqa: BLE001 — dead JVM; retry next reclaim
-            drop_failed.append(name)
-    SESSION_TEMP_TABLES.extend(drop_failed)
-    # Memory-sink views follow the same discipline: their driver-held
-    # result rows are only reclaimable once the catalog reference is
-    # dropped (round-13 review batch C).
-    view_failed: list[str] = []
-    while SESSION_TEMP_VIEWS:
-        name = SESSION_TEMP_VIEWS.pop()
-        try:
-            spark.catalog.dropTempView(name)
-        except Exception:  # noqa: BLE001 — dead JVM; retry next reclaim
-            view_failed.append(name)
-    SESSION_TEMP_VIEWS.extend(view_failed)
-    # Gate-count memo: cleared on reclaim like the frame caches — the
-    # scalars are cheap to re-derive (one aggregate per gate site per
-    # evaluation, the pre-memo behavior correctness sweeps always had),
-    # and a long-lived session that swaps the data behind an sf_dir
-    # must never broadcast on a stale count (round-13 self-review).
-    # bench.py does not reclaim, so the warm-run saving the memo exists
-    # for is untouched.
-    _GATE_COUNT_MEMO.clear()
-    # Temp roots follow the same lifecycle as checkpoint blocks: the
-    # harness calls release_blocks only after the key's result is fully
-    # consumed, at which point no live plan reads the registered dirs.
+    if s.checkpoints or not keep_lazy_metadata:
+        # Snapshot the java.util.Map before unpersisting mutates it.
+        # blocking=False: a blocking unpersist waits for every removal
+        # ack (~0.2 s per release); nothing reads these blocks again.
+        for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+            jrdd.unpersist(False)
+            released += 1
+        spark.catalog.clearCache()
+        s.checkpoints = 0
+    # Tables before dirs: a table's files live in a registered temp dir.
+    _drop_each(s.tables, lambda name: spark.sql(f"DROP TABLE IF EXISTS `{name}`"))
+    _drop_each(s.views, lambda name: spark.catalog.dropTempView(name))
     purge_temp_dirs()
     return released

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from climateiq_pipelines_spark.functions.helpers import sql_dsum, two_level
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.session import new_temp_dir
 from climateiq_pipelines_spark.sources.merge_demo import (
     INSERT_PRICE,
     N_INSERTS,
@@ -43,15 +44,6 @@ from climateiq_pipelines_spark.sources.merge_demo import (
 )
 
 
-def _tmpdir(tag: str) -> str:
-    # Registered for post-consumption reclaim (session.purge_temp_dirs
-    # via release_blocks, atexit fallback): the returned frame reads
-    # these files lazily, so the operator itself can never delete them.
-    from climateiq_pipelines_spark.session import new_temp_dir
-
-    return new_temp_dir(tag)
-
-
 def _write_base_and_deltas(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     """Materialize the demo table's commit history as plain parquet:
     commit 0 = base snapshot of orders; commit 1 = a DELETE vector
@@ -59,7 +51,7 @@ def _write_base_and_deltas(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     disjoint and order-independent) and an UPSERT delta (keys ≡ 0 mod
     10 get +100 price; 5 brand-new urgent orders append beyond the max
     key). Returns the three directory paths."""
-    root = _tmpdir("mor")
+    root = new_temp_dir("mor")
     paths = {
         "base": os.path.join(root, "base"),
         "deletes": os.path.join(root, "deletes"),
@@ -243,7 +235,7 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     listing in the query path); the rewrite is one round-robin
     exchange; nothing here is data-order dependent."""
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    root = _tmpdir("compact")
+    root = new_temp_dir("compact")
     frag = os.path.join(root, "fragmented")
     comp = os.path.join(root, "compacted")
     orders.repartition(_COMPACT_SMALL).write.mode("overwrite").parquet(frag)
@@ -327,7 +319,7 @@ def sink_range_partitioned_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest-tracking format; z-ordering (sort_zorder_locality) is the
     multi-dimensional variant of the same idea."""
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    path = os.path.join(_tmpdir("range"), "orders_ranged")
+    path = os.path.join(new_temp_dir("range"), "orders_ranged")
     (
         orders.repartitionByRange(_RANGE_PARTS, "o_orderkey")
         .sortWithinPartitions("o_orderkey")

@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 from climateiq_pipelines_spark.functions.helpers import sql_dsum, two_level
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import TABLES, load_table
+from climateiq_pipelines_spark.session import new_temp_dir
 from climateiq_pipelines_spark.sources.merge_demo import (
     INSERT_PRICE,
     N_INSERTS,
@@ -31,15 +32,6 @@ from climateiq_pipelines_spark.sources.merge_demo import (
     UPDATE_MOD,
     merge_source,
 )
-
-
-def _tmpdir(tag: str) -> str:
-    # Registered for post-consumption reclaim (session.purge_temp_dirs
-    # via release_blocks, atexit fallback): the returned frame reads
-    # these files lazily, so the operator itself can never delete them.
-    from climateiq_pipelines_spark.session import new_temp_dir
-
-    return new_temp_dir(tag)
 
 
 @register(
@@ -125,7 +117,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         F.col("l_shipdate").cast("date").cast("string").alias("ship_day"),
     )
-    path = os.path.join(_tmpdir("csv"), "lineitem_slice")
+    path = os.path.join(new_temp_dir("csv"), "lineitem_slice")
     slice_df.write.mode("overwrite").option("header", True).csv(path)
     back = spark.read.schema(_CSV_SCHEMA).option("header", True).csv(path)
     return two_level(
@@ -158,7 +150,7 @@ def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice_df = li.filter(F.col("l_orderkey") % 10 == 0).select(
         "l_orderkey", "l_extendedprice", "l_returnflag", "l_linestatus"
     )
-    path = os.path.join(_tmpdir("json"), "lineitem_slice")
+    path = os.path.join(new_temp_dir("json"), "lineitem_slice")
     slice_df.write.mode("overwrite").json(path)
     schema = T.StructType(
         [
@@ -196,7 +188,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     files). This is THE layout decision at 100 TB: time-partitioned
     facts turn full scans into single-partition reads."""
     orders = load_table(spark, sf_dir, "orders")
-    path = os.path.join(_tmpdir("sink"), "orders_by_year")
+    path = os.path.join(new_temp_dir("sink"), "orders_by_year")
     orders.withColumn("o_year", F.year("o_orderdate")).write.mode(
         "overwrite"
     ).partitionBy("o_year").parquet(path)
@@ -240,7 +232,7 @@ def sink_sorted_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_totalprice"
     )
-    path = os.path.join(_tmpdir("bucket"), "orders_clustered")
+    path = os.path.join(new_temp_dir("bucket"), "orders_clustered")
     (
         orders.repartition(8, "o_custkey")
         .sortWithinPartitions("o_custkey", "o_orderkey")
@@ -339,7 +331,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("updated")
         .alias("merge_action"),
     )
-    path = os.path.join(_tmpdir("merge"), "orders_merged")
+    path = os.path.join(new_temp_dir("merge"), "orders_merged")
     merged.write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
     # round 16: two-level exact audit sum (helpers.two_level),
@@ -378,7 +370,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_returnflag",
         F.col("l_shipdate").cast("date").cast("string").alias("ship_day"),
     )
-    path = os.path.join(_tmpdir("orc"), "lineitem_slice")
+    path = os.path.join(new_temp_dir("orc"), "lineitem_slice")
     slice_df.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     # round 16: two-level exact audit sum (helpers.two_level),
@@ -415,7 +407,7 @@ def scan_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys. Scale: text files split by line for free parallelism; the
     digest aggregate is map-side-combined scalars."""
     docs = load_table(spark, sf_dir, "documents").select("text")
-    path = os.path.join(_tmpdir("text"), "documents_text")
+    path = os.path.join(new_temp_dir("text"), "documents_text")
     # Loud failure if any text would be split across lines on write —
     # Hadoop's line reader splits on '\n' AND bare '\r' (ADVICE r5), so
     # guard both or a '\r' fixture would surface as an opaque digest

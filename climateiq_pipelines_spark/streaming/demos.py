@@ -57,10 +57,8 @@ def _run_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
     """Run a streaming frame to completion (availableNow) into a
     uniquely-named memory sink and return the sink table — unique names
     so concurrent sessions/repeated bench runs never collide.  The view
-    is registered for post-consumption dropTempView (round-13 review
-    batch C: a warm many-key session accumulated 4 undropped memory
-    sinks per sweep, each pinning its full result rows in driver
-    memory — the leak class release_blocks exists to prevent)."""
+    is registered so the next release drops it: each memory sink pins
+    its full result rows in driver memory."""
     from climateiq_pipelines_spark.session import register_temp_view
 
     name = register_temp_view(f"cps_demo_{uuid.uuid4().hex[:12]}")

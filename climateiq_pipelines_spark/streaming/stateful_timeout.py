@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.session import register_temp_view
+from climateiq_pipelines_spark.session import memo, new_temp_dir, register_temp_view
 from climateiq_pipelines_spark.registry import read_events_micros
 from climateiq_pipelines_spark.streaming.await_util import await_or_raise
 
@@ -31,24 +31,18 @@ _GAP_MS = _GAP_US // 1000
 _WM_DELAY_MS = 3_600_000  # withWatermark("ts", "1 hour")
 _SPLIT_UID = 75  # users < 75 stream in batch 1; the rest in batch 2
 
-# Split staging memoized per (application, sf_dir): the two-file layout
-# is derived data (the _copurchase_edges memoization discipline).
-_SPLIT_CACHE: dict[tuple[str, str], str] = {}
-
 
 def _two_batch_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the events as TWO parquet files — users < _SPLIT_UID
     then the rest — with strictly increasing modification times, so the
     file stream source (default latestFirst=false processes oldest
-    first) yields exactly two deterministic micro-batches."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SPLIT_CACHE.get(cache_key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    # Registered for post-consumption reclaim; _SPLIT_CACHE re-checks
-    # os.path.isdir before reuse, so a purged dir rebuilds gracefully.
-    from climateiq_pipelines_spark.session import new_temp_dir
+    first) yields exactly two deterministic micro-batches.  Memoized
+    per sf_dir; the release that deletes the temp dir also drops the
+    memo entry, so a purged dir is never read."""
+    return memo("state_timeout_split", sf_dir, lambda: _write_two_batches(spark, sf_dir))
 
+
+def _write_two_batches(spark: SparkSession, sf_dir: str) -> str:
     base = new_temp_dir("state_timeout")
     ev = read_events_micros(spark, sf_dir).select("user_id", "ts_us")
     for i, pred in enumerate(
@@ -61,7 +55,6 @@ def _two_batch_dir(spark: SparkSession, sf_dir: str) -> str:
         shutil.move(part, dst)
         shutil.rmtree(stage)
         os.utime(dst, (1_000_000_000 + i * 1000, 1_000_000_000 + i * 1000))
-    _SPLIT_CACHE[cache_key] = base
     return base
 
 

@@ -503,31 +503,97 @@ def test_release_blocks_reclaims_checkpoints(spark):
 
 
 def test_release_blocks_clears_registered_frame_caches(spark):
-    """A module-level cache holding a checkpointed DataFrame is POISON
-    after its blocks are unpersisted (lineage is truncated — reuse dies
-    with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; hit live by
-    llm_dedup_clusters / graph_label_propagation in the first round-12
-    reclaim sweep).  release_blocks must clear every registered cache
-    so consumers rebuild instead of reusing a dead handle — and the
-    engine's real caches must actually be registered."""
+    """A memoized checkpointed DataFrame is POISON after its blocks are
+    unpersisted (lineage is truncated — reuse dies with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).  Every release, full or
+    keep-metadata, must drop the eager memos so consumers rebuild
+    instead of reusing a dead handle — and the engine's checkpointed
+    frames must actually be memoized in the scope."""
     from climateiq_pipelines_spark import session as S
     from climateiq_pipelines_spark.operators import graph_ext2, llm
+    from climateiq_pipelines_spark.registry import load_table
 
-    assert any(c is graph_ext2._EDGE_CACHE for c in S.SESSION_FRAME_CACHES)
-    assert any(c is graph_ext2._ORIENTED_CACHE for c in S.SESSION_FRAME_CACHES)
-    assert any(c is llm._SIG_CACHE for c in S.SESSION_FRAME_CACHES)
+    S.release_blocks(spark)
+    ed = graph_ext2._copurchase_edges(spark, SF_SMALL)
+    oriented = graph_ext2._oriented_edges(spark, SF_SMALL)
+    sigs = llm._simhash60_sigs(load_table(spark, SF_SMALL, "documents"))
+    assert S._SCOPE.memos["copurchase_edges"] == {SF_SMALL: ed}
+    assert S._SCOPE.memos["oriented_edges"] == {SF_SMALL: oriented}
+    assert list(S._SCOPE.memos["simhash60_sigs"].values()) == [sigs]
+    for keep in (True, False):
+        built = []
 
-    probe = S.register_frame_cache({})
-    try:
-        ckpt = spark.range(100).localCheckpoint(eager=True)
-        probe["k"] = ckpt
+        def build():
+            built.append(1)
+            return S.checkpoint(spark.range(100))
+
+        S.memo("probe", "k", build)
+        assert S.memo("probe", "k", build).count() == 100 and built == [1]
+        S.release_blocks(spark, keep_lazy_metadata=keep)
+        assert S._SCOPE.memos == {}, "eager memos must be cleared"
+        # the checkpointed frame is dead by design; the memo rebuilds
+        assert S.memo("probe", "k", build).count() == 100 and built == [1, 1]
         S.release_blocks(spark)
-        assert probe == {}, "registered cache must be cleared"
-        # the checkpointed frame itself is now dead by design; a fresh
-        # build works fine
-        assert spark.range(100).count() == 100
-    finally:
-        S.SESSION_FRAME_CACHES.remove(probe)
+
+
+def test_lazy_memo_survives_only_a_keep_metadata_release(spark):
+    """Lazy memos (resolved table relations, footer probes) pin no
+    blocks: the between-key release keeps them, a full release clears
+    them, and a lazy memo whose build checkpoints is refused, so no
+    surviving memo can hold a frame whose blocks a release unpersisted."""
+    from climateiq_pipelines_spark import session as S
+    from climateiq_pipelines_spark.registry import load_table
+
+    S.release_blocks(spark)
+    rel = load_table(spark, SF_SMALL, "nation")
+    S.release_blocks(spark, keep_lazy_metadata=True)
+    assert load_table(spark, SF_SMALL, "nation") is rel
+    S.release_blocks(spark)
+    assert load_table(spark, SF_SMALL, "nation") is not rel
+    with pytest.raises(RuntimeError, match="built a checkpoint"):
+        S.memo("probe", "k", lambda: S.checkpoint(spark.range(3)), lazy=True)
+    assert "k" not in S._SCOPE.lazy_memos["probe"]
+    S.release_blocks(spark)
+
+
+def test_empty_between_key_release_sends_no_py4j_command(spark, monkeypatch):
+    """A key that checkpointed nothing and registered no table or view
+    leaves the scope empty; the between-key release then returns 0
+    without a JVM round trip (it cost 80 py4j calls, 22-36 ms)."""
+    from py4j.clientserver import ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    from climateiq_pipelines_spark import session as S
+    from climateiq_pipelines_spark.registry import load_table
+
+    S.release_blocks(spark)
+    load_table(spark, SF_SMALL, "nation").toPandas()  # a lazy memo only
+    sent = []
+    for cls in (ClientServerConnection, GatewayConnection):
+        def counting(self, command, *args, _send=cls.send_command, **kwargs):
+            sent.append(command)
+            return _send(self, command, *args, **kwargs)
+
+        monkeypatch.setattr(cls, "send_command", counting)
+    assert S.release_blocks(spark, keep_lazy_metadata=True) == 0
+    assert sent == []
+    # the full release keeps its unconditional sweep
+    assert S.release_blocks(spark) == 0 and sent
+
+
+def test_triangle_count_is_stable_across_between_key_release(spark):
+    """graph_triangle_count memoizes checkpointed edge lists; a
+    between-key release must unpersist their blocks AND drop the memo,
+    so the next run rebuilds instead of reading a dead checkpoint."""
+    from climateiq_pipelines_spark.parity import canon_frame
+    from climateiq_pipelines_spark.session import release_blocks
+
+    runs = []
+    for _ in range(2):
+        runs.append(canon_frame(QUERIES["graph_triangle_count"](spark, SF_SMALL).toPandas()))
+        assert release_blocks(spark, keep_lazy_metadata=True) >= 1
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    assert runs[0] == runs[1]
 
 
 def test_release_blocks_purges_registered_temp_dirs(spark):
@@ -538,11 +604,10 @@ def test_release_blocks_purges_registered_temp_dirs(spark):
     roots must be purged by release_blocks (post-consumption, same
     lifecycle as checkpoint blocks) and the registry must drain."""
     import os
-    import tempfile
 
     from climateiq_pipelines_spark import session as S
 
-    d = S.register_temp_dir(tempfile.mkdtemp(prefix="cps_purge_probe_"))
+    d = S.new_temp_dir("purge_probe")
     open(os.path.join(d, "f.bin"), "wb").write(b"x")
     assert d in S.SESSION_TEMP_DIRS
     S.release_blocks(spark)
@@ -553,101 +618,66 @@ def test_release_blocks_purges_registered_temp_dirs(spark):
 
 
 def test_every_module_level_cache_is_reclaim_safe():
-    """Static sweep of the WHOLE package (ADVICE r12 widened the r12
-    original): every module-level EMPTY-dict assignment — the cache
-    pattern; non-empty dict literals are constant tables — is
-    classified by its annotation and held to the reclaim discipline:
+    """Static sweep of the WHOLE package: session.py is the only owner
+    of per-session state, so outside it
 
-    - DataFrame-valued  -> must be wrapped in register_frame_cache at
-      the assignment site (the round-12 poison-handle class:
-      CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND after harness reclaim);
-    - str-valued *CACHE -> a PATH cache of temp-backed data; its module
-      must re-validate os.path.isdir before reuse (stateful_timeout's
-      _SPLIT_CACHE pattern — a purged dir must rebuild, not be read);
-    - UNANNOTATED       -> fails outright: an unclassifiable cache is
-      exactly how the next temp-backed frame or path cache would slip
-      past this guard (the ADVICE r12 gap);
-    - int/bool/other value memos -> fine (no filesystem/block state).
+    - no ``applicationId`` (hand-built per-session keys; the scope
+      resets on a new SparkContext instead);
+    - no ``.localCheckpoint(`` / ``.cache(`` / ``.persist(`` call — blocks
+      go through session.checkpoint, or the keep-metadata release would
+      not know to sweep them.  parity_digest.spark_digest is the one
+      exception: it unpersists its own RDD ids before it returns;
+    - no raw ``mkdtemp`` call — session.new_temp_dir is the only way to
+      make scratch files, or a release could not delete them;
+    - no module-level DataFrame-valued store (the poison-handle class:
+      CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND after a release) and no
+      module-level path-valued store (a purged temp dir read after a
+      release), whatever its initializer;
+    - every module-level EMPTY dict/list/set (the store pattern;
+      non-empty literals are constant tables) is annotated with a
+      parameterized value type, so this guard can classify it;
+      int/bool/other value memos are fine (no filesystem/block state).
     """
     import ast
     import pathlib
+    import re
 
-    pkg = pathlib.Path(__file__).resolve().parents[1] / (
-        "climateiq_pipelines_spark")
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "climateiq_pipelines_spark"
     offenders = []
     for path in sorted(pkg.rglob("*.py")):
+        if path.name == "session.py":
+            continue
         src = path.read_text()
         tree = ast.parse(src, filename=str(path))
+        if "applicationId" in src:
+            offenders.append(f"{path.name}: applicationId")
+        exempt = set()
+        if path.name == "parity_digest.py":
+            (fn,) = [n for n in tree.body if getattr(n, "name", "") == "spark_digest"]
+            exempt = {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            attr = getattr(getattr(node, "func", None), "attr", None)
+            if attr in ("localCheckpoint", "cache", "persist", "mkdtemp") and not (
+                attr == "localCheckpoint" and id(node) in exempt
+            ):
+                offenders.append(f"{path.name}:{node.lineno}: .{attr}(")
         for node in tree.body:  # module level only
-            if not isinstance(node, (ast.Assign, ast.AnnAssign)):
+            if not isinstance(node, (ast.Assign, ast.AnnAssign)) or node.value is None:
                 continue
-            val = node.value
-            if val is None:
-                continue
-            wrapped = (
-                isinstance(val, ast.Call)
-                and ast.unparse(val.func).endswith("register_frame_cache")
-                and val.args
-            )
-            inner = val.args[0] if wrapped else val
-            is_empty_dict = (
-                isinstance(inner, ast.Dict) and not inner.keys
-            ) or (
-                isinstance(inner, ast.Call)
-                and ast.unparse(inner.func) in ("dict", "defaultdict")
-                and not inner.args
-                and not inner.keywords
-            )
-            tgt = (
-                node.target
-                if isinstance(node, ast.AnnAssign)
-                else node.targets[0]
-            )
-            name = ast.unparse(tgt)
-            ann = (
-                ast.unparse(node.annotation)
-                if isinstance(node, ast.AnnAssign)
-                else None
-            )
-            # The ORIGINAL r12 rule, kept in full (round-13 self-review:
-            # the widened sweep must not NARROW it): ANY module-level
-            # annotated assignment whose annotation mentions DataFrame
-            # must be register_frame_cache-wrapped — this covers caches
-            # initialized from helper calls / defaultdict / non-empty
-            # literals, not just empty dicts.
-            if ann is not None and "DataFrame" in ann and not wrapped:
-                offenders.append(
-                    f"{path.name}: {name} — DataFrame-typed module "
-                    "assignment missing register_frame_cache"
-                )
-                continue
-            if not is_empty_dict:
-                continue
-            if ann is None:
-                offenders.append(
-                    f"{path.name}: {name} — unannotated module-level "
-                    "cache; annotate its value type so this guard can "
-                    "classify it"
-                )
-                continue
-            # value type = the second subscript element of dict[K, V];
-            # a bare 'dict' annotation has no value type to classify.
-            value_t = ann.rsplit(",", 1)[-1].rstrip("]").strip()
-            if value_t in ("dict", "Dict"):
-                offenders.append(
-                    f"{path.name}: {name} — bare dict annotation; "
-                    "parameterize the value type so this guard can "
-                    "classify it"
-                )
-            elif value_t == "str" and "CACHE" in name.upper():
-                if "os.path.isdir" not in src:
-                    offenders.append(
-                        f"{path.name}: {name} — path cache without an "
-                        "os.path.isdir re-validation (purged temp dirs "
-                        "would be read after the first reclaim)"
-                    )
-    assert not offenders, "reclaim-unsafe module caches: " + "; ".join(
-        offenders)
+            name = ast.unparse(getattr(node, "target", None) or node.targets[0])
+            ann = ast.unparse(node.annotation) if isinstance(node, ast.AnnAssign) else ""
+            if "DataFrame" in ann:
+                offenders.append(f"{path.name}: {name} — DataFrame-typed module store")
+            elif ast.unparse(node.value) in ("{}", "[]", "dict()", "defaultdict()",
+                                             "list()", "set()"):
+                # value type = the last element of dict[K, V] / list[V]
+                value_t = ann.rsplit(",", 1)[-1].split("[")[-1].rstrip("]").strip()
+                if value_t in ("", "dict", "Dict", "list", "List", "set", "Set"):
+                    offenders.append(f"{path.name}: {name} — annotate the value "
+                                     "type so this guard can classify it")
+                elif value_t == "str" and re.search("CACHE|MEMO|DIR|PATH", name.upper()):
+                    offenders.append(f"{path.name}: {name} — module-level path store")
+    assert not offenders, "reclaim-unsafe module state: " + "; ".join(offenders)
 
 
 def test_release_blocks_drops_registered_temp_views(spark):
@@ -663,25 +693,31 @@ def test_release_blocks_drops_registered_temp_views(spark):
     assert spark.catalog.tableExists(name)
     S.release_blocks(spark)
     assert not spark.catalog.tableExists(name)
-    assert name not in S.SESSION_TEMP_VIEWS
+    assert name not in S._SCOPE.views
 
 
 def test_gate_count_memoizes_per_session_and_sfdir(spark):
-    """VERDICT r12 #4: the measured-payload broadcast gates cost one
-    count() action per evaluation; the scalar is deterministic per
-    (session, sf_dir), so repeated evaluations must skip the probe —
-    and the memo key must distinguish sf_dir and site."""
+    """The measured-payload broadcast gates cost one count() action per
+    evaluation; the scalar is deterministic per (session, sf_dir), so
+    repeated evaluations must skip the probe — the memo must tell
+    sf_dirs and sites apart, and forget everything when the
+    SparkContext changes."""
     from climateiq_pipelines_spark import session as S
-
-    assert S.gate_count(spark.range(7), spark, "/x", "probe_site") == 7
 
     class _Boom:
         def count(self):
             raise AssertionError("gate probe re-ran on a memoized key")
 
-    assert S.gate_count(_Boom(), spark, "/x", "probe_site") == 7
-    assert S.gate_count(spark.range(3), spark, "/y", "probe_site") == 3
-    assert S.gate_count(spark.range(2), spark, "/x", "other_site") == 2
+    S.release_blocks(spark)
+    assert S.memo("gate:probe_site", "/x", spark.range(7).count) == 7
+    assert S.memo("gate:probe_site", "/x", _Boom().count) == 7
+    assert S.memo("gate:probe_site", "/y", spark.range(3).count) == 3
+    assert S.memo("gate:other_site", "/x", spark.range(2).count) == 2
+    S._SCOPE.sc = object()  # as if filled under another context
+    assert S.memo("gate:other_site", "/x", spark.range(5).count) == 5
+    assert S._SCOPE.sc is spark.sparkContext
+    assert S._SCOPE.memos == {"gate:other_site": {"/x": 5}}
+    S.release_blocks(spark)
 
 
 def test_release_blocks_drops_registered_catalog_tables(spark):
@@ -695,10 +731,10 @@ def test_release_blocks_drops_registered_catalog_tables(spark):
     spark.range(3).write.mode("overwrite").saveAsTable(
         S.register_temp_table(name))
     assert spark.catalog.tableExists(name)
-    assert name in S.SESSION_TEMP_TABLES
+    assert name in S._SCOPE.tables
     S.release_blocks(spark)
     assert not spark.catalog.tableExists(name)
-    assert name not in S.SESSION_TEMP_TABLES
+    assert name not in S._SCOPE.tables
 
 
 def test_registered_builders_carry_docstrings():
@@ -789,6 +825,36 @@ def test_bench_gated_summary_scan_skips_non_dict_json():
     # newest summary wins when two exist (a rerun appends)
     newer = '{"value": 59.0}'
     assert bg.extract_summary(real + "\n" + newer)["value"] == 59.0
+
+
+@pytest.mark.parametrize("value", ["", "yes", "true", "2", " 1", "off"])
+def test_bench_reclaim_env_rejects_anything_but_0_or_1(monkeypatch, value):
+    """SPARK_BENCH_RECLAIM picks the bench's between-key mode; a typo
+    must stop the run instead of silently picking a mode."""
+    import bench
+
+    monkeypatch.setenv("SPARK_BENCH_RECLAIM", value)
+    with pytest.raises(SystemExit, match="SPARK_BENCH_RECLAIM"):
+        bench.reclaim_enabled()
+    for env, enabled in (("0", False), ("1", True), (None, True)):
+        monkeypatch.setenv("SPARK_BENCH_RECLAIM", env or "")
+        if env is None:
+            monkeypatch.delenv("SPARK_BENCH_RECLAIM")
+        assert bench.reclaim_enabled() is enabled
+
+
+def test_parquet_first_array_len_skips_null_leading_rows(tmp_path):
+    """The dim peek reads the first NON-NULL array value, as its
+    docstring says, not whatever row 0 holds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from climateiq_pipelines_spark.registry import parquet_first_array_len
+
+    for rows, dim in (([None, [1.0, 2.0, 3.0], [4.0]], 3), ([None], None)):
+        emb = pa.array(rows, type=pa.list_(pa.float32()))
+        pq.write_table(pa.table({"embedding": emb}), tmp_path / "embeddings.parquet")
+        assert parquet_first_array_len(str(tmp_path), "embeddings", "embedding") == dim
 
 
 def test_driver_window_is_fully_oracle_checkable():
@@ -1128,15 +1194,19 @@ def test_widen_if_narrow_semantics(spark):
     assert widen_if_narrow(spark, wide) is wide
 
 
-def test_graph_cache_evicts_to_latest_entry():
-    """ADVICE r8: the graph edge/orientation memo caches must not pin
-    checkpointed frames for every sf_dir ever swept — _cache_put keeps
-    only the latest (application, sf_dir) entry."""
-    from climateiq_pipelines_spark.operators.graph_ext2 import _cache_put
+def test_graph_cache_evicts_to_latest_entry(spark):
+    """The graph edge/orientation memos must not pin checkpointed
+    frames for every sf_dir ever swept — an eager memo keeps only its
+    latest key per name; a lazy memo (no blocks) keeps every key."""
+    from climateiq_pipelines_spark import session as S
 
-    cache = {}
-    _cache_put(cache, ("app", "sf_a"), "frame_a")
-    _cache_put(cache, ("app", "sf_a"), "frame_a2")  # same key: replace
-    assert cache == {("app", "sf_a"): "frame_a2"}
-    _cache_put(cache, ("app", "sf_b"), "frame_b")  # new key: evict old
-    assert cache == {("app", "sf_b"): "frame_b"}
+    S.release_blocks(spark)
+    assert S.memo("probe", "sf_a", lambda: "frame_a") == "frame_a"
+    assert S.memo("probe", "sf_a", lambda: "frame_a2") == "frame_a"  # hit
+    assert S._SCOPE.memos["probe"] == {"sf_a": "frame_a"}
+    S.memo("probe", "sf_b", lambda: "frame_b")  # new key: evict old
+    assert S._SCOPE.memos["probe"] == {"sf_b": "frame_b"}
+    S.memo("probe", "sf_a", lambda: "frame_a", lazy=True)
+    S.memo("probe", "sf_b", lambda: "frame_b", lazy=True)
+    assert S._SCOPE.lazy_memos["probe"] == {"sf_a": "frame_a", "sf_b": "frame_b"}
+    S.release_blocks(spark)

@@ -31,7 +31,7 @@ Usage:
 --exempt records the OTHER changed-after-stamp decision (VERDICT r12
 task #7): keys whose post-stamp edits were judged mechanical lifecycle/
 cosmetic (the r11 ann_ext2 precedent class — e.g. mkdtemp →
-register_temp_dir wrapping, import cleanups) and therefore ride normal
+new_temp_dir wrapping, import cleanups) and therefore ride normal
 stamp order instead of leading the window.  Exempt keys do NOT change
 the derivation; they are VALIDATED (registered, disjoint from
 --priority) and echoed in the output as '# exempt:' comment lines, so
