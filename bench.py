@@ -1,21 +1,23 @@
 """Benchmark runner — the driver's per-round perf gate.
 
-Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on one shared local[$SPARK_GRAFT_CPUS] session and
-prints EXACTLY ONE SHORT JSON line on stdout:
+Usage: python bench.py [KEY ...]
+
+Runs the HEADLINE queries (or the registered KEYs given, in that order;
+an unregistered KEY exits non-zero before Spark starts) at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on one shared
+local[$SPARK_GRAFT_CPUS] session and prints EXACTLY ONE SHORT JSON line
+on stdout:
 
     {"metric": "suite_wall_sec", "value": N, "unit": "sec",
      "n_queries": N, "sf": 0.1}
 
 The driver captures only a ~2000-char tail of stdout (BENCH_r06.json
 came back `parsed: null` when the per-query dict grew past that), so the
-SUITE line stays SHORT, fixed-size, and LAST forever; per-query detail
-goes to stderr (one `# key: secs` line each), to BENCH_QUERIES.json
-next to this script, AND — r17, VERDICT r16 #3, additions-only — as one
-compact `{"query": k, "sec": s}` stdout JSON line per key BEFORE the
-suite line, so a full-stdout reader can build the per-query table
-without the sibling file while tail-only parsers see the suite line
-unchanged.
+suite line stays SHORT, fixed-size, and the ONLY stdout line; per-query
+detail goes to stderr (one `# key: secs` line each) and to
+BENCH_QUERIES.json next to this script.  Each key's time is the minimum
+of two `toPandas` runs, so `python bench.py KEY` gives the per-key
+number comparable to bench records.
 
 HEADLINE policy: the suite is the BASELINE.md-comparable set plus every
 operator family's most expensive representative — NOT all 200 keys.
@@ -172,7 +174,7 @@ def reclaim_enabled() -> bool:
     return value == "1"
 
 
-def main() -> None:
+def main(keys: list[str] | None = None) -> None:
     reclaim = reclaim_enabled()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)/?$", sf_dir)
@@ -190,6 +192,9 @@ def main() -> None:
     from climateiq_pipelines_spark.plans import QUERIES, load_all
 
     load_all()
+    unknown = [k for k in keys or () if k not in QUERIES]
+    if unknown:
+        raise SystemExit(f"unregistered key(s): {unknown}")
     # shuffle=8 at bench scale (matches BASELINE.md's calibration rows):
     # sf0.1 partitions are KB-sized, so 32 partitions is pure scheduling
     # overhead (~25% of suite wall, measured). Purely a local-SF knob —
@@ -209,7 +214,7 @@ def main() -> None:
     # run 2 is the steady-state time a resident engine would show.
     timings: dict[str, float] = {}
     total = 0.0
-    for key in HEADLINE:
+    for key in keys or HEADLINE:
         fn = QUERIES.get(key)
         if fn is None:
             continue
@@ -222,16 +227,6 @@ def main() -> None:
         timings[key] = round(best, 4)
         total += best
         print(f"# {key}: {best:.3f}s ({n} rows)", file=sys.stderr)
-        # Per-key detail ALSO as one compact stdout JSON line per key
-        # (VERDICT r16 #3, additions-only): machine-checkable per-query
-        # timings for the driver's PERF diff.  These lines carry no
-        # "value" key, so the summary extractors (bench_gated, the
-        # driver's tail parse) still find the FINAL suite line — which
-        # stays last, short, and shape-identical; r6's lesson (the
-        # per-query dict inlined into the suite line overflowed the
-        # ~2000-char tail capture and made it unparseable) is why the
-        # detail is per-line rather than one big dict.
-        print(json.dumps({"query": key, "sec": round(best, 4)}))
         if reclaim:
             # Between-key release: each key pays its own checkpointed
             # frame builds (edge lists, signatures) instead of reusing a
@@ -280,4 +275,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

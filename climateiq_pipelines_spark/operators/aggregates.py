@@ -295,6 +295,13 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # results are layout-independent (determinism probe key). Per-row
     # domain bound unchanged from the single-level form: yc*yc is
     # evaluated in long, so |yc| < 3.03e9 cents (price < ~3e7 units).
+    # Recorded domain limit of the UNSPLIT Σ(xc·yc) long partial
+    # (psxy): with TPC-H's ranges (xc ≤ 5e3 cents of quantity, yc ≤
+    # ~1.05e7 cents of price) one row adds ≤ ~5.25e10, so a single
+    # (flag, scan partition) group stays exact below ~1.75e8 rows at
+    # extreme values — ~100x headroom over a 1e6-row 128 MB partition.
+    # Past it the long sum overflows: an ARITHMETIC_OVERFLOW error
+    # under ANSI mode, a silent wrap with ANSI off.
     # The old form cast every row's products to decimal(30,0) — the
     # BigDecimal slow path on 5 products per row.
     li = load_table(spark, sf_dir, "lineitem")

@@ -187,8 +187,7 @@ def _pagerank_oracle_for(sf_dir: str) -> str:
 @register(
     "graph_pagerank_converged",
     oracle=_pagerank_converged_oracle(_PR_ROUNDS_SF001),
-    oracle_sf="sf0.01",  # ADVICE r7: unroll count measured on sf0.01
-    oracle_builder=_pagerank_oracle_for,  # any-SF sweep path (r9 task #2)
+    oracle_builder=_pagerank_oracle_for,
 )
 def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PAGERANK TO CONVERGENCE — graph_pagerank's per-round plan (same
@@ -413,8 +412,7 @@ def _kmeans_oracle_for(sf_dir: str) -> str:
 @register(
     "llm_kmeans_converged",
     oracle=_kmeans_converged_oracle(_KM_ROUNDS_SF001),
-    oracle_sf="sf0.01",  # ADVICE r7: unroll count measured on sf0.01
-    oracle_builder=_kmeans_oracle_for,  # any-SF sweep path (r9 task #2)
+    oracle_builder=_kmeans_oracle_for,
 )
 def llm_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-MEANS TO CONVERGENCE — llm_kmeans_iterate's per-round Lloyd
@@ -444,7 +442,7 @@ def llm_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopping rule to fixpoint in DuckDB for the TARGET sf_dir and
     unrolls the oracle to that depth, so sweeps at any SF get a full
     value check (VERDICT r9 task #2) — the former EXPECTED_SCOPE_LIMITED
-    waiver in tools/parity_sweep.py is deleted.
+    sweep waiver is deleted.
 
     Scale per round: unchanged from llm_kmeans_iterate (k×64 broadcast
     centroids, one linear distance aggregate) + the 1-row movement

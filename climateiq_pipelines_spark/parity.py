@@ -140,18 +140,29 @@ def compare_frames(key: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) ->
     return res
 
 
+def oracle_text(key: str, sf_dir: str) -> str | None:
+    """The DuckDB text ``key`` is checked against at ``sf_dir``: its
+    SF-parameterized builder (plans.ORACLE_BUILDERS) when it registers
+    one, the static ORACLES text otherwise, None for a rows-only key.
+    At sf0.01 every builder reproduces the static text or its answer
+    (tests/test_oracle_builders.py), so one rule serves every scale."""
+    from climateiq_pipelines_spark.plans import ORACLE_BUILDERS, ORACLES
+
+    build = ORACLE_BUILDERS.get(key)
+    return build(sf_dir) if build else ORACLES.get(key)
+
+
 def check_key(
     key: str,
     spark,
     sf_dir: str,
     con: duckdb.DuckDBPyConnection | None = None,
 ) -> ParityResult:
-    from climateiq_pipelines_spark.plans import ORACLES, QUERIES
+    from climateiq_pipelines_spark.plans import QUERIES
 
-    fn = QUERIES[key]
-    sdf = fn(spark, sf_dir)
-    spark_pdf = sdf.toPandas()
-    if key not in ORACLES:
+    spark_pdf = QUERIES[key](spark, sf_dir).toPandas()
+    text = oracle_text(key, sf_dir)
+    if text is None:
         # rows-only key: the driver only checks the query runs and row count.
         return ParityResult(key=key, ok=True, spark_rows=len(spark_pdf),
                             oracle_rows=-1, reasons=["rows-only (no oracle)"])
@@ -159,7 +170,7 @@ def check_key(
     if own_con:
         con = duck_connect(sf_dir)
     try:
-        duck_pdf = con.execute(ORACLES[key]).fetchdf()
+        duck_pdf = con.execute(text).fetchdf()
     finally:
         if own_con:
             con.close()

@@ -5,8 +5,8 @@ three full-projection keys dominate sweep wall (fn_math 16.3 s for
 600k x 13 cells at sf0.1, vs a sub-second engine plan).  The fix is
 not to vectorize the comparator (declined r10: the comparator must
 stay simpler than what it checks) but to shrink what REACHES it: in
-``parity_sweep --fast`` those keys compare a 2-value digest aggregate
-(row count + sum of per-row md5 prefixes, the sink_compression_codecs
+``tools/driver_sim.py --fast`` those keys compare a 2-value digest
+aggregate (row count + sum of per-row md5 prefixes, the sink_compression_codecs
 pattern) computed by Spark over the key's own DataFrame and by DuckDB
 over the oracle text.  Full per-cell canonicalization still runs at
 the sf0.01 certification scale and in non-fast sweeps.
@@ -271,3 +271,23 @@ def spark_digest(spark, df) -> pd.DataFrame:
 
 def duck_digest(con, cols: list[tuple[str, str]], oracle_text: str) -> pd.DataFrame:
     return _as_ints(con.execute(digest_sql(cols, oracle_text, "duckdb")).df())
+
+
+def check_key_digest(key: str, spark, sf_dir: str, con):
+    """Digest twin of parity.check_key: the key's relation and its
+    oracle (parity.oracle_text) each reduced in-engine to
+    (n, dsum) and compared.  A mismatch does not localize — re-run the
+    key through check_key for the differing rows."""
+    from climateiq_pipelines_spark.parity import ParityResult, oracle_text
+    from climateiq_pipelines_spark.plans import QUERIES
+
+    df = QUERIES[key](spark, sf_dir)
+    cols = kinds_from_spark(df)
+    sd = spark_digest(spark, df).iloc[0]
+    dd = duck_digest(con, cols, oracle_text(key, sf_dir)).iloc[0]
+    res = ParityResult(key=key, ok=tuple(sd) == tuple(dd),
+                       spark_rows=int(sd["n"]), oracle_rows=int(dd["n"]))
+    if not res.ok:
+        res.reasons.append(f"digest spark={tuple(sd)} oracle={tuple(dd)}"
+                           " — re-run without --fast to localize")
+    return res

@@ -21,26 +21,17 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# ADVICE r7: oracles whose SQL text is unrolled to a FIXTURE-MEASURED
-# constant (e.g. the converged-iteration keys unroll to the sf0.01
-# stopping round) declare that assumption here — key → fixture dir
-# basename.  tools/driver_sim.py consults this when sweeping a
-# different sf_dir so an SF change fails attributably ("oracle pinned
-# to sf0.01") instead of as a generic hash mismatch.
-ORACLE_SF_PINNED: dict[str, str] = {}
-
-# VERDICT r9 task #2: SF-PARAMETERIZED oracle builders.  A key whose
-# static ORACLES text unrolls a fixture-measured constant registers a
-# builder ``sf_dir -> SQL text`` here; sweep tooling (tools/
-# parity_sweep.py, tools/driver_sim.py) prefers the builder so the
-# SAME key is fully value-checked at ANY scale factor.  The builder
-# derives its unroll depth by running the published stopping rule to
-# fixpoint in DuckDB (legitimate: cross-engine stop-round equivalence
-# follows from the keys' integer-exact per-round state — see the
-# iterative_ext docstrings), then emits the ordinary unrolled text; the
-# full value comparison still runs independently on that text.  The
-# driver contract (__spark_entry__.oracle_sql() -> static strings at
-# sf0.01) is unchanged.
+# SF-parameterized oracle builders.  A key whose static ORACLES text
+# unrolls a fixture-measured constant registers a builder
+# ``sf_dir -> SQL text`` here; parity.oracle_text prefers the builder,
+# so the SAME key is fully value-checked at ANY scale factor.  The
+# builder derives its unroll depth by running the published stopping
+# rule to fixpoint in DuckDB (legitimate: cross-engine stop-round
+# equivalence follows from the keys' integer-exact per-round state —
+# see the iterative_ext docstrings), then emits the ordinary unrolled
+# text; the full value comparison still runs independently on that
+# text.  The driver contract (__spark_entry__.oracle_sql() -> static
+# strings at sf0.01) is unchanged.
 ORACLE_BUILDERS: dict[str, Callable[[str], str]] = {}
 
 # Pristine decoration order (filled by _apply_rotation_window before it
@@ -51,17 +42,14 @@ REGISTRATION_ORDER: list[str] = []
 def register(
     key: str,
     oracle: str | None = None,
-    oracle_sf: str | None = None,
     oracle_builder: Callable[[str], str] | None = None,
 ) -> Callable[[QueryFn], QueryFn]:
     """Register a query builder; ``oracle=None`` declares the key
     rows-only (driver's weaker check) — only allowed for the keys SURVEY
     §2 marks rows-only, with the reason in the builder's docstring.
-    ``oracle_sf`` records the fixture-dir basename the oracle's
-    constants were measured on (see ORACLE_SF_PINNED); ``oracle_builder``
-    supplies the SF-parameterized text for other scales (see
-    ORACLE_BUILDERS — pinned keys should carry one so sweeps stay
-    full-surface)."""
+    ``oracle_builder`` supplies the SF-parameterized text (see
+    ORACLE_BUILDERS) for a key whose static text unrolls a
+    fixture-measured constant."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if key in QUERIES:
@@ -69,8 +57,6 @@ def register(
         QUERIES[key] = fn
         if oracle is not None:
             ORACLES[key] = oracle
-        if oracle_sf is not None:
-            ORACLE_SF_PINNED[key] = oracle_sf
         if oracle_builder is not None:
             ORACLE_BUILDERS[key] = oracle_builder
         return fn

@@ -5,15 +5,18 @@ fixpoint in DuckDB for the TARGET sf_dir and emits the ordinary
 unrolled text, so sweeps at any scale get a full value check.
 
 These tests pin the contract cheaply at sf0.001/sf0.01 (the sf0.1
-behavior is exercised by tools/parity_sweep.py each round):
+behavior is exercised by ``tools/driver_sim.py --fast`` sweeps):
 - builder(sf0.01) must REPRODUCE the registered static text for the
   two converged-iteration keys (same solved depth, same string), so the
   driver contract and the sweep path can never drift apart silently;
 - the cluster key's unrolled label-propagation builder must produce
   the SAME answer as its registered recursive-CTE text (DuckDB vs
-  DuckDB — pure oracle-equivalence, no Spark involved);
+  DuckDB — pure oracle-equivalence, no Spark involved) on every
+  fixture parity.check_key sees, the adversarial edge fixture included;
+- parity.oracle_text is the one oracle rule: builder text for builder
+  keys, static text for the other oracle keys, None for rows-only keys;
 - ADVICE r9 #1 regression: there is no EXPECTED_SCOPE_LIMITED waiver
-  left in tools/parity_sweep.py — a kmeans mismatch at ANY scale is a
+  left in tools/driver_sim.py — a kmeans mismatch at ANY scale is a
   failure again, because the builder closes the legitimate gap.
 """
 
@@ -25,7 +28,8 @@ import duckdb
 import pytest
 
 from climateiq_pipelines_spark import plans
-from climateiq_pipelines_spark.plans import ORACLE_BUILDERS, ORACLES
+from climateiq_pipelines_spark.parity import oracle_text
+from climateiq_pipelines_spark.plans import ORACLE_BUILDERS, ORACLES, QUERIES
 
 plans.load_all()
 
@@ -66,12 +70,21 @@ def _duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-@pytest.mark.parametrize("sf_dir", [SF001, SF01])
-def test_cluster_unrolled_oracle_equals_recursive_oracle(sf_dir):
+@pytest.fixture(scope="module")
+def edge_dir(tmp_path_factory):
+    from tests.edge_fixture import build_edge_fixture
+
+    return build_edge_fixture(str(tmp_path_factory.mktemp("edge")))
+
+
+@pytest.mark.parametrize("sf_dir", [SF001, SF01, "edge"])
+def test_cluster_unrolled_oracle_equals_recursive_oracle(sf_dir, request):
     """The cluster builder's fixpoint-depth label unroll and the
     registered recursive reach-CTE compute identical clusterings —
-    oracle-equivalence proven inside DuckDB, so swapping the sweep to
-    the linear form loses nothing."""
+    oracle-equivalence proven inside DuckDB, so checking the key
+    against the linear form (parity.oracle_text) loses nothing."""
+    if sf_dir == "edge":
+        sf_dir = request.getfixturevalue("edge_dir")
     con = _duck(sf_dir)
     recursive = (
         con.execute(ORACLES["llm_dedup_clusters"])
@@ -88,15 +101,40 @@ def test_cluster_unrolled_oracle_equals_recursive_oracle(sf_dir):
     assert recursive.equals(unrolled)
 
 
+@pytest.mark.parametrize("kind", ["builder", "static", "rows-only"])
+def test_oracle_text_is_the_one_oracle_rule(kind, monkeypatch):
+    """parity.oracle_text: builder text for the builder keys, static
+    text for the other oracle keys, None for rows-only keys.  Checked
+    at sf0.1, where the k-means builder's stopping round (4) differs
+    from the static text's (3); every builder reads a committed
+    stop-round memo there, so no DuckDB solve runs."""
+    sf_dir = "/root/testdata/sf0.1"
+    if kind == "builder":
+        keys = set(ORACLE_BUILDERS)
+        expected = {k: ORACLE_BUILDERS[k](sf_dir) for k in keys}
+        assert expected["llm_kmeans_converged"] != ORACLES["llm_kmeans_converged"]
+    elif kind == "static":
+        keys = set(ORACLES) - set(ORACLE_BUILDERS)
+        expected = {k: ORACLES[k] for k in keys}
+    else:
+        # Every registered key carries an oracle today; register a
+        # rows-only one (oracle=None leaves ORACLES untouched).
+        monkeypatch.setitem(QUERIES, "rows_only_probe", lambda s, d: None)
+        keys = set(QUERIES) - set(ORACLES)
+        expected = dict.fromkeys(keys)
+    assert keys
+    assert {k: oracle_text(k, sf_dir) for k in keys} == expected
+
+
 def test_no_scope_limited_waiver_remains():
     """ADVICE r9 #1: the blanket EXPECTED_SCOPE_LIMITED waiver could
     hide a REAL llm_kmeans_converged regression.  The builder makes the
     waiver unnecessary; pin its absence so it cannot quietly return."""
     text = (
-        Path(__file__).resolve().parent.parent / "tools" / "parity_sweep.py"
+        Path(__file__).resolve().parent.parent / "tools" / "driver_sim.py"
     ).read_text()
     assert "EXPECTED_SCOPE_LIMITED" not in text
-    assert "ORACLE_BUILDERS" in text
+    assert "oracle_text" in text
 
 
 def test_committed_stop_round_memos_match_live_solve():

@@ -26,7 +26,7 @@ DIGEST_KEYS = ["fn_math", "proj_computed_columns", "fn_date"]
 def test_fast_keys_registered_and_static_oracled():
     """The digest set must stay inside the registered surface and off
     the builder keys (digest mode uses the static oracle text)."""
-    from tools.parity_sweep import DIGEST_FAST_KEYS
+    from tools.driver_sim import DIGEST_FAST_KEYS
     from climateiq_pipelines_spark.plans import ORACLE_BUILDERS
 
     assert DIGEST_FAST_KEYS == set(DIGEST_KEYS)

@@ -470,11 +470,11 @@ def test_driver_sim_evidence_header_is_parseable_and_first():
     assert src.index("evidence_header(") < src.index("KEYS OK"), (
         "header must print before the final OK line")
     # Both tools must share ONE line shape (tools/evidence.py) — the
-    # round-12 self-review found parity_sweep had a hand-rolled twin
+    # round-12 self-review found a sweep tool with a hand-rolled twin
     # that no test pinned, free to drift from the contract.
-    import tools.parity_sweep as psw
+    import tools.determinism_probe as dp
 
-    assert "evidence_line(" in inspect.getsource(psw.main)
+    assert "evidence_line(" in inspect.getsource(dp.main)
     from tools.evidence import evidence_line
 
     hdr2 = _json.loads(evidence_line("x", a=1))
@@ -843,6 +843,29 @@ def test_bench_reclaim_env_rejects_anything_but_0_or_1(monkeypatch, value):
         assert bench.reclaim_enabled() is enabled
 
 
+def test_bench_prints_one_stdout_line_and_rejects_unknown_keys(
+    spark, capsys, monkeypatch, tmp_path
+):
+    """bench.py's stdout is exactly one JSON line carrying "value"
+    (per-key detail goes to stderr and the detail file), and a key
+    list naming an unregistered key exits non-zero."""
+    import json
+
+    import bench
+
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", SF_SMALL)
+    monkeypatch.setenv("BENCH_DETAIL_PATH", str(tmp_path / "detail.json"))
+    bench.main(["agg_pricing_summary"])
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 1, lines
+    summary = json.loads(lines[0])
+    assert "value" in summary and summary["n_queries"] == 1
+    detail = json.loads((tmp_path / "detail.json").read_text())
+    assert list(detail["queries"]) == ["agg_pricing_summary"]
+    with pytest.raises(SystemExit, match="no_such_key"):
+        bench.main(["agg_pricing_summary", "no_such_key"])
+
+
 def test_parquet_first_array_len_skips_null_leading_rows(tmp_path):
     """The dim peek reads the first NON-NULL array value, as its
     docstring says, not whatever row 0 holds."""
@@ -1154,21 +1177,6 @@ def test_partitioned_sink_readback_prunes_partitions(spark):
     plan = plan_of(spark, "sink_partitioned_parquet")
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "o_year" in m.group(1) and "1997" in m.group(1), plan
-
-
-def test_oracle_sf_pins_cover_the_unrolled_iterative_keys():
-    """ADVICE r7: the two converged-iteration oracles unroll to the
-    sf0.01-measured stopping round, so an SF change would hash-mismatch
-    by construction.  The assumption is now DECLARED in
-    plans.ORACLE_SF_PINNED (driver_sim reports it attributably); pin
-    that both keys carry it and that nothing else silently joins the
-    fixture-pinned club without updating this test."""
-    from climateiq_pipelines_spark.plans import ORACLE_SF_PINNED
-
-    assert ORACLE_SF_PINNED == {
-        "graph_pagerank_converged": "sf0.01",
-        "llm_kmeans_converged": "sf0.01",
-    }
 
 
 def test_widen_if_narrow_semantics(spark):

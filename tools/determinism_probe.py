@@ -1,18 +1,18 @@
-"""Standalone shuffle-layout determinism probe (VERDICT r13 task #2).
+"""Shuffle-layout determinism probe.
 
-The per-round sf0.1 layout-determinism evidence (determinism_sf01_r*.out)
-was produced by an UNCOMMITTED runner through round 13 — the claim was
-covered in CI by tests/test_determinism.py at sf0.01, but the archived
-standalone logs had no committed tool behind them.  This is that tool:
-it reuses the test module's PROBE_KEYS and the parity canonicalizer,
-runs each key under ``spark.sql.shuffle.partitions`` ∈ {2, 32, 200}
-(runtime conf — AQE picks it up at plan time), and reports STABLE only
-when all three canonical frames are bit-identical.
+Re-runs tests/test_determinism.py's PROBE_KEYS under
+``spark.sql.shuffle.partitions`` ∈ {2, 32, 200} (runtime conf — AQE
+picks it up at plan time) and reports STABLE only when all three
+canonical frames (parity.canon_frame) are bit-identical.
 
 A plain double SUM fails this probe; the engine's fixed-point
 accumulators, rounded-before-rank orderings, and layout-free iterative
 loops are what make it pass — at 100 TB the shuffle layout is chosen by
 AQE per run, so any layout-sensitive value is a nondeterministic answer.
+
+The session is driver_sim's driver-like session (same DRIVER_SIM_TZ /
+DRIVER_SIM_MASTER / DRIVER_SIM_EXTRA_CONF axes, recorded in the
+evidence line) with its best-effort release between runs.
 
 Usage: python tools/determinism_probe.py [sf_dir]   (default sf0.1)
 Exit 0 iff every key is stable across all three layouts.
@@ -34,21 +34,14 @@ def main() -> int:
     t0 = time.monotonic()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    from pyspark.sql import SparkSession
-
     from climateiq_pipelines_spark.parity import canon_frame
     from climateiq_pipelines_spark.plans import QUERIES, load_all
-    from climateiq_pipelines_spark.session import release_blocks
     from tests.test_determinism import PROBE_KEYS
+    from tools.driver_sim import driver_session, release
     from tools.evidence import evidence_line
 
     load_all()
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.session.timeZone", "America/New_York")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark, applied = driver_session()
 
     unstable = []
     for key in PROBE_KEYS:
@@ -57,7 +50,7 @@ def main() -> int:
         for n in PARTITIONS:
             spark.conf.set("spark.sql.shuffle.partitions", str(n))
             canon = canon_frame(QUERIES[key](spark, sf_dir).toPandas())
-            release_blocks(spark)
+            release(spark, key)
             if baseline is None:
                 baseline = (n, canon)
             elif canon != baseline[1]:
@@ -73,6 +66,7 @@ def main() -> int:
             partitions=list(PARTITIONS),
             n_keys=len(PROBE_KEYS),
             wall_sec=round(time.monotonic() - t0, 1),
+            **applied,
         )
     )
     if unstable:

@@ -1,27 +1,58 @@
-"""Driver simulation — the verification gate (.claude/skills/verify).
+"""Driver simulation and full-surface parity sweep — the verification
+gate.
 
 Builds a driver-like session (NOT the engine's factory, non-UTC timezone
-to catch timestamp_ntz leaks), runs t1 smoke + every queries() key at
-sf0.01 against its DuckDB oracle with the strict local comparator.
+to catch timestamp_ntz leaks), runs the t1 smoke, then checks every
+queries() key against its DuckDB oracle with parity.check_key and the
+strict local comparator.  The oracle text comes from parity.oracle_text:
+a key with an SF-parameterized builder (plans.ORACLE_BUILDERS) gets its
+oracle built for the target sf_dir, every other key uses its static
+oracle_sql() text, so the same sweep is a full value check at ANY scale
+factor.
 
-Usage: python tools/driver_sim.py [--window] [sf_dir]
+Usage: python tools/driver_sim.py [--window] [--fast] [sf_dir]
+(default sf_dir /root/testdata/sf0.01, the driver's certification scale)
 
 --window restricts the sweep to the first 50 registration-order keys —
 exactly the slice the external driver certifies (plans.ROTATION_WINDOW)
 — for fast validation right after a rotation edit, before the full
 232-key run.
+
+--fast is for large scale factors.  llm_minhash_neardup dispatches to
+its banded LSH twin (llm.ALLPAIRS_MAX_DOCS = 0): the two keys share one
+oracle and banding is oracle-proven lossless, so this changes the
+executed plan, never the checked answer.  The DIGEST_FAST_KEYS compare
+a 2-value digest computed inside each engine
+(parity_digest.check_key_digest) instead of the strict per-cell
+comparator, whose Python canonicalization dominates their wall at sf0.1.
+Both substitutions are named on the key's progress line.
+
+Environment axes, each recorded in the evidence header: DRIVER_SIM_TZ
+(session timezone), DRIVER_SIM_MASTER (local parallelism level) and
+DRIVER_SIM_EXTRA_CONF ("k=v[,k=v]" engine confs; a malformed pair
+aborts).
+
+Output: one flushed stderr line per key ("[i/n] key: verdict (secs)");
+stdout holds the JSON evidence header first, then "ALL n KEYS OK" or
+"FAILURES:" with one entry per failed key.  Exit 1 on any failure.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+USAGE = "usage: driver_sim.py [--window] [--fast] [sf_dir]"
+
+# Full-projection keys whose strict-comparator cost dominates their
+# sweep wall while the engine plan is sub-second.  Membership is a
+# deliberate act — a key here loses its per-cell check in FAST sweeps
+# only, so it must be covered by the digest mutation pin in
+# tests/test_parity_digest.py.
+DIGEST_FAST_KEYS = {"fn_math", "proj_computed_columns", "fn_date"}
 
 
 def evidence_header(
@@ -32,15 +63,14 @@ def evidence_header(
     wall_sec: float,
     extra_conf: str = "",
     master: str = "local[8]",
+    fast: bool = False,
 ) -> str:
     """One JSON line embedding the run's own configuration — the first
     stdout line of every sweep, so archived evidence logs are unique and
-    self-describing (VERDICT r11 task #2: two r11 robustness logs were
-    byte-identical to r8/r9 logs and git recorded them as renames).
-    ``extra_conf`` is the string main() PARSED AND APPLIED, passed in
-    rather than re-read from the environment at print time — the header
-    must report the configuration that actually ran (round-12
-    self-review)."""
+    self-describing.  ``extra_conf`` is the string the session builder
+    PARSED AND APPLIED, passed in rather than re-read from the
+    environment at print time, so the header reports the configuration
+    that actually ran."""
     from tools.evidence import evidence_line
 
     return evidence_line(
@@ -50,40 +80,32 @@ def evidence_header(
         master=master,
         sf_dir=sf_dir,
         window_only=window_only,
+        fast=fast,
         n_keys=n_keys,
         wall_sec=round(wall_sec, 1),
     )
 
 
-def main() -> int:
-    t0 = time.monotonic()
-    args = [a for a in sys.argv[1:] if a != "--window"]
-    window_only = "--window" in sys.argv[1:]
-    sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    # Non-UTC by default to catch timestamp_ntz leaks; override with
-    # DRIVER_SIM_TZ for the per-round second-timezone rotation (r9 ran
-    # Asia/Kolkata, +05:30 — a half-hour offset catches a class of
-    # rounding bugs whole-hour zones cannot).
+def driver_session():
+    """(spark, applied) — a session built the way the external driver
+    builds one, plus the {tz, master, extra_conf} it was built with.
+    Non-UTC by default to catch timestamp_ntz leaks; DRIVER_SIM_MASTER
+    varies the local parallelism (and hence partition counts and
+    per-partition accumulation order), the local-mode proxy for
+    cluster-size independence."""
+    from pyspark.sql import SparkSession
+
     tz = os.environ.get("DRIVER_SIM_TZ", "America/New_York")
-    # Cluster-size-independence axis (round 12): DRIVER_SIM_MASTER
-    # varies the local parallelism level (e.g. local[2] / local[32]).
-    # Core count changes spark.range/parallelize partition counts and
-    # hence per-partition accumulation order — the local-mode proxy for
-    # "a 1000-executor cluster computes the same answers".  Embedded in
-    # the evidence header like every other applied knob.
     master = os.environ.get("DRIVER_SIM_MASTER", "local[8]")
     builder = (
         SparkSession.builder.master(master)
         .config("spark.sql.session.timeZone", tz)
         .config("spark.ui.enabled", "false")
     )
-    # Engine-config robustness axis (VERDICT r10 task #7): e.g.
-    # DRIVER_SIM_EXTRA_CONF="spark.sql.adaptive.enabled=false" or
-    # "...codegen.wholeStage=false" runs the whole surface under an
-    # adversarial engine configuration; comma-separated k=v pairs
-    # (values must not contain commas).  A malformed pair ABORTS: a
-    # typo that silently ran the default config would commit a
-    # robustness log evidencing a property that was never tested.
+    # Comma-separated k=v pairs (values must not contain commas).  A
+    # malformed pair ABORTS: a typo that silently ran the default
+    # config would commit a robustness log evidencing a property that
+    # was never tested.
     extra_conf = os.environ.get("DRIVER_SIM_EXTRA_CONF", "")
     for kv in filter(None, extra_conf.split(",")):
         k, eq, v = kv.partition("=")
@@ -93,88 +115,83 @@ def main() -> int:
         builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    return spark, {"tz": tz, "master": master, "extra_conf": extra_conf}
 
-    import __spark_entry__ as E
-    from climateiq_pipelines_spark.parity import compare_frames, duck_connect
 
-    assert len(E.entry(spark).collect()) > 0, "t1 smoke failed"
-    con = duck_connect(sf_dir)
-    qs, oracles = E.queries(), E.oracle_sql()
-    if window_only:
-        # The driver artifact truncates at 50 entries; registration
-        # order IS certification priority (plans._apply_rotation_window)
-        # — keep insertion order, not sorted order, for the slice.
-        qs = dict(list(qs.items())[:50])
-        print(f"# --window: first {len(qs)} registration-order keys",
-              file=sys.stderr)
-    # At the sf0.01 certification scale the sim is FAITHFUL to the real
-    # driver: static oracle_sql() strings only.  At any other sf_dir,
-    # keys with an SF-parameterized builder (plans.ORACLE_BUILDERS) get
-    # their oracle built for that scale (VERDICT r9 task #2) — the
-    # ORACLE_SF_PINNED attribution below remains the fallback for
-    # pinned keys WITHOUT a builder.
-    from climateiq_pipelines_spark.plans import ORACLE_BUILDERS
-
+def release(spark, after: str) -> None:
+    """Best-effort full release_blocks between keys, so per-key timing
+    is not order-dependent.  If the JVM just died (a key OOMed) the
+    release raises too; swallow it so the run still reaches its
+    report."""
     from climateiq_pipelines_spark.session import release_blocks
 
-    at_cert_sf = os.path.basename(sf_dir.rstrip("/")) == "sf0.01"
-    bad: list[str] = []
-    for key, fn in sorted(qs.items()):
-        try:
-            pdf = fn(spark, sf_dir).toPandas()
-        except Exception as exc:  # noqa: BLE001 — report, don't abort the sweep
-            bad.append(f"[FAIL] {key}: raised {exc}")
-            continue
-        finally:
-            # Deterministic block reclaim between keys — operators
-            # localCheckpoint relations they return; without this the
-            # blocks accumulate for the session lifetime and per-key
-            # timing becomes order-dependent (session.release_blocks).
-            # Best-effort: if the JVM just died (a key OOMed), the
-            # reclaim raises too — swallow it so the sweep still
-            # reaches its header/FAILURES report (round-12 self-review:
-            # an uncaught finally would lose the evidence the except
-            # clause exists to preserve).
-            try:
-                release_blocks(spark)
-            except Exception as exc:  # noqa: BLE001
-                print(f"# release_blocks failed after {key}: {exc}",
-                      file=sys.stderr)
-        if key not in oracles:
-            print(f"# {key}: rows-only ({len(pdf)} rows)", file=sys.stderr)
-            continue
-        if not at_cert_sf and key in ORACLE_BUILDERS:
-            oracle_text = ORACLE_BUILDERS[key](sf_dir)
-        else:
-            oracle_text = oracles[key]
-        res = compare_frames(key, pdf, con.execute(oracle_text).fetchdf())
-        if not res.ok:
-            from climateiq_pipelines_spark.plans import ORACLE_SF_PINNED
+    try:
+        release_blocks(spark)
+    except Exception as exc:  # noqa: BLE001
+        print(f"# release_blocks failed after {after}: {exc}",
+              file=sys.stderr, flush=True)
 
-            pinned = ORACLE_SF_PINNED.get(key)
-            if pinned is not None and os.path.basename(
-                sf_dir.rstrip("/")
-            ) != pinned:
-                # ADVICE r7: attributable, not a generic hash mismatch —
-                # this oracle's unroll constants were measured on `pinned`.
-                bad.append(
-                    f"[FAIL] {key}: oracle is PINNED to {pinned} "
-                    f"(fixture-measured unroll count) but this sweep ran "
-                    f"{sf_dir} — re-measure the stopping round and "
-                    f"regenerate the oracle for this SF. Raw: {res}"
-                )
-            else:
+
+def parse_args(argv: list[str]) -> tuple[bool, bool, str]:
+    """(window_only, fast, sf_dir); exits on anything else, before any
+    Spark work — a typo like --Fast must not become the sf_dir."""
+    flags = [a for a in argv if a.startswith("-")]
+    pos = [a for a in argv if not a.startswith("-")]
+    unknown = [a for a in flags if a not in ("--window", "--fast")]
+    if unknown or len(pos) > 1:
+        sys.exit(f"unknown argument(s) {unknown or pos[1:]}; {USAGE}")
+    sf_dir = pos[0] if pos else "/root/testdata/sf0.01"
+    return "--window" in flags, "--fast" in flags, sf_dir
+
+
+def main() -> int:
+    t0 = time.monotonic()
+    window_only, fast, sf_dir = parse_args(sys.argv[1:])
+    spark, applied = driver_session()
+
+    import __spark_entry__ as E
+    from climateiq_pipelines_spark.parity import check_key, duck_connect
+    from climateiq_pipelines_spark.parity_digest import check_key_digest
+
+    if fast:
+        from climateiq_pipelines_spark.operators import llm
+
+        llm.ALLPAIRS_MAX_DOCS = 0  # force the shared-oracle LSH plan
+    assert len(E.entry(spark).collect()) > 0, "t1 smoke failed"
+    con = duck_connect(sf_dir)
+    keys = list(E.queries())
+    if window_only:
+        # Registration order IS certification priority
+        # (plans._apply_rotation_window): slice before sorting.
+        keys = keys[:50]
+    keys.sort()
+    bad: list[str] = []
+    for i, key in enumerate(keys, 1):
+        t_key = time.monotonic()
+        digest = fast and key in DIGEST_FAST_KEYS
+        try:
+            res = (check_key_digest if digest else check_key)(
+                key, spark, sf_dir, con)
+            if not res.ok:
+                verdict = "FAIL"
                 bad.append(str(res))
-    # Self-describing evidence header (VERDICT r11 task #2): in round 11
-    # git detected two committed robustness logs as RENAMES of r8/r9
-    # logs because the content was the identical string "ALL 232 KEYS
-    # OK" — the claim chain ran through commit messages instead of the
-    # artifact.  The first stdout line now embeds the run's own config,
-    # so every archived .out is unique and auditable on its face.
-    print(evidence_header(tz, sf_dir, window_only, len(qs),
-                          time.monotonic() - t0, extra_conf=extra_conf,
-                          master=master))
-    print("FAILURES:" if bad else f"ALL {len(qs)} KEYS OK")
+            elif res.oracle_rows < 0:
+                verdict = f"rows-only ({res.spark_rows} rows)"
+            else:
+                verdict = "OK" + (" (digest twin)" if digest else "")
+                if fast and key == "llm_minhash_neardup":
+                    verdict += " (LSH twin plan)"
+        except Exception as exc:  # noqa: BLE001 — report, don't abort the sweep
+            verdict = f"EXC {type(exc).__name__}"
+            bad.append(f"[FAIL] {key}: raised {exc}")
+        release(spark, key)
+        print(f"[{i}/{len(keys)}] {key}: {verdict}"
+              f" ({time.monotonic() - t_key:.1f}s)", file=sys.stderr,
+              flush=True)
+    print(evidence_header(sf_dir=sf_dir, window_only=window_only,
+                          n_keys=len(keys), wall_sec=time.monotonic() - t0,
+                          fast=fast, **applied))
+    print("FAILURES:" if bad else f"ALL {len(keys)} KEYS OK")
     for b in bad:
         print(b)
     return 1 if bad else 0
