@@ -121,13 +121,20 @@ def lloyd_centroid_row(centroids: DataFrame) -> DataFrame:
 # centroid join, the (vec, c) distance aggregate, and the argmin
 # aggregate.  1e12 is exactly representable in double, so the SQL text
 # round-trips exactly (the r16 float-literal caveat does not bite).
+# Domain: every centroid has the vector's dimension.  A ragged pair
+# would read element_at past the shorter array as NULL and turn that
+# centroid's distance into NULL, which array_min then silently ranks
+# first; the in-plan raise_error fails the query instead.
 _LLOYD_BEST = (
     "array_min(transform(cents, ct -> struct("
-    "aggregate(sequence(1, size(embedding)), cast(0 as bigint),"
+    "if(size(ct.carr) != size(embedding),"
+    " raise_error(format_string('lloyd: centroid %s has %s dims,"
+    " vector has %s', ct.c_id, size(ct.carr), size(embedding))),"
+    " aggregate(sequence(1, size(embedding)), cast(0 as bigint),"
     " (acc, i) -> acc + floor("
     "(cast(element_at(embedding, i) as double) - element_at(ct.carr, i))"
     " * (cast(element_at(embedding, i) as double) - element_at(ct.carr, i))"
-    " * 1e12)) as dist,"
+    " * 1e12))) as dist,"
     " ct.c_id as c)))"
 )
 

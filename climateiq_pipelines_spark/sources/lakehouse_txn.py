@@ -44,6 +44,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from climateiq_pipelines_spark.functions.helpers import sql_dsum, two_level
 from climateiq_pipelines_spark.plans import register
@@ -164,9 +165,25 @@ def _active_files(root: str, version: int | None = None) -> list[str]:
     return sorted(active)
 
 
-def _snapshot(spark: SparkSession, root: str, version: int | None = None) -> DataFrame:
-    files = [os.path.join(root, "data", f) for f in _active_files(root, version)]
-    return spark.read.parquet(*files)
+def _read_files(
+    spark: SparkSession, root: str, files: list[str], schema: StructType
+) -> DataFrame:
+    """Scan data files (relative to data/) with the table's known
+    schema: every writer knows the schema it wrote, so no read pays a
+    schema-inference job on the files' footers."""
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(root, "data", f) for f in files]
+    )
+
+
+def _snapshot(
+    spark: SparkSession,
+    root: str,
+    schema: StructType,
+    version: int | None = None,
+) -> DataFrame:
+    """The table at ``version`` (None = latest), read with ``schema``."""
+    return _read_files(spark, root, _active_files(root, version), schema)
 
 
 def _write_data(df: DataFrame, root: str, tag: str) -> list[str]:
@@ -184,17 +201,20 @@ def _write_data(df: DataFrame, root: str, tag: str) -> list[str]:
 
 
 def commit_idempotent(root: str, batch_id: int, write_files) -> str:
-    """PUBLIC idempotent-commit recipe for at-least-once producers
-    (round-13 review batch C: the logic lived inlined in
-    streaming/txn_sink's foreachBatch closure, coupled to this module's
-    privates — the generic Delta txnAppId/txnVersion pattern deserves
-    its own seam next to the protocol it composes with).
+    """PUBLIC idempotent-commit recipe for at-least-once producers (the
+    Delta txnAppId/txnVersion pattern, next to the protocol it composes
+    with).
 
     Maps ``version = batch_id + 1`` and commits put-if-absent:
 
     - version unclaimed → invoke ``write_files()`` (a callable returning
       the data-file list — only called when a write is actually needed)
       and atomically claim the version → ``"committed"``;
+    - version unclaimed and ``write_files()`` returns no files (an empty
+      batch; the callable leaves no data group behind) → claim nothing
+      → ``"empty"``.  The version stays free, so the log may skip
+      versions; readers replay records in order and never assume a
+      dense sequence;
     - version already committed BY THIS batch_id (a replayed delivery —
       the at-least-once failure mode) → skip without writing →
       ``"replay_skipped"``;
@@ -216,6 +236,8 @@ def commit_idempotent(root: str, batch_id: int, write_files) -> str:
             f"expected {batch_id!r})"
         )
     files = write_files()
+    if not files:
+        return "empty"
     if _try_commit(
         root,
         version,
@@ -261,7 +283,9 @@ def _build_three_commit_history(
         root, 2, {"version": 2, "add": files2, "read_version": 1, "domain": "*"}
     )
 
-    rewritten = _snapshot(spark, root, 2).filter(F.col("o_orderkey") % 5 != 0)
+    rewritten = _snapshot(spark, root, orders.schema, 2).filter(
+        F.col("o_orderkey") % 5 != 0
+    )
     files3 = _write_data(rewritten, root, "c3")
     _commit_must_win(
         root,
@@ -335,8 +359,8 @@ def sink_txn_commit_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _build_three_commit_history(spark, orders, root)
 
-    rows_at_v2 = _snapshot(spark, root, 2).count()  # time travel
-    latest = _snapshot(spark, root)  # replays to v3
+    rows_at_v2 = _snapshot(spark, root, orders.schema, 2).count()  # travel
+    latest = _snapshot(spark, root, orders.schema)  # replays to v3
     # round 16: two-level exact audit sum (helpers.two_level); the
     # version literals attach at the merge stage.  Oracle unchanged.
     return two_level(
@@ -455,21 +479,21 @@ def sink_txn_conflict_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     # race — the protocol's whole point is that preparation is cheap to
     # retry because data files are immutable and commit-independent).
     a_files = _write_data(
-        _snapshot(spark, root, 1)
+        _snapshot(spark, root, orders.schema, 1)
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .withColumn("o_totalprice", F.col("o_totalprice") + 10.0),
         root,
         "a_v2",
     )
     b_files = _write_data(
-        _snapshot(spark, root, 1)
+        _snapshot(spark, root, orders.schema, 1)
         .filter(F.col("o_orderpriority") == "2-HIGH")
         .withColumn("o_totalprice", F.col("o_totalprice") + 20.0),
         root,
         "b_v2",
     )
     c_files = _write_data(
-        _snapshot(spark, root, 1)
+        _snapshot(spark, root, orders.schema, 1)
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .withColumn("o_totalprice", F.col("o_totalprice") + 100.0),
         root,
@@ -551,7 +575,7 @@ def sink_txn_conflict_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes += 1
     current = _latest_version(root)
     c_files2 = _write_data(
-        _snapshot(spark, root, current)
+        _snapshot(spark, root, orders.schema, current)
         .filter(F.col("o_orderpriority") == "1-URGENT")
         .withColumn("o_totalprice", F.col("o_totalprice") + 100.0),
         root,
@@ -569,7 +593,7 @@ def sink_txn_conflict_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
     )
 
-    latest = _snapshot(spark, root)
+    latest = _snapshot(spark, root, orders.schema)
     # round 16: two-level exact audit sum (helpers.two_level); the
     # race-accounting literals attach at the merge stage.  Oracle
     # unchanged.
@@ -672,7 +696,7 @@ def sink_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     _write_checkpoint(root, 3)
     _write_checkpoint(root, 3)  # duplicate attempt: harmless no-op
 
-    repriced = _snapshot(spark, root, 3).withColumn(
+    repriced = _snapshot(spark, root, orders.schema, 3).withColumn(
         "o_totalprice", F.col("o_totalprice") + 5.0
     )
     files4 = _write_data(repriced, root, "c4")
@@ -685,9 +709,7 @@ def sink_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     active_cp, cp_version, tail_n = _read_via_checkpoint(root)
     equals_replay = active_cp == _active_files(root)
-    latest = spark.read.parquet(
-        *[os.path.join(root, "data", f) for f in active_cp]
-    )
+    latest = _read_files(spark, root, active_cp, orders.schema)
     # round 16: two-level exact audit sum (helpers.two_level); the
     # checkpoint literals attach at the merge stage.  Oracle unchanged.
     return two_level(

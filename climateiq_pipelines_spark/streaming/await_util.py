@@ -1,22 +1,80 @@
-"""Shared streaming-query wait with a LOUD timeout.
+"""Shared streaming-query runs: a wait with a LOUD timeout, and the one
+update-mode foreachBatch start.
 
-Round-12 review: every streaming key ran ``query.awaitTermination(N)``
-and ignored the boolean — on a slow host the availableNow trigger can
-outlive the timeout, the ``finally`` stops the query mid-batch, and the
-key returns an empty (complete-mode) or partial (append-mode) memory
-sink as its ANSWER.  The driver would then report a hash mismatch that
-diagnoses as a wrong-answer engine bug instead of a host timeout.  A
-timeout must fail loudly and attributably.
+Every streaming key waits through ``await_or_raise``.  On a slow host an
+availableNow query can outlive its timeout; if the ``finally`` then
+stopped it mid-batch and the key read its sink, an empty (complete-mode)
+or partial (append-mode) sink would come back as the ANSWER, and a
+host timeout would pass for a wrong-answer engine bug in the oracle
+check.  A timeout must fail loudly and attributably, so the error
+carries the query's status and last progress.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
+from pyspark.sql.streaming import StreamingQuery
 
-def await_or_raise(query, seconds: int) -> None:
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+def await_or_raise(query: StreamingQuery, seconds: int) -> None:
     """awaitTermination(seconds), raising TimeoutError on expiry instead
-    of letting the caller read a partial sink."""
+    of letting the caller read a partial sink.  The message names what
+    the query was doing (its status) and how far it got (the last
+    progress: batch id, input rows, per-phase ``durationMs``), so a
+    host-load timeout reads differently from a stuck batch."""
     if not query.awaitTermination(seconds):
+        last = query.lastProgress
+        progress = (
+            "no batch completed"
+            if last is None
+            else f"batch {last['batchId']}, {last['numInputRows']} input "
+            f"rows, durationMs {last['durationMs']}"
+        )
         raise TimeoutError(
             f"streaming query {query.name or query.id} did not terminate "
-            f"within {seconds}s — refusing to read a partial sink"
+            f"within {seconds}s — refusing to read a partial sink; "
+            f"status {query.status}; last progress: {progress}"
         )
+
+
+def run_update_foreach_batch(df: DataFrame, sink) -> None:
+    """Run the streaming aggregate ``df`` to completion in UPDATE mode
+    with an availableNow trigger, handing each micro-batch to the
+    foreachBatch function ``sink``.
+
+    Over a finite source the query runs exactly one micro-batch per
+    batch of input and no trailing watermark-only batch.  That closing
+    batch exists to advance the watermark and evict expired state; in
+    update mode every changed group was already emitted by the batch
+    that changed it, so the closing batch emits nothing and only costs
+    a re-run of the stateful plan.  It is switched off with
+    ``spark.sql.streaming.noDataMicroBatches.enabled=false`` for this
+    query alone: ``start()`` clones the session into the stream, so the
+    caller's value is restored as soon as it returns (unset again if it
+    was unset).
+
+    APPEND-mode queries must NOT come through here: there the closing
+    batch is the one that emits the final windows, once the watermark
+    passes them (``stream_state_timeout_flush`` and the memory-sink keys
+    behind ``demos._run_to_memory``)."""
+    spark = df.sparkSession
+    prior = spark.conf.get(_NO_DATA_BATCHES, None)
+    spark.conf.set(_NO_DATA_BATCHES, "false")
+    try:
+        query = (
+            df.writeStream.foreachBatch(sink)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        if prior is None:
+            spark.conf.unset(_NO_DATA_BATCHES)
+        else:
+            spark.conf.set(_NO_DATA_BATCHES, prior)
+    try:
+        await_or_raise(query, 120)
+    finally:
+        query.stop()

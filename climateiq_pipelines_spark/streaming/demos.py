@@ -43,7 +43,10 @@ from climateiq_pipelines_spark.registry import (
     ntz_of_window_bound,
     read_events_stream,
 )
-from climateiq_pipelines_spark.streaming.await_util import await_or_raise
+from climateiq_pipelines_spark.streaming.await_util import (
+    await_or_raise,
+    run_update_foreach_batch,
+)
 
 
 # (round-13 review batch C: the former _read_events_stream wrapper
@@ -232,16 +235,7 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out)
         )
 
-    query = (
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        await_or_raise(query, 120)
-    finally:
-        query.stop()
+    run_update_foreach_batch(agg, sink)
 
     sunk = spark.read.parquet(out)
     latest = W.partitionBy("win_start", "event_type").orderBy(

@@ -1,21 +1,35 @@
-"""Round-7: EXACTLY-ONCE streaming sink through the transaction log —
-the composition that makes both halves real: Structured Streaming's
-foreachBatch gives at-least-once batch delivery with a stable
-``batch_id``; the lakehouse_txn commit protocol gives put-if-absent
-versions. Mapping ``version = batch_id + 1`` makes the sink IDEMPOTENT:
-a replayed batch (failure recovery re-delivers the last batch) attempts
-the version its first delivery already claimed, loses the atomic-link
-race, recognizes its own batch_id in the committed record, and skips —
-no duplicate data, no coordination beyond the log. This is precisely
+"""EXACTLY-ONCE streaming sink through the transaction log.
+
+Structured Streaming's foreachBatch delivers each micro-batch at least
+once, under a stable ``batch_id``; ``lakehouse_txn.commit_idempotent``
+commits put-if-absent at ``version = batch_id + 1``.  Together they make
+the sink idempotent: a replayed batch (failure recovery re-delivers the
+last batch) attempts the version its first delivery already claimed,
+finds its own ``batch_id`` in the committed record, and skips without
+writing — no duplicate data, no coordination beyond the log.  This is
 how Delta's ``txnAppId``/``txnVersion`` idempotent writes work.
 
-Registered after the driver's 50-entry certification window
-(plans.load_all); rotation-targeted for round 8+.
+Invariants of one call of ``stream_txn_exactly_once``:
+
+- ONE micro-batch.  The update-mode query runs through
+  ``await_util.run_update_foreach_batch``, which skips the trailing
+  watermark-only batch: update mode emitted every changed group in the
+  data batch already, so that batch would deliver nothing.
+- ONE execution of the stateful plan per batch.  The batch's only
+  action is its write; the write's own observed row count tells an
+  empty batch apart, which deletes its file group and commits nothing
+  (``commit_idempotent`` returns ``"empty"``).
+- Every read of the table passes the known schema, so no read launches
+  a schema-inference job, and the replay launches no job at all.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+import shutil
+from collections import Counter
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.plans import register
@@ -29,7 +43,40 @@ from climateiq_pipelines_spark.sources.lakehouse_txn import (
     _write_data,
     commit_idempotent,
 )
-from climateiq_pipelines_spark.streaming.await_util import await_or_raise
+from climateiq_pipelines_spark.streaming.await_util import (
+    run_update_foreach_batch,
+)
+
+
+def _write_batch(batch_df: DataFrame, root: str, tag: str) -> list[str]:
+    """Write the batch as data/<tag>/ and return its files, or delete
+    the group and return [] when the batch held no rows.  The row count
+    is observed on the write itself, so the batch plan runs once."""
+    rows = Observation()
+    files = _write_data(
+        batch_df.observe(rows, F.count(F.lit(1)).alias("n")), root, tag
+    )
+    if rows.get["n"] == 0:
+        shutil.rmtree(os.path.join(root, "data", tag))
+        return []
+    return files
+
+
+def exactly_once_sink(root: str, audit: Counter):
+    """foreachBatch function committing each batch to the txn table at
+    ``root`` through ``commit_idempotent``; ``audit`` counts its
+    outcomes ("committed", "replay_skipped", "empty")."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        audit[
+            commit_idempotent(
+                root,
+                batch_id,
+                lambda: _write_batch(batch_df, root, f"batch_{batch_id}"),
+            )
+        ] += 1
+
+    return sink
 
 
 @register(
@@ -50,38 +97,24 @@ def stream_txn_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the SAME batch is deliberately RE-DELIVERED (the at-least-once
     failure mode foreachBatch documents: after a crash the last batch
     replays with the same batch_id) — and the sink proves idempotence:
-    the replay's commit attempt loses the put-if-absent race to its own
-    first delivery, matches the committed record's batch_id, and skips.
-    The read-back therefore equals the batch aggregation exactly once —
-    no double counts — which is what the oracle checks, alongside the
-    audit pair (1 commit, 1 replay skipped).
+    the replay finds version 1 held by its own batch_id and skips
+    without writing.  The read-back therefore equals the batch
+    aggregation exactly once — no double counts — which is what the
+    oracle checks, alongside the audit pair (1 commit, 1 replay
+    skipped).
+
+    Spark work per call: the one micro-batch's write (the stateful plan,
+    run once) and the final read; see the module docstring for why no
+    other job runs.
 
     Scale: the sink adds one log record per micro-batch (O(1) metadata)
     and the data write the batch needed anyway; replay detection reads
-    one log record. At 100 TB/day this is the standard idempotent-sink
+    the log only.  At 100 TB/day this is the standard idempotent-sink
     recipe — the alternative (dedup-on-read over a keyed sink) costs a
     shuffle per read forever."""
     root = _mk_table("stream")
-    audit = {"commits": 0, "replays_skipped": 0}
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # availableNow can deliver a trailing EMPTY batch (the watermark
-        # advance after the data batch); committing nothing for nothing
-        # keeps the log 1:1 with data-bearing batches.
-        if batch_df.isEmpty():
-            return
-        # The whole idempotence recipe is lakehouse_txn's PUBLIC
-        # commit_idempotent (round-13 review batch C: it lived inlined
-        # here against the txn module's privates; it is generic Delta
-        # txnAppId/txnVersion logic and belongs next to the protocol).
-        outcome = commit_idempotent(
-            root,
-            batch_id,
-            lambda: _write_data(batch_df, root, f"batch_{batch_id}"),
-        )
-        audit[
-            "commits" if outcome == "committed" else "replays_skipped"
-        ] += 1
+    audit: Counter = Counter()
+    sink = exactly_once_sink(root, audit)
 
     agg = (
         read_events_stream(spark, sf_dir)
@@ -94,30 +127,19 @@ def stream_txn_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    query = (
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        await_or_raise(query, 120)
-    finally:
-        query.stop()
+    run_update_foreach_batch(agg, sink)
 
-    # Deliberate re-delivery of the completed batch (the documented
-    # foreachBatch at-least-once failure mode), fed the same data the
-    # stream's batch 0 carried — idempotence must absorb it.
-    replay_df = _snapshot(spark, root)
-    sink(replay_df, 0)
+    # Deliberate re-delivery of the completed batch 0, fed the data its
+    # first delivery committed — idempotence must absorb it.
+    schema = agg.schema
+    sink(_snapshot(spark, root, schema), 0)
 
-    latest = _snapshot(spark, root)
-    return latest.select(
+    return _snapshot(spark, root, schema).select(
         ntz_of_window_bound("win_start").alias("win_start"),
         "event_type",
         "n_events",
-        F.lit(audit["commits"]).cast("int").alias("n_commits"),
-        F.lit(audit["replays_skipped"]).cast("int").alias(
+        F.lit(audit["committed"]).cast("int").alias("n_commits"),
+        F.lit(audit["replay_skipped"]).cast("int").alias(
             "n_replays_skipped"
         ),
     )

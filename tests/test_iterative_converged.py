@@ -68,3 +68,32 @@ def test_kmeans_converged_is_deterministic(spark):
         .reset_index(drop=True)
     )
     assert a.equals(b)
+
+
+def test_lloyd_assignment_raises_on_ragged_centroids(spark):
+    """A centroid whose dimension differs from the vector's must fail
+    the query; before the in-plan guard its distance was NULL, and that
+    NULL struct won the argmin silently."""
+    import pytest
+    from pyspark.errors import SparkRuntimeException
+
+    from climateiq_pipelines_spark.functions.fixedpoint import (
+        lloyd_assign_cols,
+    )
+
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0]), (2, [0.0, 0.0, 0.0])],
+        "vec_id int, embedding array<double>",
+    )
+    schema = "cents array<struct<c_id: int, carr: array<double>>>"
+    square = spark.createDataFrame(
+        [([(0, [1.0, 2.0, 3.0]), (1, [0.0, 0.0, 0.0])],)], schema
+    )
+    ragged = spark.createDataFrame(
+        [([(0, [1.0, 2.0]), (1, [0.0, 0.0, 0.0])],)], schema
+    )
+    cluster, dist = lloyd_assign_cols()
+    rows = vecs.crossJoin(square).select("vec_id", cluster, dist).collect()
+    assert sorted(tuple(r) for r in rows) == [(1, 0, 0), (2, 1, 0)]
+    with pytest.raises(SparkRuntimeException, match="centroid 0 has 2 dims"):
+        vecs.crossJoin(ragged).select("vec_id", cluster, dist).collect()

@@ -69,15 +69,15 @@ def test_snapshot_isolation_and_time_travel(spark):
     f1 = _write_data(orders, root, "c1")
     assert _try_commit(root, 1, {"version": 1, "add": f1,
                                  "read_version": 0, "domain": "*"})
-    before = _snapshot(spark, root, 1).count()
+    before = _snapshot(spark, root, orders.schema, 1).count()
     # v2 rewrites to half the table
     f2 = _write_data(
         orders.filter(F.col("o_orderkey") % 2 == 0), root, "c2"
     )
     assert _try_commit(root, 2, {"version": 2, "add": f2, "remove": f1,
                                  "read_version": 1, "domain": "*"})
-    after_latest = _snapshot(spark, root).count()
-    after_pinned = _snapshot(spark, root, 1).count()
+    after_latest = _snapshot(spark, root, orders.schema).count()
+    after_pinned = _snapshot(spark, root, orders.schema, 1).count()
     assert after_pinned == before
     assert after_latest < before
 
@@ -94,7 +94,7 @@ def test_orphan_files_are_invisible(spark):
     assert _try_commit(root, 1, {"version": 1, "add": f1,
                                  "read_version": 0, "domain": "*"})
     assert _active_files(root) == f1
-    assert _snapshot(spark, root).count() == orders.count()
+    assert _snapshot(spark, root, orders.schema).count() == orders.count()
 
 
 def test_stream_txn_exactly_once_audit(spark):
@@ -211,12 +211,13 @@ def test_checkpoint_and_commit_share_one_publish_recipe():
     assert len(links) == 1
 
 
-def test_commit_idempotent_three_outcomes():
-    """Round-13 review batch C: the idempotent-commit recipe is now
-    lakehouse_txn's PUBLIC seam.  Pin all three outcomes: fresh commit
-    writes and claims; a replayed delivery (same batch_id) skips
-    WITHOUT invoking the write callable; a foreign holder of the
-    version raises (plain raise — survives python -O)."""
+def test_commit_idempotent_four_outcomes():
+    """The idempotent-commit recipe is lakehouse_txn's PUBLIC seam.  Pin
+    all four outcomes: fresh commit writes and claims; an empty batch
+    (the write callable returns no files) claims nothing; a replayed
+    delivery (same batch_id) skips WITHOUT invoking the write callable;
+    a foreign holder of the version raises (plain raise — survives
+    python -O)."""
     import pytest
 
     import climateiq_pipelines_spark.sources.lakehouse_txn as LT
@@ -227,6 +228,11 @@ def test_commit_idempotent_three_outcomes():
     def write():
         calls.append(1)
         return ["batch_7/part-0.parquet"]
+
+    # an empty batch: no log record, no data directory, version free
+    assert LT.commit_idempotent(root, 6, lambda: []) == "empty"
+    assert LT._read_log(root) == []
+    assert os.listdir(os.path.join(root, "data")) == []
 
     assert LT.commit_idempotent(root, 7, write) == "committed"
     assert calls == [1]
@@ -242,3 +248,24 @@ def test_commit_idempotent_three_outcomes():
     with pytest.raises(RuntimeError, match="different batch"):
         LT.commit_idempotent(root, 8, write)
     assert calls == [1]  # the foreign-holder path never writes
+
+
+def test_txn_sink_commits_nothing_for_an_empty_batch(spark):
+    """The exactly-once sink fed an empty micro-batch writes, sees the
+    write's observed row count of 0, deletes the group and commits
+    nothing: no log record, no data group, audit counts 0/0."""
+    from collections import Counter
+
+    from climateiq_pipelines_spark.streaming.txn_sink import exactly_once_sink
+
+    root = _mk_table("empty")
+    audit = Counter()
+    sink = exactly_once_sink(root, audit)
+    empty = spark.createDataFrame(
+        [], "win_start timestamp, event_type string, n_events bigint"
+    )
+    sink(empty, 0)
+    assert (audit["committed"], audit["replay_skipped"]) == (0, 0)
+    assert audit["empty"] == 1
+    assert _read_log(root) == []
+    assert os.listdir(os.path.join(root, "data")) == []

@@ -6,9 +6,14 @@ applies to the sessionizer.
 
 from __future__ import annotations
 
+import threading
+
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from climateiq_pipelines_spark.plans import QUERIES
+from climateiq_pipelines_spark.registry import load_table
 
 from tests.conftest import SF_SMALL
 
@@ -150,3 +155,86 @@ def test_windowed_topk_demo_equals_batch_topk(spark):
     assert len(demo) > 0
     canon = lambda pdf: sorted(map(tuple, pdf.itertuples(index=False)))
     assert canon(demo) == canon(batch)
+
+
+# The two update-mode foreachBatch keys (both run through
+# await_util.run_update_foreach_batch).
+UPDATE_MODE_KEYS = ("stream_txn_exactly_once", "stream_foreachbatch_sink")
+NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+class _ProgressLog(StreamingQueryListener):
+    """Records each micro-batch's (batch id, input rows) as the stream
+    reports its progress."""
+
+    def __init__(self) -> None:
+        self.batches: list[tuple[int, int]] = []
+        self.terminated = threading.Event()
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        self.batches.append(
+            (event.progress.batchId, event.progress.numInputRows)
+        )
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        self.terminated.set()
+
+
+@pytest.mark.parametrize("key", UPDATE_MODE_KEYS)
+def test_update_mode_key_runs_exactly_one_micro_batch(spark, key):
+    """One call, one micro-batch: the data batch, and no trailing
+    watermark-only batch (it would emit nothing in update mode)."""
+    log = _ProgressLog()
+    spark.streams.addListener(log)
+    try:
+        QUERIES[key](spark, SF_SMALL)
+        # the listener bus delivers progress before termination
+        assert log.terminated.wait(60)
+    finally:
+        spark.streams.removeListener(log)
+    n_events = load_table(spark, SF_SMALL, "events").count()
+    assert log.batches == [(0, n_events)]
+
+
+@pytest.mark.parametrize("caller_value", [None, "true"])
+@pytest.mark.parametrize("key", UPDATE_MODE_KEYS)
+def test_update_mode_key_restores_no_data_batch_conf(spark, key, caller_value):
+    """The no-data-batch override is scoped to the key's own query: the
+    caller's setting is as it left it afterwards, unset included."""
+    if caller_value is None:
+        spark.conf.unset(NO_DATA_BATCHES)
+    else:
+        spark.conf.set(NO_DATA_BATCHES, caller_value)
+    try:
+        QUERIES[key](spark, SF_SMALL)
+        assert spark.conf.get(NO_DATA_BATCHES, None) == caller_value
+    finally:
+        spark.conf.unset(NO_DATA_BATCHES)
+
+
+def test_await_timeout_names_status_and_last_progress():
+    """A timed-out wait says what the query was doing and how far it
+    got, so a host-load timeout can be told from a stuck batch."""
+    from climateiq_pipelines_spark.streaming.await_util import await_or_raise
+
+    class _SlowQuery:
+        name, id = "slow", "q-1"
+        status = {"message": "Processing new data", "isTriggerActive": True}
+        lastProgress = {"batchId": 1, "numInputRows": 500,
+                        "durationMs": {"triggerExecution": 179000}}
+
+        def awaitTermination(self, seconds):
+            return False
+
+    with pytest.raises(TimeoutError) as err:
+        await_or_raise(_SlowQuery(), 180)
+    msg = str(err.value)
+    assert "slow did not terminate within 180s" in msg
+    assert "Processing new data" in msg
+    assert "batch 1, 500 input rows" in msg and "179000" in msg
