@@ -1,107 +1,87 @@
 """Float-determinism and oracle-parity helpers (SURVEY §7.4 policy).
 
 Double summation is association-order dependent: Spark's partial/final
-aggregation over shuffled partitions and DuckDB's single-node sum will
-disagree in final ulps, which breaks the driver's value-hash. Policy:
+aggregation over shuffled partitions and DuckDB's single-node sum
+disagree in final ulps, which breaks the driver's value-hash.  The
+invariants below make every sum exact and engine-independent.
 
-- Every SUM/AVG over a double measure goes through a FIXED-POINT LONG
-  accumulator: per row, floor(x * 1e6) as int64 ("micro units" — an
-  IEEE-identical multiply+floor on both engines), summed exactly
-  (integer addition is associative ⇒ partition-order independent), then
-  converted back to double and divided by 1e6. Both engines convert
-  their exact integer sum to double with IEEE round-to-nearest, so the
-  final doubles are bit-identical.
-- AVG = (integer-sum → double / 1e6) / COUNT — the identical expression
-  tree on both sides.
-- Library transcendentals (exp/ln/pow/…) may differ between the JVM and
-  DuckDB's libm in the last ulp → round those outputs (`fin`).
+1. FIXED-POINT LONG SUMS.  Every SUM/AVG over a double measure sums the
+   per-row micro-unit term ``floor((x) * 1000000)`` (one IEEE multiply
+   and floor, identical on both engines) in int64, converts the exact
+   integer to double once and divides by 1e6; AVG then divides by the
+   non-null COUNT.  Integer addition is associative, so the result is
+   partition-layout independent, and both engines round the same
+   integer to the same double.  The term is written once
+   (:func:`sql_micros`) and shared by the oracle text (:func:`sql_dsum`,
+   :func:`sql_davg`) and the engine's two-level builder
+   (:func:`two_level`); :func:`micros` is its Column form for window
+   and projection sites.  A decimal accumulator would be exact too, but
+   decimal(25,6) exceeds 64-bit unscaled range and runs on Spark's
+   BigDecimal slow path (3x slower on the Q1 shape at sf0.1,
+   BASELINE.md); the long path stays in whole-stage codegen.
 
-Why long-micros and not a decimal accumulator: decimal(25,6) exceeds
-64-bit unscaled range, so Spark aggregates it on the BigDecimal slow
-path — measured 3× slower than long-micros on the Q1 shape at sf0.1
-(1.43 s vs 0.45 s; BASELINE.md). The long path stays inside whole-stage
-codegen as primitive ops.
+2. WHICH GROUPS GO TWO-LEVEL.  A long accumulator holds Σ|x|·1e6 per
+   group: at money scale (~1e5 units) it overflows 2^63 near 9·10^7
+   rows.  Any sum whose group grows with the table -- a global
+   aggregate, or groups keyed by a low-cardinality dimension (flags,
+   segments, nations, years, measures, audit groups) -- therefore runs
+   through :func:`two_level`: long partials per (keys,
+   spark_partition_id()), merged as decimal(38,0) over the tiny
+   |groups| x |partitions| relation.  The merged doubles are the same
+   expression tree as the single-level form, so the oracles stay
+   single-level (DuckDB sums BIGINT into HUGEINT and has no ceiling).
+   Integer moment sums (``isum``) take the same route without the
+   scale; agg_stats_moments splits its squared price term hi/lo at
+   2^32 so each long partial stays inside int64.  ``agg_rollup`` is the one site that hand-builds its partial,
+   because its merge is a ROLLUP; it renders both levels with
+   :func:`two_level_aggs`.
 
-Capacity / scale note: the accumulator holds Σ|x|·1e6 per group; with
-money-scale values (~1e5 → 1e11 micro-units/row) it is exact up to
-~9·10^7 rows per group (2^63 bound), and Spark 4's default ANSI mode
-makes the boundary LOUD (ARITHMETIC_OVERFLOW), never a silent wrap.
-Beyond that — e.g. national-scale groups at 100 TB — the standard
-recipe is the TWO-LEVEL SUM: partial long-micro sums grouped by
-(keys, spark_partition_id()) — bounded by partition size
-(maxPartitionBytes), so the hot codegen path can never overflow at ANY
-total scale — then a decimal(38,0) merge over the tiny
-|groups|×|partitions| relation.  agg_pricing_summary (the TPC-H Q1
-headline) runs this form live since round 14 (+0.07 s fixed overhead
-at sf0.1, the extra merge stage; the decimal-everywhere alternative
-measured 3× on the same shape).  Round 15 extended it to every
-remaining ANALYTICS key whose groups are table-fraction-sized:
-agg_conditional_filter (~SF 1e5 single-level ceiling at events value
-scale), agg_rollup (grand total ~SF 60 — the earliest-binding site in
-the repo), agg_unpivot_melt (~SF 400), join_multikey /
-join_bucketed_colocated (~SF 1e3), join_salted_skew (~SF 1e5),
-q7/q8/q9 (fact-fraction nation/year groups), q14 (~SF 4e3), and the
-global bands q17/q19 (~SF 4e4) — all 12 hash-matched against their
-UNCHANGED single-level oracles (DuckDB sums BIGINT into HUGEINT, so
-the oracle side never had the ceiling) at all three SFs.
+3. WHAT BOUNDS A LEVEL-1 PARTIAL.  Partition mass.  Scan-side sites
+   are bounded by spark.sql.files.maxPartitionBytes.  Post-join sites
+   (join_multikey, join_salted_skew, join_bucketed_colocated, the
+   multi-join TPC-H queries, scan_dynamic_partition_pruning) inherit
+   their partition size from shuffle/AQE output sizing instead, so an
+   upstream coalesce(1), a disabled skew split or one pathological key
+   re-introduces a per-partition ceiling there.  Past any bound the
+   failure is Spark's ANSI ARITHMETIC_OVERFLOW, never a silent wrap
+   (with ANSI on, the engine default).
 
-Round 16 converted the last table-fraction-group class — the
-sources/lakehouse/format audit tails (scans.py roundtrips +
-sink_partitioned_parquet + sink_merge_upsert, lakehouse.py
-merge_on_read/time_travel, formats_ext.py csv_malformed /
-schema_evolution / dynamic_partition_pruning, manifest_read.py,
-lakehouse_txn.py's three txn keys — 14 keys, ~SF 200-1000
-single-level ceilings) — via :func:`two_level`, which packages the
-partial/merge pair for the audit-tail shape so each site stays one
-declarative call.  Oracles unchanged (DuckDB sums BIGINT into
-HUGEINT; its side never had the ceiling).
+4. WHICH SINGLE-LEVEL SITES ARE EXEMPT.  Groups whose size is a TPC-H
+   constant independent of SF: per order (join_shuffle_fact, q3), per
+   (part, supplier) (q2, q20), per customer (q10), per supplier (q15),
+   and window frames (:func:`davg_window`, per-key running sums).
+   stream_tumbling_window's davg is bounded by event rate x window
+   length in a real stream.  q11 sums decimal(38,0) directly over a
+   small relation.
 
-Level-1 bound fine print: the long partial is bounded by PARTITION
-mass, and what bounds a partition depends on where the partial runs.
-Scan-side sites (Q1, the sources wave) are bounded by
-spark.sql.files.maxPartitionBytes.  POST-JOIN sites (join_multikey,
-join_salted_skew, join_bucketed_colocated) inherit their partition
-size from shuffle/AQE output sizing instead — an upstream
-coalesce(1), a disabled AQE skew split, or a pathological skewed key
-re-introduces a per-partition ceiling there (loud via ANSI
-ARITHMETIC_OVERFLOW, never silent).  Review rule: any change that
-coarsens partitioning upstream of those three keys' partial stage
-needs a second look at the partial's mass bound.
-
-Single-level dsum/davg remain, deliberately, in two classes:
-(1) BOUNDED-group keys — per-order (join_shuffle_fact, q3), per
-    (part, supp) (q2, q20), per-customer (q10), per-supplier (q15):
-    group size is a TPC-H constant independent of SF, no ceiling.
-(2) stream_tumbling_window's davg: per-window row counts are bounded
-    by event rate × window length in a real stream; the batch fixture
-    ceiling (~SF 1e5 at value scale) is documented rather than
-    converted to keep the key a faithful streaming shape.
-q11 shows the decimal(38,0) direct-sum form where the input relation
-is small.  The moments oracle (aggregates._MOM) shows the decimal
-form for squared measures whose magnitude exceeds the long budget at
-any cardinality.
+Library transcendentals (exp/ln/pow/...) may differ between the JVM
+and DuckDB's libm in the last ulp, so those outputs are rounded
+(:func:`fin`).
 """
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Kept for the few aggregates (squared measures) that exceed the
-# long-micro range and accept the BigDecimal slow path instead.
-DEC = "decimal(25,6)"
-
-# Merge type of the two-level sum (module docstring): wide enough that
-# Σ over per-partition long partials cannot overflow at any SF (the
-# q11 precedent type).
+# Merge type of the two-level sum: Σ over per-partition long partials
+# cannot overflow it at any SF (the q11 precedent type).
 DEC38 = "decimal(38,0)"
 
 _SCALE = 1_000_000
 
 
+def sql_micros(x: str) -> str:
+    """The micro-unit term of SQL text ``x`` -- one spelling of the
+    scale for the oracle and the engine alike."""
+    return f"floor(({x}) * {_SCALE})"
+
+
 def dsum(col: Column, alias: str) -> Column:
     """Exact, engine-independent SUM of a double expression
-    (fixed-point micro-units; see module docstring for the range bound).
+    (fixed-point micro-units; single-level, for bounded groups only).
     """
     return (F.sum(F.floor(col * _SCALE)).cast("double") / F.lit(float(_SCALE))).alias(
         alias
@@ -116,129 +96,94 @@ def davg(col: Column, alias: str) -> Column:
     ).alias(alias)
 
 
-def dsum_merge(partial: Column | str, alias: str) -> Column:
-    """Final stage of the TWO-LEVEL exact sum (module docstring): merge
-    per-(keys, partition) long-micro partials as decimal(38,0) —
-    overflow-free at any SF — and convert to double exactly like
-    :func:`dsum`'s tail, so the hash-parity expression is unchanged."""
-    c = F.col(partial) if isinstance(partial, str) else partial
-    return (F.sum(c.cast(DEC38)).cast("double") / F.lit(float(_SCALE))).alias(
-        alias
-    )
+# One template per two_level kind: the level-1 partial(s) over the SQL
+# text ``{x}`` and the level-2 merge over the partial columns ``{0}``,
+# ``{1}``.  Counts merge to BIGINT with COALESCE(…, 0) (a global COUNT
+# over zero rows is 0, where a SUM of no partials is NULL).
+_COUNT_MERGE = "CAST(coalesce(sum({0}), 0) AS BIGINT)"
+_DEC_MERGE = f"sum(CAST({{0}} AS {DEC38}))"
+_MICRO_SUM = f"sum({sql_micros('{x}')})"
+_MICRO_MERGE = f"CAST({_DEC_MERGE} AS DOUBLE) / {float(_SCALE)}"
+_KINDS = {
+    "count": (("count(1)",), _COUNT_MERGE),
+    "countc": (("count({x})",), _COUNT_MERGE),
+    "lsum": (("sum({x})",), _COUNT_MERGE),
+    "isum": (("sum({x})",), _DEC_MERGE),
+    "dsum": ((_MICRO_SUM,), _MICRO_MERGE),
+    "davg": ((_MICRO_SUM, "count({x})"), _MICRO_MERGE + " / sum({1})"),
+    "min": (("min({x})",), "min({0})"),
+    "max": (("max({x})",), "max({0})"),
+    "cdistinct": (
+        ("collect_set({x})",),
+        "CAST(size(array_distinct(flatten(collect_set({0})))) AS BIGINT)",
+    ),
+    "lit": ((), "{x}"),
+}
 
 
-def davg_merge(partial: Column | str, n: Column | str, alias: str) -> Column:
-    """Two-level twin of :func:`davg`: decimal merge of long-micro
-    partials divided by the merged non-null count — the same
-    ((sum→double)/1e6)/count expression tree as the single-level form,
-    so the final double is bit-identical."""
-    c = F.col(partial) if isinstance(partial, str) else partial
-    return (
-        F.sum(c.cast(DEC38)).cast("double")
-        / F.lit(float(_SCALE))
-        / F.sum(n)
-    ).alias(alias)
+def two_level_aggs(aggs) -> tuple[list[Column], list[Column]]:
+    """(level-1 partial columns, level-2 merge columns) for ``aggs``,
+    rendered as ``F.expr`` text from the kind templates above.  Specs
+    whose partials render to the same text share one partial column
+    (a ``dsum`` and a ``davg`` of one expression sum its micros once)."""
+    partials: dict[str, str] = {}  # partial text -> its column name
+    merges = []
+    for kind, *x, alias in aggs:
+        if kind not in _KINDS:
+            raise ValueError(f"unknown two_level agg kind: {kind!r}")
+        level1, merge = _KINDS[kind]
+        x = x[0] if x else None
+        names = [
+            partials.setdefault(t.format(x=x), f"_p{len(partials)}")
+            for t in level1
+        ]
+        merges.append(F.expr(f"{merge.format(*names, x=x)} AS `{alias}`"))
+    return [F.expr(f"{t} AS {n}") for t, n in partials.items()], merges
+
+
+def _key_name(key: str) -> str:
+    m = re.search(r"\s+AS\s+`?(\w+)`?\s*$", key, re.IGNORECASE)
+    return m.group(1) if m else key
 
 
 def two_level(df: DataFrame, keys, aggs) -> DataFrame:
-    """TWO-LEVEL exact aggregation (module docstring recipe) packaged
-    for the audit-tail shape ``groupBy(keys).agg(count, dsum, …)`` the
-    sources/lakehouse/format keys share — each site declares WHAT it
-    audits and this builds the overflow-free partial/merge pair.
+    """TWO-LEVEL exact aggregation (module docstring, invariant 2):
+    ``df`` grouped by ``keys``, one output column per spec in ``aggs``.
 
-    ``keys``: groupBy columns (names or aliased Column expressions;
-    ``[]`` for a global aggregate).  ``aggs``: ordered specs, one
-    output column each —
+    ``keys``: SQL text, each a column name or ``"expr AS name"``
+    (``[]`` for a global aggregate).  ``aggs``: ordered specs whose
+    ``x`` is SQL text over ``df``'s columns --
 
-    - ``("count", alias)`` — exact COUNT(*)
-    - ``("countc", col, alias)`` — COUNT(col) (non-null / conditional)
-    - ``("lsum", col, alias)`` — integer SUM with COALESCE(…, 0), the
+    - ``("count", alias)`` -- exact COUNT(*)
+    - ``("countc", x, alias)`` -- COUNT(x) (non-null / conditional)
+    - ``("lsum", x, alias)`` -- integer SUM with COALESCE(…, 0), the
       key-checksum shape (same 2^63 merge bound as the BIGINT oracle)
-    - ``("dsum", col, alias)`` / ``("davg", col, alias)`` — two-level
-      exact micro-sum / exact-sum mean (the point of the exercise)
-    - ``("min", col, alias)`` / ``("max", col, alias)`` — order stats
-      (merge trivially: min of partial mins)
-    - ``("cdistinct", col, alias)`` — COUNT(DISTINCT col) for BOUNDED
-      domains only: partials carry collect_set(col) and the merge
-      flattens + dedups, so per-partition state is O(|domain|) — used
-      by scan_schema_evolution (25 p_brand values), never for
-      unbounded columns
-    - ``("lit", col, alias)`` — a constant column attached at the
-      merge stage (the txn keys' n_versions-style audit literals)
+    - ``("isum", x, alias)`` -- exact integer SUM as decimal(38,0), for
+      integer moment sums whose total outgrows int64
+    - ``("dsum", x, alias)`` / ``("davg", x, alias)`` -- exact micro-sum
+      / exact-sum mean (double)
+    - ``("min", x, alias)`` / ``("max", x, alias)`` -- order statistics
+    - ``("cdistinct", x, alias)`` -- COUNT(DISTINCT x) for BOUNDED
+      domains only: partials carry collect_set(x), so per-partition
+      state is O(|domain|)
+    - ``("lit", x, alias)`` -- a constant attached at the merge stage
 
-    Level 1 groups by (keys…, spark_partition_id()) and computes only
+    Level 1 groups by (keys, spark_partition_id()) and computes only
     codegen-primitive partials bounded by partition mass; level 2
-    merges the tiny |groups|×|partitions| relation with decimal(38,0)
-    sums (``dsum_merge``/``davg_merge``), so the final double
-    expression trees — and therefore oracle hash parity and layout
-    determinism — are identical to the single-level forms they
-    replaced.  The partition-id key affects only which exact integers
-    get pre-summed; integer addition is associative, so results are
-    layout-independent (pinned by tests/test_two_level_sum.py)."""
-    partial_aggs: list[Column] = []
-    merge_aggs: list[Column] = []
-    for i, spec in enumerate(aggs):
-        kind, alias = spec[0], spec[-1]
-        p = f"_p{i}"
-        if kind == "count":
-            partial_aggs.append(F.count(F.lit(1)).alias(p))
-            merge_aggs.append(
-                F.coalesce(F.sum(p), F.lit(0)).cast("long").alias(alias)
-            )
-        elif kind == "countc":
-            partial_aggs.append(F.count(spec[1]).alias(p))
-            merge_aggs.append(
-                F.coalesce(F.sum(p), F.lit(0)).cast("long").alias(alias)
-            )
-        elif kind == "lsum":
-            partial_aggs.append(F.sum(spec[1]).alias(p))
-            merge_aggs.append(
-                F.coalesce(F.sum(p), F.lit(0)).cast("long").alias(alias)
-            )
-        elif kind == "dsum":
-            partial_aggs.append(F.sum(micros(spec[1])).alias(p))
-            merge_aggs.append(dsum_merge(p, alias))
-        elif kind == "davg":
-            n = f"_n{i}"
-            partial_aggs.append(F.sum(micros(spec[1])).alias(p))
-            partial_aggs.append(F.count(spec[1]).alias(n))
-            merge_aggs.append(davg_merge(p, n, alias))
-        elif kind == "min":
-            partial_aggs.append(F.min(spec[1]).alias(p))
-            merge_aggs.append(F.min(p).alias(alias))
-        elif kind == "max":
-            partial_aggs.append(F.max(spec[1]).alias(p))
-            merge_aggs.append(F.max(p).alias(alias))
-        elif kind == "cdistinct":
-            partial_aggs.append(F.collect_set(spec[1]).alias(p))
-            merge_aggs.append(
-                F.size(F.array_distinct(F.flatten(F.collect_set(p))))
-                .cast("long")
-                .alias(alias)
-            )
-        elif kind == "lit":
-            merge_aggs.append(
-                (F.col(spec[1]) if isinstance(spec[1], str) else spec[1]).alias(
-                    alias
-                )
-            )
-        else:
-            raise ValueError(f"unknown two_level agg kind: {kind!r}")
+    merges them.  The partition id decides only which exact integers
+    get pre-summed, so results are layout-independent (pinned by
+    tests/test_two_level_sum.py and tests/test_determinism.py)."""
+    level1, level2 = two_level_aggs(aggs)
     partials = df.groupBy(
-        *keys, F.spark_partition_id().alias("_pid")
-    ).agg(*partial_aggs)
-    # the key columns' OUTPUT names (aliased expressions included) are
-    # the first len(keys) columns of the partial relation, _pid next
-    key_names = partials.columns[: len(keys)]
-    return partials.groupBy(*key_names).agg(*merge_aggs)
+        *map(F.expr, keys), F.expr("spark_partition_id() AS _pid")
+    ).agg(*level1)
+    return partials.groupBy(*map(_key_name, keys)).agg(*level2)
 
 
 def micros(col: Column) -> Column:
-    """floor(col * the fixed-point scale) — the raw micro-unit term
-    every dsum/davg accumulates.  Exported (round-13 review batch F) so
-    window/decimal variants stop hand-inlining 1_000_000 next to an
-    oracle built from sql_dsum — the scale-drift class the SPLIT_SALT
-    note records."""
+    """Column form of :func:`sql_micros`, for window and projection
+    sites: no hand-inlined 1_000_000 can drift from the oracle's
+    scale."""
     return F.floor(col * _SCALE)
 
 
@@ -260,16 +205,16 @@ def fin(col: Column, alias: str, places: int = 6) -> Column:
 def sql_dsum(expr: str) -> str:
     """DuckDB twin of :func:`dsum` (without alias)."""
     return (
-        f"(CAST(SUM(CAST(floor(({expr}) * 1000000) AS BIGINT)) AS DOUBLE)"
-        f" / 1000000.0)"
+        f"(CAST(SUM(CAST({sql_micros(expr)} AS BIGINT)) AS DOUBLE)"
+        f" / {float(_SCALE)})"
     )
 
 
 def sql_davg(expr: str) -> str:
     """DuckDB twin of :func:`davg` (without alias)."""
     return (
-        f"(CAST(SUM(CAST(floor(({expr}) * 1000000) AS BIGINT)) AS DOUBLE)"
-        f" / 1000000.0 / COUNT({expr}))"
+        f"(CAST(SUM(CAST({sql_micros(expr)} AS BIGINT)) AS DOUBLE)"
+        f" / {float(_SCALE)} / COUNT({expr}))"
     )
 
 

@@ -21,16 +21,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.functions.helpers import (
-    DEC,
-    davg,
-    davg_merge,
-    dsum,
-    dsum_merge,
+    DEC38,
+    REVENUE,
     fin,
-    micros,
-    revenue_col,
     sql_davg,
     sql_dsum,
+    two_level,
+    two_level_aggs,
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
@@ -42,8 +39,8 @@ from climateiq_pipelines_spark.registry import load_table
     SELECT l_returnflag, l_linestatus,
            {sql_dsum('l_quantity')} AS sum_qty,
            {sql_dsum('l_extendedprice')} AS sum_base_price,
-           {sql_dsum('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
-           {sql_dsum('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
+           {sql_dsum(REVENUE)} AS sum_disc_price,
+           {sql_dsum(REVENUE + ' * (1 + l_tax)')} AS sum_charge,
            {sql_davg('l_quantity')} AS avg_qty,
            {sql_davg('l_extendedprice')} AS avg_price,
            {sql_davg('l_discount')} AS avg_disc,
@@ -58,54 +55,25 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline. At 100 TB the shuffle carries only |groups| rows per map
     task thanks to partial aggregation.
 
-    Round 14: runs the TWO-LEVEL exact sum (helpers module docstring) —
-    Q1's groups are table-sized (|groups| ≈ 6 over all of lineitem), so
-    a single-level long-micro SUM hits the 2^63 accumulator bound at
-    ~9·10^7 money-scale rows per group (a loud ANSI ARITHMETIC_OVERFLOW
-    at ~SF 300, but still a ceiling).  Level 1 sums long micros per
-    (flag, status, spark_partition_id()) — bounded by partition size
-    (maxPartitionBytes), overflow-free at ANY total scale, and still
-    whole-stage-codegen primitive ops over the data — level 2 merges
-    the |groups|×|partitions| partials as decimal(38,0) (the q11
-    precedent type).  The final double expressions are the exact trees
-    dsum/davg produce, so oracle hash parity and the layout-determinism
-    probe are unchanged; measured +0.07 s fixed overhead at sf0.1 (the
-    merge stage) vs 3× for decimal accumulation throughout.  The
-    partition-id grouping key affects only which exact integers get
-    pre-summed — integer addition is associative, so the result is
-    layout-independent (pinned by tests/test_determinism.py)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    revenue = revenue_col()
-    partials = (
-        li.filter(
-            F.col("l_shipdate") <= F.lit("2000-01-01").cast("timestamp_ntz")
-        )
-        .groupBy(
-            "l_returnflag",
-            "l_linestatus",
-            F.spark_partition_id().alias("_pid"),
-        )
-        .agg(
-            F.sum(micros(F.col("l_quantity"))).alias("p_qty"),
-            F.count("l_quantity").alias("n_qty"),
-            F.sum(micros(F.col("l_extendedprice"))).alias("p_price"),
-            F.count("l_extendedprice").alias("n_price"),
-            F.sum(micros(revenue)).alias("p_disc_price"),
-            F.sum(micros(revenue * (1 + F.col("l_tax")))).alias("p_charge"),
-            F.sum(micros(F.col("l_discount"))).alias("p_disc"),
-            F.count("l_discount").alias("n_disc"),
-            F.count(F.lit(1)).alias("p_n"),
-        )
+    Q1's ~6 groups span all of lineitem, so every sum is two-level
+    (helpers module docstring); a sum and an average of one measure
+    share its level-1 micro partial."""
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") <= F.lit("2000-01-01").cast("timestamp_ntz")
     )
-    return partials.groupBy("l_returnflag", "l_linestatus").agg(
-        dsum_merge("p_qty", "sum_qty"),
-        dsum_merge("p_price", "sum_base_price"),
-        dsum_merge("p_disc_price", "sum_disc_price"),
-        dsum_merge("p_charge", "sum_charge"),
-        davg_merge("p_qty", "n_qty", "avg_qty"),
-        davg_merge("p_price", "n_price", "avg_price"),
-        davg_merge("p_disc", "n_disc", "avg_disc"),
-        F.sum("p_n").alias("count_order"),
+    return two_level(
+        li,
+        ["l_returnflag", "l_linestatus"],
+        [
+            ("dsum", "l_quantity", "sum_qty"),
+            ("dsum", "l_extendedprice", "sum_base_price"),
+            ("dsum", REVENUE, "sum_disc_price"),
+            ("dsum", REVENUE + " * (1 + l_tax)", "sum_charge"),
+            ("davg", "l_quantity", "avg_qty"),
+            ("davg", "l_extendedprice", "avg_price"),
+            ("davg", "l_discount", "avg_disc"),
+            ("count", "count_order"),
+        ],
     )
 
 
@@ -194,32 +162,20 @@ def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_conditional_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FILTER-clause aggregation (conditional sum/count per group).
-
-    Round 15: converted to the TWO-LEVEL exact sum (helpers module
-    docstring; the r14 Q1/q6 recipe).  event_type is ~5 values over
-    the whole events table, so groups are table-sized and the
-    single-level long-micro accumulator hits its 2^63 bound at
-    ~1.9e10 value-scale rows per group — ~SF 1e5, i.e. exactly the
-    100 TB target.  Level 1 sums micros per (event_type, partition);
-    level 2 merges decimal(38,0).  The conditional NULL semantics are
-    unchanged: a (group, partition) whose rows all fail `big` yields a
-    NULL partial, the merge SUM skips NULLs, and an all-NULL group
-    merges to NULL — exactly the single-level and oracle CASE WHEN
-    behavior."""
+    """FILTER-clause aggregation (conditional sum/count per group),
+    two-level over ~5 table-sized event_type groups.  A (group,
+    partition) whose rows all fail the condition yields a NULL partial,
+    the merge SUM skips it, and an all-NULL group merges to NULL --
+    the oracle's CASE WHEN semantics."""
     events = load_table(spark, sf_dir, "events")
-    big = F.col("value") > 10
-    partials = events.groupBy(
-        "event_type", F.spark_partition_id().alias("_pid")
-    ).agg(
-        F.count(F.when(big, 1)).alias("p_big"),
-        F.sum(micros(F.when(big, F.col("value")))).alias("p_sum_big"),
-        F.count(F.lit(1)).alias("p_n"),
-    )
-    return partials.groupBy("event_type").agg(
-        F.sum("p_big").alias("n_big"),
-        dsum_merge("p_sum_big", "sum_big"),
-        F.sum("p_n").alias("n_total"),
+    return two_level(
+        events,
+        ["event_type"],
+        [
+            ("countc", "CASE WHEN value > 10 THEN 1 END", "n_big"),
+            ("dsum", "CASE WHEN value > 10 THEN value END", "sum_big"),
+            ("count", "n_total"),
+        ],
     )
 
 
@@ -281,68 +237,51 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conversion replaces five double->decimal casts and the moment
     # products stay in long arithmetic.
     #
-    # r17 (VERDICT r16 #6): TWO-LEVEL exact sums like agg_linear_fit —
-    # level 1 sums pure LONG partials per (flag, scan partition),
-    # fully codegen'd; level 2 merges the tiny |groups|x|partitions|
-    # relation in decimal(38,0). The one term agg_linear_fit's recipe
-    # could not take — yc² at ~1.2e14/row would overflow a 1e6-row
-    # partition's long partial — is SPLIT HI/LO at 2^32:
+    # Two-level integer sums ("isum", helpers module docstring) over
+    # the table-sized flag groups.  yc² at ~1.2e14/row would overflow a
+    # 1e6-row partition's long partial, so it is SPLIT HI/LO at 2^32:
     # yc² = yq·2^32 + yr with yq = shiftright(yc², 32) ≤ ~2.8e4 and
     # yr < 2^32, so the partials Σyq ≤ 2.8e10 and Σyr ≤ 4.3e15 both
     # sit far inside int64 per 128 MB partition (ANSI-loud beyond),
-    # and the decimal merge reassembles the EXACT integer
-    # Σyc² = 2^32·ΣΣyq + ΣΣyr — integer addition is associative, so
-    # results are layout-independent (determinism probe key). Per-row
-    # domain bound unchanged from the single-level form: yc*yc is
+    # and the exact integer Σyc² = 2^32·Σyq + Σyr is reassembled in
+    # decimal(38,0) after the merge.  Per-row domain bound: yc*yc is
     # evaluated in long, so |yc| < 3.03e9 cents (price < ~3e7 units).
-    # Recorded domain limit of the UNSPLIT Σ(xc·yc) long partial
-    # (psxy): with TPC-H's ranges (xc ≤ 5e3 cents of quantity, yc ≤
-    # ~1.05e7 cents of price) one row adds ≤ ~5.25e10, so a single
-    # (flag, scan partition) group stays exact below ~1.75e8 rows at
-    # extreme values — ~100x headroom over a 1e6-row 128 MB partition.
-    # Past it the long sum overflows: an ARITHMETIC_OVERFLOW error
-    # under ANSI mode, a silent wrap with ANSI off.
-    # The old form cast every row's products to decimal(30,0) — the
-    # BigDecimal slow path on 5 products per row.
+    # Domain limit of the UNSPLIT Σ(xc·yc) partial: with TPC-H's
+    # ranges (xc ≤ 5e3 cents of quantity, yc ≤ ~1.05e7 cents of price)
+    # one row adds ≤ ~5.25e10, so a single (flag, scan partition)
+    # group stays exact below ~1.75e8 rows at extreme values -- ~100x
+    # headroom over a 1e6-row 128 MB partition.  Past it the long sum
+    # overflows: an ARITHMETIC_OVERFLOW error under ANSI mode, a
+    # silent wrap with ANSI off.
     li = load_table(spark, sf_dir, "lineitem")
     xc = F.round(F.col("l_quantity") * 100).cast("long")
     yc = F.round(F.col("l_extendedprice") * 100).cast("long")
     cents = li.select("l_returnflag", xc.alias("xc"), yc.alias("yc"))
-    c = F.col
-    yy = c("yc") * c("yc")
-    pc = cents.groupBy(
-        "l_returnflag", F.spark_partition_id().alias("_pid")
-    ).agg(
-        F.count(F.lit(1)).alias("pn"),
-        F.sum("xc").alias("psx"),
-        F.sum(c("xc") * c("xc")).alias("psxx"),
-        F.sum("yc").alias("psy"),
-        F.sum(F.shiftright(yy, 32)).alias("psyyq"),
-        F.sum(yy.bitwiseAND(F.lit(4294967295))).alias("psyyr"),
-        F.sum(c("xc") * c("yc")).alias("psxy"),
-    )
-    D38 = "decimal(38,0)"
-    sc = pc.groupBy("l_returnflag").agg(
-        F.sum("pn").cast("long").alias("n"),
-        F.sum(c("psx").cast(D38)).alias("sxc"),
-        F.sum(c("psxx").cast(D38)).alias("sxxc"),
-        F.sum(c("psy").cast(D38)).alias("syc"),
-        (
-            F.sum(c("psyyq").cast(D38)) * F.lit(4294967296).cast(D38)
-            + F.sum(c("psyyr").cast(D38))
-        ).alias("syyc"),
-        F.sum(c("psxy").cast(D38)).alias("sxyc"),
+    sc = two_level(
+        cents,
+        ["l_returnflag"],
+        [
+            ("count", "n"),
+            ("isum", "xc", "sxc"),
+            ("isum", "xc * xc", "sxxc"),
+            ("isum", "yc", "syc"),
+            ("isum", "shiftright(yc * yc, 32)", "syyq"),
+            ("isum", "(yc * yc) & 4294967295", "syyr"),
+            ("isum", "xc * yc", "sxyc"),
+        ],
     )
     # Conversion back to unit scale happens in DOUBLE arithmetic —
     # double(exact integer sum) / 100.0 — the IDENTICAL expression
     # tree the oracle text runs, so the doubles match bit-for-bit.
+    c = F.col
+    syyc = c("syyq") * F.lit(4294967296).cast(DEC38) + c("syyr")
     s = sc.select(
         "l_returnflag",
         "n",
         (c("sxc").cast("double") / F.lit(100.0)).alias("sx"),
         (c("sxxc").cast("double") / F.lit(10000.0)).alias("sxx"),
         (c("syc").cast("double") / F.lit(100.0)).alias("sy"),
-        (c("syyc").cast("double") / F.lit(10000.0)).alias("syy"),
+        (syyc.cast("double") / F.lit(10000.0)).alias("syy"),
         (c("sxyc").cast("double") / F.lit(10000.0)).alias("sxy"),
     )
     n, sx, sxx, sy, syy, sxy = (F.col(c) for c in ["n", "sx", "sxx", "sy", "syy", "sxy"])
@@ -427,23 +366,18 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
     )
-    # Round 15: TWO-LEVEL exact sum (helpers module docstring).  The
-    # rollup's grand-total level sums o_totalprice over ALL orders —
-    # the single-level long-micro accumulator was the earliest-binding
-    # ceiling left in the repo (2^63 at ~6e7 money-scale rows ≈ SF 60).
-    # Level 1 pre-sums micros per (r_name, n_name, partition) — plain
-    # groupBy, bounded by partition size; level 2 runs the ROLLUP over
-    # the tiny partials relation, merging decimal(38,0) at every
-    # grouping level (integer addition is associative, so rolling up
-    # pre-summed partials is exact and layout-independent).  r_name and
-    # n_name are non-null dimension values, so the rollup's own NULL
-    # grouping markers stay unambiguous, same as the single-level form.
+    # Two-level exact sum (helpers module docstring): the grand-total
+    # level sums o_totalprice over ALL orders.  Level 1 is a plain
+    # groupBy per (r_name, n_name, partition); level 2 runs the ROLLUP
+    # over the tiny partials relation -- the one merge two_level does
+    # not build, rendered from its templates.  Rolling up pre-summed
+    # integers is exact and layout-independent, and r_name/n_name are
+    # non-null, so the rollup's NULL grouping markers stay unambiguous.
+    level1, level2 = two_level_aggs([("dsum", "o_totalprice", "revenue")])
     partials = joined.groupBy(
-        "r_name", "n_name", F.spark_partition_id().alias("_pid")
-    ).agg(F.sum(micros(F.col("o_totalprice"))).alias("p_rev"))
-    return partials.rollup("r_name", "n_name").agg(
-        dsum_merge("p_rev", "revenue")
-    )
+        "r_name", "n_name", F.expr("spark_partition_id() AS _pid")
+    ).agg(*level1)
+    return partials.rollup("r_name", "n_name").agg(*level2)
 
 
 @register(
@@ -735,7 +669,9 @@ def agg_unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     out would scan the fact table FOUR times — at 100 TB that is the
     difference between one pass and four. The melt feeds a partial
     aggregate immediately, so the 4x row expansion never hits a
-    shuffle: combine happens map-side per measure."""
+    shuffle: combine happens map-side per measure; the 4 measure groups
+    are table-sized, so the sum is two-level (helpers module
+    docstring) and only the partials relation shuffles."""
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") % 10 == 0
     )
@@ -745,18 +681,8 @@ def agg_unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
         variableColumnName="measure",
         valueColumnName="val",
     )
-    # Round 15: TWO-LEVEL exact sum (helpers module docstring) — the 4
-    # measure groups are table-sized (2^63 for the l_extendedprice
-    # group at ~SF 400), so micros pre-sum per (measure, partition)
-    # still combines map-side right after the Expand, and only the
-    # tiny partials relation shuffles to the decimal(38,0) merge.
-    partials = melted.groupBy(
-        "measure", F.spark_partition_id().alias("_pid")
-    ).agg(
-        F.count(F.lit(1)).alias("p_n"),
-        F.sum(micros(F.col("val"))).alias("p_val"),
-    )
-    return partials.groupBy("measure").agg(
-        F.sum("p_n").alias("n_rows"),
-        dsum_merge("p_val", "sum_val"),
+    return two_level(
+        melted,
+        ["measure"],
+        [("count", "n_rows"), ("dsum", "val", "sum_val")],
     )

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from climateiq_pipelines_spark.functions.helpers import micros
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
 
@@ -253,9 +254,7 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = orders.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.floor(F.col("o_totalprice") * 1_000_000)).alias(
-            "spend_micros"
-        ),
+        F.sum(micros(F.col("o_totalprice"))).alias("spend_micros"),
     )
     rw = W.orderBy(F.desc("last_order"), F.asc("o_custkey"))
     fw = W.orderBy(F.desc("n_orders"), F.asc("o_custkey"))

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from climateiq_pipelines_spark.functions.helpers import micros
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
 
@@ -94,7 +95,7 @@ def join_pit_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").alias("ts"),
         F.lit(0).alias("tag"),  # dims sort before same-date probes
         F.col("o_orderkey").alias("ver"),
-        F.floor(F.col("o_totalprice") * 1_000_000).alias("price_micros"),
+        micros(F.col("o_totalprice")).alias("price_micros"),
         F.lit(None).cast("long").alias("l_orderkey"),
         F.lit(None).cast("int").alias("l_linenumber"),
     )

@@ -27,10 +27,9 @@ from pyspark.sql import functions as F
 from climateiq_pipelines_spark.functions.helpers import (
     REVENUE,
     dsum,
-    dsum_merge,
-    micros,
     revenue_col,
     sql_dsum,
+    two_level,
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
@@ -118,7 +117,7 @@ def join_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.broadcast(region), nation.n_regionkey == region.r_regionkey
     ).select("n_nationkey", "n_name")
 
-    return (
+    joined = (
         customer.join(F.broadcast(asia_nations), F.col("c_nationkey") == F.col("n_nationkey"))
         .join(orders, F.col("o_custkey") == F.col("c_custkey"))
         .join(lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -130,16 +129,10 @@ def join_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("s_suppkey") == F.col("l_suppkey"))
             & (F.col("s_nationkey") == F.col("c_nationkey")),
         )
-        # Round 15: TWO-LEVEL exact sum (helpers module docstring) —
-        # per-nation revenue groups are fact-table-sized (~SF 1000
-        # ceiling single-level), so micros pre-sum per (n_name,
-        # partition) right after the join, and only the partials
-        # relation shuffles into the decimal(38,0) merge.
-        .groupBy("n_name", F.spark_partition_id().alias("_pid"))
-        .agg(F.sum(micros(revenue_col())).alias("p_rev"))
-        .groupBy("n_name")
-        .agg(dsum_merge("p_rev", "revenue"))
     )
+    # per-nation revenue groups are fact-table-sized: two-level, and
+    # only the partials relation shuffles after the join
+    return two_level(joined, ["n_name"], [("dsum", REVENUE, "revenue")])
 
 
 @register(
@@ -461,18 +454,11 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         (salted_fact.user_id == salted_dim.c_custkey)
         & (salted_fact.salt == salted_dim.salt),
     )
-    # Round 15: TWO-LEVEL exact sum (helpers module docstring) — 5
-    # segment groups over the whole salted join output (single-level
-    # ceiling ~SF 1e5 at events value scale, i.e. the 100 TB target).
-    partials = joined.groupBy(
-        "c_mktsegment", F.spark_partition_id().alias("_pid")
-    ).agg(
-        F.count(F.lit(1)).alias("p_n"),
-        F.sum(micros(F.col("value"))).alias("p_val"),
-    )
-    return partials.groupBy("c_mktsegment").agg(
-        F.sum("p_n").alias("n_events"),
-        dsum_merge("p_val", "sum_value"),
+    # 5 segment groups over the whole salted join output: two-level
+    return two_level(
+        joined,
+        ["c_mktsegment"],
+        [("count", "n_events"), ("dsum", "value", "sum_value")],
     )
 
 
@@ -546,28 +532,16 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("overwrite")
         .saveAsTable(t_cust)
     )
-    return (
-        spark.table(t_orders)
-        .hint("merge")
-        .join(
-            spark.table(t_cust).hint("merge"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        # Round 15: TWO-LEVEL exact sum (helpers module docstring) —
-        # 25 nation groups over ALL orders (single-level ceiling
-        # ~SF 1000 at o_totalprice scale).  The pre-sum per
-        # (c_nationkey, partition) rides the bucket-co-located join
-        # output partitioning; only the partials relation shuffles.
-        .groupBy("c_nationkey", F.spark_partition_id().alias("_pid"))
-        .agg(
-            F.count(F.lit(1)).alias("p_n"),
-            F.sum(micros(F.col("o_totalprice"))).alias("p_price"),
-        )
-        .groupBy("c_nationkey")
-        .agg(
-            F.sum("p_n").alias("n_orders"),
-            dsum_merge("p_price", "sum_totalprice"),
-        )
+    joined = spark.table(t_orders).hint("merge").join(
+        spark.table(t_cust).hint("merge"),
+        F.col("o_custkey") == F.col("c_custkey"),
+    )
+    # 25 nation groups over ALL orders: two-level.  The level-1 partial
+    # rides the bucket-co-located join output; only partials shuffle.
+    return two_level(
+        joined,
+        ["c_nationkey"],
+        [("count", "n_orders"), ("dsum", "o_totalprice", "sum_totalprice")],
     )
 
 

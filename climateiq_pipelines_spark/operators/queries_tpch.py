@@ -20,10 +20,9 @@ from pyspark.sql import functions as F
 from climateiq_pipelines_spark.functions.helpers import (
     REVENUE,
     dsum,
-    dsum_merge,
-    micros,
     revenue_col,
     sql_dsum,
+    two_level,
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
@@ -106,36 +105,23 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the 0.01-step representable values so both engines make
     identical double comparisons.
 
-    Round 14: the GLOBAL sum is the single most ceiling-exposed shape
-    in the repo (ONE group over all of filtered lineitem — the
-    long-micro accumulator's documented 2^63 bound lands at ~1.3e9
-    filtered rows), so it runs the TWO-LEVEL exact sum
-    (agg_pricing_summary's recipe, helpers module docstring): long
-    micros per spark_partition_id() — bounded by partition size,
-    overflow-free at any SF, still codegen over the data — merged as
-    decimal(38,0).  The count coalesces to 0 on an empty filter band
-    (a global COUNT(*) is 0 where sum-of-partials over zero rows is
-    NULL — the one semantic seam of the two-level global form)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    partials = (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
-            & (F.col("l_discount") >= 0.025)
-            & (F.col("l_discount") <= 0.075)
-            & (F.col("l_quantity") < 24)
-        )
-        .groupBy(F.spark_partition_id().alias("_pid"))
-        .agg(
-            F.sum(
-                micros(F.col("l_extendedprice") * F.col("l_discount"))
-            ).alias("p_rev"),
-            F.count(F.lit(1)).alias("p_n"),
-        )
+    ONE group over all of filtered lineitem is the most ceiling-exposed
+    shape there is, so the sum is two-level (helpers module
+    docstring)."""
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
+        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
+        & (F.col("l_discount") >= 0.025)
+        & (F.col("l_discount") <= 0.075)
+        & (F.col("l_quantity") < 24)
     )
-    return partials.agg(
-        dsum_merge("p_rev", "promo_revenue"),
-        F.coalesce(F.sum("p_n"), F.lit(0).cast("long")).alias("n_lineitems"),
+    return two_level(
+        li,
+        [],
+        [
+            ("dsum", "l_extendedprice * l_discount", "promo_revenue"),
+            ("count", "n_lineitems"),
+        ],
     )
 
 

@@ -16,10 +16,9 @@ from pyspark.sql import functions as F
 from climateiq_pipelines_spark.functions.helpers import (
     REVENUE,
     dsum,
-    dsum_merge,
-    micros,
     revenue_col,
     sql_dsum,
+    two_level,
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
@@ -71,27 +70,19 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     cn = nation.filter(F.col("n_name").isin(pair)).select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
     )
-    return (
+    shipped = (
         li.join(supp, li.l_suppkey == supp.s_suppkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
         .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
         .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
         .filter(F.col("supp_nation") != F.col("cust_nation"))
-        # Round 15: TWO-LEVEL exact sum (helpers module docstring) —
-        # the nation-pair × year groups are fact-fraction-sized, so
-        # the single-level long-micro accumulator carries the 2^63
-        # ceiling; micros pre-sum per (pair, year, partition), then
-        # the tiny partials relation merges as decimal(38,0).
-        .groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").cast("long").alias("l_year"),
-            F.spark_partition_id().alias("_pid"),
-        )
-        .agg(F.sum(micros(revenue_col())).alias("p_rev"))
-        .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(dsum_merge("p_rev", "revenue"))
+    )
+    # nation-pair x year groups are fact-fraction-sized: two-level
+    return two_level(
+        shipped,
+        ["supp_nation", "cust_nation", "CAST(year(l_shipdate) AS BIGINT) AS l_year"],
+        [("dsum", REVENUE, "revenue")],
     )
 
 

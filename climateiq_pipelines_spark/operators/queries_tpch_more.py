@@ -21,11 +21,8 @@ from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.functions.helpers import (
     REVENUE,
-    dsum,
-    dsum_merge,
-    micros,
-    revenue_col,
     sql_dsum,
+    two_level,
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
@@ -121,11 +118,14 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_PROMO_REVENUE = f"CASE WHEN p_type = 'PROMO' THEN {REVENUE} ELSE 0.0 END"
+
+
 @register(
     "q14_promo_revenue",
     oracle=f"""
     SELECT round(
-      100.0 * {sql_dsum("CASE WHEN p_type = 'PROMO' THEN " + REVENUE + " ELSE 0.0 END")}
+      100.0 * {sql_dsum(_PROMO_REVENUE)}
             / {sql_dsum(REVENUE)}, 6) AS promo_share
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE l_shipdate >= TIMESTAMP '1997-03-01'
@@ -150,23 +150,16 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp_ntz"))
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    promo = F.when(F.col("p_type") == "PROMO", revenue_col()).otherwise(0.0)
-    # Round 15: TWO-LEVEL exact sum (helpers module docstring) — both
-    # accumulators are GLOBAL over a month of lineitem (∝ SF;
-    # single-level 2^63 ceiling ~SF 4e3).  Micros pre-sum per
-    # partition; the ratio divides two decimal-merged exact doubles —
-    # the identical expression tree, so hash parity holds.  An empty
-    # month yields NULL/NULL → NULL on both forms and both engines.
+    # both accumulators are GLOBAL over a month of lineitem: two-level.
+    # An empty month yields NULL/NULL -> NULL on both engines.
     return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .groupBy(F.spark_partition_id().alias("_pid"))
-        .agg(
-            F.sum(micros(promo)).alias("p_promo"),
-            F.sum(micros(revenue_col())).alias("p_total"),
-        )
-        .agg(
-            dsum_merge("p_promo", "promo_rev"),
-            dsum_merge("p_total", "total_rev"),
+        two_level(
+            li.join(part, li.l_partkey == part.p_partkey),
+            [],
+            [
+                ("dsum", _PROMO_REVENUE, "promo_rev"),
+                ("dsum", REVENUE, "total_rev"),
+            ],
         )
         .select(
             F.round(
@@ -226,14 +219,10 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("l_quantity").between(20, 40)
         )
     )
-    # Round 15: TWO-LEVEL exact sum (helpers module docstring) — a
-    # GLOBAL sum over the tier band (∝ SF; single-level ceiling
-    # ~SF 4e4, under the 100 TB target).  Empty band merges to one
-    # NULL-revenue row on both forms and both engines (q6 seam).
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .filter(tier)
-        .groupBy(F.spark_partition_id().alias("_pid"))
-        .agg(F.sum(micros(revenue_col())).alias("p_rev"))
-        .agg(dsum_merge("p_rev", "revenue"))
+    # a GLOBAL sum over the tier band: two-level.  An empty band
+    # merges to one NULL-revenue row on both engines.
+    return two_level(
+        li.join(part, li.l_partkey == part.p_partkey).filter(tier),
+        [],
+        [("dsum", REVENUE, "revenue")],
     )

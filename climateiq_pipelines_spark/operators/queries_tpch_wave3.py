@@ -31,10 +31,10 @@ from climateiq_pipelines_spark.functions.helpers import (
     REVENUE,
     davg_window,
     dsum,
-    dsum_merge,
     micros,
     revenue_col,
     sql_dsum,
+    two_level,
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
@@ -120,25 +120,20 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(supp, li.l_suppkey == supp.s_suppkey)
         .join(F.broadcast(sn), supp.s_nationkey == sn.sn_key)
     )
-    nation_vol = F.when(
-        F.col("supp_nation") == "NATION_3", revenue_col()
-    ).otherwise(0.0)
-    # Round 15: TWO-LEVEL exact sum (helpers module docstring) — only
-    # two o_year groups over the region-filtered fact chain, i.e.
-    # table-fraction groups carrying the single-level 2^63 ceiling.
-    # Both accumulators pre-sum micros per (o_year, partition); the
-    # share division then divides two decimal-merged exact doubles —
-    # the same expression tree as before, so hash parity holds.
+    # two o_year groups over the region-filtered fact chain are
+    # table-fraction-sized: both accumulators are two-level
     return (
-        rev.groupBy("o_year", F.spark_partition_id().alias("_pid"))
-        .agg(
-            F.sum(micros(nation_vol)).alias("p_nation_rev"),
-            F.sum(micros(revenue_col())).alias("p_total_rev"),
-        )
-        .groupBy("o_year")
-        .agg(
-            dsum_merge("p_nation_rev", "nation_rev"),
-            dsum_merge("p_total_rev", "total_rev"),
+        two_level(
+            rev,
+            ["o_year"],
+            [
+                (
+                    "dsum",
+                    f"CASE WHEN supp_nation = 'NATION_3' THEN {REVENUE} ELSE 0.0 END",
+                    "nation_rev",
+                ),
+                ("dsum", REVENUE, "total_rev"),
+            ],
         )
         .select(
             "o_year",
@@ -194,19 +189,16 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     sn = load_table(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("nation")
     )
-    return (
+    red = (
         li.join(part, li.l_partkey == part.p_partkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .join(supp, li.l_suppkey == supp.s_suppkey)
         .join(F.broadcast(sn), supp.s_nationkey == sn.sn_key)
-        # Round 15: TWO-LEVEL exact sum (helpers module docstring) —
-        # nation × year groups over the part-filtered fact are
-        # table-fraction-sized (single-level 2^63 ceiling); micros
-        # pre-sum per (nation, year, partition), decimal(38,0) merge.
-        .groupBy("nation", "o_year", F.spark_partition_id().alias("_pid"))
-        .agg(F.sum(micros(revenue_col())).alias("p_profit"))
-        .groupBy("nation", "o_year")
-        .agg(dsum_merge("p_profit", "sum_profit"))
+    )
+    # nation x year groups over the part-filtered fact are
+    # table-fraction-sized: two-level
+    return two_level(
+        red, ["nation", "o_year"], [("dsum", REVENUE, "sum_profit")]
     )
 
 
@@ -365,15 +357,9 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     small = brand_li.withColumn("qty_limit", F.lit(0.2) * avg_qty).filter(
         F.col("l_quantity") < F.col("qty_limit")
     )
-    # Round 15: TWO-LEVEL exact sum (helpers module docstring) — the
-    # final sum is GLOBAL over the small-quantity band (∝ SF; the
-    # single-level ceiling lands ~SF 4e4, under the 100 TB target).
-    # Zero kept rows merge to one NULL-revenue row either way (the q6
-    # global-form seam; no count output, so no coalesce needed).
-    partials = small.groupBy(F.spark_partition_id().alias("_pid")).agg(
-        F.sum(micros(F.col("l_extendedprice"))).alias("p_rev")
-    )
-    return partials.agg(dsum_merge("p_rev", "rev")).select(
+    # the final sum is GLOBAL over the small-quantity band: two-level.
+    # Zero kept rows merge to one NULL-revenue row on both engines.
+    return two_level(small, [], [("dsum", "l_extendedprice", "rev")]).select(
         F.round(F.col("rev") / F.lit(7.0), 6).alias("avg_yearly")
     )
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from climateiq_pipelines_spark.functions.helpers import micros, two_level
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
 
@@ -437,10 +438,10 @@ def agg_linear_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     places (quantity integral, price in cents), so each row converts
     ONCE to exact cent longs (round half-away is irrelevant — the
     doubles sit within 1e-9 of integers) and the moment products stay
-    in long arithmetic; only the group accumulator is decimal(25,0)
-    (cent^2 sums reach ~3e23 at 6e12 rows — inside 10^25, outside
-    long). Scale fix-up back to unit moments happens in double
-    arithmetic post-aggregate on the 3-row result, the same
+    in long arithmetic; only the merged group sums are decimal(38,0)
+    (cent^2 sums reach ~3e23 at 6e12 rows — outside long). Scale
+    fix-up back to unit moments happens in double arithmetic
+    post-aggregate on the 3-row result, the same
     expression tree as the oracle text — exact cents on BOTH sides,
     no quantize-of-double dependence anywhere (see the _MOM comment
     in aggregates.py for why that matters at price scale). Measured
@@ -452,35 +453,22 @@ def agg_linear_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     xc = F.round(x * 100).cast("long")
     yc = F.round(y * 100).cast("long")
     cents = li.select("l_returnflag", xc.alias("xc"), yc.alias("yc"))
-    # r16: TWO-LEVEL exact sums (helpers module recipe) — level 1 sums
-    # the cent moments in pure LONG per (flag, scan partition), fully
-    # codegen'd; level 2 merges the tiny |groups|x|partitions| relation
-    # in decimal(38,0). The old form cast every row's products to
-    # decimal(25,0) (>18 digits = the BigDecimal slow path) before a
-    # single-level sum — 5 per-row Decimal allocations over the whole
-    # scan; A/B at sf0.1: 0.99-1.14 s → 0.73-0.75 s, outputs identical.
-    # Level-1 overflow bound (ANSI-loud): the largest per-row term is
-    # xc*yc ≤ 5e3 * 5.5e6 = 2.75e10; a 128 MB lineitem scan partition
-    # holds ~1e6 rows → partial ≤ ~3e16, 300x inside int64. (Contrast
-    # agg_stats_moments, which stays single-level decimal: its yc²
-    # term is ~3e13/row and a partition's long partial would overflow.)
-    c = F.col
-    pc = cents.groupBy(
-        "l_returnflag", F.spark_partition_id().alias("_pid")
-    ).agg(
-        F.count(F.lit(1)).alias("pn"),
-        F.sum("xc").alias("psx"),
-        F.sum(c("xc") * c("xc")).alias("psxx"),
-        F.sum("yc").alias("psy"),
-        F.sum(c("xc") * c("yc")).alias("psxy"),
-    )
-    D38 = "decimal(38,0)"
-    sc = pc.groupBy("l_returnflag").agg(
-        F.sum("pn").cast("long").alias("n"),
-        F.sum(c("psx").cast(D38)).alias("sxc"),
-        F.sum(c("psxx").cast(D38)).alias("sxxc"),
-        F.sum(c("psy").cast(D38)).alias("syc"),
-        F.sum(c("psxy").cast(D38)).alias("sxyc"),
+    # Two-level integer sums ("isum", helpers module docstring): long
+    # cent-moment partials per (flag, scan partition), merged in
+    # decimal(38,0).  Level-1 overflow bound (ANSI-loud): the largest
+    # per-row term is xc*yc ≤ 5e3 * 5.5e6 = 2.75e10; a 128 MB lineitem
+    # scan partition holds ~1e6 rows → partial ≤ ~3e16, 300x inside
+    # int64.  (agg_stats_moments' yc² term needs a hi/lo split.)
+    sc = two_level(
+        cents,
+        ["l_returnflag"],
+        [
+            ("count", "n"),
+            ("isum", "xc", "sxc"),
+            ("isum", "xc * xc", "sxxc"),
+            ("isum", "yc", "syc"),
+            ("isum", "xc * yc", "sxyc"),
+        ],
     )
     # double(exact integer sum) / 100.0 — the identical expression tree
     # the oracle text runs, so the unit-scale doubles match bitwise.
@@ -769,7 +757,7 @@ def scd2_build_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.select(
         "o_custkey",
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * 1_000_000).alias("price_micros"),
+        micros(F.col("o_totalprice")).alias("price_micros"),
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("valid_from"),
         F.date_format("next_date", "yyyy-MM-dd").alias("valid_to"),
         F.col("next_date").isNull().alias("is_current"),

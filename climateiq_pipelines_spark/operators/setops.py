@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from climateiq_pipelines_spark.functions.helpers import micros
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
 
@@ -234,7 +235,7 @@ def set_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("k").alias("key_checksum"),
-        F.coalesce(
-            F.sum(F.floor(F.col("price") * 1_000_000)), F.lit(0)
-        ).alias("price_micros"),
+        F.coalesce(F.sum(micros(F.col("price"))), F.lit(0)).alias(
+            "price_micros"
+        ),
     )

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from climateiq_pipelines_spark.functions.helpers import davg_window, micros
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
 
@@ -137,12 +138,12 @@ def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("o_orderdate", "o_orderkey")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    micros = F.floor(F.col("o_totalprice") * 1_000_000)
+    spend = F.sum(micros(F.col("o_totalprice"))).over(w)
     return orders.select(
         "o_custkey",
         "o_orderkey",
         "o_orderdate",
-        (F.sum(micros).over(w).cast("double") / F.lit(1e6)).alias("running_spend"),
+        (spend.cast("double") / F.lit(1e6)).alias("running_spend"),
     )
 
 
@@ -168,14 +169,11 @@ def win_moving_avg_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ts", "event_id")
         .rowsBetween(-6, W.currentRow)
     )
-    micros = F.floor(F.col("value") * 1_000_000)
     return events.select(
         "event_id",
         "user_id",
         "ts",
-        (
-            F.sum(micros).over(w).cast("double") / F.lit(1e6) / F.count(F.lit(1)).over(w)
-        ).alias("moving_avg7"),
+        davg_window(F.col("value"), w).alias("moving_avg7"),
     )
 
 

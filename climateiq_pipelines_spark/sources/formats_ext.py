@@ -91,19 +91,18 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
     )
-    corrupt = F.col("_corrupt_record").isNotNull()
-    # round 16: two-level exact audit (helpers.two_level, global form);
     # the conditional counts and the integer checksum ride the same
-    # partial/merge pair, oracle unchanged
+    # two-level partial/merge pair as the exact price sum
+    corrupt = "_corrupt_record IS NOT NULL"
     return two_level(
         back,
         [],
         [
             ("count", "n_rows"),
-            ("countc", F.when(corrupt, 1), "n_corrupt"),
-            ("countc", F.when(F.col("price").isNull(), 1), "n_price_null"),
-            ("lsum", F.when(corrupt, F.col("k")), "corrupt_key_checksum"),
-            ("dsum", F.col("price"), "parsed_price_sum"),
+            ("countc", f"CASE WHEN {corrupt} THEN 1 END", "n_corrupt"),
+            ("countc", "CASE WHEN price IS NULL THEN 1 END", "n_price_null"),
+            ("lsum", f"CASE WHEN {corrupt} THEN k END", "corrupt_key_checksum"),
+            ("dsum", "price", "parsed_price_sum"),
         ],
     )
 
@@ -158,18 +157,17 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     v1.write.mode("overwrite").parquet(os.path.join(path, "batch=1"))
     v2.write.mode("overwrite").parquet(os.path.join(path, "batch=2"))
     back = spark.read.option("mergeSchema", "true").parquet(path)
-    # round 16: two-level exact audit (helpers.two_level); the distinct
-    # brand count rides the partial stage as collect_set → flatten →
-    # array_distinct at merge — exact because the p_brand domain is
-    # BOUNDED (25 TPC-H brands), so per-partition set state is O(25),
-    # not O(rows).  Oracle unchanged.
+    # the distinct brand count rides the partial stage as collect_set
+    # → flatten → array_distinct at merge — exact because the p_brand
+    # domain is BOUNDED (25 TPC-H brands), so per-partition set state
+    # is O(25), not O(rows)
     return two_level(
         back,
-        [F.col("p_brand").isNotNull().alias("has_brand")],
+        ["p_brand IS NOT NULL AS has_brand"],
         [
             ("count", "n_rows"),
-            ("cdistinct", F.col("p_brand"), "n_brands"),
-            ("dsum", F.col("p_retailprice"), "sum_price"),
+            ("cdistinct", "p_brand", "n_brands"),
+            ("dsum", "p_retailprice", "sum_price"),
         ],
     )
 
@@ -221,17 +219,15 @@ def scan_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
         .select(F.year("o_orderdate").alias("y"))
         .distinct()
     )
-    # round 16: two-level exact audit sum (helpers.two_level) — a
-    # POST-JOIN site like join_multikey: the level-1 partial mass is
-    # bounded by the broadcast-join output partitioning (scan-sized
-    # here, since a broadcast join preserves the fact scan's
-    # partitions).  Oracle unchanged.
+    # a POST-JOIN two-level site: the level-1 partial mass is bounded
+    # by the broadcast-join output partitioning (scan-sized here, since
+    # a broadcast join preserves the fact scan's partitions)
     return two_level(
         fact.join(dim, fact["o_year"] == dim["y"]),
-        [F.col("o_year").cast("int").alias("o_year")],
+        ["CAST(o_year AS INT) AS o_year"],
         [
             ("count", "n_orders"),
-            ("dsum", F.col("o_totalprice"), "sum_price"),
+            ("dsum", "o_totalprice", "sum_price"),
         ],
     )
 

@@ -140,14 +140,12 @@ def sink_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     read time)."""
     paths = _write_base_and_deltas(spark, sf_dir)
     merged = _merge_on_read(spark, paths)
-    # round 16: two-level exact audit sum (helpers.two_level),
-    # oracle unchanged
     return two_level(
         merged,
         ["o_orderpriority"],
         [
             ("count", "n_rows"),
-            ("dsum", F.col("o_totalprice"), "sum_price"),
+            ("dsum", "o_totalprice", "sum_price"),
         ],
     )
 
@@ -174,12 +172,10 @@ def sink_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta (the classic snapshot-isolation bug) changes its count/sum
     and hash-mismatches."""
     paths = _write_base_and_deltas(spark, sf_dir)
-    # round 16: two-level exact audit sums (helpers.two_level with no
-    # grouping keys — global audits over snapshot-sized inputs),
-    # oracle unchanged
+    # global two-level audits over snapshot-sized inputs
     audit = [
         ("count", "n_rows"),
-        ("dsum", F.col("o_totalprice"), "sum_price"),
+        ("dsum", "o_totalprice", "sum_price"),
     ]
     v0 = two_level(spark.read.parquet(paths["base"]), [], audit).select(
         F.lit("v0").alias("version"), "n_rows", "sum_price"

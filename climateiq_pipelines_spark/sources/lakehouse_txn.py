@@ -361,16 +361,15 @@ def sink_txn_commit_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rows_at_v2 = _snapshot(spark, root, orders.schema, 2).count()  # travel
     latest = _snapshot(spark, root, orders.schema)  # replays to v3
-    # round 16: two-level exact audit sum (helpers.two_level); the
-    # version literals attach at the merge stage.  Oracle unchanged.
+    # the version literals attach at the merge stage
     return two_level(
         latest,
         ["o_orderpriority"],
         [
             ("count", "n_rows"),
-            ("dsum", F.col("o_totalprice"), "total_price"),
-            ("lit", F.lit(_latest_version(root)).cast("int"), "n_versions"),
-            ("lit", F.lit(rows_at_v2).cast("long"), "rows_at_v2"),
+            ("dsum", "o_totalprice", "total_price"),
+            ("lit", f"CAST({_latest_version(root)} AS INT)", "n_versions"),
+            ("lit", f"CAST({rows_at_v2} AS BIGINT)", "rows_at_v2"),
         ],
     )
 
@@ -594,18 +593,16 @@ def sink_txn_conflict_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     latest = _snapshot(spark, root, orders.schema)
-    # round 16: two-level exact audit sum (helpers.two_level); the
-    # race-accounting literals attach at the merge stage.  Oracle
-    # unchanged.
+    # the race-accounting literals attach at the merge stage
     return two_level(
         latest,
         ["o_orderpriority"],
         [
             ("count", "n_rows"),
-            ("dsum", F.col("o_totalprice"), "total_price"),
-            ("lit", F.lit(_latest_version(root)).cast("int"), "n_versions"),
-            ("lit", F.lit(lost_races).cast("int"), "n_lost_races"),
-            ("lit", F.lit(recomputes).cast("int"), "n_recomputes"),
+            ("dsum", "o_totalprice", "total_price"),
+            ("lit", f"CAST({_latest_version(root)} AS INT)", "n_versions"),
+            ("lit", f"CAST({lost_races} AS INT)", "n_lost_races"),
+            ("lit", f"CAST({recomputes} AS INT)", "n_recomputes"),
         ],
     )
 
@@ -710,16 +707,15 @@ def sink_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     active_cp, cp_version, tail_n = _read_via_checkpoint(root)
     equals_replay = active_cp == _active_files(root)
     latest = _read_files(spark, root, active_cp, orders.schema)
-    # round 16: two-level exact audit sum (helpers.two_level); the
-    # checkpoint literals attach at the merge stage.  Oracle unchanged.
+    # the checkpoint literals attach at the merge stage
     return two_level(
         latest,
         ["o_orderpriority"],
         [
             ("count", "n_rows"),
-            ("dsum", F.col("o_totalprice"), "total_price"),
-            ("lit", F.lit(cp_version).cast("int"), "checkpoint_version"),
-            ("lit", F.lit(tail_n).cast("int"), "tail_replayed"),
-            ("lit", F.lit(equals_replay), "checkpoint_equals_replay"),
+            ("dsum", "o_totalprice", "total_price"),
+            ("lit", f"CAST({cp_version} AS INT)", "checkpoint_version"),
+            ("lit", f"CAST({tail_n} AS INT)", "tail_replayed"),
+            ("lit", str(equals_replay), "checkpoint_equals_replay"),
         ],
     )

@@ -127,15 +127,14 @@ def scan_manifest_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     band = pruned_scan.filter(
         F.col("o_totalprice").between(_LO, _HI)
     )
-    # round 16: two-level exact audit sum (helpers.two_level); the
-    # pruning literals attach at the merge stage.  Oracle unchanged.
+    # the pruning literals attach at the merge stage
     return two_level(
         band,
         ["o_orderpriority"],
         [
             ("count", "n_rows"),
-            ("dsum", F.col("o_totalprice"), "total_price"),
-            ("lit", F.lit(files_pruned), "files_pruned"),
-            ("lit", F.lit(scan_bounded), "scan_bounded"),
+            ("dsum", "o_totalprice", "total_price"),
+            ("lit", str(files_pruned), "files_pruned"),
+            ("lit", str(scan_bounded), "scan_bounded"),
         ],
     )

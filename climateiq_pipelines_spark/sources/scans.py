@@ -106,10 +106,8 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     it back, aggregate. Oracle runs on the ORIGINAL parquet: any
     write/read lossiness breaks the hash. Timestamps travel as ISO day
     strings — CSV has no timestamp type; parsing discipline is pinned
-    by the schema.  Round 16: the audit tail runs the TWO-LEVEL exact
-    sum (helpers.two_level — the per-flag quantity groups are
-    table-fraction-sized; ~SF 1000 single-level ceiling removed),
-    oracle unchanged."""
+    by the schema.  The per-flag quantity groups are
+    table-fraction-sized, so the audit sum is two-level."""
     li = load_table(spark, sf_dir, "lineitem")
     slice_df = li.filter(F.col("l_orderkey") % 10 == 0).select(
         "l_orderkey",
@@ -125,8 +123,8 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["l_returnflag"],
         [
             ("count", "n_rows"),
-            ("dsum", F.col("l_quantity"), "sum_qty"),
-            ("min", F.col("ship_day"), "first_ship_day"),
+            ("dsum", "l_quantity", "sum_qty"),
+            ("min", "ship_day", "first_ship_day"),
         ],
     )
 
@@ -144,8 +142,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same slice through JSON-lines. JSON doubles round-trip exactly
     (Spark writes shortest-repr, reads bit-equal); schema is explicit on
-    re-read for the same scale reason as CSV.  Round 16: two-level
-    exact audit sum (helpers.two_level), oracle unchanged."""
+    re-read for the same scale reason as CSV; two-level audit sum."""
     li = load_table(spark, sf_dir, "lineitem")
     slice_df = li.filter(F.col("l_orderkey") % 10 == 0).select(
         "l_orderkey", "l_extendedprice", "l_returnflag", "l_linestatus"
@@ -166,7 +163,7 @@ def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["l_returnflag", "l_linestatus"],
         [
             ("count", "n_rows"),
-            ("dsum", F.col("l_extendedprice"), "sum_price"),
+            ("dsum", "l_extendedprice", "sum_price"),
         ],
     )
 
@@ -193,14 +190,12 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         "overwrite"
     ).partitionBy("o_year").parquet(path)
     back = spark.read.parquet(path).filter(F.col("o_year") == 1997)
-    # round 16: two-level exact audit sum (helpers.two_level),
-    # oracle unchanged
     return two_level(
         back,
         ["o_orderpriority"],
         [
             ("count", "n_orders"),
-            ("dsum", F.col("o_totalprice"), "sum_price"),
+            ("dsum", "o_totalprice", "sum_price"),
         ],
     )
 
@@ -334,14 +329,12 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(new_temp_dir("merge"), "orders_merged")
     merged.write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
-    # round 16: two-level exact audit sum (helpers.two_level),
-    # oracle unchanged
     return two_level(
         back,
         ["merge_action"],
         [
             ("count", "n_rows"),
-            ("dsum", F.col("o_totalprice"), "sum_price"),
+            ("dsum", "o_totalprice", "sum_price"),
         ],
     )
 
@@ -373,15 +366,13 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(new_temp_dir("orc"), "lineitem_slice")
     slice_df.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
-    # round 16: two-level exact audit sum (helpers.two_level),
-    # oracle unchanged
     return two_level(
         back,
         ["l_returnflag"],
         [
             ("count", "n_rows"),
-            ("dsum", F.col("l_quantity"), "sum_qty"),
-            ("min", F.col("ship_day"), "first_ship_day"),
+            ("dsum", "l_quantity", "sum_qty"),
+            ("min", "ship_day", "first_ship_day"),
         ],
     )
 

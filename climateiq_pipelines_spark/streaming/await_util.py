@@ -1,5 +1,5 @@
-"""Shared streaming-query runs: a wait with a LOUD timeout, and the one
-update-mode foreachBatch start.
+"""Shared streaming-query runs: a wait with a LOUD timeout, the one
+memory-sink run, and the one update-mode foreachBatch start.
 
 Every streaming key waits through ``await_or_raise``.  On a slow host an
 availableNow query can outlive its timeout; if the ``finally`` then
@@ -12,8 +12,12 @@ carries the query's status and last progress.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
+
+from climateiq_pipelines_spark.session import register_temp_view
 
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
@@ -39,6 +43,32 @@ def await_or_raise(query: StreamingQuery, seconds: int) -> None:
         )
 
 
+def run_to_memory(
+    df: DataFrame, output_mode: str, seconds: int = 120
+) -> DataFrame:
+    """Run the streaming frame ``df`` to completion (availableNow, output
+    mode "append" or "complete") into a memory sink and return the sink
+    table.  The view name is unique per call, so concurrent sessions and
+    repeated runs never collide, and it is registered so the next
+    release drops it: a memory sink pins its full result rows in driver
+    memory.  The closing no-data batch stays on: in append mode it is
+    the batch that emits the final windows and flushes timed-out state
+    once the watermark passes them."""
+    name = register_temp_view(f"cps_memory_{uuid.uuid4().hex[:12]}")
+    query = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        await_or_raise(query, seconds)
+    finally:
+        query.stop()
+    return df.sparkSession.table(name)
+
+
 def run_update_foreach_batch(df: DataFrame, sink) -> None:
     """Run the streaming aggregate ``df`` to completion in UPDATE mode
     with an availableNow trigger, handing each micro-batch to the
@@ -57,8 +87,7 @@ def run_update_foreach_batch(df: DataFrame, sink) -> None:
 
     APPEND-mode queries must NOT come through here: there the closing
     batch is the one that emits the final windows, once the watermark
-    passes them (``stream_state_timeout_flush`` and the memory-sink keys
-    behind ``demos._run_to_memory``)."""
+    passes them (the keys behind :func:`run_to_memory`)."""
     spark = df.sparkSession
     prior = spark.conf.get(_NO_DATA_BATCHES, None)
     spark.conf.set(_NO_DATA_BATCHES, "false")

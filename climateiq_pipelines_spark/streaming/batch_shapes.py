@@ -30,14 +30,13 @@ from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.functions.helpers import davg, sql_davg
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.session import register_temp_view
 from climateiq_pipelines_spark.registry import (
     load_table,
     ntz_of_window_bound,
     read_events_stream,
     read_events_stream_micros,
 )
-from climateiq_pipelines_spark.streaming.await_util import await_or_raise
+from climateiq_pipelines_spark.streaming.await_util import run_to_memory
 
 
 @register(
@@ -361,18 +360,7 @@ def stream_readstream_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("window.start").alias("win_start"), "event_type", "n_events"
         )
     )
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(register_temp_view("cps_stream_demo"))
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        await_or_raise(query, 120)
-    finally:
-        query.stop()
-    return spark.sql("SELECT * FROM cps_stream_demo").select(
+    return run_to_memory(agg, "complete").select(
         ntz_of_window_bound("win_start").alias("win_start"),
         "event_type",
         "n_events",
@@ -492,15 +480,4 @@ def stream_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    query = (
-        sessions.writeStream.format("memory")
-        .queryName(register_temp_view("cps_stateful_sessions"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        await_or_raise(query, 120)
-    finally:
-        query.stop()
-    return spark.sql("SELECT * FROM cps_stateful_sessions")
+    return run_to_memory(sessions, "append")

@@ -31,11 +31,10 @@ the single-batch one.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import (
@@ -44,7 +43,7 @@ from climateiq_pipelines_spark.registry import (
     read_events_stream,
 )
 from climateiq_pipelines_spark.streaming.await_util import (
-    await_or_raise,
+    run_to_memory,
     run_update_foreach_batch,
 )
 
@@ -54,29 +53,6 @@ from climateiq_pipelines_spark.streaming.await_util import (
 # already called the registry function directly — so the demos below
 # do too; one call convention, one docstring to keep true.)
 _read_events_stream = read_events_stream
-
-
-def _run_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
-    """Run a streaming frame to completion (availableNow) into a
-    uniquely-named memory sink and return the sink table — unique names
-    so concurrent sessions/repeated bench runs never collide.  The view
-    is registered so the next release drops it: each memory sink pins
-    its full result rows in driver memory."""
-    from climateiq_pipelines_spark.session import register_temp_view
-
-    name = register_temp_view(f"cps_demo_{uuid.uuid4().hex[:12]}")
-    query = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        await_or_raise(query, 120)
-    finally:
-        query.stop()
-    return df.sparkSession.sql(f"SELECT * FROM {name}")
 
 
 @register(
@@ -105,7 +81,7 @@ def stream_sliding_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("window.start").alias("win_start"), "n_events")
     )
-    sunk = _run_to_memory(agg, "complete")
+    sunk = run_to_memory(agg, "complete")
     return sunk.select(
         ntz_of_window_bound("win_start").alias("win_start"), "n_events"
     )
@@ -132,7 +108,7 @@ def stream_dedup_watermark_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    return _run_to_memory(deduped, "append")
+    return run_to_memory(deduped, "append")
 
 
 @register(
@@ -186,7 +162,7 @@ def stream_stream_join_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
     ).select(F.col("c_user").alias("user_id"), "click_id", "purchase_id")
-    return _run_to_memory(joined, "append")
+    return run_to_memory(joined, "append")
 
 
 @register(
@@ -230,14 +206,16 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
+            batch_df.withColumn("batch_id", F.lit(batch_id).cast("long"))
             .write.mode("append")
             .parquet(out)
         )
 
     run_update_foreach_batch(agg, sink)
 
-    sunk = spark.read.parquet(out)
+    # the read-back schema is known, so no inference job scans the sink
+    schema = T.StructType([*agg.schema, T.StructField("batch_id", T.LongType())])
+    sunk = spark.read.schema(schema).parquet(out)
     latest = W.partitionBy("win_start", "event_type").orderBy(
         F.desc("batch_id")
     )
@@ -369,7 +347,7 @@ def stream_windowed_topk_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    sunk = _run_to_memory(agg, "complete")
+    sunk = run_to_memory(agg, "complete")
     dw = W.partitionBy("win_start").orderBy(
         F.desc("n_events"), F.asc("event_type")
     )

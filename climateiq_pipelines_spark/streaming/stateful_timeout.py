@@ -22,9 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.session import memo, new_temp_dir, register_temp_view
+from climateiq_pipelines_spark.session import memo, new_temp_dir
 from climateiq_pipelines_spark.registry import read_events_micros
-from climateiq_pipelines_spark.streaming.await_util import await_or_raise
+from climateiq_pipelines_spark.streaming.await_util import run_to_memory
 
 _GAP_US = 30 * 60 * 1_000_000  # session gap (same as the sessionizers)
 _GAP_MS = _GAP_US // 1000
@@ -238,15 +238,4 @@ def stream_state_timeout_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append",
         GroupStateTimeout.EventTimeTimeout,
     )
-    query = (
-        sessions.writeStream.format("memory")
-        .queryName(register_temp_view("cps_state_timeout_flush"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        await_or_raise(query, 180)
-    finally:
-        query.stop()
-    return spark.sql("SELECT * FROM cps_state_timeout_flush")
+    return run_to_memory(sessions, "append", seconds=180)

@@ -481,6 +481,56 @@ def test_driver_sim_evidence_header_is_parseable_and_first():
     assert hdr2["tool"] == "x" and hdr2["a"] == 1 and "date_utc" in hdr2
 
 
+def test_driver_sim_stops_when_the_jvm_dies(monkeypatch, capsys):
+    """A key that kills the driver JVM is named once; the keys after it
+    are listed as not run (instead of each failing on a refused
+    connection) and the sweep exits 1."""
+    from types import SimpleNamespace
+
+    import __spark_entry__ as E
+    import tools.driver_sim as ds
+    from climateiq_pipelines_spark import parity
+
+    class _Jsc:  # the gateway as the liveness probe sees it
+        dead = False
+
+        def sc(self):
+            if self.dead:
+                raise ConnectionRefusedError(111, "Connection refused")
+            return self
+
+        def isStopped(self):
+            return False
+
+    jsc = _Jsc()
+    spark = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=jsc))
+    checked = []
+
+    def check_key(key, spark, sf_dir, con):
+        checked.append(key)
+        if key == "k2":
+            jsc.dead = True  # the JVM dies inside this key
+            raise ConnectionError("Answer from Java side is empty")
+        return parity.ParityResult(key=key, ok=True, spark_rows=1, oracle_rows=1)
+
+    monkeypatch.setattr(ds, "driver_session", lambda: (
+        spark, {"tz": "UTC", "master": "local[1]", "extra_conf": ""}))
+    monkeypatch.setattr(ds, "release", lambda spark, after: None)
+    monkeypatch.setattr(E, "entry", lambda spark: SimpleNamespace(collect=lambda: [1]))
+    monkeypatch.setattr(E, "queries", lambda: dict.fromkeys(["k1", "k2", "k3", "k4"]))
+    monkeypatch.setattr(parity, "duck_connect", lambda sf_dir: None)
+    monkeypatch.setattr(parity, "check_key", check_key)
+    monkeypatch.setattr("sys.argv", ["driver_sim.py"])
+    assert ds.main() == 1
+    assert checked == ["k1", "k2"]
+    out, err = capsys.readouterr()
+    assert "[2/4] k2: EXC ConnectionError; the driver JVM is gone, 2 keys not run" in err
+    assert "k3" not in err and "k4" not in err
+    lines = out.splitlines()
+    assert lines[1] == "FAILURES:" and "k2" in lines[2]
+    assert lines[3].endswith("the driver JVM died): k3 k4"), lines
+
+
 def test_release_blocks_reclaims_checkpoints(spark):
     """Round-12 harness hygiene: operators localCheckpoint relations
     they return and cannot unpersist them before the caller consumes

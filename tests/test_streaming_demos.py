@@ -238,3 +238,35 @@ def test_await_timeout_names_status_and_last_progress():
     assert "slow did not terminate within 180s" in msg
     assert "Processing new data" in msg
     assert "batch 1, 500 input rows" in msg and "179000" in msg
+
+
+def test_foreachbatch_sink_reads_back_with_its_known_schema(spark):
+    """The sink's read-back passes the schema it wrote, so a warm call
+    launches one build job (the micro-batch's write), not a second
+    schema-inference job over the sink files."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    QUERIES["stream_foreachbatch_sink"](spark, SF_SMALL)  # warm
+    for _ in range(2):
+        before = dag.numTotalJobs()
+        QUERIES["stream_foreachbatch_sink"](spark, SF_SMALL)
+        assert dag.numTotalJobs() - before == 1
+
+
+def test_run_to_memory_names_each_sink_uniquely(spark):
+    """Two runs of one stream land in two registered memory views with
+    equal contents; the next release drops both."""
+    from climateiq_pipelines_spark import session as S
+    from climateiq_pipelines_spark.registry import read_events_stream
+    from climateiq_pipelines_spark.streaming.await_util import run_to_memory
+
+    S.release_blocks(spark)
+    counts = (
+        read_events_stream(spark, SF_SMALL).groupBy("event_type").count()
+    )
+    a = run_to_memory(counts, "complete")
+    b = run_to_memory(counts, "complete", seconds=60)
+    views = list(S._SCOPE.views)
+    assert len(views) == 2 and views[0] != views[1], views
+    assert sorted(a.collect()) == sorted(b.collect())
+    S.release_blocks(spark)
+    assert not any(spark.catalog.tableExists(v) for v in views)

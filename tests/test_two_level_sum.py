@@ -1,10 +1,7 @@
-"""Round-15 two-level exact-sum pins (VERDICT r14 task #1).
-
-The round converted every remaining single-level dsum/davg whose
-groups are table-fraction-sized to the two-level form (long-micro
-partials per (keys, spark_partition_id()) → decimal(38,0) merge;
-helpers module docstring).  These tests pin the REASON and the FIX
-directly, at the magnitude where they diverge:
+"""Two-level exact-sum pins (helpers module docstring: long-micro
+partials per (keys, spark_partition_id()) → decimal(38,0) merge, built
+by helpers.two_level from SQL text).  These tests pin the REASON and
+the FIX directly, at the magnitude where they diverge:
 
 1. The ceiling is REAL: on a fixture whose per-group micro mass
    exceeds 2^63, the single-level accumulator raises Spark's ANSI
@@ -15,7 +12,7 @@ directly, at the magnitude where they diverge:
 2. The two forms are BIT-IDENTICAL where both are defined: on
    money-scale data the merged double equals the single-level double
    exactly (same integer total, same final conversion tree) — the
-   property that let all 12 conversions ship with UNCHANGED oracles.
+   property that lets every two-level key keep its single-level oracle.
 3. The merge is layout-independent: integer partials re-grouped under
    different partitionings sum to the same decimal, so
    spark_partition_id() in the grouping key never leaks into values
@@ -25,14 +22,20 @@ directly, at the magnitude where they diverge:
 
 from __future__ import annotations
 
+import ast
+import re
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.functions.helpers import (
     dsum,
-    dsum_merge,
     micros,
+    two_level,
+    two_level_aggs,
 )
+from tests.conftest import SF_SMALL
 
 # Each row carries 2.5e12 units → floor(x*1e6) = 2.5e18 micros.  Four
 # rows in ONE group total 1e19 micros > 2^63 ≈ 9.22e18: the
@@ -65,10 +68,7 @@ def test_single_level_overflows_loudly_past_2e63(spark):
 
 
 def test_two_level_returns_exact_sum_past_2e63(spark):
-    partials = _big_frame(spark).groupBy(
-        "k", F.spark_partition_id().alias("_pid")
-    ).agg(F.sum(micros(F.col("v"))).alias("p"))
-    [row] = partials.groupBy("k").agg(dsum_merge("p", "s")).collect()
+    [row] = two_level(_big_frame(spark), ["k"], [("dsum", "v", "s")]).collect()
     # 4 × 2.5e18 micros = 1e19 micros = 1e13 units, exactly
     # representable as a double (it is a power of 10 below 2^53 × 2^k
     # scaling? 1e13 < 2^53, so yes — integer-exact)
@@ -93,12 +93,9 @@ def test_two_forms_bit_identical_at_money_scale(spark):
         r["k"]: r["s"]
         for r in base.groupBy("k").agg(dsum(F.col("v"), "s")).collect()
     }
-    partials = base.groupBy("k", F.spark_partition_id().alias("_pid")).agg(
-        F.sum(micros(F.col("v"))).alias("p")
-    )
     two = {
         r["k"]: r["s"]
-        for r in partials.groupBy("k").agg(dsum_merge("p", "s")).collect()
+        for r in two_level(base, ["k"], [("dsum", "v", "s")]).collect()
     }
     assert single == two  # exact float equality — same integer, same tree
 
@@ -108,24 +105,18 @@ def test_merge_is_layout_independent(spark):
     results = []
     for n_parts in (1, 5, 32):
         df = spark.createDataFrame(vals, ["k", "v"]).repartition(n_parts)
-        partials = df.groupBy("k", F.spark_partition_id().alias("_pid")).agg(
-            F.sum(micros(F.col("v"))).alias("p")
-        )
         results.append(
             sorted(
                 (r["k"], r["s"])
-                for r in partials.groupBy("k")
-                .agg(dsum_merge("p", "s"))
-                .collect()
+                for r in two_level(df, ["k"], [("dsum", "v", "s")]).collect()
             )
         )
     assert results[0] == results[1] == results[2]
 
 
 # --------------------------------------------------- two_level() helper
-# Round 16 packaged the partial/merge pair as helpers.two_level for the
-# sources-wave audit tails; these pin the helper itself against the
-# single-level forms it replaced, spec kind by spec kind.
+# These pin the builder itself against the single-level forms, spec
+# kind by spec kind.
 
 
 def _audit_frame(spark, n_parts=7):
@@ -146,8 +137,6 @@ def _audit_frame(spark, n_parts=7):
 
 
 def test_two_level_helper_matches_single_level(spark):
-    from climateiq_pipelines_spark.functions.helpers import two_level
-
     df = _audit_frame(spark)
     got = {
         r["k"]: r.asDict()
@@ -156,14 +145,14 @@ def test_two_level_helper_matches_single_level(spark):
             ["k"],
             [
                 ("count", "n_rows"),
-                ("countc", F.col("maybe"), "n_maybe"),
-                ("lsum", F.col("maybe"), "checksum"),
-                ("dsum", F.col("v"), "sum_v"),
-                ("davg", F.col("v"), "avg_v"),
-                ("min", F.col("v"), "min_v"),
-                ("max", F.col("v"), "max_v"),
-                ("cdistinct", F.col("brand"), "n_brands"),
-                ("lit", F.lit(42).cast("int"), "answer"),
+                ("countc", "maybe", "n_maybe"),
+                ("lsum", "maybe", "checksum"),
+                ("dsum", "v", "sum_v"),
+                ("davg", "v", "avg_v"),
+                ("min", "v", "min_v"),
+                ("max", "v", "max_v"),
+                ("cdistinct", "brand", "n_brands"),
+                ("lit", "CAST(42 AS INT)", "answer"),
             ],
         ).collect()
     }
@@ -193,8 +182,6 @@ def test_two_level_helper_matches_single_level(spark):
 
 
 def test_two_level_helper_layout_independent(spark):
-    from climateiq_pipelines_spark.functions.helpers import two_level
-
     frames = [
         sorted(
             (r["k"], r["s"], r["a"], r["n"])
@@ -202,8 +189,8 @@ def test_two_level_helper_layout_independent(spark):
                 _audit_frame(spark, n_parts),
                 ["k"],
                 [
-                    ("dsum", F.col("v"), "s"),
-                    ("davg", F.col("v"), "a"),
+                    ("dsum", "v", "s"),
+                    ("davg", "v", "a"),
                     ("count", "n"),
                 ],
             ).collect()
@@ -214,9 +201,7 @@ def test_two_level_helper_layout_independent(spark):
 
 
 def test_two_level_helper_global_and_empty(spark):
-    from climateiq_pipelines_spark.functions.helpers import two_level
-
-    aggs = [("count", "n"), ("dsum", F.col("v"), "s")]
+    aggs = [("count", "n"), ("dsum", "v", "s")]
     df = _audit_frame(spark)
     [row] = two_level(df, [], aggs).collect()
     [want] = df.agg(
@@ -231,17 +216,105 @@ def test_two_level_helper_global_and_empty(spark):
 
 
 def test_two_level_helper_aliased_key_and_bad_kind(spark):
-    import pytest as _pytest
-
-    from climateiq_pipelines_spark.functions.helpers import two_level
-
     df = _audit_frame(spark)
-    out = two_level(
-        df,
-        [(F.col("k") % 2 == 0).alias("k_even")],
-        [("count", "n")],
-    )
+    out = two_level(df, ["k % 2 = 0 AS k_even"], [("count", "n")])
     assert out.columns == ["k_even", "n"]
     assert {r["k_even"] for r in out.collect()} == {True, False}
-    with _pytest.raises(ValueError, match="unknown two_level agg kind"):
-        two_level(df, ["k"], [("median", F.col("v"), "m")])
+    with pytest.raises(ValueError, match="unknown two_level agg kind"):
+        two_level(df, ["k"], [("median", "v", "m")])
+
+
+def test_dsum_and_davg_of_one_text_share_one_partial(spark):
+    """A sum and a mean of one expression pre-sum its micros once: the
+    level-1 aggregate holds that micro sum and the mean's count, no
+    more, and both merges still equal their single-level forms."""
+    aggs = [("dsum", "v * 2", "s"), ("davg", "v * 2", "a")]
+    level1, _ = two_level_aggs(aggs)
+    assert len(level1) == 2, level1
+    assert sum("floor" in str(c) for c in level1) == 1, level1
+    df = _audit_frame(spark)
+    got = {r["k"]: (r["s"], r["a"]) for r in two_level(df, ["k"], aggs).collect()}
+    v2 = F.col("v") * 2
+    want = {
+        r["k"]: (r["s"], r["a"])
+        for r in df.groupBy("k")
+        .agg(
+            dsum(v2, "s"),
+            (
+                F.sum(micros(v2)).cast("double") / F.lit(1e6) / F.count(v2)
+            ).alias("a"),
+        )
+        .collect()
+    }
+    assert got == want
+
+
+# ------------------------------------------------- one builder, no copies
+_PKG = Path(__file__).resolve().parent.parent / "climateiq_pipelines_spark"
+# agg_rollup hand-builds its level-1 partial because its merge is a
+# ROLLUP; it renders both levels with two_level_aggs.
+_PID_PARTIAL_OK = {("operators/aggregates.py", "agg_rollup")}
+
+
+def _partition_id_groupings(tree: ast.AST) -> list[int]:
+    """Line of every groupBy/rollup/cube call whose keys mention
+    spark_partition_id -- a per-partition partial."""
+
+    def mentions_pid(node) -> bool:
+        return any(
+            (isinstance(n, ast.Attribute) and n.attr == "spark_partition_id")
+            or (isinstance(n, ast.Constant) and isinstance(n.value, str)
+                and "spark_partition_id" in n.value)
+            for n in ast.walk(node)
+        )
+
+    return [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("groupBy", "groupby", "rollup", "cube")
+        and any(mentions_pid(a) for a in node.args)
+    ]
+
+
+def test_no_partition_id_partial_outside_the_builder():
+    """Every two-level aggregate goes through helpers.two_level: no
+    module other than helpers.py groups by spark_partition_id() (the
+    level-1 partial) or names a `_pid` column, except agg_rollup."""
+    stray = []
+    for path in sorted(_PKG.rglob("*.py")):
+        rel = path.relative_to(_PKG).as_posix()
+        if rel == "functions/helpers.py":
+            continue
+        src = path.read_text()
+        tree = ast.parse(src)
+        ok_lines = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and (rel, node.name) in _PID_PARTIAL_OK:
+                ok_lines |= set(range(node.lineno, node.end_lineno + 1))
+        pid_lines = [i for i, line in enumerate(src.splitlines(), 1)
+                     if re.search(r"\b_pid\b", line)]
+        stray += [(rel, ln) for ln in _partition_id_groupings(tree) + pid_lines
+                  if ln not in ok_lines]
+    assert stray == [], stray
+
+
+def test_pricing_summary_build_sends_few_py4j_commands(spark, monkeypatch):
+    """The text builder renders each partial and merge as one F.expr:
+    building agg_pricing_summary's plan takes at most 200 py4j commands
+    (it took 947 with the hand-built Column pair)."""
+    from py4j.clientserver import ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    from climateiq_pipelines_spark.plans import QUERIES
+
+    QUERIES["agg_pricing_summary"](spark, SF_SMALL)  # warm the table memo
+    sent = []
+    for cls in (ClientServerConnection, GatewayConnection):
+        def counting(self, command, *args, _send=cls.send_command, **kwargs):
+            sent.append(command)
+            return _send(self, command, *args, **kwargs)
+
+        monkeypatch.setattr(cls, "send_command", counting)
+    QUERIES["agg_pricing_summary"](spark, SF_SMALL)
+    assert 0 < len(sent) <= 200, len(sent)

@@ -35,6 +35,10 @@ aborts).
 Output: one flushed stderr line per key ("[i/n] key: verdict (secs)");
 stdout holds the JSON evidence header first, then "ALL n KEYS OK" or
 "FAILURES:" with one entry per failed key.  Exit 1 on any failure.
+A key that raises and leaves the driver JVM dead (say, a heap
+OutOfMemoryError) stops the sweep: one line names that key, and the
+keys left unrun are listed instead of each failing on a refused
+connection.
 """
 
 from __future__ import annotations
@@ -132,39 +136,21 @@ def release(spark, after: str) -> None:
               file=sys.stderr, flush=True)
 
 
-def parse_args(argv: list[str]) -> tuple[bool, bool, str]:
-    """(window_only, fast, sf_dir); exits on anything else, before any
-    Spark work — a typo like --Fast must not become the sf_dir."""
-    flags = [a for a in argv if a.startswith("-")]
-    pos = [a for a in argv if not a.startswith("-")]
-    unknown = [a for a in flags if a not in ("--window", "--fast")]
-    if unknown or len(pos) > 1:
-        sys.exit(f"unknown argument(s) {unknown or pos[1:]}; {USAGE}")
-    sf_dir = pos[0] if pos else "/root/testdata/sf0.01"
-    return "--window" in flags, "--fast" in flags, sf_dir
+def jvm_alive(spark) -> bool:
+    """True while the driver JVM answers and its SparkContext runs."""
+    try:
+        return not spark.sparkContext._jsc.sc().isStopped()
+    except Exception:  # noqa: BLE001 — a dead gateway raises anything
+        return False
 
 
-def main() -> int:
-    t0 = time.monotonic()
-    window_only, fast, sf_dir = parse_args(sys.argv[1:])
-    spark, applied = driver_session()
-
-    import __spark_entry__ as E
-    from climateiq_pipelines_spark.parity import check_key, duck_connect
+def sweep(spark, keys: list[str], sf_dir: str, con,
+          fast: bool) -> tuple[list[str], list[str]]:
+    """Check ``keys`` in order: (failure lines, keys left unrun).  Keys
+    are left unrun only when one raises and the JVM is gone after it."""
+    from climateiq_pipelines_spark.parity import check_key
     from climateiq_pipelines_spark.parity_digest import check_key_digest
 
-    if fast:
-        from climateiq_pipelines_spark.operators import llm
-
-        llm.ALLPAIRS_MAX_DOCS = 0  # force the shared-oracle LSH plan
-    assert len(E.entry(spark).collect()) > 0, "t1 smoke failed"
-    con = duck_connect(sf_dir)
-    keys = list(E.queries())
-    if window_only:
-        # Registration order IS certification priority
-        # (plans._apply_rotation_window): slice before sorting.
-        keys = keys[:50]
-    keys.sort()
     bad: list[str] = []
     for i, key in enumerate(keys, 1):
         t_key = time.monotonic()
@@ -184,16 +170,60 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001 — report, don't abort the sweep
             verdict = f"EXC {type(exc).__name__}"
             bad.append(f"[FAIL] {key}: raised {exc}")
+            if not jvm_alive(spark):
+                print(f"[{i}/{len(keys)}] {key}: {verdict}; the driver JVM "
+                      f"is gone, {len(keys) - i} keys not run",
+                      file=sys.stderr, flush=True)
+                return bad, keys[i:]
         release(spark, key)
         print(f"[{i}/{len(keys)}] {key}: {verdict}"
               f" ({time.monotonic() - t_key:.1f}s)", file=sys.stderr,
               flush=True)
+    return bad, []
+
+
+def parse_args(argv: list[str]) -> tuple[bool, bool, str]:
+    """(window_only, fast, sf_dir); exits on anything else, before any
+    Spark work — a typo like --Fast must not become the sf_dir."""
+    flags = [a for a in argv if a.startswith("-")]
+    pos = [a for a in argv if not a.startswith("-")]
+    unknown = [a for a in flags if a not in ("--window", "--fast")]
+    if unknown or len(pos) > 1:
+        sys.exit(f"unknown argument(s) {unknown or pos[1:]}; {USAGE}")
+    sf_dir = pos[0] if pos else "/root/testdata/sf0.01"
+    return "--window" in flags, "--fast" in flags, sf_dir
+
+
+def main() -> int:
+    t0 = time.monotonic()
+    window_only, fast, sf_dir = parse_args(sys.argv[1:])
+    spark, applied = driver_session()
+
+    import __spark_entry__ as E
+    from climateiq_pipelines_spark.parity import duck_connect
+
+    if fast:
+        from climateiq_pipelines_spark.operators import llm
+
+        llm.ALLPAIRS_MAX_DOCS = 0  # force the shared-oracle LSH plan
+    assert len(E.entry(spark).collect()) > 0, "t1 smoke failed"
+    con = duck_connect(sf_dir)
+    keys = list(E.queries())
+    if window_only:
+        # Registration order IS certification priority
+        # (plans._apply_rotation_window): slice before sorting.
+        keys = keys[:50]
+    keys.sort()
+    bad, unrun = sweep(spark, keys, sf_dir, con, fast)
     print(evidence_header(sf_dir=sf_dir, window_only=window_only,
                           n_keys=len(keys), wall_sec=time.monotonic() - t0,
                           fast=fast, **applied))
     print("FAILURES:" if bad else f"ALL {len(keys)} KEYS OK")
     for b in bad:
         print(b)
+    if unrun:
+        print(f"NOT RUN ({len(unrun)}, the driver JVM died): "
+              + " ".join(unrun))
     return 1 if bad else 0
 
 
