@@ -56,9 +56,8 @@ HEADLINE = [
     "llm_token_counts",        # split+explode+group
     "llm_exact_dedup",         # hash-group dedup
     "mm_decode_features",      # Arrow binary batches through Python
-    "llm_minhash_lsh",         # minhash+LSH near-dup (scale path; the
-                               # exact all-pairs twin is checked at sf0.01
-                               # but is quadratic by design at bench SF)
+    "llm_minhash_lsh",         # minhash+LSH near-dup (banded; the exact
+                               # prefix-join key shares its oracle)
     "llm_cosine_topk",         # brute-force kNN (DuckDB: 15.7 s)
     "llm_simhash_bucket",      # LSH bucket primitive
     "llm_corpus_pipeline",     # end-to-end dedup+quality funnel
@@ -202,6 +201,10 @@ def main(keys: list[str] | None = None) -> None:
     # coalescing) governs, and no query here assumes a partition count.
     shuffle = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "8"))
     spark = get_spark(app_name="climateiq-bench", shuffle_partitions=shuffle)
+    # The between-key release unpersists locally checkpointed RDDs, and
+    # Spark WARNs once per RDD; those lines would crowd the suite line
+    # out of the driver's output tail.
+    spark.sparkContext.setLogLevel("ERROR")
 
     # Warm the JVM paths (parquet reader, codegen, shuffle, Arrow collect)
     # so per-query times measure the query, not session bring-up — the

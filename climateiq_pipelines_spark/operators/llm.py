@@ -1,5 +1,5 @@
 """LLM-data-pipeline operators (SURVEY.md §2.10) — 12 mandated keys + 1
-bonus (llm_minhash_lsh, the scale path, hash-checked against the same
+bonus (llm_minhash_lsh, the banded plan, hash-checked against the same
 oracle as the exact key).
 
 Determinism spine: every similarity/distance number is computed as an
@@ -12,10 +12,12 @@ per term, ≤ 1.6e13 per 64-term vector — far inside int64.
 
 Scale design (100 TB lens, per key in docstrings):
 - dedup shuffles digests (md5), never full documents;
-- all-pairs similarity exists only as the CHECKED formulation at
-  fixture scale; the SCALE formulations are the bucketed ones —
-  minhash+LSH banding (llm_minhash_lsh) and hyperplane signatures
-  (llm_simhash_bucket) — which prune candidates before exact verify;
+- the exact set-similarity keys (llm_minhash_neardup,
+  llm_ngram_jaccard) join only PPJoin prefixes (_prefix_join:
+  candidates ≤ Σ over elements of (docs whose prefix holds it)², each
+  verified per pair in linear time); the bucketed keys — minhash+LSH banding (llm_minhash_lsh), hyperplane
+  signatures (llm_simhash_bucket) — prune candidates before exact
+  verify;
 - centroid/assignment work broadcasts the small side (10×64 centroids)
   and never shuffles the vectors twice.
 """
@@ -26,10 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from climateiq_pipelines_spark.functions.textgrams import (
-    word_shingle_sets,
-    word_shingles,
-)
+from climateiq_pipelines_spark.functions.textgrams import word_shingle_sets
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import (
     load_table,
@@ -71,6 +70,66 @@ def _tokens(docs: DataFrame) -> DataFrame:
     return docs.select(
         "doc_id", F.explode(F.split("text", " ")).alias("token")
     ).distinct()
+
+
+def _prefix_join(sets: DataFrame, prefix_len: str, pair_filter: str) -> DataFrame:
+    """Exact set-overlap pairs by a prefix-filtered self-join (PPJoin).
+
+    ``sets`` holds (doc_id, arr), arr a doc's DISTINCT elements; docs
+    with an empty set drop out. Elements are ordered globally by
+    (document frequency, element); each doc keeps the prefix of its
+    first ``prefix_len`` elements (SQL text over its set size ``n``),
+    with 0-based positions. Prefixes self-join on the element, keep
+    a_id < b_id and ``pair_filter`` (SQL text over a_n, b_n, pa, pb),
+    drop duplicate pairs, and every surviving pair is verified exactly:
+    n_common = size(array_intersect(arr_a, arr_b)). Returns (a_id, b_id,
+    a_n, b_n, n_common).
+
+    Invariant: the caller's threshold must force every qualifying pair
+    to share an element inside BOTH prefixes, and ``pair_filter`` must
+    pass the pair's earliest such collision — then no qualifying pair
+    is lost. Scale bound: candidates ≤ Σ over elements of (docs whose
+    prefix holds it)²; frequent elements sort to the set tails and
+    never enter a prefix, and each candidate is verified in time linear
+    in its two sets. The sets are checkpointed because three branches
+    read them (element explode and both verify sides)."""
+    sized = checkpoint(
+        sets.selectExpr("doc_id", "arr", "size(arr) AS n").where("n > 0")
+    )
+    el = sized.selectExpr("doc_id", "n", "explode(arr) AS el")
+    # The df aggregate and the df join share one element-keyed exchange;
+    # the prefix is a slice of the per-doc sorted (df, el) array — an
+    # aggregate, not a window.
+    df_rel = el.groupBy("el").agg(F.count(F.lit(1)).alias("df"))
+    pref = (
+        el.join(df_rel, "el")
+        .groupBy("doc_id", "n")
+        .agg(
+            F.expr(
+                "slice(sort_array(collect_list(struct(df, el))), 1,"
+                f" {prefix_len})"
+            ).alias("pref")
+        )
+        .selectExpr(
+            "doc_id", "n", "posexplode(transform(pref, p -> p.el)) AS (pos, el)"
+        )
+    )
+    a = pref.selectExpr("doc_id AS a_id", "el", "n AS a_n", "pos AS pa")
+    b = pref.selectExpr("doc_id AS b_id", "el", "n AS b_n", "pos AS pb")
+    cand = (
+        a.join(b, "el")
+        .where(f"a_id < b_id AND ({pair_filter})")
+        .select("a_id", "b_id", "a_n", "b_n")
+        .distinct()
+    )
+    return (
+        cand.join(sized.selectExpr("doc_id AS a_id", "arr AS arr_a"), "a_id")
+        .join(sized.selectExpr("doc_id AS b_id", "arr AS arr_b"), "b_id")
+        .selectExpr(
+            "a_id", "b_id", "a_n", "b_n",
+            "size(array_intersect(arr_a, arr_b)) AS n_common",
+        )
+    )
 
 
 # ------------------------------------------------------------ dedup family
@@ -121,23 +180,10 @@ _NEARDUP_ORACLE = f"""
 """
 
 
-# All-pairs dispatch bound (llm_minhash_neardup): the exact posting-list
-# self-join is quadratic in posting length — fine on a checked fixture,
-# fatal raw at corpus scale (a stop token in 10% of docs creates 10^15
-# pairs). Above the bound the key auto-dispatches to the banded
-# llm_minhash_lsh plan, which shares its oracle (the banding is
-# oracle-proven lossless), so the dispatch changes the PLAN, never the
-# answer — mirroring BLOCKNL_MAX_VECTORS (VERDICT r6 #6: the checked
-# quadratic form must be impossible to run at scale by accident).
-ALLPAIRS_MAX_DOCS = 100_000  # tests monkeypatch this
-
-
 @register("llm_minhash_neardup", oracle=_NEARDUP_ORACLE)
 def llm_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate pairs by exact token-set Jaccard — the CHECKED
-    formulation (explode → posting-list self-join → overlap/union
-    counts, all relational; Jaccard is a ratio of integers, so the
-    rounded value is engine-exact).
+    """Near-duplicate pairs by exact token-set Jaccard (Jaccard is a
+    ratio of integers, so the rounded value is engine-exact).
 
     Threshold 0.999 ≡ identical token sets: the fixture's planted
     near-dups are word-set-identical permutations (444 pairs at
@@ -145,47 +191,30 @@ def llm_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantically-unrelated pairs (probed), i.e. the vocabulary is too
     dense for loose set-Jaccard to mean 'near-duplicate'.
 
-    Scale: the per-token posting-list join is quadratic in posting
-    length — fine under candidate pruning, fatal raw at 100 TB (a stop
-    token appearing in 10% of docs creates 10^15 pairs). The scale
-    path is llm_minhash_lsh: MinHash signatures + banded bucketing
-    prune candidates to near-linear before this same exact verify —
-    and above ALLPAIRS_MAX_DOCS this key AUTO-DISPATCHES to it (a
-    bounded limit(max+1).count() probe — one scalar to the driver,
-    scan stops at max+1 rows; both plans share one oracle, so the
-    dispatch is answer-preserving)."""
-    docs = load_table(spark, sf_dir, "documents")
-    # ADVICE r7: only a SCALAR crosses to the driver — the earlier
-    # take(max+1) form shipped up to 100,001 doc_id rows per call just
-    # to compare a count.  limit().count() keeps the probe bounded (the
-    # scan stops at max+1 rows) and returns one long.
-    probe_n = docs.select("doc_id").limit(ALLPAIRS_MAX_DOCS + 1).count()
-    if probe_n > ALLPAIRS_MAX_DOCS:
-        return llm_minhash_lsh(spark, sf_dir)
-    toks = _tokens(docs)
-    # Sizes RIDE THE TOKEN ROWS into the self-join (8 extra bytes per
-    # shuffled row) instead of joining corpus-sized per-doc dimension
-    # frames afterwards — the earlier broadcast-hinted sizes formulation
-    # builds an n-row broadcast table that OOMs at real corpus scale.
-    # The toks⋈sizes join is co-partitioned on doc_id with the groupBy
-    # that produced sizes, so AQE plans it without an extra exchange.
-    sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_toks"))
-    sized = toks.join(sizes, "doc_id")
-    a = sized.select(
-        F.col("doc_id").alias("a_id"), "token", F.col("n_toks").alias("a_toks")
+    Candidates come from :func:`_prefix_join` over each doc's distinct
+    token array. Prefix length n − ⌈0.999·n⌉ + 1: J ≥ 0.999 gives
+    |∩| ≥ 0.999·|∪| ≥ 0.999·n for both sides, so a pair whose first p
+    tokens of A miss B would have |∩| ≤ n − p < ⌈0.999·n⌉ — every
+    qualifying pair collides inside both prefixes. That prefix is ONE
+    token, the doc's rarest, for any set under 1,000 tokens. The pair
+    filter is the length bound min(a, b) ≥ 0.999·max(a, b) (|∩| ≤ min,
+    |∪| ≥ max), in exact decimal arithmetic. Scale bound: candidates ≤
+    Σ over tokens of (docs whose prefix holds it)², each verified in
+    time linear in its two sets. At sf0.1 that is 582,972 candidates
+    for 35,606 pairs, against 224M posting pairs for the unpruned
+    self-join; llm_minhash_lsh is the banded plan over the same
+    oracle."""
+    docs = widen_if_narrow(
+        spark, load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    b = sized.select(
-        F.col("doc_id").alias("b_id"), "token", F.col("n_toks").alias("b_toks")
+    ver = _prefix_join(
+        docs.selectExpr("doc_id", "array_distinct(split(text, ' ')) AS arr"),
+        "n - cast(ceil(0.999 * n) as int) + 1",
+        "least(a_n, b_n) >= greatest(a_n, b_n) * 0.999",
     )
-    overlap = (
-        a.join(b, "token")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id", "a_toks", "b_toks")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    jac = F.col("n_common") / (F.col("a_toks") + F.col("b_toks") - F.col("n_common"))
+    jac = F.col("n_common") / (F.col("a_n") + F.col("b_n") - F.col("n_common"))
     return (
-        overlap.filter(jac >= 0.999)
+        ver.filter(jac >= 0.999)
         .select("a_id", "b_id", F.round(jac, 6).alias("jaccard"))
     )
 
@@ -1016,143 +1045,37 @@ def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixture the signal is bimodal (probed at sf0.01: 25 pairs at
     J ≥ 0.9, next mass at J ≤ 0.1), so 0.5 sits in an empty margin.
 
-    Scale — r17: the posting-list self-join is PPJOIN-pruned (Xiao et
-    al. 2008, "Efficient Similarity Joins for Near Duplicate
-    Detection"), exactly the lossless candidate stage VERDICT r16
-    asked for. The raw `a.join(b, shingle)` was quadratic in a hot
-    shingle's document frequency (boilerplate trigrams at 100 TB);
-    now:
-
-    - Each doc's shingle set lives as ONE sorted array row
-      (functions.textgrams.word_shingle_sets — the same zero-shuffle
-      Generate-boundary construction; the round-9 O(words²)
-      element_at trap and the step=-1 sequence() guard both live
-      there).
-    - CANDIDATES come from joining only each doc's PPJoin PREFIX — its
-      ⌈n_sh/2⌉ shingles of lowest (document frequency, shingle) in the
-      one global order. Lossless for the declared threshold: J > 1/2
-      ⟹ 3·|∩| > a+b and |∩| ≤ min(a,b) ⟹ |∩| ≥ ⌊a/2⌋+1 AND ⌊b/2⌋+1,
-      and if the first ⌈a/2⌉ elements of A shared nothing with B then
-      |∩| ≤ a − ⌈a/2⌉ = ⌊a/2⌋ — contradiction (symmetrically for B),
-      so every qualifying pair collides inside BOTH prefixes. Hot
-      boilerplate shingles have maximal df, sort to the list TAILS,
-      and never enter a prefix — the quadratic term is gone, not just
-      reduced. The length filter (max < 2·min, same derivation) and
-      PPJoin's POSITIONAL filter (the earliest common element bounds
-      |∩| by its suffix lengths — see the inline proof) drop further
-      candidates at the join: measured 300,277 → 120,930 candidate
-      pairs at sf0.1, and the interleaved noop A/B vs the unpruned
-      form reads 2.51 s → 2.05 s (min-of-4).
-    - VERIFICATION is exact and per-pair linear: candidates re-join
-      the two checkpointed set arrays and n_common =
-      size(array_intersect(arr_a, arr_b)) — no posting-list
-      re-aggregation, so the old count-all-co-occurrences shuffle is
-      gone too.
+    Candidates come from :func:`_prefix_join` (PPJoin, Xiao et al.
+    2008) over each doc's shingle set, with prefix ⌈n/2⌉. Lossless for
+    the declared threshold: J > 1/2 ⟹ 3·|∩| > a+b and |∩| ≤ min(a,b)
+    ⟹ |∩| ≥ ⌊a/2⌋+1 AND ⌊b/2⌋+1, and if the first ⌈a/2⌉ elements of A
+    shared nothing with B then |∩| ≤ a − ⌈a/2⌉ = ⌊a/2⌋ — contradiction
+    (symmetrically for B). Hot boilerplate shingles have maximal df,
+    sort to the list tails, and never enter a prefix. The pair filter
+    is the length bound (max < 2·min, same derivation) plus PPJoin's
+    POSITIONAL bound: every common element follows the earliest one in
+    both lists, so |∩| ≤ min(a − pa, b − pb) for its 0-based positions
+    pa, pb, and J > 1/2 needs |∩| ≥ ⌊(a+b)/3⌋ + 1 — a qualifying pair's
+    earliest collision always passes. Measured 300,277 → 120,930
+    candidate pairs at sf0.1 for the positional filter.
 
     Shingles are xxhash64'd longs, not trigram text (8-byte shuffle
     keys; a 2^-64 collision could at worst inflate one pair's overlap
     by 1 — the standard hashed-shingle trade, same as MinHash).
     Property-tested multiset-equal to the unpruned form
     (tests/test_r7_keys.py) and oracle-checked at all three SFs.
-
-    Shingle GENERATION is a ZERO-SHUFFLE map stage (r16:
-    functions.textgrams — transform-over-sequence slices of the split
-    array behind a Generate boundary; stage A/B: 0.79 s window form vs
-    0.37 s widened map form at sf0.1)."""
+    Shingle generation is a zero-shuffle map stage
+    (functions.textgrams.word_shingle_sets)."""
     docs = widen_if_narrow(
         spark, load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    # One (doc_id, shingle-set array, n_sh) row per doc. Checkpointed
-    # because THREE consumers read it (prefix explode + both
-    # verification sides) and Catalyst does not reuse the scan across
-    # differently-aliased branches (measured); the doc-level array rows are
-    # the same bytes as the old exploded form in fewer, wider rows.
-    sets = word_shingle_sets(docs, 3).select(
-        "doc_id", "arr", F.size("arr").alias("n_sh")
+    ver = _prefix_join(
+        word_shingle_sets(docs, 3),
+        "cast(ceil(n / 2) as int)",
+        "a_n < 2 * b_n AND b_n < 2 * a_n"
+        " AND least(a_n - pa, b_n - pb) >= (a_n + b_n) div 3 + 1",
     )
-    sized = checkpoint(sets.filter(F.col("n_sh") > 0))
-    sh = sized.select(
-        "doc_id", "n_sh", F.explode("arr").alias("shingle")
-    )
-    # Global PPJoin order = (document frequency, shingle) ascending.
-    # The df aggregate and the df join share one shingle-keyed
-    # exchange (AQE stage reuse); the per-doc prefix is a slice of the
-    # per-doc sorted (df, shingle) array — an aggregate, not a window
-    # (the r16 argmax discipline: no per-partition sort).
-    df_rel = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    pref = (
-        sh.join(df_rel, "shingle")
-        .groupBy("doc_id", "n_sh")
-        .agg(
-            F.expr(
-                "slice(sort_array(collect_list(struct(df, shingle))),"
-                " 1, cast(ceil(n_sh / 2) as int))"
-            ).alias("pref")
-        )
-        .select(
-            "doc_id",
-            "n_sh",
-            F.posexplode(F.expr("transform(pref, p -> p.shingle)")).alias(
-                "pos0", "shingle"
-            ),
-        )
-    )
-    a = pref.select(
-        F.col("doc_id").alias("a_id"),
-        "shingle",
-        F.col("n_sh").alias("a_sh"),
-        F.col("pos0").alias("pa"),
-    )
-    b = pref.select(
-        F.col("doc_id").alias("b_id"),
-        "shingle",
-        F.col("n_sh").alias("b_sh"),
-        F.col("pos0").alias("pb"),
-    )
-    # Positional filter (PPJoin's second pruning rule): for a pair's
-    # EARLIEST common element (which is always inside both prefixes —
-    # it precedes the element the prefix proof finds), every other
-    # common element follows it in both lists, so
-    # |∩| ≤ min(a − pa, b − pb) + 1 (pos0 is 0-based ⇒ a − pa elements
-    # from it onward... with pa 0-based the suffix from the collision
-    # inclusive has a − pa elements). J > 1/2 needs
-    # |∩| ≥ ⌊(a+b)/3⌋ + 1, so keep collisions with
-    # least(a − pa, b − pb) ≥ ⌊(a+b)/3⌋ + 1; a qualifying pair's first
-    # collision always survives, so distinct pairs are preserved.
-    cand = (
-        a.join(b, "shingle")
-        .filter(
-            (F.col("a_id") < F.col("b_id"))
-            & (F.col("a_sh") < 2 * F.col("b_sh"))
-            & (F.col("b_sh") < 2 * F.col("a_sh"))
-            & (
-                F.least(
-                    F.col("a_sh") - F.col("pa"), F.col("b_sh") - F.col("pb")
-                )
-                >= F.floor((F.col("a_sh") + F.col("b_sh")) / 3) + 1
-            )
-        )
-        .select("a_id", "b_id", "a_sh", "b_sh")
-        .distinct()
-    )
-    ver = (
-        cand.join(
-            sized.select(F.col("doc_id").alias("a_id"), F.col("arr").alias("arr_a")),
-            "a_id",
-        )
-        .join(
-            sized.select(F.col("doc_id").alias("b_id"), F.col("arr").alias("arr_b")),
-            "b_id",
-        )
-        .select(
-            "a_id",
-            "b_id",
-            "a_sh",
-            "b_sh",
-            F.size(F.array_intersect("arr_a", "arr_b")).alias("n_common"),
-        )
-    )
-    union = F.col("a_sh") + F.col("b_sh") - F.col("n_common")
+    union = F.col("a_n") + F.col("b_n") - F.col("n_common")
     return (
         ver.filter(F.col("n_common") * 2 > union)
         .select(

@@ -118,23 +118,6 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-# Legacy events fixture layout: ts stored as parquet TIMESTAMP(NANOS),
-# read as physical INT64 under the nanosAsLong conf (the vectorized reader
-# rejects nanos natively). Newer fixture generations store plain micros
-# TIMESTAMP (footer reads TimestampNTZType) — load_table branches on the
-# footer so both layouts load identically as timestamp_ntz.
-RAW_EVENTS_SCHEMA = _schema(
-    _S("event_id", T.LongType()),
-    _S("ts", T.LongType()),
-    _S("user_id", T.LongType()),
-    _S("event_type", T.StringType()),
-    _S("value", T.DoubleType()),
-    _S("props", T.StringType()),
-)
-
-NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
-
-
 def _assert_schema(name: str, df: DataFrame, expected_schema: T.StructType) -> None:
     # ORDERED tuples, not sets (round-13 review): the module's contract
     # is "footer schema equals the registry entry", and a set compare
@@ -167,13 +150,6 @@ def load_table(
     memo is lazy and survives the between-key release."""
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    if name == "events" and spark.conf.get(NANOS_CONF, "false") != "true":
-        # The nanos conf is also declared in session.get_spark; it must
-        # additionally be ensured here, memo hit or not, because the
-        # driver calls queries() with its OWN session, which may never
-        # have gone through our factory or may reset the conf between
-        # calls. The set is idempotent and harmless for layout (a) below.
-        spark.conf.set(NANOS_CONF, "true")
     return memo(
         "table",
         (sf_dir, name),
@@ -186,31 +162,9 @@ def _resolve_table(
     spark: SparkSession, sf_dir: str, name: str, assert_schema: bool
 ) -> DataFrame:
     df = spark.read.parquet(table_path(sf_dir, name))
-    if name != "events" or isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
-        if assert_schema:
-            _assert_schema(name, df, SCHEMAS[name])
-        return df
-    # The events fixture has shipped in two layouts across driver
-    # generations; the parquet footer is authoritative and we branch on
-    # it:
-    #   (a) micros TIMESTAMP — footer reads ts: TimestampNTZType;
-    #       already the registry type, returned above as-is.
-    #   (b) TIMESTAMP(NANOS) — Spark's vectorized reader rejects it
-    #       natively; read the physical INT64 (nanosAsLong is a runtime
-    #       SQL conf) and truncate to microseconds exactly as the DuckDB
-    #       oracle does (ns div 1000), yielding timestamp_ntz.
-    #       timestampadd on an NTZ literal stays NTZ and never consults
-    #       the session timezone, so this is correct under any caller
-    #       session.
     if assert_schema:
-        _assert_schema(name, df, RAW_EVENTS_SCHEMA)
-    return df.withColumn(
-        "ts",
-        F.expr(
-            "timestampadd(MICROSECOND, ts div 1000, "
-            "TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-        ),
-    )
+        _assert_schema(name, df, SCHEMAS[name])
+    return df
 
 
 def widen_if_narrow(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -231,31 +185,6 @@ def widen_if_narrow(spark: SparkSession, df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df
-
-
-def _events_footer_is_ntz(spark: SparkSession, sf_dir: str) -> bool:
-    """Probe the events parquet footer (metadata-only batch read) and
-    report which fixture layout is on disk: True for micros TIMESTAMP
-    (TimestampNTZType footer), False for legacy TIMESTAMP(NANOS)
-    (physical INT64 under nanosAsLong). Streaming reads require a
-    user-declared schema, so every streaming caller MUST branch on this
-    — a nanos fixture silently read under the ntz schema (or vice versa)
-    yields 1000x-collapsed timestamps, which no row-count check catches.
-    The layout is immutable within a session, so the probe is a lazy
-    memo per sf_dir; the NANOS conf re-set stays unconditional because
-    the driver may hand us a session whose conf was never set.
-    """
-    if spark.conf.get(NANOS_CONF, "false") != "true":
-        spark.conf.set(NANOS_CONF, "true")
-    return memo(
-        "events_footer_ntz",
-        sf_dir,
-        lambda: isinstance(
-            spark.read.parquet(table_path(sf_dir, "events")).schema["ts"].dataType,
-            T.TimestampNTZType,
-        ),
-        lazy=True,
-    )
 
 
 def parquet_first_array_len(
@@ -289,11 +218,13 @@ def parquet_first_array_len(
         return None
 
 
-def _events_stream_raw(spark: SparkSession, sf_dir: str, is_ntz: bool) -> DataFrame:
+def _events_stream_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The file-stream source wants a directory; the fixture table is a
-    # single file, so stream the sf dir with a glob pinned to it.
+    # single file, so stream the sf dir with a glob pinned to it.  The
+    # declared schema is the registry's, so a file whose ts is not
+    # TIMESTAMP(MICROS) fails the stream instead of being reinterpreted.
     return (
-        spark.readStream.schema(SCHEMAS["events"] if is_ntz else RAW_EVENTS_SCHEMA)
+        spark.readStream.schema(SCHEMAS["events"])
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
@@ -301,9 +232,6 @@ def _events_stream_raw(spark: SparkSession, sf_dir: str, is_ntz: bool) -> DataFr
 
 # Micros-since-epoch from an NTZ ts — tz-free by construction.
 _NTZ_TS_US = "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"
-# Integer ns→µs division on the nanos layout: float '/ 1000' loses ±1 µs
-# (nanos epochs ~1.7e18 exceed double's 53-bit mantissa).
-_NANOS_TS_US = "ts div 1000"
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -311,16 +239,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout but with ``ts`` as TIMESTAMP (Spark watermarks reject
     TIMESTAMP_NTZ: EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE) whose EPOCH
     MICROS equal the NTZ wall-clock micros (``timestamp_micros`` over
-    the footer-branched micros expression, NOT a session-tz cast).
+    the micros expression, NOT a session-tz cast).
     Pinning the epoch this way makes every downstream window boundary,
     watermark cutoff, and ``ntz_of_window_bound`` restore tz-independent
     — the streaming demo keys hash-match their batch/NTZ SQL oracles
-    under ANY driver session timezone. Applies the same footer-branched
-    conversion chain as ``load_table``."""
-    is_ntz = _events_footer_is_ntz(spark, sf_dir)
-    raw = _events_stream_raw(spark, sf_dir, is_ntz)
-    expr = _NTZ_TS_US if is_ntz else _NANOS_TS_US
-    return raw.withColumn("ts", F.timestamp_micros(F.expr(expr)))
+    under ANY driver session timezone."""
+    raw = _events_stream_raw(spark, sf_dir)
+    return raw.withColumn("ts", F.timestamp_micros(F.expr(_NTZ_TS_US)))
 
 
 def ntz_of_window_bound(col: str):
@@ -334,11 +259,10 @@ def ntz_of_window_bound(col: str):
     )
 
 
-def _with_ts_us(df: DataFrame, is_ntz: bool) -> DataFrame:
-    expr = _NTZ_TS_US if is_ntz else _NANOS_TS_US
+def _with_ts_us(df: DataFrame) -> DataFrame:
     return df.select(
         "event_id",
-        F.expr(expr).alias("ts_us"),
+        F.expr(_NTZ_TS_US).alias("ts_us"),
         "user_id",
         "event_type",
         "value",
@@ -348,17 +272,14 @@ def _with_ts_us(df: DataFrame, is_ntz: bool) -> DataFrame:
 
 def read_events_micros(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch events frame with ``ts`` replaced by ``ts_us`` — micros
-    since epoch as a long, tz-free under both fixture layouts. The batch
-    twin of ``read_events_stream_micros`` for pinning stateful-operator
+    since epoch as a long, tz-free. The batch twin of
+    ``read_events_stream_micros`` for pinning stateful-operator
     semantics."""
-    is_ntz = _events_footer_is_ntz(spark, sf_dir)
-    df = spark.read.parquet(table_path(sf_dir, "events"))
-    return _with_ts_us(df, is_ntz)
+    return _with_ts_us(load_table(spark, sf_dir, "events"))
 
 
 def read_events_stream_micros(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming events frame with ``ts`` replaced by ``ts_us`` (micros
     since epoch, long) — for stateful operators keyed on gaps/absolute
     micros where a tz cast would shift values."""
-    is_ntz = _events_footer_is_ntz(spark, sf_dir)
-    return _with_ts_us(_events_stream_raw(spark, sf_dir, is_ntz), is_ntz)
+    return _with_ts_us(_events_stream_raw(spark, sf_dir))

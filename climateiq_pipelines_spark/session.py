@@ -74,14 +74,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # The fixtures store events.ts as TIMESTAMP(MICROS); this conf
-        # serves the legacy TIMESTAMP(NANOS) layout registry.load_table
-        # still reads (tests/test_events_layouts.py).  Declared here so
-        # sessions from this factory never flip confs mid-flight
-        # (registry.py also ensures it for driver-owned sessions).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # No \r progress bars in captured logs: harnesses time and
+        # report per key themselves.
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
     )
     spark = builder.getOrCreate()

@@ -2,7 +2,7 @@
 
 Writes all ten tables to a temp dir with the EXACT physical parquet
 types of the driver fixtures (int32 dims, float32 embedding lists,
-TIMESTAMP(NANOS) events — via pyarrow, since Spark can't write nanos),
+TIMESTAMP(MICROS) events — via pyarrow),
 but with values the friendly fixtures never contain:
 
 - events: inactivity gaps exactly at the 30-min session boundary and
@@ -32,9 +32,9 @@ import pyarrow.parquet as pq
 _T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
 
-def _ts_ns(minutes: float = 0.0, micros: int = 0) -> int:
+def _ev_us(minutes: float = 0.0, micros: int = 0) -> int:
     t = _T0 + dt.timedelta(minutes=minutes, microseconds=micros)
-    return int(t.timestamp() * 1_000_000) * 1000
+    return int(t.timestamp() * 1_000_000)
 
 
 def _ts_us(day: int, hour: int = 0) -> dt.datetime:
@@ -169,21 +169,21 @@ def build_edge_fixture(out_dir: str) -> str:
     #   drop; duplicate (user, type) pairs where the FIRST ARRIVAL has
     #   the LATER timestamp (dedup must keep arrival order, not ts).
     ev_ts = [
-        _ts_ns(0),                # id 0 u0 click
-        _ts_ns(30),               # id 1 u0 click: gap == 30:00 → same session
-        _ts_ns(60, 1),            # id 2 u0 click: gap 30:00.000001 → new
-        _ts_ns(90),               # id 3 u1 view (watermark anchor)
-        _ts_ns(25),               # id 4 u1 view: LATE (> 1h before max) → drop
-        _ts_ns(91),               # id 5 u1 purchase
-        _ts_ns(95),               # id 6 u1 view duplicate (first arrival later ts than id 4!)
-        _ts_ns(100),              # id 7 u0 purchase
+        _ev_us(0),                # id 0 u0 click
+        _ev_us(30),               # id 1 u0 click: gap == 30:00 → same session
+        _ev_us(60, 1),            # id 2 u0 click: gap 30:00.000001 → new
+        _ev_us(90),               # id 3 u1 view (watermark anchor)
+        _ev_us(25),               # id 4 u1 view: LATE (> 1h before max) → drop
+        _ev_us(91),               # id 5 u1 purchase
+        _ev_us(95),               # id 6 u1 view duplicate (first arrival later ts than id 4!)
+        _ev_us(100),              # id 7 u0 purchase
     ]
     write(
         "events",
         pa.table(
             {
                 "event_id": pa.array(list(range(8)), i64),
-                "ts": pa.array(ev_ts, pa.timestamp("ns")),
+                "ts": pa.array(ev_ts, pa.timestamp("us")),
                 "user_id": pa.array([0, 0, 0, 1, 1, 1, 1, 0], i64),
                 "event_type": pa.array(
                     [

@@ -1,7 +1,8 @@
 """llm_cosine_topk's size dispatch: exact block-NL under
 BLOCKNL_MAX_VECTORS, bucketed pure-DataFrame ANN above — the round-2
 verdict's weak-lite item (the key used to raise above the guard and
-collected the corpus unbounded).
+collected the corpus unbounded). llm_minhash_neardup has no such
+dispatch: its one plan is the exact prefix join at every size.
 """
 
 from __future__ import annotations
@@ -57,34 +58,13 @@ def test_large_corpus_dispatches_to_bucketed(spark, monkeypatch):
         assert len(g) <= 5
 
 
-def test_minhash_neardup_small_corpus_is_exact_allpairs(spark):
-    """Under ALLPAIRS_MAX_DOCS the registered key keeps the exact
-    posting-list self-join — no MinHash machinery (xxhash64) in the
-    plan, which is what the oracle checks row-exactly."""
-    df = QUERIES["llm_minhash_neardup"](spark, SF_SMALL)
-    assert "xxhash64" not in _plan(df)
-
-
-def test_minhash_neardup_large_corpus_dispatches_to_lsh(spark, monkeypatch):
-    """VERDICT r6 #6: above ALLPAIRS_MAX_DOCS the key must return the
-    banded LSH plan (xxhash64 signature aggregate present), sharing the
-    oracle, so the quadratic all-pairs form cannot run at scale by
-    accident. The dispatch is answer-preserving: same rows as the exact
-    form on the fixture (banding is oracle-proven lossless)."""
-    exact = (
-        QUERIES["llm_minhash_neardup"](spark, SF_SMALL)
-        .toPandas()
-        .sort_values(["a_id", "b_id"])
-        .reset_index(drop=True)
-    )
-    monkeypatch.setattr(llm, "ALLPAIRS_MAX_DOCS", 10)
-    df = QUERIES["llm_minhash_neardup"](spark, SF_SMALL)
-    plan = _plan(df)
-    assert "xxhash64" in plan, plan
-    dispatched = (
-        df.toPandas().sort_values(["a_id", "b_id"]).reset_index(drop=True)
-    )
-    assert dispatched.equals(exact)
+def test_minhash_neardup_is_exact_prefix_join(spark):
+    """The registered key is the exact prefix join at every corpus
+    size: no MinHash machinery (xxhash64) in the plan, and every
+    candidate verified by array_intersect."""
+    plan = _plan(QUERIES["llm_minhash_neardup"](spark, SF_SMALL))
+    assert "xxhash64" not in plan
+    assert "array_intersect" in plan
 
 
 def test_bucketed_neighbors_share_bucket_semantics(spark, monkeypatch):

@@ -1,117 +1,94 @@
-"""The events fixture has shipped in two parquet layouts across driver
-generations (r4 VERDICT: the drift broke 24 keys and silently collapsed
-the streaming demos' timestamps 1000x). registry.load_table and the
-streaming helpers branch on the parquet FOOTER; this test pins that both
-layouts load to identical rows, so a future regeneration in either
-direction can never break or silently skew a query again.
+"""The events fixture stores ``ts`` as parquet TIMESTAMP(MICROS), which
+Spark reads as timestamp_ntz.  A file in the older TIMESTAMP(NANOS)
+layout is outside that domain: every events reader must raise on it
+rather than reinterpret the column (a nanos value read as micros is
+1000x off, and no row count notices).
+
+Each test writes the same events in both layouts and pins one reader:
+the micros file reads back exactly, the nanos file raises.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException, StreamingQueryException
 
 from climateiq_pipelines_spark.registry import (
     SCHEMAS,
     load_table,
     read_events_micros,
+    read_events_stream,
 )
+
+N = 20
+TS_US = [1_700_000_000_000_000 + i * 60_000_000 for i in range(N)]
 
 
 @pytest.fixture(scope="module")
 def dual_layout_dirs(tmp_path_factory):
-    """Two sf dirs holding the SAME logical events in the two historical
-    physical layouts: micros TIMESTAMP (current fixture) and
-    TIMESTAMP(NANOS) (pre-r4 fixture, physical INT64 under nanosAsLong).
-    """
+    """Two sf dirs holding the same events: ``ts`` as TIMESTAMP(MICROS)
+    (the fixture layout) and as TIMESTAMP(NANOS) (the retired one)."""
     base = tmp_path_factory.mktemp("events_layouts")
-    n = 200
-    rng = np.random.RandomState(7)
-    ts_us = (
-        np.int64(1_700_000_000_000_000)
-        + rng.randint(0, 30 * 86_400_000_000, size=n).astype(np.int64)
-    )
-    pdf = pd.DataFrame(
-        {
-            "event_id": np.arange(n, dtype=np.int64),
-            "ts_us": ts_us,
-            "user_id": rng.randint(0, 20, size=n).astype(np.int64),
-            "event_type": rng.choice(["view", "click", "purchase"], size=n),
-            "value": rng.rand(n) * 100.0,
-            "props": ["{}"] * n,
-        }
-    )
-    for name, unit in (("us_dir", "us"), ("ns_dir", "ns")):
-        d = base / name
+    dirs = []
+    for unit, scale in (("us", 1), ("ns", 1000)):
+        d = base / f"{unit}_dir"
         d.mkdir()
         table = pa.table(
             {
-                "event_id": pa.array(pdf["event_id"]),
-                "ts": pa.array(pdf["ts_us"] * (1000 if unit == "ns" else 1)).cast(
-                    pa.timestamp(unit)
-                ),
-                "user_id": pa.array(pdf["user_id"]),
-                "event_type": pa.array(pdf["event_type"]),
-                "value": pa.array(pdf["value"]),
-                "props": pa.array(pdf["props"]),
+                "event_id": pa.array(range(N), pa.int64()),
+                "ts": pa.array([t * scale for t in TS_US], pa.timestamp(unit)),
+                "user_id": pa.array([i % 3 for i in range(N)], pa.int64()),
+                "event_type": pa.array(["view"] * N),
+                "value": pa.array([1.0] * N),
+                "props": pa.array(["{}"] * N),
             }
         )
         pq.write_table(table, str(d / "events.parquet"))
-    return str(base / "us_dir"), str(base / "ns_dir")
-
-
-def canon(pdf):
-    return sorted(map(tuple, pdf.sort_index(axis=1).itertuples(index=False)))
+        dirs.append(str(d))
+    return tuple(dirs)
 
 
 def test_load_table_identical_across_layouts(spark, dual_layout_dirs):
     us_dir, ns_dir = dual_layout_dirs
     a = load_table(spark, us_dir, "events")
-    b = load_table(spark, ns_dir, "events")
-    # both normalize to the registry schema (ts: timestamp_ntz)
-    assert a.schema == b.schema
-    assert [
-        (f.name, f.dataType) for f in a.schema.fields
-    ] == [(f.name, f.dataType) for f in SCHEMAS["events"].fields]
-    assert canon(a.toPandas()) == canon(b.toPandas())
+    assert [(f.name, f.dataType) for f in a.schema.fields] == [
+        (f.name, f.dataType) for f in SCHEMAS["events"].fields
+    ]
+    assert a.count() == N
+    with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+        load_table(spark, ns_dir, "events")
 
 
 def test_read_events_micros_identical_across_layouts(spark, dual_layout_dirs):
     us_dir, ns_dir = dual_layout_dirs
     a = read_events_micros(spark, us_dir).toPandas()
-    b = read_events_micros(spark, ns_dir).toPandas()
-    assert canon(a) == canon(b)
-    # micros are absolute epoch longs — spot-check magnitude (a nanos
-    # misread would be 1000x off, the r4 failure mode)
-    assert a["ts_us"].min() >= 1_700_000_000_000_000
-    assert a["ts_us"].max() < 1_800_000_000_000_000
+    assert sorted(a["ts_us"]) == TS_US
+    with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+        read_events_micros(spark, ns_dir)
+
+
+def _drain_stream(spark, sf_dir, name):
+    q = (
+        read_events_stream(spark, sf_dir)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(60)
+    finally:
+        q.stop()
+    return spark.sql(f"SELECT * FROM {name}")
 
 
 def test_stream_read_identical_across_layouts(spark, dual_layout_dirs):
-    from climateiq_pipelines_spark.registry import read_events_stream
-
     us_dir, ns_dir = dual_layout_dirs
-    outs = []
-    for d in (us_dir, ns_dir):
-        q = (
-            read_events_stream(spark, d)
-            .writeStream.format("memory")
-            .queryName(f"layout_check_{d.split('/')[-1]}")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(60)
-        finally:
-            q.stop()
-        outs.append(
-            spark.sql(
-                f"SELECT * FROM layout_check_{d.split('/')[-1]}"
-            ).toPandas()
-        )
-    assert len(outs[0]) == len(outs[1]) > 0
-    assert canon(outs[0]) == canon(outs[1])
+    out = _drain_stream(spark, us_dir, "events_micros_layout")
+    us = out.selectExpr("unix_micros(ts) AS us").toPandas()["us"]
+    assert sorted(us) == TS_US
+    with pytest.raises(StreamingQueryException):
+        _drain_stream(spark, ns_dir, "events_nanos_layout")

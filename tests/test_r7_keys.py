@@ -8,10 +8,12 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
+from climateiq_pipelines_spark.functions.textgrams import word_shingles
 from climateiq_pipelines_spark.plans import QUERIES
-from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.registry import load_table, widen_if_narrow
 
 from tests.conftest import SF_SMALL
 
@@ -169,47 +171,55 @@ def test_try_arithmetic_rederive(spark):
     # every failure mode must actually occur on the fixture
     assert min(div, mul, add, sub) > 0
 
-def test_ngram_jaccard_ppjoin_equivalence(spark):
-    """r17 optimization pin: the registered llm_ngram_jaccard prunes
-    its posting-list self-join with a PPJoin prefix + length filter
-    and verifies candidates via array_intersect; this re-derives the
-    pre-r17 UNPRUNED form (full self-join on the hashed shingle +
-    co-occurrence count) and requires exact multiset equality — the
-    losslessness proof (J > 1/2 pairs always collide inside both
-    (df, shingle)-order prefixes) made executable."""
-    from climateiq_pipelines_spark.functions.textgrams import word_shingles
-    from climateiq_pipelines_spark.registry import widen_if_narrow
 
+def _ngram_elements(docs):
+    return word_shingles(docs, 3).select(
+        "doc_id", F.xxhash64("s").alias("el")
+    )
+
+
+def _token_elements(docs):
+    return docs.select("doc_id", F.explode(F.split("text", " ")).alias("el"))
+
+
+# key -> (its element relation, its threshold over the exact counts)
+_UNPRUNED = {
+    "llm_ngram_jaccard": (_ngram_elements, "n_common * 2 > a_n + b_n - n_common"),
+    "llm_minhash_neardup": (
+        _token_elements,
+        "n_common / (a_n + b_n - n_common) >= 0.999",
+    ),
+}
+
+
+@pytest.mark.parametrize("key", sorted(_UNPRUNED))
+def test_ppjoin_prefix_equivalence(spark, key):
+    """Both set-similarity keys join only PPJoin prefixes and verify
+    candidates with array_intersect; this re-derives each key's
+    UNPRUNED form (full posting-list self-join on the element plus a
+    co-occurrence count) and requires exact multiset equality — the
+    losslessness proofs (every qualifying pair collides inside both
+    (df, element)-order prefixes) made executable."""
     docs = widen_if_narrow(
         spark,
         load_table(spark, SF_SMALL, "documents").select("doc_id", "text"),
     )
-    sh = (
-        word_shingles(docs, 3)
-        .select("doc_id", F.xxhash64("s").alias("shingle"))
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sized = sh.join(sizes, "doc_id")
-    a = sized.select(
-        F.col("doc_id").alias("a_id"), "shingle", F.col("n_sh").alias("a_sh")
-    )
-    b = sized.select(
-        F.col("doc_id").alias("b_id"), "shingle", F.col("n_sh").alias("b_sh")
-    )
+    elements, keep = _UNPRUNED[key]
+    el = elements(docs).distinct()
+    sizes = el.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sized = el.join(sizes, "doc_id")
+    a = sized.selectExpr("doc_id AS a_id", "el", "n AS a_n")
+    b = sized.selectExpr("doc_id AS b_id", "el", "n AS b_n")
     ov = (
-        a.join(b, "shingle")
+        a.join(b, "el")
         .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id", "a_sh", "b_sh")
+        .groupBy("a_id", "b_id", "a_n", "b_n")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    union = F.col("a_sh") + F.col("b_sh") - F.col("n_common")
-    old = ov.filter(F.col("n_common") * 2 > union).select(
-        "a_id", "b_id", F.round(F.col("n_common") / union, 6).alias("jaccard")
+    old = ov.where(keep).selectExpr(
+        "a_id", "b_id", "round(n_common / (a_n + b_n - n_common), 6) AS jaccard"
     )
-    new = QUERIES["llm_ngram_jaccard"](spark, SF_SMALL)
+    new = QUERIES[key](spark, SF_SMALL)
     assert new.exceptAll(old).count() == 0
     assert old.exceptAll(new).count() == 0
-    # and the prefix stage really prunes: candidate mass <= full join
-    # (sanity that the operator kept a result at all)
     assert new.count() > 0

@@ -18,14 +18,12 @@ exactly the slice the external driver certifies (plans.ROTATION_WINDOW)
 — for fast validation right after a rotation edit, before the full
 232-key run.
 
---fast is for large scale factors.  llm_minhash_neardup dispatches to
-its banded LSH twin (llm.ALLPAIRS_MAX_DOCS = 0): the two keys share one
-oracle and banding is oracle-proven lossless, so this changes the
-executed plan, never the checked answer.  The DIGEST_FAST_KEYS compare
-a 2-value digest computed inside each engine
+--fast is for large scale factors: the DIGEST_FAST_KEYS compare a
+2-value digest computed inside each engine
 (parity_digest.check_key_digest) instead of the strict per-cell
 comparator, whose Python canonicalization dominates their wall at sf0.1.
-Both substitutions are named on the key's progress line.
+The substitution is named on the key's progress line.  Every key runs
+its registered plan.
 
 Environment axes, each recorded in the evidence header: DRIVER_SIM_TZ
 (session timezone), DRIVER_SIM_MASTER (local parallelism level) and
@@ -165,8 +163,6 @@ def sweep(spark, keys: list[str], sf_dir: str, con,
                 verdict = f"rows-only ({res.spark_rows} rows)"
             else:
                 verdict = "OK" + (" (digest twin)" if digest else "")
-                if fast and key == "llm_minhash_neardup":
-                    verdict += " (LSH twin plan)"
         except Exception as exc:  # noqa: BLE001 — report, don't abort the sweep
             verdict = f"EXC {type(exc).__name__}"
             bad.append(f"[FAIL] {key}: raised {exc}")
@@ -202,10 +198,6 @@ def main() -> int:
     import __spark_entry__ as E
     from climateiq_pipelines_spark.parity import duck_connect
 
-    if fast:
-        from climateiq_pipelines_spark.operators import llm
-
-        llm.ALLPAIRS_MAX_DOCS = 0  # force the shared-oracle LSH plan
     assert len(E.entry(spark).collect()) > 0, "t1 smoke failed"
     con = duck_connect(sf_dir)
     keys = list(E.queries())

@@ -28,7 +28,7 @@ SHOWCASE = [
     ("sort_multikey_scalable", "rank Window partitioned by range-partition id — no global-window funnel; pid pinned by one localCheckpoint evaluation (r7)"),
     ("sort_multikey_nulls", "r7 promotion: the registered base key now RUNS the two-phase rank (same plan as the _scalable sibling)"),
     ("stream_watermark_late", "r7 promotion: bucket-partitioned running max + broadcast bucket prefix-max — no sampled range exchange, no global data window"),
-    ("llm_minhash_neardup", "r7 size guard: bounded take-probe dispatches to the banded LSH plan above ALLPAIRS_MAX_DOCS — below it, the checked exact posting-list join"),
+    ("llm_minhash_neardup", "one-token PPJoin prefix self-join on the rarest token (df, token) with the length filter, distinct candidates, array_intersect verify — no probe job, no size dispatch"),
     ("llm_minhash_lsh", "one-pass 16-min signature aggregate, band-key self-join, no cartesian"),
     ("llm_simhash_neardup", "band equi-join candidates — the all-pairs oracle twin never executes"),
     ("llm_ivf_topk", "cogrouped Arrow re-rank (FlatMapCoGroupsInPandas) after cell-key joins"),
