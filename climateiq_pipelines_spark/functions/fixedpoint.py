@@ -257,87 +257,128 @@ _CENTROID_SQL = """
 
 
 # ---------------------------------------------------------------- shared
-# iterative-oracle builders (round-13 review batch D): the unrolled
-# Lloyd-iteration CTE lived byte-for-byte in ml_iter._iter_sql AND
-# iterative_ext._kmeans_iter_sql, and the pagerank oracle builder was
-# duplicated between graph_ext and iterative_ext — the hand-inlined-
-# copy drift class this module exists to prevent, applied to the two
-# iterative fixpoint contracts.  They live HERE (registers nothing)
-# for the same decoration-time-import reason as the dot helpers.
+# iterative oracles: ONE recursive DuckDB text per iteration family,
+# shared by the fixed-round key and its converged twin.  Round 0 is the
+# seed; the recursive step computes round k+1 from round k (the working
+# table, read a second time for the previous state) and flags ``done``
+# with the caller's stopping rule -- SQL over the whole round, written
+# with window aggregates; the step runs only while NOT done AND
+# rnd < cap, and the answer is the last round.  Every round is exact
+# integer state on both engines, so the rule sees the same numbers in
+# both and stops at the same round at every scale.  The static inputs
+# the step reads are MATERIALIZED, or DuckDB re-evaluates them every
+# round.  They live HERE (registers nothing) for the same
+# decoration-time-import reason as the dot helpers.
 
 PR_R0 = 1_000_000  # pagerank initial rank, micro-units
 PR_BASE = 150_000  # (1 - d) in micros, d = 0.85
 
 
-def lloyd_iter_sql(i: int) -> str:
-    """One unrolled Lloyd iteration: exact-fixed-point centroids from
-    assign{i-1}, integer distances, deterministic argmin -> assign{i}."""
-    return f"""
-    centroids{i} AS (
-      SELECT a.cluster AS c_id, e.pos,
-             CAST(SUM(CAST(floor(CAST(e.x AS DOUBLE) * 1000000000) AS BIGINT))
-                  AS DOUBLE) / 1000000000.0 / COUNT(*) AS c
-      FROM exploded e JOIN assign{i - 1} a ON a.vec_id = e.vec_id
-      GROUP BY a.cluster, e.pos
-    ),
-    dists{i} AS (
-      SELECT e.vec_id, c.c_id,
-             SUM(CAST(floor((CAST(e.x AS DOUBLE) - c.c)
-                            * (CAST(e.x AS DOUBLE) - c.c)
-                            * 1000000000000) AS BIGINT)) AS dist_fp
-      FROM exploded e JOIN centroids{i} c ON e.pos = c.pos
-      GROUP BY e.vec_id, c.c_id
-    ),
-    assign{i} AS (
-      SELECT vec_id, c_id AS cluster, dist_fp
-      FROM (
-        SELECT *, row_number() OVER (PARTITION BY vec_id
-                                     ORDER BY dist_fp ASC, c_id) AS rn
-        FROM dists{i}
-      ) WHERE rn = 1
+def _last_round(cte: str) -> str:
+    """The rows of ``cte``'s last round."""
+    return (
+        f"(SELECT * FROM (SELECT *, max(rnd) OVER () AS last_rnd FROM {cte})"
+        f" WHERE rnd = last_rnd)"
     )
-    """
 
 
-def pagerank_oracle_sql(n_rounds: int, with_rounds_col: bool = False) -> str:
-    """The bipartite-purchase-graph pagerank oracle, ``n_rounds``
-    unrolled integer power iterations; ``with_rounds_col`` appends the
-    pinned n_rounds column the converged key checks."""
-    stages = []
-    prev = "r0"
-    for i in range(1, n_rounds + 1):
-        stages.append(
-            f"""r{i} AS (
-      SELECT s.v AS node, {PR_BASE} + (SUM(p.r // d.deg) * 85) // 100 AS r
-      FROM sym s
-      JOIN {prev} p ON p.node = s.u
-      JOIN deg d ON d.node = s.u
-      GROUP BY s.v
-    )"""
-        )
-        prev = f"r{i}"
-    joined_stages = ",\n    ".join(stages)
+def lloyd_oracle_sql(stop: str, cap: int, with_rounds_col: bool = False) -> str:
+    """Lloyd k-means from the label init -- exact-fixed-point centroids,
+    integer distances, deterministic argmin -- until ``stop`` (SQL over
+    a round's rows: vec_id, cluster, prev_cluster, dist_fp, rnd) holds
+    or ``cap`` rounds ran; per-cluster size and inertia of the last
+    round, plus its round count as n_rounds if ``with_rounds_col``."""
     rounds_col = (
-        f",\n           CAST({n_rounds} AS INTEGER) AS n_rounds"
+        ",\n           CAST(MAX(rnd) AS INTEGER) AS n_rounds"
         if with_rounds_col
         else ""
     )
     return f"""
-    WITH edges AS (
+    WITH RECURSIVE exploded AS MATERIALIZED (
+      SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
+             unnest(embedding) AS x
+      FROM embeddings
+    ),
+    km(vec_id, cluster, dist_fp, rnd, done) AS (
+      SELECT vec_id, label, CAST(0 AS BIGINT), 0, false FROM embeddings
+      UNION ALL
+      SELECT vec_id, cluster, dist_fp, rnd, {stop} FROM (
+        SELECT a.vec_id, a.c_id AS cluster, a.dist_fp,
+               k.cluster AS prev_cluster, k.rnd + 1 AS rnd
+        FROM (
+          SELECT *, row_number() OVER (PARTITION BY vec_id
+                                       ORDER BY dist_fp ASC, c_id) AS rn
+          FROM (
+            SELECT e.vec_id, c.c_id,
+                   SUM(CAST(floor((CAST(e.x AS DOUBLE) - c.c)
+                                  * (CAST(e.x AS DOUBLE) - c.c)
+                                  * 1000000000000) AS BIGINT)) AS dist_fp
+            FROM exploded e JOIN (
+              SELECT k.cluster AS c_id, e.pos,
+                     CAST(SUM(CAST(floor(CAST(e.x AS DOUBLE) * 1000000000)
+                                   AS BIGINT)) AS DOUBLE)
+                       / 1000000000.0 / COUNT(*) AS c
+              FROM exploded e JOIN km k ON k.vec_id = e.vec_id
+              WHERE NOT k.done AND k.rnd < {cap}
+              GROUP BY k.cluster, e.pos
+            ) c ON e.pos = c.pos
+            GROUP BY e.vec_id, c.c_id
+          )
+        ) a JOIN km k ON k.vec_id = a.vec_id
+        WHERE a.rn = 1
+      )
+    )
+    SELECT cluster AS cluster_id,
+           COUNT(*) AS n_vecs,
+           round(CAST(SUM(dist_fp) AS DOUBLE) / 1000000000000.0, 6)
+             AS inertia{rounds_col}
+    FROM {_last_round("km")}
+    GROUP BY cluster
+    """
+
+
+def pagerank_oracle_sql(stop: str, cap: int, with_rounds_col: bool = False) -> str:
+    """The bipartite-purchase-graph pagerank oracle: integer power
+    iterations until ``stop`` (SQL over a round's rows: node, r, prev_r,
+    rnd) holds or ``cap`` rounds ran; the last round's ranks, plus its
+    round count as n_rounds if ``with_rounds_col``."""
+    rounds_col = (
+        ",\n           CAST(f.rnd AS INTEGER) AS n_rounds"
+        if with_rounds_col
+        else ""
+    )
+    return f"""
+    WITH RECURSIVE edges AS (
       SELECT DISTINCT o_custkey * 2 AS u, l_suppkey * 2 + 1 AS v
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     ),
-    sym AS (
+    sym AS MATERIALIZED (
       SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
     ),
-    deg AS (SELECT u AS node, COUNT(*) AS deg FROM sym GROUP BY u),
-    r0 AS (SELECT node, CAST({PR_R0} AS BIGINT) AS r FROM deg),
-    {joined_stages}
+    deg AS MATERIALIZED (
+      SELECT u AS node, COUNT(*) AS deg FROM sym GROUP BY u
+    ),
+    pr(node, r, rnd, done) AS (
+      SELECT node, CAST({PR_R0} AS BIGINT), 0, false FROM deg
+      UNION ALL
+      SELECT node, r, rnd, {stop} FROM (
+        SELECT nx.node, nx.r, p.r AS prev_r, p.rnd + 1 AS rnd
+        FROM (
+          SELECT s.v AS node,
+                 {PR_BASE} + (SUM(p.r // d.deg) * 85) // 100 AS r
+          FROM sym s
+          JOIN pr p ON p.node = s.u
+          JOIN deg d ON d.node = s.u
+          WHERE NOT p.done AND p.rnd < {cap}
+          GROUP BY s.v
+        ) nx JOIN pr p ON p.node = nx.node
+      )
+    )
     SELECT f.node AS node_id,
            f.node % 2 = 1 AS is_supplier,
            CAST(d.deg AS BIGINT) AS degree,
            CAST(f.r AS BIGINT) AS rank_micro{rounds_col}
-    FROM {prev} f JOIN deg d ON d.node = f.node
+    FROM {_last_round("pr")} f JOIN deg d ON d.node = f.node
     """
 
 

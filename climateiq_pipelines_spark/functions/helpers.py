@@ -31,8 +31,9 @@ invariants below make every sum exact and engine-independent.
    expression tree as the single-level form, so the oracles stay
    single-level (DuckDB sums BIGINT into HUGEINT and has no ceiling).
    Integer moment sums (``isum``) take the same route without the
-   scale; agg_stats_moments splits its squared price term hi/lo at
-   2^32 so each long partial stays inside int64.  ``agg_rollup`` is the one site that hand-builds its partial,
+   scale; agg_stats_moments splits its two product terms (yc², xc·yc)
+   hi/lo at 2^32 so each long partial stays inside int64.
+   ``agg_rollup`` is the one site that hand-builds its partial,
    because its merge is a ROLLUP; it renders both levels with
    :func:`two_level_aggs`.
 

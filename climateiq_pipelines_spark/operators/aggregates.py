@@ -238,21 +238,17 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # products stay in long arithmetic.
     #
     # Two-level integer sums ("isum", helpers module docstring) over
-    # the table-sized flag groups.  yc² at ~1.2e14/row would overflow a
-    # 1e6-row partition's long partial, so it is SPLIT HI/LO at 2^32:
-    # yc² = yq·2^32 + yr with yq = shiftright(yc², 32) ≤ ~2.8e4 and
-    # yr < 2^32, so the partials Σyq ≤ 2.8e10 and Σyr ≤ 4.3e15 both
-    # sit far inside int64 per 128 MB partition (ANSI-loud beyond),
-    # and the exact integer Σyc² = 2^32·Σyq + Σyr is reassembled in
-    # decimal(38,0) after the merge.  Per-row domain bound: yc*yc is
-    # evaluated in long, so |yc| < 3.03e9 cents (price < ~3e7 units).
-    # Domain limit of the UNSPLIT Σ(xc·yc) partial: with TPC-H's
-    # ranges (xc ≤ 5e3 cents of quantity, yc ≤ ~1.05e7 cents of price)
-    # one row adds ≤ ~5.25e10, so a single (flag, scan partition)
-    # group stays exact below ~1.75e8 rows at extreme values -- ~100x
-    # headroom over a 1e6-row 128 MB partition.  Past it the long sum
-    # overflows: an ARITHMETIC_OVERFLOW error under ANSI mode, a
-    # silent wrap with ANSI off.
+    # the table-sized flag groups.  The two product terms, yc² (~1.2e14
+    # per row) and xc·yc, are each SPLIT HI/LO at 2^32: v = q·2^32 + r
+    # with q = shiftright(v, 32) and r = v & (2^32 - 1).  The shift is
+    # arithmetic, so this is exact for any sign: q = floor(v / 2^32)
+    # and 0 ≤ r < 2^32.  The exact Σv = 2^32·Σq + Σr is reassembled in
+    # decimal(38,0) after the merge.  Bounds: each product is evaluated
+    # in long, so |v| < 2^63 per row (|yc| < 3.03e9 cents, price
+    # < ~3e7 units; ANSI-loud beyond); then |q| < 2^31 and r < 2^32,
+    # so a (flag, scan partition) partial stays inside int64 below
+    # 2^31 (~2.1e9) rows at any value in that domain -- ~2,000x a
+    # 1e6-row 128 MB partition.
     li = load_table(spark, sf_dir, "lineitem")
     xc = F.round(F.col("l_quantity") * 100).cast("long")
     yc = F.round(F.col("l_extendedprice") * 100).cast("long")
@@ -267,7 +263,8 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("isum", "yc", "syc"),
             ("isum", "shiftright(yc * yc, 32)", "syyq"),
             ("isum", "(yc * yc) & 4294967295", "syyr"),
-            ("isum", "xc * yc", "sxyc"),
+            ("isum", "shiftright(xc * yc, 32)", "sxyq"),
+            ("isum", "(xc * yc) & 4294967295", "sxyr"),
         ],
     )
     # Conversion back to unit scale happens in DOUBLE arithmetic —
@@ -275,6 +272,7 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tree the oracle text runs, so the doubles match bit-for-bit.
     c = F.col
     syyc = c("syyq") * F.lit(4294967296).cast(DEC38) + c("syyr")
+    sxyc = c("sxyq") * F.lit(4294967296).cast(DEC38) + c("sxyr")
     s = sc.select(
         "l_returnflag",
         "n",
@@ -282,7 +280,7 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         (c("sxxc").cast("double") / F.lit(10000.0)).alias("sxx"),
         (c("syc").cast("double") / F.lit(100.0)).alias("sy"),
         (syyc.cast("double") / F.lit(10000.0)).alias("syy"),
-        (c("sxyc").cast("double") / F.lit(10000.0)).alias("sxy"),
+        (sxyc.cast("double") / F.lit(10000.0)).alias("sxy"),
     )
     n, sx, sxx, sy, syy, sxy = (F.col(c) for c in ["n", "sx", "sxx", "sy", "syy", "sxy"])
     var_x = (sxx - sx * sx / n) / (n - 1)

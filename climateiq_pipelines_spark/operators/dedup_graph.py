@@ -13,8 +13,6 @@ to the declarative fixpoint on every fixture.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -196,169 +194,17 @@ def connected_components(
     )
 
 
+# Min-label propagation as one recursive CTE: round 0 labels every doc
+# with itself; each round takes the least label over a node and its
+# neighbours, and ``done`` flags the round in which no label changed.
+# Labels only decrease, so the recursion ends by construction (within
+# the graph diameter) and needs no cap; the answer is the done round.
+# Each round is one label per node (linear, unlike the O(Σ size²)
+# pairs of a reachability closure).  ``bi`` is MATERIALIZED, or DuckDB
+# re-evaluates the simhash edge build every round.
 _CLUSTER_ORACLE = f"""
     WITH RECURSIVE
     {_simhash60_sql_sig()},
-    edges AS (
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id
-      FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.sig, b.sig)) <= 3
-    ),
-    bi AS (
-      SELECT a_id AS src, b_id AS dst FROM edges
-      UNION ALL
-      SELECT b_id, a_id FROM edges
-    ),
-    reach(node, r) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT bi.src, reach.r FROM bi JOIN reach ON bi.dst = reach.node
-    ),
-    comp AS (SELECT node AS doc_id, min(r) AS cluster_id
-             FROM reach GROUP BY node)
-    SELECT doc_id, cluster_id,
-           CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT)
-             AS cluster_size,
-           doc_id = cluster_id AS is_canonical
-    FROM comp
-"""
-
-
-# VERDICT r9 task #3(b): the recursive `reach` CTE above materializes a
-# (node, reachable-root) pair per component-internal pair — O(Σ size²)
-# rows; measured 146 s of the 882 s round-9 sf0.1 sweep.  The builder
-# below replaces it for sweep use with min-label propagation UNROLLED
-# to the fixpoint depth solved in DuckDB itself (the iterative_ext
-# stop-round-solver trick): per-stage state is one label per node, so
-# the whole check is linear in nodes × rounds.  The static recursive
-# text stays the registered driver contract.
-_CLUSTER_LABEL_ROUNDS_CACHE: dict[str, int] = {}
-
-# VERDICT r10 task #4: committed memo by fixture basename, consulted
-# before any DuckDB solve (same construction and staleness test as
-# iterative_ext.SOLVED_STOP_ROUNDS — test_oracle_builders re-derives
-# one SF per run through _solve_cluster_label_rounds, which never
-# reads this map).
-SOLVED_LABEL_ROUNDS: dict[str, int] = {
-    "sf0.001": 6,
-    "sf0.01": 7,
-    "sf0.1": 12,
-}
-
-
-def _cluster_label_rounds(sf_dir: str) -> int:
-    """Label-propagation depth for this sf_dir: committed memo (by
-    fixture basename, canonical fixture root only — see
-    iterative_ext.FIXTURE_ROOT) -> in-process cache -> live solve."""
-    from climateiq_pipelines_spark.operators.iterative_ext import FIXTURE_ROOT
-
-    real = os.path.realpath(sf_dir)
-    # ADVICE r11: direct children of the canonical root only — a
-    # regenerated /root/testdata/experiments/sf0.1 must solve live.
-    memo = (
-        SOLVED_LABEL_ROUNDS.get(os.path.basename(real))
-        if os.path.dirname(real) == FIXTURE_ROOT
-        else None
-    )
-    if memo is not None:
-        return memo
-    got = _CLUSTER_LABEL_ROUNDS_CACHE.get(sf_dir)
-    if got is not None:
-        return got
-    n_rounds = _solve_cluster_label_rounds(sf_dir)
-    _CLUSTER_LABEL_ROUNDS_CACHE[sf_dir] = n_rounds
-    return n_rounds
-
-
-def _solve_cluster_label_rounds(sf_dir: str) -> int:
-    """Solve min-label propagation over the simhash near-dup graph to
-    fixpoint in DuckDB; returns the first round whose labels equal the
-    previous round's (so unrolling that many stages provably reproduces
-    the component minima — propagation converges in ≤ diameter
-    rounds).  Never consults the memo — the staleness test's
-    re-derivation path."""
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM"
-        f" read_parquet('{sf_dir}/documents.parquet')"
-    )
-    con.execute(
-        f"""
-        CREATE TEMP TABLE bi AS
-        WITH {_simhash60_sql_sig()},
-        edges AS (
-          SELECT a.doc_id AS a_id, b.doc_id AS b_id
-          FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-          WHERE bit_count(xor(a.sig, b.sig)) <= 3
-        )
-        SELECT a_id AS src, b_id AS dst FROM edges
-        UNION ALL SELECT b_id, a_id FROM edges
-        """
-    )
-    con.execute(
-        "CREATE TEMP TABLE lbl_prev AS"
-        " SELECT doc_id AS node, doc_id AS label FROM documents"
-    )
-    n_rounds = None  # set only on convergence; the cap RAISES below
-    for rnd in range(1, 65):
-        con.execute(
-            """
-            CREATE OR REPLACE TEMP TABLE lbl_next AS
-            SELECT l.node,
-                   LEAST(l.label, COALESCE(MIN(nl.label), l.label))
-                     AS label
-            FROM lbl_prev l
-            LEFT JOIN bi ON bi.src = l.node
-            LEFT JOIN lbl_prev nl ON nl.node = bi.dst
-            GROUP BY l.node, l.label
-            """
-        )
-        changed = con.execute(
-            "SELECT COUNT(*) FROM lbl_next a JOIN lbl_prev b USING (node)"
-            " WHERE a.label <> b.label"
-        ).fetchone()[0]
-        con.execute(
-            "CREATE OR REPLACE TEMP TABLE lbl_prev AS SELECT * FROM lbl_next"
-        )
-        if changed == 0:
-            n_rounds = rnd
-            break
-    con.close()
-    if n_rounds is None:
-        # ADVICE r10 #1: defaulting to the cap would emit a
-        # NON-CONVERGED unrolled oracle and report a false engine
-        # MISMATCH with no attribution; mirror connected_components'
-        # 32-round raise instead so a high-diameter fixture fails
-        # loudly at the solver.
-        raise RuntimeError(
-            "cluster label propagation did not converge in 64 rounds"
-        )
-    return n_rounds
-
-
-def _cluster_oracle_unrolled(n_rounds: int) -> str:
-    """Non-recursive cluster oracle: min-label propagation unrolled to
-    ``n_rounds`` MATERIALIZED stages (DuckDB would otherwise inline
-    each lbl{i} into both of lbl{i+1}'s references — 2^rounds blowup)."""
-    stages = []
-    prev = "lbl0"
-    for i in range(1, n_rounds + 1):
-        stages.append(
-            f"""lbl{i} AS MATERIALIZED (
-      SELECT l.node,
-             LEAST(l.label, COALESCE(MIN(nl.label), l.label)) AS label
-      FROM {prev} l
-      LEFT JOIN bi ON bi.src = l.node
-      LEFT JOIN {prev} nl ON nl.node = bi.dst
-      GROUP BY l.node, l.label
-    )"""
-        )
-        prev = f"lbl{i}"
-    joined = ",\n    ".join(stages)
-    return f"""
-    WITH {_simhash60_sql_sig()},
     edges AS (
       SELECT a.doc_id AS a_id, b.doc_id AS b_id
       FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
@@ -369,32 +215,29 @@ def _cluster_oracle_unrolled(n_rounds: int) -> str:
       UNION ALL
       SELECT b_id, a_id FROM edges
     ),
-    lbl0 AS MATERIALIZED (
-      SELECT doc_id AS node, doc_id AS label FROM documents
-    ),
-    {joined},
-    comp AS (SELECT node AS doc_id, label AS cluster_id FROM {prev})
-    SELECT doc_id, cluster_id,
-           CAST(COUNT(*) OVER (PARTITION BY cluster_id) AS BIGINT)
+    lbl(node, label, done) AS (
+      SELECT doc_id, doc_id, false FROM documents
+      UNION ALL
+      SELECT node, label, bool_and(label = prev_label) OVER () FROM (
+        SELECT l.node,
+               LEAST(l.label, COALESCE(MIN(nl.label), l.label)) AS label,
+               l.label AS prev_label
+        FROM lbl l
+        LEFT JOIN bi ON bi.src = l.node
+        LEFT JOIN lbl nl ON nl.node = bi.dst
+        WHERE NOT l.done
+        GROUP BY l.node, l.label
+      )
+    )
+    SELECT node AS doc_id, label AS cluster_id,
+           CAST(COUNT(*) OVER (PARTITION BY label) AS BIGINT)
              AS cluster_size,
-           doc_id = cluster_id AS is_canonical
-    FROM comp
+           node = label AS is_canonical
+    FROM lbl WHERE done
 """
 
 
-def _cluster_oracle_for(sf_dir: str) -> str:
-    """SF-parameterized oracle (plans.ORACLE_BUILDERS): fixpoint-depth
-    min-label unroll — answers identical to the recursive text at every
-    SF (pinned by tests/test_oracle_builders.py), linear instead of
-    O(Σ cluster_size²) in DuckDB."""
-    return _cluster_oracle_unrolled(_cluster_label_rounds(sf_dir))
-
-
-@register(
-    "llm_dedup_clusters",
-    oracle=_CLUSTER_ORACLE,
-    oracle_builder=_cluster_oracle_for,  # sweep-speed path (r9 task #3b)
-)
+@register("llm_dedup_clusters", oracle=_CLUSTER_ORACLE)
 def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over simhash near-dup edges (Hamming ≤ 3 on
     the 60-bit token simhash), by ALTERNATING STAR CONTRACTION (r6;

@@ -19,24 +19,20 @@ from climateiq_pipelines_spark.functions.fixedpoint import (
     pagerank_oracle_sql,
 )
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.registry import load_table
 
 _PR_ITERS = 3
 _PR_R0 = PR_R0  # initial rank, micro-units (fixedpoint canonical home)
 _PR_BASE = PR_BASE  # (1 - d) in micros, d = 0.85
 
 
-def _pagerank_oracle() -> str:
-    # 3 unrolled power iterations as CTE stages — the identical integer
-    # arithmetic the engine runs: c(u) = r(u) // deg(u) per edge,
-    # r'(v) = BASE + (Σ c(u) * 85) // 100.  ONE builder shared with
-    # the converged twin (fixedpoint.pagerank_oracle_sql — round-13
-    # review batch D found the block duplicated here and in
-    # iterative_ext).
-    return pagerank_oracle_sql(_PR_ITERS)
+# _PR_ITERS power iterations as one recursive CTE — the identical
+# integer arithmetic the engine runs: c(u) = r(u) // deg(u) per edge,
+# r'(v) = BASE + (Σ c(u) * 85) // 100.  The converged twin's text
+# (fixedpoint.pagerank_oracle_sql) with no stopping rule.
+_PAGERANK_ORACLE = pagerank_oracle_sql("FALSE", _PR_ITERS)
 
 
-@register("graph_pagerank", oracle=_pagerank_oracle())
+@register("graph_pagerank", oracle=_PAGERANK_ORACLE)
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PAGERANK over the bipartite customer–supplier purchase graph —
     degree-normalized centrality, the second canonical iterative graph
@@ -51,10 +47,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribution is floor(r(u) / deg(u)) (integer division), each
     damping step is (Σ · 85) DIV 100 — every iteration is pure integer
     arithmetic, so 3 rounds compose bit-identically on both engines
-    (the llm_kmeans_iterate unrolled-fixed-point contract applied to
-    graphs). Iteration count is fixed at 3 for hash-checkability; a
-    production run iterates to an L1-residual threshold with the same
-    per-round plan.
+    (the llm_kmeans_iterate fixed-point contract applied to graphs).
+    Iteration count is fixed at 3; graph_pagerank_converged iterates
+    the same round to an L1-residual threshold.
 
     Plan: the edge list is built ONCE (orderkey join, distinct pair
     aggregate), symmetrized, and the degree table derives from it; the

@@ -6,25 +6,22 @@ never run "exactly 3 rounds" — they iterate the SAME per-round plan to
 a residual threshold; these keys register that production story as
 first-class checked surface.
 
-Oracle strategy (documented equivalence): a stopping rule over
-integer-exact per-round state is itself engine-exact — both engines
-compute bit-identical rounds, therefore bit-identical residuals,
-therefore the SAME stopping round. The DuckDB oracle unrolls the
-fixpoint to the stopping round the rule reaches on the sf0.01 fixture
-(measured, constants below) and pins that count in an `n_rounds`
-output column — so if the Spark loop ever stopped at a different round
-the artifact hash-mismatches attributably (wrong n_rounds AND wrong
-state), rather than silently passing.
+Oracle: a stopping rule over integer-exact per-round state is itself
+engine-exact — both engines compute bit-identical rounds, therefore
+bit-identical residuals, therefore the SAME stopping round, at every
+scale. So each key's DuckDB oracle runs the engine's own stopping rule
+(same constants) inside one recursive CTE (fixedpoint.pagerank_oracle_sql
+/ lloyd_oracle_sql — the fixed-round twins' texts with the rule in
+place of the fixed count) and reports the round it stopped at as an
+`n_rounds` output column, so a Spark loop that stopped at a different
+round hash-mismatches attributably (wrong n_rounds AND wrong state).
 
 Registered last in plans.load_all — after the round-7 driver window.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.functions.fixedpoint import (
@@ -33,53 +30,12 @@ from climateiq_pipelines_spark.functions.fixedpoint import (
     bipartite_purchase_edges,
     lloyd_assign_cols,
     lloyd_centroid_row,
-    lloyd_iter_sql,
+    lloyd_oracle_sql,
     pagerank_oracle_sql,
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table, widen_if_narrow
 from climateiq_pipelines_spark.session import checkpoint
-
-# VERDICT r9 task #2: memoized stop-round solutions per (key, sf_dir)
-# so sweep tooling + tests can call the oracle builders repeatedly
-# without re-running the DuckDB fixpoint loop each time.
-_STOP_ROUND_CACHE: dict[tuple[str, str], int] = {}
-
-# VERDICT r10 task #4: COMMITTED memo of solved stopping rounds per
-# fixture-dir BASENAME, consulted before the in-process cache and the
-# DuckDB solve — repeat sweeps (fresh processes) skip the fixpoint
-# loop entirely.  Staleness protection: the solvers stay the source of
-# truth, and tests/test_oracle_builders.py re-derives one SF of every
-# solver each run (via the _solve_* functions, which never consult
-# this map) and fails loudly if a fixture change moves a stopping
-# round.  An sf_dir whose basename is absent here still solves live.
-SOLVED_STOP_ROUNDS: dict[tuple[str, str], int] = {
-    ("pagerank", "sf0.001"): 18,
-    ("pagerank", "sf0.01"): 18,
-    ("pagerank", "sf0.1"): 18,
-    ("kmeans", "sf0.001"): 3,
-    ("kmeans", "sf0.01"): 3,
-    ("kmeans", "sf0.1"): 4,
-}
-
-
-# The memos describe the driver-generated fixtures under THIS root
-# only (TESTDATA.md); a user pointing sweep tooling at their own
-# differently-generated /tmp/.../sf0.1 must get a live solve, not the
-# canonical fixture's depth (a wrong memoized depth would surface as
-# an unattributable engine MISMATCH).  ADVICE r11: the memo applies
-# only to DIRECT children of the root — a regenerated
-# /root/testdata/experiments/sf0.1 shares a basename with the canonical
-# fixture but not its data, so a subtree match would hand it the wrong
-# depth.
-FIXTURE_ROOT = "/root/testdata"
-
-
-def _memo_rounds(kind: str, sf_dir: str) -> int | None:
-    real = os.path.realpath(sf_dir)
-    if os.path.dirname(real) != FIXTURE_ROOT:
-        return None
-    return SOLVED_STOP_ROUNDS.get((kind, os.path.basename(real)))
 
 # ---------------------------------------------------------------- pagerank
 
@@ -89,105 +45,19 @@ _PR_BASE = PR_BASE  # (1 - d) in micros, d = 0.85
 # Stop when the L1 rank drift of a round is ≤ _PR_TOL_MICRO per node on
 # average (0.1 rank-units). The drift contracts at the damping rate
 # (measured ≈0.85×/round on the fixture: 1.49e6 → 2.5e5 micros/node
-# over rounds 1→12 at sf0.01), so the rule stops at round
-# _PR_ROUNDS_SF001 there — the count the oracle unrolls to.
+# over rounds 1→12 at sf0.01), so the rule stops at round 18 at
+# sf0.001, sf0.01 and sf0.1 (pinned by tests/test_iterative_oracles.py).
 _PR_TOL_MICRO = 100_000
 _PR_MAX_ROUNDS = 40  # safety cap; the tolerance binds long before it
-_PR_ROUNDS_SF001 = 18  # measured stopping round at sf0.01
-
-
-def _pagerank_converged_oracle(n_rounds: int) -> str:
-    """fixedpoint.pagerank_oracle_sql with the pinned n_rounds column
-    (ONE home shared with graph_ext — round-13 review batch D; see the
-    module docstring for why a fixed unroll is a faithful oracle for a
-    converging loop)."""
-    return pagerank_oracle_sql(n_rounds, with_rounds_col=True)
-
-
-def _pagerank_stop_round(sf_dir: str) -> int:
-    """Stopping round for this sf_dir: committed memo (by fixture
-    basename) -> in-process cache -> live DuckDB solve."""
-    memo = _memo_rounds("pagerank", sf_dir)
-    if memo is not None:
-        return memo
-    got = _STOP_ROUND_CACHE.get(("pagerank", sf_dir))
-    if got is not None:
-        return got
-    n_rounds = _solve_pagerank_rounds(sf_dir)
-    _STOP_ROUND_CACHE[("pagerank", sf_dir)] = n_rounds
-    return n_rounds
-
-
-def _solve_pagerank_rounds(sf_dir: str) -> int:
-    """Run the engine's residual stopping rule to fixpoint in DuckDB
-    (integer-exact state ⇒ identical residuals ⇒ identical stopping
-    round — module docstring) so the oracle builder can unroll to the
-    right depth for ANY sf_dir.  Incremental temp tables, not prefix
-    re-execution: linear in rounds.  Never consults the memo — this is
-    the re-derivation path the staleness test drives."""
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        f"""
-        CREATE TEMP TABLE sym AS
-        WITH edges AS (
-          SELECT DISTINCT o_custkey * 2 AS u, l_suppkey * 2 + 1 AS v
-          FROM read_parquet('{sf_dir}/lineitem.parquet') li
-          JOIN read_parquet('{sf_dir}/orders.parquet') o
-            ON li.l_orderkey = o.o_orderkey
-        )
-        SELECT u, v FROM edges UNION ALL SELECT v AS u, u AS v FROM edges
-        """
-    )
-    con.execute(
-        "CREATE TEMP TABLE deg AS"
-        " SELECT u AS node, COUNT(*) AS deg FROM sym GROUP BY u"
-    )
-    n_nodes = con.execute("SELECT COUNT(*) FROM deg").fetchone()[0]
-    con.execute(
-        f"CREATE TEMP TABLE r_prev AS"
-        f" SELECT node, CAST({_PR_R0} AS BIGINT) AS r FROM deg"
-    )
-    n_rounds = _PR_MAX_ROUNDS
-    for rnd in range(1, _PR_MAX_ROUNDS + 1):
-        con.execute(
-            f"""
-            CREATE OR REPLACE TEMP TABLE r_next AS
-            SELECT s.v AS node,
-                   {_PR_BASE} + (SUM(p.r // d.deg) * 85) // 100 AS r
-            FROM sym s
-            JOIN r_prev p ON p.node = s.u
-            JOIN deg d ON d.node = s.u
-            GROUP BY s.v
-            """
-        )
-        residual = con.execute(
-            "SELECT SUM(ABS(a.r - b.r))"
-            " FROM r_next a JOIN r_prev b USING (node)"
-        ).fetchone()[0]
-        con.execute(
-            "CREATE OR REPLACE TEMP TABLE r_prev AS SELECT * FROM r_next"
-        )
-        if residual <= n_nodes * _PR_TOL_MICRO:
-            n_rounds = rnd
-            break
-    con.close()
-    return n_rounds
-
-
-def _pagerank_oracle_for(sf_dir: str) -> str:
-    """SF-parameterized oracle (plans.ORACLE_BUILDERS): solve the
-    stopping round for this sf_dir, then emit the ordinary unrolled
-    text.  At sf0.01 this reproduces the static ORACLES entry exactly
-    (pinned by tests/test_oracle_builders.py)."""
-    return _pagerank_converged_oracle(_pagerank_stop_round(sf_dir))
 
 
 @register(
     "graph_pagerank_converged",
-    oracle=_pagerank_converged_oracle(_PR_ROUNDS_SF001),
-    oracle_builder=_pagerank_oracle_for,
+    oracle=pagerank_oracle_sql(
+        f"SUM(ABS(r - prev_r)) OVER () <= COUNT(*) OVER () * {_PR_TOL_MICRO}",
+        _PR_MAX_ROUNDS,
+        with_rounds_col=True,
+    ),
 )
 def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PAGERANK TO CONVERGENCE — graph_pagerank's per-round plan (same
@@ -198,8 +68,8 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ 0.1 rank-units per node (residual ≤ n·100000), cap 40.
 
     This is the production story graph_pagerank's docstring promises:
-    round count is DATA-DRIVEN (18 on the sf0.01 fixture, emitted as
-    n_rounds so the oracle pins it), every round's state is
+    round count is DATA-DRIVEN (18 on the fixtures, emitted as
+    n_rounds so the oracle checks it), every round's state is
     localCheckpoint-ed (lineage truncation — each round's action must
     not re-execute the whole history; the fixed-3 sibling instead
     relies on AQE stage reuse within its ONE action), and the static
@@ -212,8 +82,8 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear in rounds, independent of graph size beyond the state
     itself. Cross-engine equivalence of the STOP ROUND follows from
     integer-exactness: both engines produce bit-identical ranks each
-    round, hence identical residuals, hence the same stopping round
-    (measured 18 at sf0.01; the oracle unrolls exactly 18)."""
+    round, hence identical residuals, hence the same stopping round —
+    the round the oracle's recursive CTE stops at under the same rule."""
     # Shared lazy edge build (fixedpoint.bipartite_purchase_edges, one
     # home with graph_pagerank — round-13 review batch D); the
     # CHECKPOINT strategy stays here, where the per-round residual
@@ -279,140 +149,24 @@ def graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 58.8% → 15.6% → 7.0% → 3.6% → 3.6% — a small stable core keeps
 # oscillating between equidistant-ish centroids (movement never reaches
 # 0, exactly why production k-means stops on a movement THRESHOLD, not
-# movement zero), so the 10% rule stops after round _KM_ROUNDS_SF001
-# with clear integer margin on both sides (350 ≤ 500 vs 780 > 500).
+# movement zero), so the 10% rule stops after round 3 there with clear
+# integer margin on both sides (350 ≤ 500 vs 780 > 500); it stops
+# after round 3 at sf0.001 and round 4 at sf0.1 (pinned by
+# tests/test_iterative_oracles.py).
 # The 10% demo threshold is calibrated to stop mid-curve on the small
 # fixture; production corpora use 0.1–1% with the identical loop.
 _KM_TOL_DIV = 10
 _KM_MAX_ROUNDS = 10
-_KM_ROUNDS_SF001 = 3  # measured stopping round at sf0.01
-
-
-# One unrolled Lloyd iteration — ONE home (fixedpoint.lloyd_iter_sql),
-# shared with ml_iter (round-13 review batch D).
-_kmeans_iter_sql = lloyd_iter_sql
-
-
-def _kmeans_converged_oracle(n_rounds: int) -> str:
-    """The unrolled k-means oracle generalized to ``n_rounds`` rounds
-    (the pagerank twin's _pagerank_converged_oracle shape)."""
-    return f"""
-    WITH exploded AS (
-      SELECT vec_id, label,
-             generate_subscripts(embedding, 1) AS pos,
-             unnest(embedding) AS x
-      FROM embeddings
-    ),
-    assign0 AS (
-      SELECT vec_id, label AS cluster, CAST(0 AS BIGINT) AS dist_fp
-      FROM embeddings
-    ),
-    {", ".join(_kmeans_iter_sql(i) for i in range(1, n_rounds + 1))}
-    SELECT cluster AS cluster_id,
-           COUNT(*) AS n_vecs,
-           round(CAST(SUM(dist_fp) AS DOUBLE) / 1000000000000.0, 6)
-             AS inertia,
-           CAST({n_rounds} AS INTEGER) AS n_rounds
-    FROM assign{n_rounds}
-    GROUP BY cluster
-"""
-
-
-def _kmeans_stop_round(sf_dir: str) -> int:
-    """Stopping round for this sf_dir: committed memo (by fixture
-    basename) -> in-process cache -> live DuckDB solve."""
-    memo = _memo_rounds("kmeans", sf_dir)
-    if memo is not None:
-        return memo
-    got = _STOP_ROUND_CACHE.get(("kmeans", sf_dir))
-    if got is not None:
-        return got
-    n_rounds = _solve_kmeans_rounds(sf_dir)
-    _STOP_ROUND_CACHE[("kmeans", sf_dir)] = n_rounds
-    return n_rounds
-
-
-def _solve_kmeans_rounds(sf_dir: str) -> int:
-    """Run the engine's movement stopping rule (moved ≤ n/_KM_TOL_DIV,
-    cap _KM_MAX_ROUNDS) to fixpoint in DuckDB — same arithmetic as the
-    unrolled oracle CTEs, incremental temp tables instead of prefix
-    re-execution.  Integer-exact per-round state ⇒ identical movement
-    counts ⇒ identical stopping round (module docstring).  Never
-    consults the memo — the staleness test's re-derivation path."""
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(
-        f"""
-        CREATE TEMP TABLE exploded AS
-        SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-               unnest(embedding) AS x
-        FROM read_parquet('{sf_dir}/embeddings.parquet')
-        """
-    )
-    con.execute(
-        f"CREATE TEMP TABLE assign_prev AS SELECT vec_id, label AS cluster"
-        f" FROM read_parquet('{sf_dir}/embeddings.parquet')"
-    )
-    n_vecs = con.execute("SELECT COUNT(*) FROM assign_prev").fetchone()[0]
-    n_rounds = _KM_MAX_ROUNDS
-    for rnd in range(1, _KM_MAX_ROUNDS + 1):
-        con.execute(
-            """
-            CREATE OR REPLACE TEMP TABLE centroids AS
-            SELECT a.cluster AS c_id, e.pos,
-                   CAST(SUM(CAST(floor(CAST(e.x AS DOUBLE) * 1000000000)
-                                 AS BIGINT)) AS DOUBLE)
-                     / 1000000000.0 / COUNT(*) AS c
-            FROM exploded e JOIN assign_prev a USING (vec_id)
-            GROUP BY a.cluster, e.pos
-            """
-        )
-        con.execute(
-            """
-            CREATE OR REPLACE TEMP TABLE assign_next AS
-            SELECT vec_id, c_id AS cluster FROM (
-              SELECT vec_id, c_id,
-                     row_number() OVER (PARTITION BY vec_id
-                                        ORDER BY dist_fp ASC, c_id) AS rn
-              FROM (
-                SELECT e.vec_id, c.c_id,
-                       SUM(CAST(floor((CAST(e.x AS DOUBLE) - c.c)
-                                      * (CAST(e.x AS DOUBLE) - c.c)
-                                      * 1000000000000) AS BIGINT)) AS dist_fp
-                FROM exploded e JOIN centroids c ON e.pos = c.pos
-                GROUP BY e.vec_id, c.c_id
-              )
-            ) WHERE rn = 1
-            """
-        )
-        moved = con.execute(
-            "SELECT COUNT(*) FROM assign_next a JOIN assign_prev b"
-            " USING (vec_id) WHERE a.cluster <> b.cluster"
-        ).fetchone()[0]
-        con.execute(
-            "CREATE OR REPLACE TEMP TABLE assign_prev AS"
-            " SELECT * FROM assign_next"
-        )
-        if moved * _KM_TOL_DIV <= n_vecs:
-            n_rounds = rnd
-            break
-    con.close()
-    return n_rounds
-
-
-def _kmeans_oracle_for(sf_dir: str) -> str:
-    """SF-parameterized oracle (plans.ORACLE_BUILDERS): solve the
-    stopping round for this sf_dir, then emit the ordinary unrolled
-    text.  At sf0.01 this reproduces the static ORACLES entry exactly
-    (pinned by tests/test_oracle_builders.py)."""
-    return _kmeans_converged_oracle(_kmeans_stop_round(sf_dir))
 
 
 @register(
     "llm_kmeans_converged",
-    oracle=_kmeans_converged_oracle(_KM_ROUNDS_SF001),
-    oracle_builder=_kmeans_oracle_for,
+    oracle=lloyd_oracle_sql(
+        "SUM(CASE WHEN cluster <> prev_cluster THEN 1 ELSE 0 END) OVER ()"
+        f" * {_KM_TOL_DIV} <= COUNT(*) OVER ()",
+        _KM_MAX_ROUNDS,
+        with_rounds_col=True,
+    ),
 )
 def llm_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-MEANS TO CONVERGENCE — llm_kmeans_iterate's per-round Lloyd
@@ -424,8 +178,8 @@ def llm_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     movement-zero) is the production rule: exact-arithmetic Lloyd can
     2-cycle a small equidistant core forever (measured
     294 → 78 → 35 → 18 → 18 moves of n=500 at sf0.01 — the tail never
-    reaches 0), so the rule stops at round 3 there, pinned by the
-    n_rounds column the oracle hardcodes.
+    reaches 0), so the rule stops at round 3 there, reported in the
+    n_rounds column.
 
     Per-round state is localCheckpoint-ed (each round's movement action
     must not re-execute the full history — the fixed-3 sibling's
@@ -434,15 +188,11 @@ def llm_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the integer-exact state: identical assignments each round ⇒
     identical movement counts ⇒ identical stopping round.
 
-    Oracle scope: the STATIC ORACLES text pins the SF0.01 stopping
-    round (3) for the driver contract; the movement rule is
-    n-PROPORTIONAL (moved ≤ n/10) so other scales stop at other rounds
-    (measured: 4 at sf0.1). Since round 10 the registered
-    oracle_builder (_kmeans_oracle_for) closes that gap: it solves the
-    stopping rule to fixpoint in DuckDB for the TARGET sf_dir and
-    unrolls the oracle to that depth, so sweeps at any SF get a full
-    value check (VERDICT r9 task #2) — the former EXPECTED_SCOPE_LIMITED
-    sweep waiver is deleted.
+    Oracle scope: the movement rule is n-PROPORTIONAL (moved ≤ n/10),
+    so different scales stop at different rounds (3 at sf0.01, 4 at
+    sf0.1). The oracle runs the same rule inside its recursive CTE, so
+    its one text stops where the engine does at every scale and checks
+    the full answer there.
 
     Scale per round: unchanged from llm_kmeans_iterate (k×64 broadcast
     centroids, one linear distance aggregate) + the 1-row movement

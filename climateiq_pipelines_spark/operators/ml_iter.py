@@ -5,11 +5,11 @@ correctness window (plans.load_all); covered by tools/driver_sim.py.
 llm_centroid_assign is ONE E-step; this module runs the whole
 assign→re-center loop for a fixed 3 iterations, with the same exact
 fixed-point spine (1e9 centroid means, 1e12 integer distances,
-deterministic argmin tie-break), so the DuckDB oracle — the same three
-iterations unrolled as CTE stages — hash-matches bit for bit. Fixed
-iteration count keeps the oracle expressible; a convergence-tested
-variant is the same Spark loop with the connected-components
-stopping pattern (dedup_graph.connected_components).
+deterministic argmin tie-break), so the DuckDB oracle — the same
+rounds as one recursive CTE — hash-matches bit for bit. The
+convergence-tested variant (iterative_ext.llm_kmeans_converged) runs
+the same round under a movement stopping rule, checked by the same
+oracle text with that rule in place of the fixed count.
 """
 
 from __future__ import annotations
@@ -23,7 +23,7 @@ from climateiq_pipelines_spark.functions.fixedpoint import (
     fixed_mean_1e9,
     lloyd_assign_cols,
     lloyd_centroid_row,
-    lloyd_iter_sql,
+    lloyd_oracle_sql,
     sql_cos_micros,
 )
 from climateiq_pipelines_spark.plans import register
@@ -33,32 +33,10 @@ from climateiq_pipelines_spark.session import checkpoint
 _N_ITER = 3
 
 
-# One unrolled Lloyd iteration — shared with the converged twin in
-# iterative_ext via fixedpoint.lloyd_iter_sql (round-13 review batch D:
-# the CTE lived byte-for-byte in both modules, the hand-inlined-copy
-# drift class).
-_iter_sql = lloyd_iter_sql
-
-
-_KMEANS_ORACLE = f"""
-    WITH exploded AS (
-      SELECT vec_id, label,
-             generate_subscripts(embedding, 1) AS pos,
-             unnest(embedding) AS x
-      FROM embeddings
-    ),
-    assign0 AS (
-      SELECT vec_id, label AS cluster, CAST(0 AS BIGINT) AS dist_fp
-      FROM embeddings
-    ),
-    {", ".join(_iter_sql(i) for i in range(1, _N_ITER + 1))}
-    SELECT cluster AS cluster_id,
-           COUNT(*) AS n_vecs,
-           round(CAST(SUM(dist_fp) AS DOUBLE) / 1000000000000.0, 6)
-             AS inertia
-    FROM assign{_N_ITER}
-    GROUP BY cluster
-"""
+# The same recursive Lloyd text as the converged twin
+# (fixedpoint.lloyd_oracle_sql) with no stopping rule: it runs _N_ITER
+# rounds.
+_KMEANS_ORACLE = lloyd_oracle_sql("FALSE", _N_ITER)
 
 
 # The exploded -> sub -> codebook chain and the per-(vec, subspace,

@@ -458,7 +458,7 @@ def agg_linear_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decimal(38,0).  Level-1 overflow bound (ANSI-loud): the largest
     # per-row term is xc*yc ≤ 5e3 * 5.5e6 = 2.75e10; a 128 MB lineitem
     # scan partition holds ~1e6 rows → partial ≤ ~3e16, 300x inside
-    # int64.  (agg_stats_moments' yc² term needs a hi/lo split.)
+    # int64.  (agg_stats_moments splits its yc² and xc·yc terms hi/lo.)
     sc = two_level(
         cents,
         ["l_returnflag"],

@@ -269,22 +269,22 @@ def spark_digest(spark, df) -> pd.DataFrame:
                 jr.unpersist(False)
 
 
-def duck_digest(con, cols: list[tuple[str, str]], oracle_text: str) -> pd.DataFrame:
-    return _as_ints(con.execute(digest_sql(cols, oracle_text, "duckdb")).df())
+def duck_digest(con, cols: list[tuple[str, str]], oracle: str) -> pd.DataFrame:
+    return _as_ints(con.execute(digest_sql(cols, oracle, "duckdb")).df())
 
 
 def check_key_digest(key: str, spark, sf_dir: str, con):
     """Digest twin of parity.check_key: the key's relation and its
-    oracle (parity.oracle_text) each reduced in-engine to
+    oracle (plans.ORACLES) each reduced in-engine to
     (n, dsum) and compared.  A mismatch does not localize — re-run the
     key through check_key for the differing rows."""
-    from climateiq_pipelines_spark.parity import ParityResult, oracle_text
-    from climateiq_pipelines_spark.plans import QUERIES
+    from climateiq_pipelines_spark.parity import ParityResult
+    from climateiq_pipelines_spark.plans import ORACLES, QUERIES
 
     df = QUERIES[key](spark, sf_dir)
     cols = kinds_from_spark(df)
     sd = spark_digest(spark, df).iloc[0]
-    dd = duck_digest(con, cols, oracle_text(key, sf_dir)).iloc[0]
+    dd = duck_digest(con, cols, ORACLES[key]).iloc[0]
     res = ParityResult(key=key, ok=tuple(sd) == tuple(dd),
                        spark_rows=int(sd["n"]), oracle_rows=int(dd["n"]))
     if not res.ok:

@@ -21,17 +21,8 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-# SF-parameterized oracle builders.  A key whose static ORACLES text
-# unrolls a fixture-measured constant registers a builder
-# ``sf_dir -> SQL text`` here; parity.oracle_text prefers the builder,
-# so the SAME key is fully value-checked at ANY scale factor.  The
-# builder derives its unroll depth by running the published stopping
-# rule to fixpoint in DuckDB (legitimate: cross-engine stop-round
-# equivalence follows from the keys' integer-exact per-round state —
-# see the iterative_ext docstrings), then emits the ordinary unrolled
-# text; the full value comparison still runs independently on that
-# text.  The driver contract (__spark_entry__.oracle_sql() -> static
-# strings at sf0.01) is unchanged.
+# Always empty: every key's one oracle is its ORACLES text; kept only
+# because perfbench/worker.py::oracle_frames still reads it.
 ORACLE_BUILDERS: dict[str, Callable[[str], str]] = {}
 
 # Pristine decoration order (filled by _apply_rotation_window before it
@@ -40,16 +31,13 @@ REGISTRATION_ORDER: list[str] = []
 
 
 def register(
-    key: str,
-    oracle: str | None = None,
-    oracle_builder: Callable[[str], str] | None = None,
+    key: str, oracle: str | None = None
 ) -> Callable[[QueryFn], QueryFn]:
     """Register a query builder; ``oracle=None`` declares the key
     rows-only (driver's weaker check) — only allowed for the keys SURVEY
     §2 marks rows-only, with the reason in the builder's docstring.
-    ``oracle_builder`` supplies the SF-parameterized text (see
-    ORACLE_BUILDERS) for a key whose static text unrolls a
-    fixture-measured constant."""
+    The oracle is one text for every scale factor: an iterative key
+    runs its engine's stopping rule inside the text."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if key in QUERIES:
@@ -57,8 +45,6 @@ def register(
         QUERIES[key] = fn
         if oracle is not None:
             ORACLES[key] = oracle
-        if oracle_builder is not None:
-            ORACLE_BUILDERS[key] = oracle_builder
         return fn
 
     return deco

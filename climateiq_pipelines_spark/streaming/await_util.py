@@ -1,13 +1,15 @@
-"""Shared streaming-query runs: a wait with a LOUD timeout, the one
-memory-sink run, and the one update-mode foreachBatch start.
+"""Shared streaming-query runs: a wait that fails LOUDLY on a stalled
+query, the one memory-sink run, and the one update-mode foreachBatch
+start.
 
-Every streaming key waits through ``await_or_raise``.  On a slow host an
-availableNow query can outlive its timeout; if the ``finally`` then
-stopped it mid-batch and the key read its sink, an empty (complete-mode)
-or partial (append-mode) sink would come back as the ANSWER, and a
-host timeout would pass for a wrong-answer engine bug in the oracle
-check.  A timeout must fail loudly and attributably, so the error
-carries the query's status and last progress.
+Every streaming key waits through ``await_or_raise``.  If a wait gave
+up on a query that was still working and the ``finally`` then stopped
+it mid-batch, the key would read an empty (complete-mode) or partial
+(append-mode) sink as the ANSWER, and a slow host would pass for a
+wrong-answer engine bug in the oracle check.  So the wait gives up only
+on lack of progress, never on a clock: a loaded host that still
+completes micro-batches is waited for, and a stalled query fails
+attributably, with its status and last progress in the error.
 """
 
 from __future__ import annotations
@@ -22,14 +24,28 @@ from climateiq_pipelines_spark.session import register_temp_view
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
-def await_or_raise(query: StreamingQuery, seconds: int) -> None:
-    """awaitTermination(seconds), raising TimeoutError on expiry instead
-    of letting the caller read a partial sink.  The message names what
-    the query was doing (its status) and how far it got (the last
-    progress: batch id, input rows, per-phase ``durationMs``), so a
-    host-load timeout reads differently from a stuck batch."""
-    if not query.awaitTermination(seconds):
+# One stall window: a wait raises only after this long with the query
+# still running and no micro-batch completed.  It is at least the
+# longest single-batch wait any streaming key needed before.
+STALL_WINDOW_S = 180
+
+
+def await_or_raise(query: StreamingQuery) -> None:
+    """Wait for ``query`` to terminate, in windows of STALL_WINDOW_S.
+    Raise TimeoutError, instead of letting the caller read a partial
+    sink, only when a whole window passes with the query still running
+    and its last progress at the same batch id (or still none).  The
+    message names what the query was doing (its status) and how far it
+    got (the last progress: batch id, input rows, per-phase
+    ``durationMs``), so a stuck batch reads differently from a slow
+    one."""
+    seen = None  # a just-started query has completed no batch
+    while not query.awaitTermination(STALL_WINDOW_S):
         last = query.lastProgress
+        now = None if last is None else last["batchId"]
+        if now != seen:
+            seen = now
+            continue
         progress = (
             "no batch completed"
             if last is None
@@ -37,15 +53,14 @@ def await_or_raise(query: StreamingQuery, seconds: int) -> None:
             f"rows, durationMs {last['durationMs']}"
         )
         raise TimeoutError(
-            f"streaming query {query.name or query.id} did not terminate "
-            f"within {seconds}s — refusing to read a partial sink; "
-            f"status {query.status}; last progress: {progress}"
+            f"streaming query {query.name or query.id} completed no "
+            f"micro-batch in {STALL_WINDOW_S}s and has not terminated — "
+            f"refusing to read a partial sink; status {query.status}; "
+            f"last progress: {progress}"
         )
 
 
-def run_to_memory(
-    df: DataFrame, output_mode: str, seconds: int = 120
-) -> DataFrame:
+def run_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
     """Run the streaming frame ``df`` to completion (availableNow, output
     mode "append" or "complete") into a memory sink and return the sink
     table.  The view name is unique per call, so concurrent sessions and
@@ -63,7 +78,7 @@ def run_to_memory(
         .start()
     )
     try:
-        await_or_raise(query, seconds)
+        await_or_raise(query)
     finally:
         query.stop()
     return df.sparkSession.table(name)
@@ -104,6 +119,6 @@ def run_update_foreach_batch(df: DataFrame, sink) -> None:
         else:
             spark.conf.set(_NO_DATA_BATCHES, prior)
     try:
-        await_or_raise(query, 120)
+        await_or_raise(query)
     finally:
         query.stop()

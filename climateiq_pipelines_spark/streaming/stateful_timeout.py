@@ -238,4 +238,4 @@ def stream_state_timeout_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
         "append",
         GroupStateTimeout.EventTimeTimeout,
     )
-    return run_to_memory(sessions, "append", seconds=180)
+    return run_to_memory(sessions, "append")

@@ -35,3 +35,24 @@ def test_bench_prints_one_json_line_and_no_console_noise(tmp_path):
     lines = out.stdout.splitlines()
     assert len(lines) == 1, out.stdout
     assert json.loads(lines[0])["n_queries"] == 1
+
+
+def test_driver_session_turns_console_progress_off():
+    """driver_sim and determinism_probe print one stderr line per key;
+    a console progress bar would glue "\\r[Stage N:...]" to their
+    front.  Built in its own process: driver_session sets the session
+    time zone, which must not leak into the shared test session."""
+    code = (
+        "from tools.driver_sim import driver_session\n"
+        "spark, _ = driver_session()\n"
+        "print(spark.sparkContext.getConf()"
+        ".get('spark.ui.showConsoleProgress'))\n"
+        "spark.stop()\n"
+    )
+    env = dict(os.environ, DRIVER_SIM_MASTER="local[1]")
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=ROOT, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.splitlines()[-1] == "false"

@@ -59,6 +59,8 @@ EDGE_KEYS = [
     "sort_multikey_scalable",    # NULLs + ties through the 2-phase rank
     "stream_watermark_spans",    # late arrival vs span-boundary watermark
     "llm_dedup_clusters",        # dup pair + permutation → one component
+    "graph_pagerank_converged",  # stopping round off the sf0.01 depth
+    "llm_kmeans_converged",      # stopping round off the sf0.01 depth
     "llm_text_normalize",        # punctuation/case collapse edges
     "llm_simhash_multiprobe",    # identical vectors at Hamming 0
     "q12_priority_by_flag",      # priority class split on edge orders

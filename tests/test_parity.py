@@ -28,3 +28,16 @@ def test_parity_sf0001(key, spark, duck_small):
 def test_parity_sf001(key, spark, duck_med):
     res = check_key(key, spark, SF_MED, duck_med)
     assert res.ok, str(res)
+
+
+def test_key_without_oracle_is_checked_rows_only(monkeypatch):
+    """A key registered without an oracle gets the driver's weaker
+    check: it must run, and only its row count is reported."""
+    from types import SimpleNamespace
+
+    import pandas as pd
+
+    frame = SimpleNamespace(toPandas=lambda: pd.DataFrame({"a": [1, 2]}))
+    monkeypatch.setitem(QUERIES, "rows_only_probe", lambda s, d: frame)
+    res = check_key("rows_only_probe", None, SF_SMALL)
+    assert res.ok and res.spark_rows == 2 and res.oracle_rows == -1

@@ -219,25 +219,53 @@ def test_update_mode_key_restores_no_data_batch_conf(spark, key, caller_value):
 
 
 def test_await_timeout_names_status_and_last_progress():
-    """A timed-out wait says what the query was doing and how far it
-    got, so a host-load timeout can be told from a stuck batch."""
-    from climateiq_pipelines_spark.streaming.await_util import await_or_raise
+    """A stalled wait says what the query was doing and how far it
+    got, so a stuck batch can be told from a slow one; a query that
+    keeps completing micro-batches is waited for, however long."""
+    from climateiq_pipelines_spark.streaming.await_util import (
+        STALL_WINDOW_S,
+        await_or_raise,
+    )
 
-    class _SlowQuery:
+    class _StuckQuery:
         name, id = "slow", "q-1"
         status = {"message": "Processing new data", "isTriggerActive": True}
         lastProgress = {"batchId": 1, "numInputRows": 500,
                         "durationMs": {"triggerExecution": 179000}}
 
         def awaitTermination(self, seconds):
+            assert seconds == STALL_WINDOW_S
             return False
 
     with pytest.raises(TimeoutError) as err:
-        await_or_raise(_SlowQuery(), 180)
+        await_or_raise(_StuckQuery())
     msg = str(err.value)
-    assert "slow did not terminate within 180s" in msg
+    assert f"slow completed no micro-batch in {STALL_WINDOW_S}s" in msg
     assert "Processing new data" in msg
     assert "batch 1, 500 input rows" in msg and "179000" in msg
+
+    class _NeverStartedQuery(_StuckQuery):
+        lastProgress = None
+
+    with pytest.raises(TimeoutError, match="no batch completed"):
+        await_or_raise(_NeverStartedQuery())
+
+    class _SlowButMovingQuery(_StuckQuery):
+        """Each window ends with one more batch done; the fourth wait
+        sees the query terminate."""
+
+        lastProgress = None
+        calls = 0
+
+        def awaitTermination(self, seconds):
+            self.calls += 1
+            self.lastProgress = {"batchId": self.calls, "numInputRows": 1,
+                                 "durationMs": {}}
+            return self.calls == 4
+
+    moving = _SlowButMovingQuery()
+    await_or_raise(moving)
+    assert moving.calls == 4
 
 
 def test_foreachbatch_sink_reads_back_with_its_known_schema(spark):
@@ -264,7 +292,7 @@ def test_run_to_memory_names_each_sink_uniquely(spark):
         read_events_stream(spark, SF_SMALL).groupBy("event_type").count()
     )
     a = run_to_memory(counts, "complete")
-    b = run_to_memory(counts, "complete", seconds=60)
+    b = run_to_memory(counts, "complete")
     views = list(S._SCOPE.views)
     assert len(views) == 2 and views[0] != views[1], views
     assert sorted(a.collect()) == sorted(b.collect())

@@ -4,10 +4,10 @@ gate.
 Builds a driver-like session (NOT the engine's factory, non-UTC timezone
 to catch timestamp_ntz leaks), runs the t1 smoke, then checks every
 queries() key against its DuckDB oracle with parity.check_key and the
-strict local comparator.  The oracle text comes from parity.oracle_text:
-a key with an SF-parameterized builder (plans.ORACLE_BUILDERS) gets its
-oracle built for the target sf_dir, every other key uses its static
-oracle_sql() text, so the same sweep is a full value check at ANY scale
+strict local comparator, against its one oracle_sql() text.  The
+iterative keys' texts run the engine's own stopping rule over
+integer-exact state, so they stop at the same round as the engine at
+every scale and the same sweep is a full value check at ANY scale
 factor.
 
 Usage: python tools/driver_sim.py [--window] [--fast] [sf_dir]
@@ -103,6 +103,9 @@ def driver_session():
         SparkSession.builder.master(master)
         .config("spark.sql.session.timeZone", tz)
         .config("spark.ui.enabled", "false")
+        # No console progress bars: they would glue "\r[Stage N:...]"
+        # to the front of the per-key stderr lines.
+        .config("spark.ui.showConsoleProgress", "false")
     )
     # Comma-separated k=v pairs (values must not contain commas).  A
     # malformed pair ABORTS: a typo that silently ran the default
