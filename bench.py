@@ -17,7 +17,11 @@ suite line stays SHORT, fixed-size, and the ONLY stdout line; per-query
 detail goes to stderr (one `# key: secs` line each) and to
 BENCH_QUERIES.json next to this script.  Each key's time is the minimum
 of two `toPandas` runs, so `python bench.py KEY` gives the per-key
-number comparable to bench records.
+number comparable to bench records.  BENCH_QUERIES.json also records
+`compiles: {key: [first_run, second_run]}`, the classes whole-stage
+codegen compiled during each run (Spark's CodegenMetrics compilation
+count): a second run that compiles again shows codegen-cache
+evictions.
 
 HEADLINE policy: the suite is the BASELINE.md-comparable set plus every
 operator family's most expensive representative — NOT all 200 keys.
@@ -216,17 +220,23 @@ def main(keys: list[str] | None = None) -> None:
     # min-of-2 per query: run 1 includes per-plan codegen compilation;
     # run 2 is the steady-state time a resident engine would show.
     timings: dict[str, float] = {}
+    compiles: dict[str, list[int]] = {}
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME()
     total = 0.0
     for key in keys or HEADLINE:
         fn = QUERIES.get(key)
         if fn is None:
             continue
         best, n = None, 0
+        compiles[key] = []
         for _ in range(2):
+            c0 = compiled.getCount()
             t0 = time.perf_counter()
             n = len(fn(spark, sf_dir).toPandas())
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
+            compiles[key].append(compiled.getCount() - c0)
         timings[key] = round(best, 4)
         total += best
         print(f"# {key}: {best:.3f}s ({n} rows)", file=sys.stderr)
@@ -249,6 +259,7 @@ def main(keys: list[str] | None = None) -> None:
         "unit": "sec",
         "n_queries": len(timings),
         "queries": timings,
+        "compiles": compiles,
         "sf": sf,
         "load_1m_before": load_before,
         "load_1m_after": round(os.getloadavg()[0], 2),

@@ -13,39 +13,38 @@ invariants below make every sum exact and engine-independent.
    partition-layout independent, and both engines round the same
    integer to the same double.  The term is written once
    (:func:`sql_micros`) and shared by the oracle text (:func:`sql_dsum`,
-   :func:`sql_davg`) and the engine's two-level builder
-   (:func:`two_level`); :func:`micros` is its Column form for window
+   :func:`sql_davg`) and the engine's exact builder
+   (:func:`exact_agg`); :func:`micros` is its Column form for window
    and projection sites.  A decimal accumulator would be exact too, but
    decimal(25,6) exceeds 64-bit unscaled range and runs on Spark's
    BigDecimal slow path (3x slower on the Q1 shape at sf0.1,
    BASELINE.md); the long path stays in whole-stage codegen.
 
-2. WHICH GROUPS GO TWO-LEVEL.  A long accumulator holds Σ|x|·1e6 per
-   group: at money scale (~1e5 units) it overflows 2^63 near 9·10^7
-   rows.  Any sum whose group grows with the table -- a global
-   aggregate, or groups keyed by a low-cardinality dimension (flags,
-   segments, nations, years, measures, audit groups) -- therefore runs
-   through :func:`two_level`: long partials per (keys,
-   spark_partition_id()), merged as decimal(38,0) over the tiny
-   |groups| x |partitions| relation.  The merged doubles are the same
-   expression tree as the single-level form, so the oracles stay
-   single-level (DuckDB sums BIGINT into HUGEINT and has no ceiling).
-   Integer moment sums (``isum``) take the same route without the
-   scale; agg_stats_moments splits its two product terms (yc², xc·yc)
-   hi/lo at 2^32 so each long partial stays inside int64.
-   ``agg_rollup`` is the one site that hand-builds its partial,
-   because its merge is a ROLLUP; it renders both levels with
-   :func:`two_level_aggs`.
+2. LIMB-SPLIT SUMS.  A long accumulator holds Σ|x|·1e6 per group: at
+   money scale (~1e5 units) it overflows 2^63 near 9·10^7 rows.  Any
+   sum whose group grows with the table -- a global aggregate, or
+   groups keyed by a low-cardinality dimension (flags, segments,
+   nations, years, measures, audit groups) -- therefore runs through
+   :func:`exact_agg`, one ordinary partial/final aggregate over the
+   keys.  It casts each int64 term v to BIGINT and sums its three
+   21-bit limbs as longs: hi = shiftright(v, 42) (arithmetic, so
+   -2^21 <= hi < 2^21), mid = shiftright(v, 21) & (2^21 - 1) and
+   lo = v & (2^21 - 1).  Two's complement makes v = hi·2^42 + mid·2^21
+   + lo exact for any sign, and the three sums are recombined once per
+   group in decimal(38,0).  The merged integer is Σv itself, so the
+   doubles are the same expression tree as the single-level form and
+   the oracles stay single-level (DuckDB sums BIGINT into HUGEINT and
+   has no ceiling).  Integer moment sums (``isum``) take the same route
+   without the scale, exact for any per-row int64 term (agg_stats_moments'
+   yc² and xc·yc included).
 
-3. WHAT BOUNDS A LEVEL-1 PARTIAL.  Partition mass.  Scan-side sites
-   are bounded by spark.sql.files.maxPartitionBytes.  Post-join sites
-   (join_multikey, join_salted_skew, join_bucketed_colocated, the
-   multi-join TPC-H queries, scan_dynamic_partition_pruning) inherit
-   their partition size from shuffle/AQE output sizing instead, so an
-   upstream coalesce(1), a disabled skew split or one pathological key
-   re-introduces a per-partition ceiling there.  Past any bound the
-   failure is Spark's ANSI ARITHMETIC_OVERFLOW, never a silent wrap
-   (with ANSI on, the engine default).
+3. WHAT BOUNDS A LIMB SUM.  Rows per group, nothing else.  Every limb
+   is below 2^21 in magnitude, so each long partial and each long
+   merge of a group stays inside int64 up to 2^42 (~4.4e12) rows in
+   that group, whatever the partition layout: an upstream coalesce(1),
+   a disabled skew split or one pathological key adds no ceiling.  Past
+   the bound the failure is Spark's ANSI ARITHMETIC_OVERFLOW, never a
+   silent wrap (with ANSI on, the engine default).
 
 4. WHICH SINGLE-LEVEL SITES ARE EXEMPT.  Groups whose size is a TPC-H
    constant independent of SF: per order (join_shuffle_fact, q3), per
@@ -62,13 +61,11 @@ and DuckDB's libm in the last ulp, so those outputs are rounded
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Merge type of the two-level sum: Σ over per-partition long partials
-# cannot overflow it at any SF (the q11 precedent type).
+# Recombination type of the limb sums: Σ of any int64 term over fewer
+# than 2^42 rows fits it (the q11 precedent type).
 DEC38 = "decimal(38,0)"
 
 _SCALE = 1_000_000
@@ -97,59 +94,51 @@ def davg(col: Column, alias: str) -> Column:
     ).alias(alias)
 
 
-# One template per two_level kind: the level-1 partial(s) over the SQL
-# text ``{x}`` and the level-2 merge over the partial columns ``{0}``,
-# ``{1}``.  Counts merge to BIGINT with COALESCE(…, 0) (a global COUNT
-# over zero rows is 0, where a SUM of no partials is NULL).
-_COUNT_MERGE = "CAST(coalesce(sum({0}), 0) AS BIGINT)"
-_DEC_MERGE = f"sum(CAST({{0}} AS {DEC38}))"
-_MICRO_SUM = f"sum({sql_micros('{x}')})"
-_MICRO_MERGE = f"CAST({_DEC_MERGE} AS DOUBLE) / {float(_SCALE)}"
+def _limb_sum(v: str) -> str:
+    """Exact Σv of the int64 SQL term ``v`` (module docstring,
+    invariant 2): three long limb sums recombined in decimal(38,0)."""
+    v = f"CAST({v} AS BIGINT)"
+    hi, mid, lo = (
+        f"CAST(sum({limb}) AS {DEC38})"
+        for limb in (f"shiftright({v}, 42)", f"shiftright({v}, 21) & 2097151",
+                     f"{v} & 2097151")
+    )
+    return f"CAST({hi} * {2**42} + {mid} * {2**21} + {lo} AS {DEC38})"
+
+
+# One aggregate template per exact_agg kind over the SQL text ``{x}``.
+_MICRO_SUM = f"CAST({_limb_sum(sql_micros('{x}'))} AS DOUBLE) / {float(_SCALE)}"
 _KINDS = {
-    "count": (("count(1)",), _COUNT_MERGE),
-    "countc": (("count({x})",), _COUNT_MERGE),
-    "lsum": (("sum({x})",), _COUNT_MERGE),
-    "isum": (("sum({x})",), _DEC_MERGE),
-    "dsum": ((_MICRO_SUM,), _MICRO_MERGE),
-    "davg": ((_MICRO_SUM, "count({x})"), _MICRO_MERGE + " / sum({1})"),
-    "min": (("min({x})",), "min({0})"),
-    "max": (("max({x})",), "max({0})"),
-    "cdistinct": (
-        ("collect_set({x})",),
-        "CAST(size(array_distinct(flatten(collect_set({0})))) AS BIGINT)",
-    ),
-    "lit": ((), "{x}"),
+    "count": "count(1)",
+    "countc": "count({x})",
+    "lsum": "CAST(coalesce(sum({x}), 0) AS BIGINT)",
+    "isum": _limb_sum("{x}"),
+    "dsum": _MICRO_SUM,
+    "davg": _MICRO_SUM + " / count({x})",
+    "min": "min({x})",
+    "max": "max({x})",
+    "cdistinct": "CAST(size(collect_set({x})) AS BIGINT)",
+    "lit": "{x}",
 }
 
 
-def two_level_aggs(aggs) -> tuple[list[Column], list[Column]]:
-    """(level-1 partial columns, level-2 merge columns) for ``aggs``,
-    rendered as ``F.expr`` text from the kind templates above.  Specs
-    whose partials render to the same text share one partial column
-    (a ``dsum`` and a ``davg`` of one expression sum its micros once)."""
-    partials: dict[str, str] = {}  # partial text -> its column name
-    merges = []
+def exact_aggs(aggs) -> list[Column]:
+    """The aggregate columns of ``aggs`` (specs as in :func:`exact_agg`),
+    rendered as ``F.expr`` text from the kind templates above.  A
+    ``dsum`` and a ``davg`` of one expression render the same limb sums,
+    which Catalyst computes once."""
+    out = []
     for kind, *x, alias in aggs:
         if kind not in _KINDS:
-            raise ValueError(f"unknown two_level agg kind: {kind!r}")
-        level1, merge = _KINDS[kind]
-        x = x[0] if x else None
-        names = [
-            partials.setdefault(t.format(x=x), f"_p{len(partials)}")
-            for t in level1
-        ]
-        merges.append(F.expr(f"{merge.format(*names, x=x)} AS `{alias}`"))
-    return [F.expr(f"{t} AS {n}") for t, n in partials.items()], merges
+            raise ValueError(f"unknown exact_agg kind: {kind!r}")
+        out.append(F.expr(f"{_KINDS[kind].format(x=x[0] if x else None)} AS `{alias}`"))
+    return out
 
 
-def _key_name(key: str) -> str:
-    m = re.search(r"\s+AS\s+`?(\w+)`?\s*$", key, re.IGNORECASE)
-    return m.group(1) if m else key
-
-
-def two_level(df: DataFrame, keys, aggs) -> DataFrame:
-    """TWO-LEVEL exact aggregation (module docstring, invariant 2):
-    ``df`` grouped by ``keys``, one output column per spec in ``aggs``.
+def exact_agg(df: DataFrame, keys, aggs) -> DataFrame:
+    """Exact aggregation (module docstring, invariants 2 and 3): ``df``
+    grouped by ``keys``, one output column per spec in ``aggs``, as one
+    partial/final aggregate with one exchange.
 
     ``keys``: SQL text, each a column name or ``"expr AS name"``
     (``[]`` for a global aggregate).  ``aggs``: ordered specs whose
@@ -158,27 +147,21 @@ def two_level(df: DataFrame, keys, aggs) -> DataFrame:
     - ``("count", alias)`` -- exact COUNT(*)
     - ``("countc", x, alias)`` -- COUNT(x) (non-null / conditional)
     - ``("lsum", x, alias)`` -- integer SUM with COALESCE(…, 0), the
-      key-checksum shape (same 2^63 merge bound as the BIGINT oracle)
-    - ``("isum", x, alias)`` -- exact integer SUM as decimal(38,0), for
-      integer moment sums whose total outgrows int64
+      key-checksum shape (same 2^63 bound as the BIGINT oracle)
+    - ``("isum", x, alias)`` -- exact integer SUM as decimal(38,0) of
+      an int64 term, for integer moment sums whose total outgrows int64
     - ``("dsum", x, alias)`` / ``("davg", x, alias)`` -- exact micro-sum
       / exact-sum mean (double)
     - ``("min", x, alias)`` / ``("max", x, alias)`` -- order statistics
     - ``("cdistinct", x, alias)`` -- COUNT(DISTINCT x) for BOUNDED
-      domains only: partials carry collect_set(x), so per-partition
-      state is O(|domain|)
-    - ``("lit", x, alias)`` -- a constant attached at the merge stage
+      domains only: the partial carries collect_set(x), so its state
+      is O(|domain|)
+    - ``("lit", x, alias)`` -- a constant attached to every group
 
-    Level 1 groups by (keys, spark_partition_id()) and computes only
-    codegen-primitive partials bounded by partition mass; level 2
-    merges them.  The partition id decides only which exact integers
-    get pre-summed, so results are layout-independent (pinned by
-    tests/test_two_level_sum.py and tests/test_determinism.py)."""
-    level1, level2 = two_level_aggs(aggs)
-    partials = df.groupBy(
-        *map(F.expr, keys), F.expr("spark_partition_id() AS _pid")
-    ).agg(*level1)
-    return partials.groupBy(*map(_key_name, keys)).agg(*level2)
+    Every sum is of exact integers, so results are layout-independent
+    (pinned by tests/test_two_level_sum.py and
+    tests/test_determinism.py)."""
+    return df.groupBy(*map(F.expr, keys)).agg(*exact_aggs(aggs))
 
 
 def micros(col: Column) -> Column:

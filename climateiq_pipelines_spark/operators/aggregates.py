@@ -21,13 +21,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.functions.helpers import (
-    DEC38,
     REVENUE,
+    exact_agg,
+    exact_aggs,
     fin,
     sql_davg,
     sql_dsum,
-    two_level,
-    two_level_aggs,
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
@@ -55,13 +54,13 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline. At 100 TB the shuffle carries only |groups| rows per map
     task thanks to partial aggregation.
 
-    Q1's ~6 groups span all of lineitem, so every sum is two-level
-    (helpers module docstring); a sum and an average of one measure
-    share its level-1 micro partial."""
+    Q1's ~6 groups span all of lineitem, so every sum is limb-split
+    (helpers module docstring, invariants 2 and 3); a sum and an
+    average of one measure share its limb sums."""
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("2000-01-01").cast("timestamp_ntz")
     )
-    return two_level(
+    return exact_agg(
         li,
         ["l_returnflag", "l_linestatus"],
         [
@@ -163,12 +162,12 @@ def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_conditional_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTER-clause aggregation (conditional sum/count per group),
-    two-level over ~5 table-sized event_type groups.  A (group,
-    partition) whose rows all fail the condition yields a NULL partial,
-    the merge SUM skips it, and an all-NULL group merges to NULL --
-    the oracle's CASE WHEN semantics."""
+    limb-split over ~5 table-sized event_type groups (helpers module
+    docstring, invariants 2 and 3).  SUM skips the NULL terms of rows
+    that fail the condition, and an all-NULL group sums to NULL -- the
+    oracle's CASE WHEN semantics."""
     events = load_table(spark, sf_dir, "events")
-    return two_level(
+    return exact_agg(
         events,
         ["event_type"],
         [
@@ -237,23 +236,16 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conversion replaces five double->decimal casts and the moment
     # products stay in long arithmetic.
     #
-    # Two-level integer sums ("isum", helpers module docstring) over
-    # the table-sized flag groups.  The two product terms, yc² (~1.2e14
-    # per row) and xc·yc, are each SPLIT HI/LO at 2^32: v = q·2^32 + r
-    # with q = shiftright(v, 32) and r = v & (2^32 - 1).  The shift is
-    # arithmetic, so this is exact for any sign: q = floor(v / 2^32)
-    # and 0 ≤ r < 2^32.  The exact Σv = 2^32·Σq + Σr is reassembled in
-    # decimal(38,0) after the merge.  Bounds: each product is evaluated
-    # in long, so |v| < 2^63 per row (|yc| < 3.03e9 cents, price
-    # < ~3e7 units; ANSI-loud beyond); then |q| < 2^31 and r < 2^32,
-    # so a (flag, scan partition) partial stays inside int64 below
-    # 2^31 (~2.1e9) rows at any value in that domain -- ~2,000x a
-    # 1e6-row 128 MB partition.
+    # Exact integer sums ("isum", helpers module docstring, invariants 2
+    # and 3) over the table-sized flag groups.  Each product term, yc²
+    # (~1.2e14 per row) and xc·yc, is evaluated in long, so |v| < 2^63
+    # per row (|yc| < 3.03e9 cents, price < ~3e7 units; ANSI-loud
+    # beyond); its limb sums are exact below 2^42 rows per flag.
     li = load_table(spark, sf_dir, "lineitem")
     xc = F.round(F.col("l_quantity") * 100).cast("long")
     yc = F.round(F.col("l_extendedprice") * 100).cast("long")
     cents = li.select("l_returnflag", xc.alias("xc"), yc.alias("yc"))
-    sc = two_level(
+    sc = exact_agg(
         cents,
         ["l_returnflag"],
         [
@@ -261,26 +253,22 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("isum", "xc", "sxc"),
             ("isum", "xc * xc", "sxxc"),
             ("isum", "yc", "syc"),
-            ("isum", "shiftright(yc * yc, 32)", "syyq"),
-            ("isum", "(yc * yc) & 4294967295", "syyr"),
-            ("isum", "shiftright(xc * yc, 32)", "sxyq"),
-            ("isum", "(xc * yc) & 4294967295", "sxyr"),
+            ("isum", "yc * yc", "syyc"),
+            ("isum", "xc * yc", "sxyc"),
         ],
     )
     # Conversion back to unit scale happens in DOUBLE arithmetic —
     # double(exact integer sum) / 100.0 — the IDENTICAL expression
     # tree the oracle text runs, so the doubles match bit-for-bit.
     c = F.col
-    syyc = c("syyq") * F.lit(4294967296).cast(DEC38) + c("syyr")
-    sxyc = c("sxyq") * F.lit(4294967296).cast(DEC38) + c("sxyr")
     s = sc.select(
         "l_returnflag",
         "n",
         (c("sxc").cast("double") / F.lit(100.0)).alias("sx"),
         (c("sxxc").cast("double") / F.lit(10000.0)).alias("sxx"),
         (c("syc").cast("double") / F.lit(100.0)).alias("sy"),
-        (syyc.cast("double") / F.lit(10000.0)).alias("syy"),
-        (sxyc.cast("double") / F.lit(10000.0)).alias("sxy"),
+        (c("syyc").cast("double") / F.lit(10000.0)).alias("syy"),
+        (c("sxyc").cast("double") / F.lit(10000.0)).alias("sxy"),
     )
     n, sx, sxx, sy, syy, sxy = (F.col(c) for c in ["n", "sx", "sxx", "sy", "syy", "sxy"])
     var_x = (sxx - sx * sx / n) / (n - 1)
@@ -364,18 +352,13 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
     )
-    # Two-level exact sum (helpers module docstring): the grand-total
-    # level sums o_totalprice over ALL orders.  Level 1 is a plain
-    # groupBy per (r_name, n_name, partition); level 2 runs the ROLLUP
-    # over the tiny partials relation -- the one merge two_level does
-    # not build, rendered from its templates.  Rolling up pre-summed
-    # integers is exact and layout-independent, and r_name/n_name are
-    # non-null, so the rollup's NULL grouping markers stay unambiguous.
-    level1, level2 = two_level_aggs([("dsum", "o_totalprice", "revenue")])
-    partials = joined.groupBy(
-        "r_name", "n_name", F.expr("spark_partition_id() AS _pid")
-    ).agg(*level1)
-    return partials.rollup("r_name", "n_name").agg(*level2)
+    # Exact sum (helpers module docstring, invariant 2): the grand-total
+    # level sums o_totalprice over ALL orders, so the ROLLUP's
+    # aggregate is the limb-split sum.  r_name/n_name are non-null, so
+    # the rollup's NULL grouping markers stay unambiguous.
+    return joined.rollup("r_name", "n_name").agg(
+        *exact_aggs([("dsum", "o_totalprice", "revenue")])
+    )
 
 
 @register(
@@ -668,8 +651,8 @@ def agg_unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference between one pass and four. The melt feeds a partial
     aggregate immediately, so the 4x row expansion never hits a
     shuffle: combine happens map-side per measure; the 4 measure groups
-    are table-sized, so the sum is two-level (helpers module
-    docstring) and only the partials relation shuffles."""
+    are table-sized, so the sum is limb-split (helpers module
+    docstring, invariants 2 and 3) and only the partials shuffle."""
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") % 10 == 0
     )
@@ -679,7 +662,7 @@ def agg_unpivot_melt(spark: SparkSession, sf_dir: str) -> DataFrame:
         variableColumnName="measure",
         valueColumnName="val",
     )
-    return two_level(
+    return exact_agg(
         melted,
         ["measure"],
         [("count", "n_rows"), ("dsum", "val", "sum_val")],

@@ -27,9 +27,9 @@ from pyspark.sql import functions as F
 from climateiq_pipelines_spark.functions.helpers import (
     REVENUE,
     dsum,
+    exact_agg,
     revenue_col,
     sql_dsum,
-    two_level,
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
@@ -130,9 +130,9 @@ def join_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("s_nationkey") == F.col("c_nationkey")),
         )
     )
-    # per-nation revenue groups are fact-table-sized: two-level, and
-    # only the partials relation shuffles after the join
-    return two_level(joined, ["n_name"], [("dsum", REVENUE, "revenue")])
+    # per-nation revenue groups are fact-table-sized: limb-split sums,
+    # exact below 2^42 rows per group (helpers invariant 3)
+    return exact_agg(joined, ["n_name"], [("dsum", REVENUE, "revenue")])
 
 
 @register(
@@ -454,8 +454,9 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         (salted_fact.user_id == salted_dim.c_custkey)
         & (salted_fact.salt == salted_dim.salt),
     )
-    # 5 segment groups over the whole salted join output: two-level
-    return two_level(
+    # 5 segment groups over the whole salted join output: limb-split
+    # sums, exact below 2^42 rows per group (helpers invariant 3)
+    return exact_agg(
         joined,
         ["c_mktsegment"],
         [("count", "n_events"), ("dsum", "value", "sum_value")],
@@ -536,9 +537,10 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.table(t_cust).hint("merge"),
         F.col("o_custkey") == F.col("c_custkey"),
     )
-    # 25 nation groups over ALL orders: two-level.  The level-1 partial
+    # 25 nation groups over ALL orders: limb-split sums, exact below
+    # 2^42 rows per group (helpers invariant 3).  The partial aggregate
     # rides the bucket-co-located join output; only partials shuffle.
-    return two_level(
+    return exact_agg(
         joined,
         ["c_nationkey"],
         [("count", "n_orders"), ("dsum", "o_totalprice", "sum_totalprice")],

@@ -20,9 +20,9 @@ from pyspark.sql import functions as F
 from climateiq_pipelines_spark.functions.helpers import (
     REVENUE,
     dsum,
+    exact_agg,
     revenue_col,
     sql_dsum,
-    two_level,
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
@@ -106,8 +106,8 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical double comparisons.
 
     ONE group over all of filtered lineitem is the most ceiling-exposed
-    shape there is, so the sum is two-level (helpers module
-    docstring)."""
+    shape there is, so the sum is limb-split (helpers module
+    docstring, invariants 2 and 3)."""
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
@@ -115,7 +115,7 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_discount") <= 0.075)
         & (F.col("l_quantity") < 24)
     )
-    return two_level(
+    return exact_agg(
         li,
         [],
         [

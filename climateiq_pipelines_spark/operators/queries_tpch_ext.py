@@ -16,9 +16,9 @@ from pyspark.sql import functions as F
 from climateiq_pipelines_spark.functions.helpers import (
     REVENUE,
     dsum,
+    exact_agg,
     revenue_col,
     sql_dsum,
-    two_level,
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
@@ -78,8 +78,9 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
         .filter(F.col("supp_nation") != F.col("cust_nation"))
     )
-    # nation-pair x year groups are fact-fraction-sized: two-level
-    return two_level(
+    # nation-pair x year groups are fact-fraction-sized: limb-split
+    # sums, exact below 2^42 rows per group (helpers invariant 3)
+    return exact_agg(
         shipped,
         ["supp_nation", "cust_nation", "CAST(year(l_shipdate) AS BIGINT) AS l_year"],
         [("dsum", REVENUE, "revenue")],

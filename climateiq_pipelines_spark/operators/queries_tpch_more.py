@@ -21,8 +21,8 @@ from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.functions.helpers import (
     REVENUE,
+    exact_agg,
     sql_dsum,
-    two_level,
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
@@ -150,10 +150,11 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp_ntz"))
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    # both accumulators are GLOBAL over a month of lineitem: two-level.
+    # both accumulators are GLOBAL over a month of lineitem: limb-split
+    # sums, exact below 2^42 rows (helpers invariant 3).
     # An empty month yields NULL/NULL -> NULL on both engines.
     return (
-        two_level(
+        exact_agg(
             li.join(part, li.l_partkey == part.p_partkey),
             [],
             [
@@ -219,9 +220,10 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("l_quantity").between(20, 40)
         )
     )
-    # a GLOBAL sum over the tier band: two-level.  An empty band
-    # merges to one NULL-revenue row on both engines.
-    return two_level(
+    # a GLOBAL sum over the tier band: limb-split, exact below 2^42
+    # rows (helpers invariant 3).  An empty band aggregates to one
+    # NULL-revenue row on both engines.
+    return exact_agg(
         li.join(part, li.l_partkey == part.p_partkey).filter(tier),
         [],
         [("dsum", REVENUE, "revenue")],

@@ -9,7 +9,7 @@ partsupp table, no l_commitdate/l_receiptdate, and no p_container —
 supply relationships come from lineitem's (l_partkey, l_suppkey) pairs,
 nations are NATION_0..24, and part names are '<adjective> <noun>'
 ('small ring', 'red widget', ...). Every key keeps the ORIGINAL query's
-optimizer-relevant shape (the point of the wave): two-level conditional
+optimizer-relevant shape (the point of the wave): exact conditional
 share aggregate (Q8), multi-dim star join with a LIKE filter (Q9),
 max-equality over an aggregated view (Q15), anti-join + count-distinct
 grouping (Q16), correlated per-part average threshold (Q17), nested
@@ -31,10 +31,10 @@ from climateiq_pipelines_spark.functions.helpers import (
     REVENUE,
     davg_window,
     dsum,
+    exact_agg,
     micros,
     revenue_col,
     sql_dsum,
-    two_level,
 )
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
@@ -70,7 +70,7 @@ from climateiq_pipelines_spark.registry import load_table
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 (national market share): NATION_3 suppliers' share of
     PROMO-part revenue sold to ASIA customers, per order year — the
-    two-level pattern where an inner star join tags each revenue row
+    exact-sum pattern where an inner star join tags each revenue row
     with the supplier nation and the outer aggregate divides a
     conditional sum by the total.
 
@@ -121,9 +121,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sn), supp.s_nationkey == sn.sn_key)
     )
     # two o_year groups over the region-filtered fact chain are
-    # table-fraction-sized: both accumulators are two-level
+    # table-fraction-sized: both accumulators are limb-split sums,
+    # exact below 2^42 rows per group (helpers invariant 3)
     return (
-        two_level(
+        exact_agg(
             rev,
             ["o_year"],
             [
@@ -196,8 +197,9 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sn), supp.s_nationkey == sn.sn_key)
     )
     # nation x year groups over the part-filtered fact are
-    # table-fraction-sized: two-level
-    return two_level(
+    # table-fraction-sized: limb-split sums, exact below 2^42 rows per
+    # group (helpers invariant 3)
+    return exact_agg(
         red, ["nation", "o_year"], [("dsum", REVENUE, "sum_profit")]
     )
 
@@ -357,9 +359,10 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     small = brand_li.withColumn("qty_limit", F.lit(0.2) * avg_qty).filter(
         F.col("l_quantity") < F.col("qty_limit")
     )
-    # the final sum is GLOBAL over the small-quantity band: two-level.
-    # Zero kept rows merge to one NULL-revenue row on both engines.
-    return two_level(small, [], [("dsum", "l_extendedprice", "rev")]).select(
+    # the final sum is GLOBAL over the small-quantity band: limb-split,
+    # exact below 2^42 rows (helpers invariant 3).  Zero kept rows
+    # aggregate to one NULL-revenue row on both engines.
+    return exact_agg(small, [], [("dsum", "l_extendedprice", "rev")]).select(
         F.round(F.col("rev") / F.lit(7.0), 6).alias("avg_yearly")
     )
 

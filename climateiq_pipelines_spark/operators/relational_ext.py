@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from climateiq_pipelines_spark.functions.helpers import micros, two_level
+from climateiq_pipelines_spark.functions.helpers import exact_agg, micros
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
 
@@ -453,13 +453,13 @@ def agg_linear_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     xc = F.round(x * 100).cast("long")
     yc = F.round(y * 100).cast("long")
     cents = li.select("l_returnflag", xc.alias("xc"), yc.alias("yc"))
-    # Two-level integer sums ("isum", helpers module docstring): long
-    # cent-moment partials per (flag, scan partition), merged in
-    # decimal(38,0).  Level-1 overflow bound (ANSI-loud): the largest
-    # per-row term is xc*yc ≤ 5e3 * 5.5e6 = 2.75e10; a 128 MB lineitem
-    # scan partition holds ~1e6 rows → partial ≤ ~3e16, 300x inside
-    # int64.  (agg_stats_moments splits its yc² and xc·yc terms hi/lo.)
-    sc = two_level(
+    # Exact integer sums ("isum", helpers module docstring, invariants
+    # 2 and 3): limb-split long cent-moment sums, recombined in
+    # decimal(38,0).  Every per-row term is int64 (the largest, xc*yc,
+    # is ≤ 5e3 * 5.5e6 = 2.75e10), so each flag's sums are exact below
+    # 2^42 rows in that flag, whatever the partition layout (ANSI-loud
+    # beyond).
+    sc = exact_agg(
         cents,
         ["l_returnflag"],
         [

@@ -77,7 +77,8 @@ def register(
 # zero never-certified keys and zero stale stamps at round open.  The
 # window leads with 14 --priority changed-after-stamp keys: the
 # SOURCES-WAVE two-level exact-sum conversions (helpers module
-# docstring; helpers.two_level packages the r14 Q1 recipe) — the last
+# docstring; the two-level builder, now helpers.exact_agg, packaged
+# the r14 Q1 recipe) — the last
 # single-level dsum audit tails over table-fraction groups, all in the
 # format/lakehouse demo files (~SF 200-1000 ceilings): the
 # csv/json/orc roundtrips + sink_partitioned_parquet +
@@ -90,7 +91,7 @@ def register(
 # Oracle text unchanged for all 14; hash parity re-verified at all
 # three SFs before the rotation edit.  RECORDED EXEMPTIONS: none —
 # this round's only other edits are additive helper + test-layer (the
-# new helpers.two_level function beside untouched dsum/davg, the
+# new two-level builder function beside untouched dsum/davg, the
 # three r15 ADVICE fixes in test fixtures/pins, and three PROBE_KEYS
 # additions), which change no previously-registered body or oracle.
 # The remaining 36 slots are (stamp round ASC, pristine registration

@@ -15,7 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from climateiq_pipelines_spark.functions.helpers import sql_dsum, two_level
+from climateiq_pipelines_spark.functions.helpers import exact_agg, sql_dsum
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
 from climateiq_pipelines_spark.session import new_temp_dir
@@ -92,9 +92,9 @@ def scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .csv(path)
     )
     # the conditional counts and the integer checksum ride the same
-    # two-level partial/merge pair as the exact price sum
+    # one-exchange aggregate as the exact price sum
     corrupt = "_corrupt_record IS NOT NULL"
-    return two_level(
+    return exact_agg(
         back,
         [],
         [
@@ -158,10 +158,9 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2.write.mode("overwrite").parquet(os.path.join(path, "batch=2"))
     back = spark.read.option("mergeSchema", "true").parquet(path)
     # the distinct brand count rides the partial stage as collect_set
-    # → flatten → array_distinct at merge — exact because the p_brand
-    # domain is BOUNDED (25 TPC-H brands), so per-partition set state
-    # is O(25), not O(rows)
-    return two_level(
+    # — exact because the p_brand domain is BOUNDED (25 TPC-H brands),
+    # so the set state is O(25), not O(rows)
+    return exact_agg(
         back,
         ["p_brand IS NOT NULL AS has_brand"],
         [
@@ -219,10 +218,10 @@ def scan_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
         .select(F.year("o_orderdate").alias("y"))
         .distinct()
     )
-    # a POST-JOIN two-level site: the level-1 partial mass is bounded
-    # by the broadcast-join output partitioning (scan-sized here, since
-    # a broadcast join preserves the fact scan's partitions)
-    return two_level(
+    # a POST-JOIN exact sum: limb-split, so the join's output
+    # partitioning bounds nothing; the bound is 2^42 rows per year
+    # (helpers invariant 3)
+    return exact_agg(
         fact.join(dim, fact["o_year"] == dim["y"]),
         ["CAST(o_year AS INT) AS o_year"],
         [

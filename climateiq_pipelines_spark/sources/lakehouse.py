@@ -31,7 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from climateiq_pipelines_spark.functions.helpers import sql_dsum, two_level
+from climateiq_pipelines_spark.functions.helpers import exact_agg, sql_dsum
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
 from climateiq_pipelines_spark.session import new_temp_dir
@@ -140,7 +140,7 @@ def sink_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     read time)."""
     paths = _write_base_and_deltas(spark, sf_dir)
     merged = _merge_on_read(spark, paths)
-    return two_level(
+    return exact_agg(
         merged,
         ["o_orderpriority"],
         [
@@ -172,15 +172,15 @@ def sink_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta (the classic snapshot-isolation bug) changes its count/sum
     and hash-mismatches."""
     paths = _write_base_and_deltas(spark, sf_dir)
-    # global two-level audits over snapshot-sized inputs
+    # global limb-split audits over snapshot-sized inputs
     audit = [
         ("count", "n_rows"),
         ("dsum", "o_totalprice", "sum_price"),
     ]
-    v0 = two_level(spark.read.parquet(paths["base"]), [], audit).select(
+    v0 = exact_agg(spark.read.parquet(paths["base"]), [], audit).select(
         F.lit("v0").alias("version"), "n_rows", "sum_price"
     )
-    v1 = two_level(_merge_on_read(spark, paths), [], audit).select(
+    v1 = exact_agg(_merge_on_read(spark, paths), [], audit).select(
         F.lit("v1").alias("version"), "n_rows", "sum_price"
     )
     return v0.unionByName(v1)

@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from climateiq_pipelines_spark.functions.helpers import sql_dsum, two_level
+from climateiq_pipelines_spark.functions.helpers import exact_agg, sql_dsum
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
 
@@ -362,7 +362,7 @@ def sink_txn_commit_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows_at_v2 = _snapshot(spark, root, orders.schema, 2).count()  # travel
     latest = _snapshot(spark, root, orders.schema)  # replays to v3
     # the version literals attach at the merge stage
-    return two_level(
+    return exact_agg(
         latest,
         ["o_orderpriority"],
         [
@@ -594,7 +594,7 @@ def sink_txn_conflict_retry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     latest = _snapshot(spark, root, orders.schema)
     # the race-accounting literals attach at the merge stage
-    return two_level(
+    return exact_agg(
         latest,
         ["o_orderpriority"],
         [
@@ -708,7 +708,7 @@ def sink_txn_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals_replay = active_cp == _active_files(root)
     latest = _read_files(spark, root, active_cp, orders.schema)
     # the checkpoint literals attach at the merge stage
-    return two_level(
+    return exact_agg(
         latest,
         ["o_orderpriority"],
         [

@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from climateiq_pipelines_spark.functions.helpers import sql_dsum, two_level
+from climateiq_pipelines_spark.functions.helpers import exact_agg, sql_dsum
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
 from climateiq_pipelines_spark.session import new_temp_dir
@@ -128,7 +128,7 @@ def scan_manifest_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").between(_LO, _HI)
     )
     # the pruning literals attach at the merge stage
-    return two_level(
+    return exact_agg(
         band,
         ["o_orderpriority"],
         [

@@ -21,7 +21,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from climateiq_pipelines_spark.functions.helpers import sql_dsum, two_level
+from climateiq_pipelines_spark.functions.helpers import exact_agg, sql_dsum
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import TABLES, load_table
 from climateiq_pipelines_spark.session import new_temp_dir
@@ -107,7 +107,8 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     write/read lossiness breaks the hash. Timestamps travel as ISO day
     strings — CSV has no timestamp type; parsing discipline is pinned
     by the schema.  The per-flag quantity groups are
-    table-fraction-sized, so the audit sum is two-level."""
+    table-fraction-sized, so the audit sum is limb-split (helpers
+    module docstring, invariants 2 and 3)."""
     li = load_table(spark, sf_dir, "lineitem")
     slice_df = li.filter(F.col("l_orderkey") % 10 == 0).select(
         "l_orderkey",
@@ -118,7 +119,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(new_temp_dir("csv"), "lineitem_slice")
     slice_df.write.mode("overwrite").option("header", True).csv(path)
     back = spark.read.schema(_CSV_SCHEMA).option("header", True).csv(path)
-    return two_level(
+    return exact_agg(
         back,
         ["l_returnflag"],
         [
@@ -142,7 +143,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same slice through JSON-lines. JSON doubles round-trip exactly
     (Spark writes shortest-repr, reads bit-equal); schema is explicit on
-    re-read for the same scale reason as CSV; two-level audit sum."""
+    re-read for the same scale reason as CSV; limb-split audit sum."""
     li = load_table(spark, sf_dir, "lineitem")
     slice_df = li.filter(F.col("l_orderkey") % 10 == 0).select(
         "l_orderkey", "l_extendedprice", "l_returnflag", "l_linestatus"
@@ -158,7 +159,7 @@ def scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     back = spark.read.schema(schema).json(path)
-    return two_level(
+    return exact_agg(
         back,
         ["l_returnflag", "l_linestatus"],
         [
@@ -190,7 +191,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         "overwrite"
     ).partitionBy("o_year").parquet(path)
     back = spark.read.parquet(path).filter(F.col("o_year") == 1997)
-    return two_level(
+    return exact_agg(
         back,
         ["o_orderpriority"],
         [
@@ -329,7 +330,7 @@ def sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(new_temp_dir("merge"), "orders_merged")
     merged.write.mode("overwrite").parquet(path)
     back = spark.read.parquet(path)
-    return two_level(
+    return exact_agg(
         back,
         ["merge_action"],
         [
@@ -366,7 +367,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(new_temp_dir("orc"), "lineitem_slice")
     slice_df.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
-    return two_level(
+    return exact_agg(
         back,
         ["l_returnflag"],
         [

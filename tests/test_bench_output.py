@@ -35,6 +35,11 @@ def test_bench_prints_one_json_line_and_no_console_noise(tmp_path):
     lines = out.stdout.splitlines()
     assert len(lines) == 1, out.stdout
     assert json.loads(lines[0])["n_queries"] == 1
+    # per-run codegen compilation counts go to the detail file only
+    compiles = json.loads((tmp_path / "detail.json").read_text())["compiles"]
+    assert list(compiles) == ["llm_ngram_jaccard"], compiles
+    runs = compiles["llm_ngram_jaccard"]
+    assert len(runs) == 2 and all(type(c) is int and c >= 0 for c in runs), runs
 
 
 def test_driver_session_turns_console_progress_off():

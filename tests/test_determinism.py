@@ -37,17 +37,17 @@ PROBE_KEYS = [
     "sink_range_partitioned_stats",  # audit invariant to sampled bounds
     "events_markov_transitions",     # integer probabilities, any layout
     "agg_linear_fit",                # decimal moments -> rounded fit
-    # round 15: two-level exact-sum conversions — the partials are
-    # grouped by spark_partition_id(), which CHANGES with the layout;
-    # the merged integer sum must not (integer addition associativity).
-    "agg_rollup",        # ROLLUP over per-partition decimal partials
+    # round 15: exact-sum conversions, now limb-split (helpers
+    # invariants 2 and 3) — the limb partials are summed per partition,
+    # which CHANGES with the layout; the recombined integer sum must
+    # not (integer addition associativity).
+    "agg_rollup",        # ROLLUP over limb-split decimal sums
     "q8_market_share",   # two-accumulator merged ratio per year
-    # round 16: sources-wave two_level() conversions — representatives
-    # of each new shape: a roundtrip audit (file-layout + shuffle
-    # layout both vary), the countDistinct carry (collect_set partials
-    # merge order-free via array_distinct), and a post-broadcast-join
-    # partial (DPP key).
-    "scan_csv_roundtrip",          # two_level over a re-read CSV scan
+    # round 16: sources-wave exact_agg() conversions — representatives
+    # of each shape: a roundtrip audit (file-layout + shuffle layout
+    # both vary), the countDistinct carry (collect_set partials merge
+    # order-free), and a post-broadcast-join partial (DPP key).
+    "scan_csv_roundtrip",          # exact_agg over a re-read CSV scan
     "scan_schema_evolution",       # cdistinct collect_set merge
     "scan_dynamic_partition_pruning",  # post-join partial stage
 ]

@@ -1094,10 +1094,9 @@ def test_bucketed_join_has_no_exchange(spark):
     """join_bucketed_colocated: both scans read Bucketed, the join is
     SortMergeJoin, and NO Exchange sits below the join — bucket
     co-location eliminated the join shuffle entirely.  The only
-    exchanges are the aggregation's: since the r15 two-level exact-sum
-    conversion there are TWO (partial merge on (c_nationkey, _pid),
-    final on c_nationkey), both over the |groups|x|partitions| partials
-    relation, never over fact rows."""
+    exchange is the exact aggregate's ONE partial→final shuffle on
+    c_nationkey, over the |groups|x|partitions| partials, never over
+    fact rows."""
     plan = plan_of(spark, "join_bucketed_colocated")
     assert "Bucketed: true" in plan, plan
     assert "SortMergeJoin" in plan, plan
@@ -1106,16 +1105,13 @@ def test_bucketed_join_has_no_exchange(spark):
     # the planner ever introduced one, silently shifting what the pin
     # means (ADVICE r15)
     shuffles = list(re.finditer(r"\bExchange hashpartitioning", plan))
-    assert len(shuffles) == 2, plan
-    # the join subtree itself is exchange-free: each shuffle hashes the
-    # PARTIALS relation (its clustering expressions include the _pid
-    # column or the final single-key grouping), never a bucket/join key
-    # pair over fact rows — checked structurally on the hash exprs
-    # rather than on string offsets, which assumed a parent-first
-    # print order the plan format does not promise (ADVICE r15).
-    for m in shuffles:
-        clause = plan[m.start() : plan.index(")", m.start()) + 1]
-        assert "c_custkey" not in clause and "o_custkey" not in clause, clause
+    assert len(shuffles) == 1, plan
+    # the join subtree itself is exchange-free: the one shuffle hashes
+    # the partials on the grouping key alone, never a bucket/join key
+    # over fact rows (checked on the hash expressions, not on where
+    # the node prints)
+    clause = plan[shuffles[0].start() : plan.index(")", shuffles[0].start()) + 1]
+    assert re.fullmatch(r"Exchange hashpartitioning\(c_nationkey#\d+, \d+\)", clause), clause
 
 
 def test_scalable_rank_windows_are_partitioned(spark):

@@ -1,23 +1,23 @@
-"""Two-level exact-sum pins (helpers module docstring: long-micro
-partials per (keys, spark_partition_id()) → decimal(38,0) merge, built
-by helpers.two_level from SQL text).  These tests pin the REASON and
-the FIX directly, at the magnitude where they diverge:
+"""Exact-sum pins (helpers module docstring, invariants 2 and 3: each
+int64 term summed as three 21-bit long limbs in one partial/final
+aggregate, recombined once per group as decimal(38,0), built by
+helpers.exact_agg from SQL text).  These tests pin the REASON and the
+FIX directly, at the magnitude where they diverge:
 
 1. The ceiling is REAL: on a fixture whose per-group micro mass
    exceeds 2^63, the single-level accumulator raises Spark's ANSI
    ARITHMETIC_OVERFLOW (loud, never a silent wrap — the documented
-   failure mode), while the two-level form over the same data returns
-   the exact sum, provided each PARTITION's mass stays under 2^63 —
-   exactly the bound maxPartitionBytes enforces at scale.
+   failure mode), while the limb-split form over the same data returns
+   the exact sum in any partition layout, one partition included.
 2. The two forms are BIT-IDENTICAL where both are defined: on
-   money-scale data the merged double equals the single-level double
-   exactly (same integer total, same final conversion tree) — the
-   property that lets every two-level key keep its single-level oracle.
-3. The merge is layout-independent: integer partials re-grouped under
-   different partitionings sum to the same decimal, so
-   spark_partition_id() in the grouping key never leaks into values
-   (the probe keys in test_determinism cover the registered queries;
-   this covers the primitive).
+   money-scale data the limb-split double equals the single-level
+   double exactly (same integer total, same final conversion tree) —
+   the property that lets every exact-sum key keep its single-level
+   oracle.
+3. The sum is layout-independent: integer limb partials grouped under
+   different partitionings sum to the same decimal (the probe keys in
+   test_determinism cover the registered queries; this covers the
+   primitive).
 """
 
 from __future__ import annotations
@@ -29,31 +29,22 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from climateiq_pipelines_spark.functions.helpers import (
-    dsum,
-    micros,
-    two_level,
-    two_level_aggs,
-)
+from climateiq_pipelines_spark.functions.helpers import dsum, exact_agg, micros
 from tests.conftest import SF_SMALL
 
 # Each row carries 2.5e12 units → floor(x*1e6) = 2.5e18 micros.  Four
 # rows in ONE group total 1e19 micros > 2^63 ≈ 9.22e18: the
-# single-level long accumulator MUST overflow; per-partition partials
-# (one row each) are 2.5e18 < 2^63 and merge exactly as decimal.
+# single-level long accumulator MUST overflow; the limb sums of four
+# rows are far inside int64 and recombine exactly as decimal.
 _BIG = 2.5e12
 _N = 4
 
 
 def _big_frame(spark):
-    # one row per partition — the maxPartitionBytes-bounded shape the
-    # two-level recipe relies on.  range(0, N, 1, numPartitions=N)
-    # GUARANTEES the one-row-per-partition layout (range splits its
-    # interval across exactly N partitions); the earlier
-    # range(N).repartition(N) relied on round-robin spreading 4 rows
-    # over 4 partitions, which Spark does not promise — a collapsed
-    # layout would overflow the level-1 partial itself and flip the
-    # pin's meaning (ADVICE r15).
+    # one row per partition: range(0, N, 1, numPartitions=N)
+    # GUARANTEES that layout (range splits its interval across exactly
+    # N partitions), so the single-level overflow happens in the final
+    # merge, not in one partition's partial.
     return spark.range(0, _N, 1, _N).select(
         F.lit("g").alias("k"), F.lit(_BIG).alias("v")
     )
@@ -68,11 +59,48 @@ def test_single_level_overflows_loudly_past_2e63(spark):
 
 
 def test_two_level_returns_exact_sum_past_2e63(spark):
-    [row] = two_level(_big_frame(spark), ["k"], [("dsum", "v", "s")]).collect()
-    # 4 × 2.5e18 micros = 1e19 micros = 1e13 units, exactly
-    # representable as a double (it is a power of 10 below 2^53 × 2^k
-    # scaling? 1e13 < 2^53, so yes — integer-exact)
+    [row] = exact_agg(_big_frame(spark), ["k"], [("dsum", "v", "s")]).collect()
+    # 4 × 2.5e18 micros = 1e19 micros = 1e13 units, integer-exact as a
+    # double (1e13 < 2^53)
     assert row["s"] == 1.0e13, row
+
+
+def test_exact_sum_past_2e63_in_one_partition(spark):
+    """The partition layout bounds nothing: all four 2.5e18-micro rows
+    in ONE partition still sum to exactly 1e13 (a per-partition long
+    partial of their micros would overflow)."""
+    one = _big_frame(spark).coalesce(1)
+    [row] = exact_agg(one, ["k"], [("dsum", "v", "s")]).collect()
+    assert row["s"] == 1.0e13, row
+
+
+# int64 terms at every limb edge and both int64 extremes: the limb
+# identity v = hi·2^42 + mid·2^21 + lo must hold for each sign.
+_EDGE_TERMS = [
+    -1, 2**62 + 1, -(2**62 + 1), 2**21 - 1, 2**21, 2**42 - 1, 2**42,
+    -(2**21), -(2**42), 2**63 - 1, -(2**63),
+]
+
+
+def test_limb_identity_matches_python_integer_sums(spark):
+    """isum of five copies of each edge term (past int64 for the large
+    ones), and of all of them together, equals Python's integer sum."""
+    rows = [(i, v) for i, v in enumerate(_EDGE_TERMS) for _ in range(5)]
+    df = spark.createDataFrame(rows, "k int, v bigint").repartition(3)
+    got = {r["k"]: r["s"] for r in exact_agg(df, ["k"], [("isum", "v", "s")]).collect()}
+    assert got == {i: 5 * v for i, v in enumerate(_EDGE_TERMS)}
+    [one] = exact_agg(df, [], [("isum", "v", "s")]).collect()
+    assert one["s"] == 5 * sum(_EDGE_TERMS)
+
+
+def test_isum_of_an_int_column_is_exact(spark):
+    """An INT-typed term is widened before the shifts: shiftright on an
+    int masks its distance to 5 bits, so a 42-bit shift would shift by
+    10 and corrupt the hi limb."""
+    vals = [2**31 - 1, -(2**31), 123_456_789, 2**30 + 5, -7]
+    df = spark.createDataFrame([(v,) for v in vals * 3], "v int")
+    [row] = exact_agg(df, [], [("isum", "v", "s")]).collect()
+    assert row["s"] == 3 * sum(vals)
 
 
 def test_two_forms_bit_identical_at_money_scale(spark):
@@ -95,7 +123,7 @@ def test_two_forms_bit_identical_at_money_scale(spark):
     }
     two = {
         r["k"]: r["s"]
-        for r in two_level(base, ["k"], [("dsum", "v", "s")]).collect()
+        for r in exact_agg(base, ["k"], [("dsum", "v", "s")]).collect()
     }
     assert single == two  # exact float equality — same integer, same tree
 
@@ -108,13 +136,13 @@ def test_merge_is_layout_independent(spark):
         results.append(
             sorted(
                 (r["k"], r["s"])
-                for r in two_level(df, ["k"], [("dsum", "v", "s")]).collect()
+                for r in exact_agg(df, ["k"], [("dsum", "v", "s")]).collect()
             )
         )
     assert results[0] == results[1] == results[2]
 
 
-# --------------------------------------------------- two_level() helper
+# --------------------------------------------------- exact_agg() helper
 # These pin the builder itself against the single-level forms, spec
 # kind by spec kind.
 
@@ -140,7 +168,7 @@ def test_two_level_helper_matches_single_level(spark):
     df = _audit_frame(spark)
     got = {
         r["k"]: r.asDict()
-        for r in two_level(
+        for r in exact_agg(
             df,
             ["k"],
             [
@@ -185,7 +213,7 @@ def test_two_level_helper_layout_independent(spark):
     frames = [
         sorted(
             (r["k"], r["s"], r["a"], r["n"])
-            for r in two_level(
+            for r in exact_agg(
                 _audit_frame(spark, n_parts),
                 ["k"],
                 [
@@ -203,7 +231,7 @@ def test_two_level_helper_layout_independent(spark):
 def test_two_level_helper_global_and_empty(spark):
     aggs = [("count", "n"), ("dsum", "v", "s")]
     df = _audit_frame(spark)
-    [row] = two_level(df, [], aggs).collect()
+    [row] = exact_agg(df, [], aggs).collect()
     [want] = df.agg(
         F.count(F.lit(1)).alias("n"), dsum(F.col("v"), "s")
     ).collect()
@@ -211,29 +239,42 @@ def test_two_level_helper_global_and_empty(spark):
     # empty input: the global form must still return ONE row with
     # n=0 (the coalesce in the count merge) — matching the
     # single-level global aggregate's empty-relation contract
-    [empty] = two_level(df.filter(F.lit(False)), [], aggs).collect()
+    [empty] = exact_agg(df.filter(F.lit(False)), [], aggs).collect()
     assert empty["n"] == 0 and empty["s"] is None
 
 
 def test_two_level_helper_aliased_key_and_bad_kind(spark):
     df = _audit_frame(spark)
-    out = two_level(df, ["k % 2 = 0 AS k_even"], [("count", "n")])
+    out = exact_agg(df, ["k % 2 = 0 AS k_even"], [("count", "n")])
     assert out.columns == ["k_even", "n"]
     assert {r["k_even"] for r in out.collect()} == {True, False}
-    with pytest.raises(ValueError, match="unknown two_level agg kind"):
-        two_level(df, ["k"], [("median", "v", "m")])
+    with pytest.raises(ValueError, match="unknown exact_agg kind"):
+        exact_agg(df, ["k"], [("median", "v", "m")])
+
+
+def _partial_functions(spark, df) -> str:
+    """The plan line of ``df``'s one partial HashAggregate."""
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple"
+    )
+    [line] = [ln for ln in plan.splitlines()
+              if "HashAggregate" in ln and "partial_" in ln]
+    return line
 
 
 def test_dsum_and_davg_of_one_text_share_one_partial(spark):
-    """A sum and a mean of one expression pre-sum its micros once: the
-    level-1 aggregate holds that micro sum and the mean's count, no
-    more, and both merges still equal their single-level forms."""
+    """A sum and a mean of one expression sum its limbs once: the
+    physical partial aggregate holds the three limb sums and the mean's
+    count, no more (Catalyst dedups the identical aggregate texts), and
+    both results still equal their single-level forms."""
     aggs = [("dsum", "v * 2", "s"), ("davg", "v * 2", "a")]
-    level1, _ = two_level_aggs(aggs)
-    assert len(level1) == 2, level1
-    assert sum("floor" in str(c) for c in level1) == 1, level1
     df = _audit_frame(spark)
-    got = {r["k"]: (r["s"], r["a"]) for r in two_level(df, ["k"], aggs).collect()}
+    out = exact_agg(df, ["k"], aggs)
+    partial = _partial_functions(spark, out)
+    assert partial.count("partial_sum(") == 3, partial
+    assert partial.count("partial_count(") == 1, partial
+    assert partial.count("partial_") == 4, partial
+    got = {r["k"]: (r["s"], r["a"]) for r in out.collect()}
     v2 = F.col("v") * 2
     want = {
         r["k"]: (r["s"], r["a"])
@@ -249,11 +290,22 @@ def test_dsum_and_davg_of_one_text_share_one_partial(spark):
     assert got == want
 
 
+@pytest.mark.parametrize("key", ["agg_pricing_summary", "q6_revenue_forecast"])
+def test_exact_agg_key_plans_one_shuffle(spark, key):
+    """An exact aggregate is one partial/final pair: the key's plan has
+    exactly one shuffle Exchange and never groups by the partition id."""
+    from climateiq_pipelines_spark.plans import QUERIES
+
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        QUERIES[key](spark, SF_SMALL)._jdf.queryExecution(), "simple"
+    )
+    # \bExchange skips BroadcastExchange / ReusedExchange
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+    assert "spark_partition_id" not in plan, plan
+
+
 # ------------------------------------------------- one builder, no copies
 _PKG = Path(__file__).resolve().parent.parent / "climateiq_pipelines_spark"
-# agg_rollup hand-builds its level-1 partial because its merge is a
-# ROLLUP; it renders both levels with two_level_aggs.
-_PID_PARTIAL_OK = {("operators/aggregates.py", "agg_rollup")}
 
 
 def _partition_id_groupings(tree: ast.AST) -> list[int]:
@@ -278,24 +330,16 @@ def _partition_id_groupings(tree: ast.AST) -> list[int]:
 
 
 def test_no_partition_id_partial_outside_the_builder():
-    """Every two-level aggregate goes through helpers.two_level: no
-    module other than helpers.py groups by spark_partition_id() (the
-    level-1 partial) or names a `_pid` column, except agg_rollup."""
+    """No per-partition partial anywhere in the package: no module
+    groups by spark_partition_id() or names a `_pid` column (every
+    exact aggregate is helpers.exact_agg's one partial/final pair)."""
     stray = []
     for path in sorted(_PKG.rglob("*.py")):
         rel = path.relative_to(_PKG).as_posix()
-        if rel == "functions/helpers.py":
-            continue
         src = path.read_text()
-        tree = ast.parse(src)
-        ok_lines = set()
-        for node in ast.walk(tree):
-            if isinstance(node, ast.FunctionDef) and (rel, node.name) in _PID_PARTIAL_OK:
-                ok_lines |= set(range(node.lineno, node.end_lineno + 1))
         pid_lines = [i for i, line in enumerate(src.splitlines(), 1)
                      if re.search(r"\b_pid\b", line)]
-        stray += [(rel, ln) for ln in _partition_id_groupings(tree) + pid_lines
-                  if ln not in ok_lines]
+        stray += [(rel, ln) for ln in _partition_id_groupings(ast.parse(src)) + pid_lines]
     assert stray == [], stray
 
 
