@@ -72,6 +72,232 @@ def sql_cos_micros(dot: str) -> str:
     return f"CAST(floor(({dot}) / 1000000.0) AS BIGINT)"
 
 
+# ---------------------------------------------------------------- numpy
+# The int-dot contract's numpy spelling, over Arrow batches: the one
+# scorer behind the vector family's Python paths (llm_cosine_topk,
+# llm_mrl_truncated_rerank, llm_ivf_topk's cell re-rank and the
+# SemDeDup cluster pairs).
+#
+# Exactness, stated once.  float32 -> float64 is exact.  Each term is
+# floor(x * y * 1e12), multiplied in the oracle's order, so it is the
+# same IEEE double on every engine, and an int-valued one.  Each
+# |term| <= 1e12 * |x * y| + 1, so |sum| <= 1e12 * ||x|| * ||y|| + dim
+# for every partial sum in any order (Cauchy-Schwarz).  The kernel
+# refuses ||x|| * ||y|| >= _NP_NORM_BOUND, which keeps that below
+# 2^53: every partial sum is an exactly represented integer, and the
+# float64 sum cast to int64 is the oracle's int64 fold.  Unit vectors
+# give ||x|| * ||y|| = 1.
+
+_NP_QBLOCK = 64  # query rows per block: bounds the m x n x dim tensor
+_NP_NORM_BOUND = 9000.0  # (2^53 - dim) / 1e12 ~= 9007, with margin
+
+
+def np_vectors(arr):
+    """(n, dim) float64 matrix of an Arrow list<float> column (Array or
+    ChunkedArray).  Reads ``flatten()``, not ``.values``, so a sliced
+    batch yields its own rows.  Raises ValueError on a null embedding,
+    a null component or ragged lengths."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if arr.null_count:
+        raise ValueError("np_vectors: null embedding")
+    if not len(arr):
+        return np.zeros((0, 0), dtype=np.float64)
+    lens = pc.list_value_length(arr).to_numpy()
+    if lens.min() != lens.max():
+        raise ValueError(
+            f"np_vectors: ragged embeddings (lengths {lens.min()}..{lens.max()})"
+        )
+    flat = arr.flatten()
+    if flat.null_count:
+        raise ValueError("np_vectors: null embedding component")
+    return flat.to_numpy(zero_copy_only=False).astype(np.float64).reshape(
+        len(arr), int(lens[0])
+    )
+
+
+def _np_dot(q, c):
+    """Σ floor(x·y·1e12) along the last axis of broadcast operands."""
+    import numpy as np
+
+    return np.floor(q * c * 1e12).sum(axis=-1).astype(np.int64)
+
+
+def _np_check_domain(q, c) -> None:
+    import numpy as np
+
+    if not len(q) or not len(c):
+        return
+    if q.shape[1] != c.shape[1]:
+        raise ValueError(
+            f"np_int_dots: dims differ ({q.shape[1]} vs {c.shape[1]})"
+        )
+    bound = np.sqrt((q * q).sum(axis=1).max() * (c * c).sum(axis=1).max())
+    if not bound < _NP_NORM_BOUND:  # NaN/inf refused too
+        raise ValueError(
+            f"np_int_dots: norm product {bound} outside the exact domain"
+            f" (< {_NP_NORM_BOUND})"
+        )
+
+
+def np_int_dots(q, c):
+    """int64 (m, n) matrix of exact dots Σ floor(x·y·1e12) between the
+    rows of q (m, dim) and c (n, dim), in 64-row query blocks."""
+    import numpy as np
+
+    _np_check_domain(q, c)
+    out = np.zeros((len(q), len(c)), dtype=np.int64)
+    if len(c):
+        for s in range(0, len(q), _NP_QBLOCK):
+            out[s : s + _NP_QBLOCK] = _np_dot(
+                q[s : s + _NP_QBLOCK, None, :], c[None, :, :]
+            )
+    return out
+
+
+def np_topk(q_ids, q, c_ids, c, k: int, prefix=None, shortlist=None):
+    """Each query's top ``k`` corpus rows by exact dot, its own id
+    excluded, ranked by (dot DESC, id ASC): np.lexsort((ids, -dot)),
+    the oracles' ORDER BY dot_fp DESC, neighbor_id.  With ``prefix``,
+    stage 1 keeps the ``shortlist`` best rows by the dot over the first
+    ``prefix`` dims and stage 2 re-ranks them at full width (MRL);
+    without it one full-width stage ranks.  Returns flat int64 arrays
+    (q_id, n_id, dot, rnk) in (query, rank) order."""
+    import numpy as np
+
+    _np_check_domain(q, c)
+    last = np.iinfo(np.int64).max  # self's sort key: after every dot
+    width = k if prefix is None else shortlist
+    out = [[], [], [], []]
+    if not len(q) or not len(c):
+        return tuple(np.zeros(0, dtype=np.int64) for _ in out)
+    for s in range(0, len(q), _NP_QBLOCK):
+        qi, qb = q_ids[s : s + _NP_QBLOCK], q[s : s + _NP_QBLOCK]
+        d = np_int_dots(qb, c) if prefix is None else np_int_dots(
+            qb[:, :prefix], c[:, :prefix]
+        )
+        is_self = qi[:, None] == c_ids[None, :]
+        ids = np.broadcast_to(c_ids, d.shape)
+        top = np.lexsort((ids, np.where(is_self, last, -d)), axis=-1)[:, :width]
+        valid = ~np.take_along_axis(is_self, top, axis=1)
+        if prefix is None:
+            d = np.take_along_axis(d, top, axis=1)
+        else:
+            d = _np_dot(qb[:, None, :], c[top])
+            best = np.lexsort(
+                (c_ids[top], np.where(valid, -d, last)), axis=-1
+            )[:, :k]
+            top, d, valid = (
+                np.take_along_axis(a, best, axis=1) for a in (top, d, valid)
+            )
+        # self sorts last, so each row's valid entries are its ranks 1..
+        rnk = np.broadcast_to(np.arange(1, top.shape[1] + 1), top.shape)
+        for o, a in zip(out, (np.broadcast_to(qi[:, None], top.shape),
+                              c_ids[top], d, rnk)):
+            o.append(a[valid])
+    return tuple(np.concatenate(o).astype(np.int64) for o in out)
+
+
+# Block-NL corpus bound (llm_cosine_topk, llm_mrl_truncated_rerank): the
+# broadcast corpus must fit executor memory as float64, so the row bound
+# is BYTE-derived -- min(hard row cap, byte budget / row bytes) -- not a
+# bare count (a 4096-dim corpus is 64x heavier per row than the 64-dim
+# fixture).  Above it both exact keys raise; llm_cosine_topk_lsh is the
+# scale path, with its own oracle.
+BLOCKNL_MAX_VECTORS = 200_000  # hard row cap (tests monkeypatch this)
+BLOCKNL_MAX_BYTES = 128 << 20  # 128 MiB of float64 corpus per executor
+
+
+def _blocknl_max_vectors(dim: int) -> int:
+    """Effective block-NL corpus bound for a given embedding dim --
+    reads the module attributes at call time so tests can monkeypatch
+    the row cap."""
+    return min(BLOCKNL_MAX_VECTORS, BLOCKNL_MAX_BYTES // max(dim, 1) // 8)
+
+
+def _blocknl_broadcast(spark, emb: DataFrame, dim_hint: int | None = None):
+    """The block-NL driver prelude: bound the corpus by BYTES
+    (take(max+1), never an unbounded collect), sort by vec_id, ship ONE
+    sparkContext.broadcast (one torrent transfer per executor).  Returns
+    (bc, dim); raises ValueError above the bound.  ``dim_hint`` is the
+    embedding dim from registry.parquet_first_array_len (no job); None
+    falls back to a take(1) probe job.  An empty corpus stays a 2-D
+    (0, dim) matrix so prefix slicing works on it."""
+    import numpy as np
+    import pyarrow as pa
+
+    if dim_hint is not None:
+        dim = dim_hint
+    else:
+        head = emb.take(1)
+        dim = len(head[0]["embedding"]) if head else 1
+    max_vectors = _blocknl_max_vectors(dim)
+    rows = emb.take(max_vectors + 1)
+    if len(rows) > max_vectors:
+        raise ValueError(
+            f"corpus exceeds the block-NL bound ({max_vectors} vectors at "
+            f"dim {dim}) of the exact vector keys; llm_cosine_topk_lsh is "
+            f"the scale path"
+        )
+    corpus_ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    corpus = np_vectors(
+        pa.array([r["embedding"] for r in rows], pa.list_(pa.float64()))
+    ) if rows else np.zeros((0, dim), dtype=np.float64)
+    order = np.argsort(corpus_ids)
+    return (
+        spark.sparkContext.broadcast((corpus_ids[order], corpus[order])),
+        dim,
+    )
+
+
+def blocknl_topk(spark, sf_dir: str, method: str, k: int,
+                 prefix: int | None = None, shortlist: int | None = None):
+    """The Arrow block-NL top-k both exact vector keys run: the bounded
+    corpus broadcast once, each query batch scored by :func:`np_topk`
+    inside one mapInArrow, no shuffle beyond spreading the queries over
+    the session's parallelism.  Emits (vec_id, neighbor_id, cos_micros,
+    rnk, method); cos_micros is :func:`cos_micros`'s numpy twin."""
+    import numpy as np
+    import pyarrow as pa
+
+    from climateiq_pipelines_spark.registry import (
+        load_table,
+        parquet_first_array_len,
+    )
+
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    bc, _dim = _blocknl_broadcast(
+        spark, emb, parquet_first_array_len(sf_dir, "embeddings", "embedding")
+    )
+
+    def body(batches):
+        c_ids, c = bc.value
+        for b in batches:
+            q_id, n_id, dot, rnk = np_topk(
+                b.column("vec_id").to_numpy(), np_vectors(b.column("embedding")),
+                c_ids, c, k, prefix, shortlist,
+            )
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(q_id),
+                    pa.array(n_id),
+                    pa.array(np.floor(dot / 1e6).astype(np.int64)),
+                    pa.array(rnk.astype(np.int32)),
+                    pa.array([method] * len(q_id), pa.string()),
+                ],
+                names=["vec_id", "neighbor_id", "cos_micros", "rnk", "method"],
+            )
+
+    return emb.repartition(spark.sparkContext.defaultParallelism).mapInArrow(
+        body,
+        "vec_id long, neighbor_id long, cos_micros long, rnk int, method string",
+    )
+
+
 def fixed_mean_1e9(x: Column) -> Column:
     """Exact 1e9 fixed-point component mean (an AGGREGATE expression):
     floor each value to 1e-9 resolution, integer-sum (exact below 2^53),
@@ -146,13 +372,11 @@ def lloyd_assign_cols() -> tuple[Column, Column]:
     return best["c"].alias("cluster"), best["dist"].alias("dist_fp")
 
 
-def hyperplane_sig(vec: Column, planes: list[list[float]], dim: int | None = None) -> Column:
+def hyperplane_sig(vec: Column, planes: list[list[float]]) -> Column:
     """len(planes)-bit hyperplane simhash signature: bit j = sign of
-    the exact fixed-point dot against plane j (``dim`` truncates each
-    plane for prefix/MRL consumers).  ONE home for the loop five
-    operators previously inlined (llm_simhash_bucket,
-    _cosine_topk_bucketed, llm_cosine_neardup, llm_simhash_multiprobe,
-    _mrl_rerank_bucketed).
+    the exact fixed-point dot against plane j.  ONE home for the loop
+    its operators previously inlined (llm_simhash_bucket,
+    llm_cosine_topk_lsh, llm_cosine_neardup, llm_simhash_multiprobe).
 
     r16 optimization (guide §1.2, driver-side build cost): each plane
     ships as ONE ``F.lit(np.ndarray)`` array<double> literal instead of
@@ -165,8 +389,7 @@ def hyperplane_sig(vec: Column, planes: list[list[float]], dim: int | None = Non
 
     sig: Column = F.lit(0)
     for j, row in enumerate(planes):
-        r = row if dim is None else row[:dim]
-        plane = F.lit(np.asarray(r, dtype=np.float64))
+        plane = F.lit(np.asarray(row, dtype=np.float64))
         sig = sig + F.when(_int_dot(vec, plane) >= 0, F.lit(1 << j)).otherwise(
             F.lit(0)
         )

@@ -17,19 +17,12 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.functions.fixedpoint import (
-    _S12,
-    _int_dot,
     _sql_int_dot,
-    cos_micros,
-    hyperplane_sig,
+    blocknl_topk,
     sql_cos_micros,
 )
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.registry import (
-    load_table,
-    parquet_first_array_len,
-    widen_if_narrow,
-)
+from climateiq_pipelines_spark.registry import load_table, widen_if_narrow
 
 # --- llm_mrl_truncated_rerank ------------------------------------------
 _MRL_PREFIX_DIM = 16  # truncated prefix dims (full fixture dim: 64)
@@ -64,75 +57,6 @@ _MRL_ORACLE = f"""
 """
 
 
-def _mrl_rerank_bucketed(emb: DataFrame) -> DataFrame:
-    """Above-bound dispatch target: simhash-bucketed stage-1 shortlist
-    on PREFIX dots (bucket-local, the llm_cosine_topk bucketed
-    discipline), exact full-dim rerank of the shortlist. The distinct
-    method marker guarantees a dispatched run can never silently pass
-    the exact oracle."""
-    from climateiq_pipelines_spark.operators.llm import _hyperplanes
-
-    pre = F.slice(F.col("embedding"), 1, _MRL_PREFIX_DIM)
-    sig = hyperplane_sig(pre, _hyperplanes(), dim=_MRL_PREFIX_DIM)
-    # Stage 1 carries ONLY (ids, prefix dot) through the
-    # bucket-quadratic join and the trunc-rank window shuffle — the
-    # 16/64 truncated-payload saving is the whole point of MRL, and the
-    # old form hauled both FULL 64-d vectors on every candidate pair
-    # (~5x the shuffle bytes) even though full width is needed for just
-    # <=_MRL_SHORTLIST survivors per query (round-12 review).  The
-    # survivors re-join the embeddings relation for the exact rerank.
-    sigs = emb.select("vec_id", pre.alias("pre"), sig.alias("signature"))
-    a = sigs.select("vec_id", F.col("pre").alias("q_pre"), "signature")
-    b = sigs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("pre").alias("n_pre"),
-        "signature",
-    )
-    pairs = (
-        a.join(b, "signature")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select(
-            "vec_id",
-            "neighbor_id",
-            _int_dot(F.col("q_pre"), F.col("n_pre")).alias("trunc_fp"),
-        )
-    )
-    w1 = W.partitionBy("vec_id").orderBy(F.desc("trunc_fp"), F.asc("neighbor_id"))
-    short_ids = (
-        pairs.withColumn("trunc_rnk", F.row_number().over(w1))
-        .filter(F.col("trunc_rnk") <= _MRL_SHORTLIST)
-        .select("vec_id", "neighbor_id")
-    )
-    qe = emb.select("vec_id", F.col("embedding").alias("q_emb"))
-    ne = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-    )
-    shortlist = (
-        short_ids.join(qe, "vec_id")
-        .join(ne, "neighbor_id")
-        .select(
-            "vec_id",
-            "neighbor_id",
-            _int_dot(F.col("q_emb"), F.col("n_emb")).alias("full_fp"),
-        )
-    )
-    w2 = W.partitionBy("vec_id").orderBy(F.desc("full_fp"), F.asc("neighbor_id"))
-    return (
-        shortlist.withColumn("rnk", F.row_number().over(w2))
-        .filter(F.col("rnk") <= _MRL_K)
-        .select(
-            "vec_id",
-            "neighbor_id",
-            cos_micros(F.col("full_fp")).alias("cos_micros"),
-            F.col("rnk").cast("int").alias("rnk"),
-            F.lit(f"mrl_prefix{_MRL_PREFIX_DIM}_rerank_bucketed").alias(
-                "method"
-            ),
-        )
-    )
-
-
 @register("llm_mrl_truncated_rerank", oracle=_MRL_ORACLE)
 def llm_mrl_truncated_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MATRYOSHKA adaptive retrieval (Kusupati et al. 2022 §4.3):
@@ -144,96 +68,31 @@ def llm_mrl_truncated_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     method column marks the contract: results are shortlist-local, not
     globally exact — recall follows the prefix's fidelity.
 
-    Execution mirrors llm_cosine_topk's Arrow block-NL: the corpus
-    ships once as a sparkContext.broadcast, each query batch scores
-    the PREFIX dots against the prefix matrix vectorized, takes its
+    Execution is llm_cosine_topk's Arrow block-NL
+    (fixedpoint.blocknl_topk): the corpus ships once as a
+    sparkContext.broadcast, each query batch scores the PREFIX dots
+    against the prefix matrix vectorized, takes its
     top-{_MRL_SHORTLIST}, and reranks only those {_MRL_SHORTLIST}
-    full-width rows — both stages inside one mapInPandas, no shuffle
-    at all. Above the byte-derived corpus bound (_blocknl_max_vectors,
-    read at call time) the key auto-dispatches to the simhash-bucketed
-    DataFrame plan with a distinct method marker.
+    full-width rows — both stages inside one mapInArrow, no shuffle
+    at all. Above the byte-derived corpus bound the key raises
+    ValueError (llm_cosine_topk_lsh is the family's scale path).
 
-    Exactness: floored per-term products are int-valued float64s whose
-    16- and 64-term numpy sums stay < 2^53, equal to the oracle's int64
-    folds bit-for-bit (the llm_cosine_topk argument); both stages rank
-    (-dot, neighbor_id) — a total order.
+    Exactness: fixedpoint's numpy kernel contract (exact integer dots
+    at both widths); both stages rank (-dot, neighbor_id) — a total
+    order.
 
-    Scale: stage 1 is where the 100 TB win lives — the broadcast/score
-    payload per vector is {_MRL_PREFIX_DIM}/64 of the full width (MRL
-    papers run 1/12 and below), so the same executor-memory budget
-    holds a 4x larger corpus than full-width block-NL, and the full
-    vectors are touched for only |queries| x {_MRL_SHORTLIST} rows."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from climateiq_pipelines_spark.operators.llm import _blocknl_broadcast
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # Shared driver prelude (round-12 review: was a verbatim copy of
-    # llm_cosine_topk's 40 lines, which had already diverged — this
-    # copy crashed on an empty corpus because the prefix slice ran on
-    # a 1-D np.array([]); the helper guards that once for both twins).
-    # r17: the dim hint is a driver-side parquet peek — no probe job.
-    prelude = _blocknl_broadcast(
-        spark, emb, parquet_first_array_len(sf_dir, "embeddings", "embedding")
+    Scale: stage 1 is where the 100 TB win lives — the score payload
+    per vector is {_MRL_PREFIX_DIM}/64 of the full width (MRL papers
+    run 1/12 and below), and the full vectors are touched for only
+    |queries| x {_MRL_SHORTLIST} rows."""
+    return blocknl_topk(
+        spark,
+        sf_dir,
+        f"mrl_prefix{_MRL_PREFIX_DIM}_rerank",
+        k=_MRL_K,
+        prefix=_MRL_PREFIX_DIM,
+        shortlist=_MRL_SHORTLIST,
     )
-    if prelude is None:
-        return _mrl_rerank_bucketed(emb)
-    bc, _dim = prelude
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_micros", T.LongType()),
-            T.StructField("rnk", T.IntegerType()),
-            T.StructField("method", T.StringType()),
-        ]
-    )
-    method = f"mrl_prefix{_MRL_PREFIX_DIM}_rerank"
-
-    def rerank(batches):
-        corpus_ids, corpus = bc.value
-        prefix = corpus[:, :_MRL_PREFIX_DIM]
-        for pdf in batches:
-            q_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            q = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            out_q, out_n, out_d, out_r = [], [], [], []
-            # 64-query blocks bound the m x n x 16 product tensor
-            for s in range(0, len(q), 64):
-                qs, qi = q[s : s + 64], q_ids[s : s + 64]
-                tdots = np.floor(
-                    qs[:, None, :_MRL_PREFIX_DIM] * prefix[None, :, :] * 1e12
-                ).sum(axis=2)
-                for i in range(len(qs)):
-                    td = tdots[i]
-                    keep = corpus_ids != qi[i]
-                    td, nb_ids = td[keep], corpus_ids[keep]
-                    short = np.lexsort((nb_ids, -td))[:_MRL_SHORTLIST]
-                    cand_ids = nb_ids[short]
-                    cand = corpus[np.searchsorted(corpus_ids, cand_ids)]
-                    fd = np.floor(qs[i][None, :] * cand * 1e12).sum(axis=1)
-                    top = np.lexsort((cand_ids, -fd))[:_MRL_K]
-                    out_q.extend([qi[i]] * len(top))
-                    out_n.extend(cand_ids[top])
-                    out_d.extend(np.floor(fd[top] / 1e6).astype(np.int64))
-                    out_r.extend(range(1, len(top) + 1))
-            yield pd.DataFrame(
-                {
-                    "vec_id": out_q,
-                    "neighbor_id": out_n,
-                    "cos_micros": np.array(out_d, dtype=np.int64),
-                    "rnk": np.array(out_r, dtype=np.int32),
-                    "method": method,
-                }
-            )
-
-    return emb.repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(rerank, schema)
 
 
 # --- llm_bloom_decontam ------------------------------------------------
@@ -457,8 +316,8 @@ def _recall_oracle() -> str:
 @register("llm_ann_recall_eval", oracle=_recall_oracle())
 def llm_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN INDEX-QUALITY EVALUATION in-engine: recall@5 of the
-    simhash-bucketed LSH path (`llm_cosine_topk_lsh` — the plan the
-    exact key auto-dispatches to at scale) against the exact
+    simhash-bucketed LSH path (`llm_cosine_topk_lsh` — the scale
+    path the exact key names when it refuses) against the exact
     block-NL ground truth (`llm_cosine_topk`), as the per-query hit
     distribution (hits 0..5 -> query counts and shares) plus the mean
     recall in micros repeated per row — the measurement every
@@ -477,51 +336,18 @@ def llm_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_minhash_jaccard_estimate's 8x8 sample) while this fixture
     evaluates every query exactly.
 
-    DECLARED BOUND (ADVICE r12): this key REFUSES (ValueError) on any
-    corpus above the block-NL bound — min(BLOCKNL_MAX_VECTORS, 128 MiB
-    / dim / 8 rows; ~262k rows at the fixture's 64 dims — so every
-    driver-generated SF is far inside it).  That refusal is metric
-    integrity, not a failure: exact ground truth cannot exist above
-    the bound, and recall measured against an approximate baseline
-    would be reported as recall@5 with no marker.  Harnesses that
-    schedule this key at larger scales should expect the refusal and
-    sample the query set or evaluate a corpus slice instead."""
-    from climateiq_pipelines_spark.operators.llm import (
-        _blocknl_max_vectors,
-        llm_cosine_topk,
-    )
+    DECLARED BOUND: above the block-NL bound (min(BLOCKNL_MAX_VECTORS,
+    128 MiB / dim / 8 rows; 200,000 rows at the fixture's 64 dims — so
+    every driver-generated SF is far inside it) the exact side,
+    llm_cosine_topk, raises ValueError, and so does this key.  That
+    refusal is metric integrity: exact ground truth cannot exist above
+    the bound.  Harnesses that schedule this key at larger scales
+    should sample the query set or evaluate a corpus slice instead."""
+    from climateiq_pipelines_spark.operators.llm import llm_cosine_topk
     from climateiq_pipelines_spark.operators.vector_ext import (
         llm_cosine_topk_lsh,
     )
 
-    # Ground truth must be EXACT: llm_cosine_topk auto-dispatches to
-    # its bucketed ANN twin above the block-NL bound, and recall
-    # measured against an approximate baseline is not recall — above
-    # the bound this key previously reported LSH-vs-bucketed overlap
-    # as recall@5 with no marker (round-12 review).  Probe the same
-    # bound and refuse loudly; production samples the query set or
-    # evaluates on a corpus slice instead.
-    emb_probe = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    # r17: dim via the driver-side parquet peek (no probe job), with
-    # the old take(1) as the fallback for unreadable fixtures.
-    dim = parquet_first_array_len(sf_dir, "embeddings", "embedding")
-    if dim is None:
-        head = emb_probe.take(1)
-        dim = len(head[0]["embedding"]) if head else 1
-    bound = _blocknl_max_vectors(dim)
-    # Count-only probe: the bound is byte-derived (~128 MiB of
-    # embeddings), so a take(bound+1) would ship the whole payload to
-    # the driver just for a len() — and llm_cosine_topk re-collects it
-    # one line later (round-12 self-review).
-    if emb_probe.select("vec_id").limit(bound + 1).count() > bound:
-        raise ValueError(
-            "llm_ann_recall_eval: corpus exceeds the block-NL bound, so "
-            "the exact ground-truth side would silently dispatch to an "
-            "approximate plan — sample the query set or evaluate on a "
-            "corpus slice"
-        )
     exact = llm_cosine_topk(spark, sf_dir).select("vec_id", "neighbor_id")
     approx = llm_cosine_topk_lsh(spark, sf_dir).select(
         "vec_id", "neighbor_id"

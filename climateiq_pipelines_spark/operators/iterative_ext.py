@@ -28,6 +28,7 @@ from climateiq_pipelines_spark.functions.fixedpoint import (
     PR_BASE,
     PR_R0,
     bipartite_purchase_edges,
+    fixed_mean_1e9,
     lloyd_assign_cols,
     lloyd_centroid_row,
     lloyd_oracle_sql,
@@ -224,14 +225,7 @@ def llm_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
         centroids = (
             frame.select("cluster", F.posexplode("embedding").alias("pos", "x"))
             .groupBy(F.col("cluster").alias("c_id"), "pos")
-            .agg(
-                (
-                    F.sum(F.floor(F.col("x").cast("double") * 1_000_000_000))
-                    .cast("double")
-                    / F.lit(1e9)
-                    / F.count(F.lit(1))
-                ).alias("c")
-            )
+            .agg(fixed_mean_1e9(F.col("x")).alias("c"))
         )
         cluster_col, dist_col = lloyd_assign_cols()
         cents_row = lloyd_centroid_row(centroids)

@@ -32,7 +32,6 @@ from climateiq_pipelines_spark.functions.textgrams import word_shingle_sets
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import (
     load_table,
-    parquet_first_array_len,
     widen_if_narrow,
 )
 from climateiq_pipelines_spark.session import checkpoint, memo
@@ -43,13 +42,13 @@ from climateiq_pipelines_spark.session import checkpoint, memo
 # that registers nothing) so oracle builders elsewhere can import it at
 # decoration time without side-effect-registering llm's 19 keys; the
 # names are re-exported here for this module and its historical
-# importers (dedup_graph, vector_ext, ml_iter, text_analysis).
+# importers (vector_ext).
 from climateiq_pipelines_spark.functions.fixedpoint import (  # noqa: E402
-    _S9,
     _S12,
     _int_dot,
     _sql_int_dot,
     assign_nearest_centroid,
+    blocknl_topk,
     cos_micros,
     fixed_mean_1e9,
     hyperplane_sig,
@@ -522,205 +521,33 @@ _TOPK_ORACLE = f"""
 """
 
 
-# Block-NL dispatch bounds (llm_cosine_topk): the corpus build side must
-# fit comfortably in executor memory as float64, so the effective row
-# bound is BYTE-derived — min(hard row cap, byte budget / row bytes) —
-# not a bare row count (a 4096-dim corpus is 64x heavier per row than
-# the 64-dim fixture; a count-only cutoff would OOM it). Above the bound
-# the key auto-dispatches to the bucketed LSH plan.
-BLOCKNL_MAX_VECTORS = 200_000  # hard row cap (tests monkeypatch this)
-BLOCKNL_MAX_BYTES = 128 << 20  # 128 MiB of float64 corpus per executor
-
-
-def _blocknl_max_vectors(dim: int) -> int:
-    """Effective block-NL corpus bound for a given embedding dim —
-    reads the module attributes at call time so tests can monkeypatch
-    the row cap."""
-    return min(BLOCKNL_MAX_VECTORS, BLOCKNL_MAX_BYTES // max(dim, 1) // 8)
-
-
-def _blocknl_broadcast(spark, emb: DataFrame, dim_hint: int | None = None):
-    """The block-NL driver prelude — probe the embedding dim, bound the
-    corpus by BYTES (take(max+1), never an unbounded collect), sort by
-    vec_id, ship ONE sparkContext.broadcast.  Returns (bc, dim), or
-    None when the corpus exceeds the bound and the caller must
-    dispatch to its bucketed DataFrame twin.  ONE implementation for
-    llm_cosine_topk and llm_mrl_truncated_rerank (round-12 review: the
-    ~40-line prelude was copy-pasted, so the r6 fixes recorded here —
-    byte-derived bound, torrent broadcast instead of per-task closure
-    capture — had to be maintained twice; ann_ext2's copy also crashed
-    on an EMPTY corpus because np.array([]) is 1-D and prefix slicing
-    needs 2-D, guarded here once).
-
-    r17 (VERDICT r16 #5): callers that read the full-width embeddings
-    fixture pass ``dim_hint`` from registry.parquet_first_array_len —
-    a driver-side parquet peek, no job — so the prelude's job count is
-    2 → 1 (the old ``take(1)`` dim probe ran a whole Spark job to read
-    one row). The hint is only a BOUND input (same role as the old
-    first-row probe); a None hint falls back to the probe job."""
-    import numpy as np
-
-    if dim_hint is not None:
-        dim = dim_hint
-    else:
-        head = emb.take(1)
-        dim = len(head[0]["embedding"]) if head else 1
-    max_vectors = _blocknl_max_vectors(dim)
-    rows = emb.take(max_vectors + 1)
-    if len(rows) > max_vectors:
-        return None
-    corpus_ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    corpus = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    if corpus.size == 0:  # keep 2-D so column slicing works on empty
-        corpus = np.zeros((0, dim), dtype=np.float64)
-    order = np.argsort(corpus_ids)
-    return (
-        spark.sparkContext.broadcast((corpus_ids[order], corpus[order])),
-        dim,
-    )
-
-
-def _cosine_topk_bucketed(
-    emb: DataFrame, k: int, method: str = "simhash_bucketed"
-) -> DataFrame:
-    """The >10^5-vector dispatch target of llm_cosine_topk: hyperplane
-    simhash buckets (llm_simhash_bucket's signature) prune candidates to
-    same-bucket pairs, exact integer-dot scoring + per-query window
-    top-k within the probed bucket. Pure DataFrame plan — no driver
-    materialization anywhere, shuffles carry (signature) then (vec_id);
-    per-bucket self-joins are quadratic in bucket size only. Recall is
-    bucket-local (the standard LSH trade; widen signatures or
-    multi-probe to raise it) — same contract as llm_cosine_neardup."""
-    sig = hyperplane_sig(F.col("embedding"), _hyperplanes())
-    sigs = emb.select("vec_id", "embedding", sig.alias("signature"))
-    a = sigs.select(
-        F.col("vec_id"), F.col("embedding").alias("q_emb"), "signature"
-    )
-    b = sigs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        "signature",
-    )
-    scored = (
-        a.join(b, "signature")
-        .filter(F.col("vec_id") != F.col("neighbor_id"))
-        .select(
-            "vec_id",
-            "neighbor_id",
-            _int_dot(F.col("q_emb"), F.col("n_emb")).alias("dot_fp"),
-        )
-    )
-    w = W.partitionBy("vec_id").orderBy(F.desc("dot_fp"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "vec_id",
-            "neighbor_id",
-            cos_micros(F.col("dot_fp")).alias("cos_micros"),
-            F.col("rnk").cast("int").alias("rnk"),
-            # Marker so a dispatched (approximate, bucket-local) result
-            # can never silently pass for the exact block-NL contract:
-            # the exact oracle pins method='exact_blocknl' and any
-            # dispatch at comparison scale hash-mismatches attributably.
-            F.lit(method).alias("method"),
-        )
-    )
-
-
 @register("llm_cosine_topk", oracle=_TOPK_ORACLE)
 def llm_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 per vector (vectors are unit-norm, so
-    cosine ≡ dot), executed as an Arrow-batched BLOCK NESTED LOOP:
-    the corpus matrix (n×64 float64 — 1 MB at sf0.1) is materialized
-    once and shipped to each task; each query partition computes floored
-    products against the whole corpus with vectorized numpy and emits
-    its top-5. This is the one genuinely compute-bound operator in the
-    suite, which is exactly where a pandas UDF beats codegen'd
+    cosine ≡ dot), executed as an Arrow-batched BLOCK NESTED LOOP
+    (fixedpoint.blocknl_topk): the corpus matrix (n×64 float64 — 1 MB
+    at sf0.1) is broadcast once; each query batch computes the exact
+    integer dots against the whole corpus in numpy and emits its
+    top-5. This is the one genuinely compute-bound operator in the
+    suite, which is exactly where an Arrow UDF beats codegen'd
     higher-order array functions — measured 6.3 s → ~1 s at sf0.1 vs
     the zip_with/aggregate + window formulation (and 15.7 s for the
     DuckDB baseline).
 
-    Exactness: per-term floor(x·y·1e12) is computed identically by
-    numpy (IEEE double product, floor) and the floored products are
-    int-valued float64s ≤ 2.5e11, so their 64-term numpy sum is exact
-    (< 2^53) and equals the oracle's int64 fold bit-for-bit; ranking
-    compares those integers (lexsort on (-dot, neighbor_id)), so top-k
-    membership cannot flip on float ulps.
+    It is llm_mrl_truncated_rerank's scorer at full width: with no
+    prefix stage the shortlist IS the top-5, so the re-rank would
+    re-order the same 5 rows by the same key.  Exactness is
+    fixedpoint's numpy kernel contract; ranking compares the exact
+    integers (lexsort on (-dot, neighbor_id)), so top-k membership
+    cannot flip on float ulps.
 
-    Scale: the corpus materialization is the broadcast dimension of a
-    block-NL, BOUNDED by a .take(max+1) probe — never an unbounded
-    collect — where max is BYTE-derived from the probed embedding dim
-    (_blocknl_max_vectors, r6: a count-only cutoff under-counts wide
-    embeddings). The collected matrix ships as a sparkContext.broadcast
-    (one torrent transfer per executor, reused across tasks — r6; the
-    closure previously re-serialized it per task batch). Above the
-    bound the key AUTO-DISPATCHES to _cosine_topk_bucketed
-    (simhash-bucket-pruned per-bucket top-k, a pure DataFrame plan with
-    no driver materialization) instead of refusing to run — exact
-    block-NL under the bound, bucketed ANN beyond."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    prelude = _blocknl_broadcast(
-        spark, emb, parquet_first_array_len(sf_dir, "embeddings", "embedding")
-    )
-    if prelude is None:
-        return _cosine_topk_bucketed(emb, k=5)
-    bc, _dim = prelude
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cos_micros", T.LongType()),
-            T.StructField("rnk", T.IntegerType()),
-            T.StructField("method", T.StringType()),
-        ]
-    )
-    k = 5
-
-    def topk(batches):
-        corpus_ids, corpus = bc.value
-        for pdf in batches:
-            q_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            q = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            )
-            out_q, out_n, out_d, out_r = [], [], [], []
-            # 64-query blocks bound the m×n×64 product tensor to ~65 MB
-            # at sf0.1 scale.
-            for s in range(0, len(q), 64):
-                qs, qi = q[s : s + 64], q_ids[s : s + 64]
-                dots = np.floor(qs[:, None, :] * corpus[None, :, :] * 1e12).sum(
-                    axis=2
-                )
-                for i in range(len(qs)):
-                    d = dots[i]
-                    keep = corpus_ids != qi[i]  # exclude self entirely
-                    d, nb_ids = d[keep], corpus_ids[keep]
-                    top = np.lexsort((nb_ids, -d))[:k]
-                    out_q.extend([qi[i]] * len(top))
-                    out_n.extend(nb_ids[top])
-                    out_d.extend(np.floor(d[top] / 1e6).astype(np.int64))
-                    out_r.extend(range(1, len(top) + 1))
-            yield pd.DataFrame(
-                {
-                    "vec_id": out_q,
-                    "neighbor_id": out_n,
-                    "cos_micros": np.array(out_d, dtype=np.int64),
-                    "rnk": np.array(out_r, dtype=np.int32),
-                    "method": "exact_blocknl",
-                }
-            )
-
-    # Spread the query side across the session's actual parallelism
-    # (r6: was a hardcoded local[32] constant).
-    return emb.repartition(
-        spark.sparkContext.defaultParallelism
-    ).mapInPandas(topk, schema)
+    Scale: the corpus is bounded by a .take(max+1) probe — never an
+    unbounded collect — with max BYTE-derived from the embedding dim
+    (fixedpoint._blocknl_max_vectors).  Above the bound the key raises
+    ValueError: exact all-pairs ground truth does not scale, and
+    llm_cosine_topk_lsh (bucket-local top-k, its own oracle) is the
+    scale path."""
+    return blocknl_topk(spark, sf_dir, "exact_blocknl", k=5)
 
 
 _KNN_ORACLE = f"""

@@ -20,7 +20,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from climateiq_pipelines_spark.functions.fixedpoint import sql_cos_micros
+from climateiq_pipelines_spark.functions.fixedpoint import (
+    assign_nearest_centroid,
+    cos_micros,
+    np_int_dots,
+    np_vectors,
+    sql_cos_micros,
+)
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
 from climateiq_pipelines_spark.session import checkpoint, memo
@@ -192,42 +198,62 @@ def llm_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEMDEDUP_TAU_FP = 3 * 10**11  # cos >= 0.30 in the 1e12 fixed-point dot
 
 
-def _score_cluster(pdf):
-    """Per-cluster Arrow batch: exact fixed-point pair dots vs every
-    EARLIER (lower-vec_id) vector in the cluster; emits one row per
-    vector that has at least one near-dup predecessor. Reproduces
-    llm._int_dot bit-for-bit: per-component float64 products floored
-    individually, then summed (int-valued float64s below 2^53 sum
-    exactly in any order). Shared by llm_semdedup (fixture-label
-    clusters) and llm_semdedup_pipeline (k-means-assigned clusters)."""
+def _score_cluster(table):
+    """Per-cluster Arrow group: exact integer pair dots
+    (fixedpoint.np_int_dots) of each vector against every EARLIER
+    (lower-vec_id) vector in the cluster; emits one row per vector that
+    has at least one near-dup predecessor.  64-row blocks keep memory at
+    64 x |cluster| per block, never |cluster|^2."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
-    pdf = pdf.sort_values("vec_id")
-    ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-    a = np.array([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-    out_id, out_n, out_max = [], [], []
-    # row-blocked j-loop: block b vs all earlier rows at once
-    blk = 128
-    for s in range(1, len(ids), blk):
-        e = min(s + blk, len(ids))
-        # prods[j - s, i] = intdot(a[i], a[j]) for i < j
-        prods = np.floor(a[s:e, None, :] * a[None, :e, :] * 1e12).sum(
-            axis=2
-        ).astype(np.int64)
-        for j in range(s, e):
-            row = prods[j - s, :j]
-            hits = row[row >= _SEMDEDUP_TAU_FP]
-            if hits.size:
-                out_id.append(ids[j])
-                out_n.append(hits.size)
-                out_max.append(hits.max())
-    return pd.DataFrame(
+    ids = table.column("vec_id").to_numpy()
+    order = np.argsort(ids, kind="stable")
+    ids, a = ids[order], np_vectors(table.column("embedding"))[order]
+    cols = {"vec_id": [], "n_earlier_dups": [], "max_dot": []}
+    for s in range(1, len(ids), 64):
+        e = min(s + 64, len(ids))
+        dots = np_int_dots(a[s:e], a[:e])  # dots[j - s, i]; only i < j count
+        hits = (dots >= _SEMDEDUP_TAU_FP) & (
+            np.arange(e) < np.arange(s, e)[:, None]
+        )
+        n = hits.sum(axis=1)
+        row = n > 0
+        cols["vec_id"].append(ids[s:e][row])
+        cols["n_earlier_dups"].append(n[row])
+        cols["max_dot"].append(np.where(hits, dots, 0).max(axis=1)[row])
+    return pa.table(
         {
-            "vec_id": np.array(out_id, dtype=np.int64),
-            "n_earlier_dups": np.array(out_n, dtype=np.int64),
-            "max_dot": np.array(out_max, dtype=np.int64),
+            name: np.concatenate(parts or [np.zeros(0)]).astype(np.int64)
+            for name, parts in cols.items()
         }
+    )
+
+
+def _semdedup_verdicts(vecs: DataFrame, cluster: str) -> DataFrame:
+    """The SemDeDup result both keys emit: per vector of ``vecs``
+    (vec_id, embedding, ``cluster``), its cluster, its earlier
+    in-cluster near-dup count, the strongest such similarity and the
+    ``kept`` verdict.  One shuffle on ``cluster`` feeds _score_cluster;
+    the left join back is on vec_id, and the dup side holds at most
+    one row per vector."""
+    dup_counts = vecs.groupBy(cluster).applyInArrow(
+        _score_cluster, "vec_id long, n_earlier_dups long, max_dot long"
+    )
+    return (
+        vecs.select("vec_id", F.col(cluster).alias("cluster_id"))
+        .join(dup_counts, "vec_id", "left")
+        .select(
+            "vec_id",
+            "cluster_id",
+            F.coalesce(F.col("n_earlier_dups"), F.lit(0)).alias(
+                "n_earlier_dups"
+            ),
+            cos_micros(F.coalesce(F.col("max_dot"), F.lit(0))).alias(
+                "max_sim_micros"
+            ),
+            F.col("n_earlier_dups").isNull().alias("kept"),
+        )
     )
 
 
@@ -279,13 +305,11 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors make dot == cosine), so the tau cut and both aggregates
     are bit-stable cross-engine; max_sim_micros is floored integer
     micros (fixedpoint.cos_micros — the r13 family-wide migration off
-    the round(double, 6) seam). The numpy path reproduces the contract:
-    per-component float64 products floored individually, then summed
-    — each floored term is an int-valued float64 and the 64-term sum
-    stays below 2^53, so the sum is exact in any association order.
+    the round(double, 6) seam). The pair dots run on fixedpoint's
+    numpy kernel, whose contract is the same exact integers.
 
     Scale: ONE shuffle groups each cluster into a task; the pair
-    products run as an Arrow batch in numpy (each vector ships once
+    products run as an Arrow group in numpy (each vector ships once
     per cluster — the interpreted zip_with HOF twin materializes both
     64-float arrays PER PAIR, the llm_ivf_topk lesson), quadratic in
     CLUSTER size only — the paper's point: k grows with n (k ∝ n
@@ -293,27 +317,7 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     task and |pairs| ≈ n·c/2), and 100 TB never sees an all-pairs
     product. The left join back is on vec_id, and the dup-count side
     is at most one row per vector."""
-    from climateiq_pipelines_spark.functions.fixedpoint import cos_micros
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    dup_counts = emb.groupBy("label").applyInPandas(
-        _score_cluster, "vec_id long, n_earlier_dups long, max_dot long"
-    )
-    return (
-        emb.select("vec_id", F.col("label").alias("cluster_id"))
-        .join(dup_counts, "vec_id", "left")
-        .select(
-            "vec_id",
-            "cluster_id",
-            F.coalesce(F.col("n_earlier_dups"), F.lit(0)).alias(
-                "n_earlier_dups"
-            ),
-            cos_micros(F.coalesce(F.col("max_dot"), F.lit(0))).alias(
-                "max_sim_micros"
-            ),
-            F.col("n_earlier_dups").isNull().alias("kept"),
-        )
-    )
+    return _semdedup_verdicts(load_table(spark, sf_dir, "embeddings"), "label")
 
 
 # DSIR (Data Selection with Importance Resampling, Xie et al. 2023):
@@ -565,41 +569,20 @@ def llm_semdedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the assigned cluster and is quadratic in cluster size only —
     at 100 TB, k grows with n so clusters stay task-sized (the paper's
     own scaling argument)."""
-    from climateiq_pipelines_spark.functions.fixedpoint import (
-        assign_nearest_centroid,
-        cos_micros,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     # E-step shared with llm_centroid_assign (round-12 review: was a
     # ~25-line copy of its plan; the exactness contract both keys'
     # hashes depend on now lives once, next to its _CENTROID_SQL twin).
-    # Second diamond: emb2 feeds the Arrow scorer AND the final join —
-    # checkpoint the small per-vector assignment so the whole distance/
-    # argmin subtree runs once, not once per consumer.
+    # Second diamond: the joined vectors feed the Arrow scorer AND the
+    # final join — checkpoint the small per-vector assignment so the
+    # whole distance/argmin subtree runs once, not once per consumer.
     assigned = checkpoint(
         assign_nearest_centroid(emb)
         .select("vec_id", F.col("c_label").alias("cluster")),
         eager=False,
     )
-    emb2 = emb.select("vec_id", "embedding").join(assigned, "vec_id")
-    dup_counts = emb2.groupBy("cluster").applyInPandas(
-        _score_cluster, "vec_id long, n_earlier_dups long, max_dot long"
-    )
-    return (
-        emb2.select("vec_id", F.col("cluster").alias("cluster_id"))
-        .join(dup_counts, "vec_id", "left")
-        .select(
-            "vec_id",
-            "cluster_id",
-            F.coalesce(F.col("n_earlier_dups"), F.lit(0)).alias(
-                "n_earlier_dups"
-            ),
-            cos_micros(F.coalesce(F.col("max_dot"), F.lit(0))).alias(
-                "max_sim_micros"
-            ),
-            F.col("n_earlier_dups").isNull().alias("kept"),
-        )
+    return _semdedup_verdicts(
+        emb.select("vec_id", "embedding").join(assigned, "vec_id"), "cluster"
     )
 
 

@@ -19,7 +19,11 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.functions.fixedpoint import (
+    _S12,
     cos_micros,
+    fixed_mean_1e9,
+    np_topk,
+    np_vectors,
     sql_cos_micros,
 )
 from climateiq_pipelines_spark.plans import register
@@ -360,18 +364,12 @@ def llm_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: cells partition the corpus; each query touches nprobe
     partitions — the shuffle is (query → probed cell), never all-pairs.
     Same exact fixed-point spine as the rest of the vector family."""
-    from climateiq_pipelines_spark.operators.llm import _S9, _S12
-
     emb = load_table(spark, sf_dir, "embeddings")
     exploded = emb.select(
         "label", "vec_id", F.posexplode("embedding").alias("pos", "x")
     )
     centroids = exploded.groupBy(F.col("label").alias("c_label"), "pos").agg(
-        (
-            F.sum(F.floor(F.col("x").cast("double") * _S9)).cast("double")
-            / F.lit(float(_S9))
-            / F.count(F.lit(1))
-        ).alias("c")
+        fixed_mean_1e9(F.col("x")).alias("c")
     )
     diff = F.col("x").cast("double") - F.col("c")
     cell_dists = (
@@ -404,57 +402,30 @@ def llm_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), "c_label"
     ).join(qv, "q_id")
     # Per-cell Arrow block re-rank: cogroup (probes, inverted list) by
-    # cell and compute floor(x·y·1e12) product-sums with numpy inside
-    # the cell — bit-identical to _int_dot (int-valued float64 products
-    # ≤ 2.5e11, 64-term sums < 2^53 ⇒ exact) and to the SQL oracle.
-    # Why not JVM zip_with/aggregate: Spark interprets higher-order
-    # functions row-at-a-time (measured 10 s for the 1.2M-pair re-rank
-    # at sf0.1); why not a scalar pair UDF: Arrow would ship both
-    # 64-float arrays PER PAIR (~1 GB at sf0.1) — cogrouping ships each
-    # array once per probed cell (n·(nprobe+1) rows) and expands pairs
-    # only inside numpy. Each cell emits just its per-query top-5, so
-    # the final global window ranks n·nprobe·5 scalar rows, not
+    # cell and score the exact integer dots with fixedpoint's numpy
+    # kernel inside the cell.  Why not JVM zip_with/aggregate: Spark
+    # interprets higher-order functions row-at-a-time (measured 10 s
+    # for the 1.2M-pair re-rank at sf0.1); why not a scalar pair UDF:
+    # Arrow would ship both 64-float arrays PER PAIR (~1 GB at sf0.1) —
+    # cogrouping ships each array once per probed cell (n·(nprobe+1)
+    # rows) and expands pairs only inside numpy. Each cell emits just
+    # its per-query top-5 (a superset filter for the global top-5), so
+    # the final window ranks n·nprobe·5 scalar rows, not
     # n·nprobe·|cell| pairs.
-    import numpy as np
-    import pandas as pd
+    def score_cell(probes, cands):
+        import pyarrow as pa
 
-    def score_cell(probes_pdf, cands_pdf):
-        if len(probes_pdf) == 0 or len(cands_pdf) == 0:
-            return pd.DataFrame(
-                {"q_id": [], "cand_id": [], "dot_fp": []}
-            ).astype({"q_id": "int64", "cand_id": "int64", "dot_fp": "int64"})
-        q_ids = probes_pdf["q_id"].to_numpy(dtype=np.int64)
-        c_ids = cands_pdf["cand_id"].to_numpy(dtype=np.int64)
-        q = np.array([np.asarray(v, dtype=np.float64) for v in probes_pdf["q_emb"]])
-        c = np.array([np.asarray(v, dtype=np.float64) for v in cands_pdf["c_emb"]])
-        out_q, out_c, out_d = [], [], []
-        # 64-query blocks bound the m×|cell|×64 product tensor
-        for s in range(0, len(q), 64):
-            qb, qi = q[s : s + 64], q_ids[s : s + 64]
-            dots = (
-                np.floor(qb[:, None, :] * c[None, :, :] * 1e12)
-                .sum(axis=2)
-                .astype(np.int64)
-            )
-            for i in range(len(qb)):
-                keep = c_ids != qi[i]
-                d, ids = dots[i][keep], c_ids[keep]
-                top = np.lexsort((ids, -d))[:5]  # cell-local top-5 is a
-                out_q.extend([qi[i]] * len(top))  # superset filter for the
-                out_c.extend(ids[top])  # global top-5 window below
-                out_d.extend(d[top])
-        return pd.DataFrame(
-            {
-                "q_id": np.array(out_q, dtype=np.int64),
-                "cand_id": np.array(out_c, dtype=np.int64),
-                "dot_fp": np.array(out_d, dtype=np.int64),
-            }
+        q_id, cand_id, dot, _rnk = np_topk(
+            probes.column("q_id").to_numpy(), np_vectors(probes.column("q_emb")),
+            cands.column("cand_id").to_numpy(), np_vectors(cands.column("c_emb")),
+            k=5,
         )
+        return pa.table({"q_id": q_id, "cand_id": cand_id, "dot_fp": dot})
 
     scored = (
         probes_emb.groupBy("c_label")
         .cogroup(assign_emb.groupBy("cell"))
-        .applyInPandas(score_cell, "q_id long, cand_id long, dot_fp long")
+        .applyInArrow(score_cell, "q_id long, cand_id long, dot_fp long")
     )
     wr = W.partitionBy("q_id").orderBy(F.desc("dot_fp"), F.asc("cand_id"))
     return (

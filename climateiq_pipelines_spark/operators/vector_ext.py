@@ -13,6 +13,7 @@ correctness window (plans.load_all); covered by tools/driver_sim.py.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.functions.fixedpoint import (
@@ -21,7 +22,6 @@ from climateiq_pipelines_spark.functions.fixedpoint import (
     sql_cos_micros,
 )
 from climateiq_pipelines_spark.operators.llm import (
-    _cosine_topk_bucketed,
     _hyperplanes,
     _int_dot,
     _simhash_sig_sql,
@@ -144,16 +144,51 @@ def _cosine_topk_lsh_oracle() -> str:
 
 @register("llm_cosine_topk_lsh", oracle=_cosine_topk_lsh_oracle())
 def llm_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The bucketed ANN plan that llm_cosine_topk auto-dispatches to
-    above BLOCKNL_MAX_VECTORS, registered as its OWN hash-checked key:
-    the oracle states the bucket-local semantics directly (per-query
-    top-5 among same-signature vectors, exact integer-dot ranking), so
-    the >10^5-vector path is value-verified at fixture scale rather
-    than only contract-tested. Pure DataFrame plan — no driver
+    """The scale path of llm_cosine_topk (which refuses above the
+    block-NL bound), registered as its OWN hash-checked key: hyperplane
+    simhash buckets (llm_simhash_bucket's signature) prune candidates
+    to same-bucket pairs, exact integer-dot scoring + per-query window
+    top-5 within the bucket. The oracle states the bucket-local
+    semantics directly, so the plan is value-verified at fixture scale
+    rather than only contract-tested. Pure DataFrame plan — no driver
     materialization, no Python eval; shuffles carry (signature) then
-    per-query scalar rows."""
+    (vec_id); per-bucket self-joins are quadratic in bucket size only.
+    Recall is bucket-local (the standard LSH trade, measured by
+    llm_ann_recall_eval; widen signatures or multi-probe to raise it);
+    the method marker keeps a bucketed result from passing for the
+    exact block-NL contract."""
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return _cosine_topk_bucketed(emb, k=5)
+    sig = hyperplane_sig(F.col("embedding"), _hyperplanes())
+    sigs = emb.select("vec_id", "embedding", sig.alias("signature"))
+    a = sigs.select(
+        F.col("vec_id"), F.col("embedding").alias("q_emb"), "signature"
+    )
+    b = sigs.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("n_emb"),
+        "signature",
+    )
+    scored = (
+        a.join(b, "signature")
+        .filter(F.col("vec_id") != F.col("neighbor_id"))
+        .select(
+            "vec_id",
+            "neighbor_id",
+            _int_dot(F.col("q_emb"), F.col("n_emb")).alias("dot_fp"),
+        )
+    )
+    w = W.partitionBy("vec_id").orderBy(F.desc("dot_fp"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= 5)
+        .select(
+            "vec_id",
+            "neighbor_id",
+            cos_micros(F.col("dot_fp")).alias("cos_micros"),
+            F.col("rnk").cast("int").alias("rnk"),
+            F.lit("simhash_bucketed").alias("method"),
+        )
+    )
 
 
 # The winnow SELECTION (k=8 char grams, w=4 windows, value-min, per-doc
@@ -193,8 +228,6 @@ def _winnow_selected(docs: DataFrame) -> DataFrame:
     of _WINNOW_SEL_SQL, shared by llm_winnow_fingerprint and
     llm_winnow_neardup (round-12 review: this 20-line plan was
     copy-pasted in both builders)."""
-    from pyspark.sql import Window as W
-
     wins = docs.select(
         "doc_id",
         F.length("text").alias("n"),

@@ -1,17 +1,18 @@
-"""llm_cosine_topk's size dispatch: exact block-NL under
-BLOCKNL_MAX_VECTORS, bucketed pure-DataFrame ANN above — the round-2
-verdict's weak-lite item (the key used to raise above the guard and
-collected the corpus unbounded). llm_minhash_neardup has no such
-dispatch: its one plan is the exact prefix join at every size.
+"""The exact vector keys' block-NL bound: llm_cosine_topk and
+llm_mrl_truncated_rerank run the Arrow block-NL under
+BLOCKNL_MAX_VECTORS and raise ValueError above it, naming
+llm_cosine_topk_lsh, the bucketed scale path with its own oracle.
+llm_minhash_neardup has no size dispatch either: its one plan is the
+exact prefix join at every size.
 """
 
 from __future__ import annotations
 
-import re
-
 import pytest
 
-from climateiq_pipelines_spark.operators import llm
+# The block-NL bound and prelude live in fixedpoint; the refusal tests
+# patch the bound there, where both exact keys read it.
+from climateiq_pipelines_spark.functions import fixedpoint as llm
 from climateiq_pipelines_spark.plans import QUERIES
 
 from tests.conftest import SF_SMALL
@@ -26,36 +27,18 @@ def _plan(df) -> str:
 
 def test_small_corpus_uses_block_nl(spark):
     """Under the bound the registered key keeps the measured-24x-faster
-    Arrow block-NL (MapInPandas in the plan)."""
+    Arrow block-NL (MapInArrow in the plan)."""
     df = QUERIES["llm_cosine_topk"](spark, SF_SMALL)
-    assert "MapInPandas" in _plan(df)
+    assert "MapInArrow" in _plan(df)
 
 
-def test_large_corpus_dispatches_to_bucketed(spark, monkeypatch):
-    """Above the bound the key must return the bucketed DataFrame plan:
-    no Python eval node, no cartesian/nested-loop, same schema — and it
-    must actually run without any driver-side corpus materialization."""
+def test_large_corpus_refuses(spark, monkeypatch):
+    """Above the bound the exact key raises instead of answering with an
+    approximate plan, and the message names the scale path."""
     monkeypatch.setattr(llm, "BLOCKNL_MAX_VECTORS", 10)
-    df = QUERIES["llm_cosine_topk"](spark, SF_SMALL)
-    plan = _plan(df)
-    assert "MapInPandas" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert [f.name for f in df.schema.fields] == [
-        "vec_id", "neighbor_id", "cos_micros", "rnk", "method",
-    ]
-    pdf = df.toPandas()
-    assert len(pdf) > 0
-    # the r4 ADVICE marker: a dispatched result must self-identify so it
-    # can never silently pass for the exact block-NL contract
-    assert (pdf["method"] == "simhash_bucketed").all()
-    # per-query contract: at most k=5 neighbors, rnk dense from 1,
-    # cos_micros non-increasing in rnk
-    for _, g in pdf.groupby("vec_id"):
-        g = g.sort_values("rnk")
-        assert list(g["rnk"]) == list(range(1, len(g) + 1))
-        assert (g["cos_micros"].diff().dropna() <= 0).all()
-        assert len(g) <= 5
+    with pytest.raises(ValueError, match="exceeds the block-NL bound") as e:
+        QUERIES["llm_cosine_topk"](spark, SF_SMALL)
+    assert "llm_cosine_topk_lsh" in str(e.value)
 
 
 def test_minhash_neardup_is_exact_prefix_join(spark):
@@ -67,12 +50,25 @@ def test_minhash_neardup_is_exact_prefix_join(spark):
     assert "array_intersect" in plan
 
 
-def test_bucketed_neighbors_share_bucket_semantics(spark, monkeypatch):
-    """Every bucketed pair must be a same-signature pair — i.e. the
-    dispatch target implements bucket-local top-k, not a silent
-    all-pairs fallback (which would be the 100 TB-fatal plan)."""
-    monkeypatch.setattr(llm, "BLOCKNL_MAX_VECTORS", 10)
-    approx = QUERIES["llm_cosine_topk"](spark, SF_SMALL).toPandas()
+def test_bucketed_neighbors_share_bucket_semantics(spark):
+    """Every llm_cosine_topk_lsh pair must be a same-signature pair —
+    i.e. the scale path implements bucket-local top-k, not a silent
+    all-pairs fallback (which would be the 100 TB-fatal plan) — and
+    the per-query contract holds: at most k=5 neighbors, rnk dense
+    from 1, cos_micros non-increasing in rnk, the bucketed marker."""
+    df = QUERIES["llm_cosine_topk_lsh"](spark, SF_SMALL)
+    plan = _plan(df)
+    assert "MapInArrow" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    approx = df.toPandas()
+    assert len(approx) > 0
+    assert (approx["method"] == "simhash_bucketed").all()
+    for _, g in approx.groupby("vec_id"):
+        g = g.sort_values("rnk")
+        assert list(g["rnk"]) == list(range(1, len(g) + 1))
+        assert (g["cos_micros"].diff().dropna() <= 0).all()
+        assert len(g) <= 5
     sig_df = QUERIES["llm_simhash_bucket"](spark, SF_SMALL)
     # signature histogram: bucket sizes bound the per-query neighbor count
     sizes = {
@@ -82,28 +78,13 @@ def test_bucketed_neighbors_share_bucket_semantics(spark, monkeypatch):
     assert (counts <= max(sizes.values()) - 1).all()
 
 
-def test_mrl_large_corpus_dispatches_to_bucketed(spark, monkeypatch):
-    """llm_mrl_truncated_rerank shares the byte-derived corpus bound:
-    above it the key must return the simhash-bucketed DataFrame plan
-    (no Python eval, no nested loop) with the distinct method marker,
-    and the per-query rerank contract must hold."""
+def test_mrl_large_corpus_refuses(spark, monkeypatch):
+    """llm_mrl_truncated_rerank shares the byte-derived corpus bound and
+    raises above it like llm_cosine_topk."""
     monkeypatch.setattr(llm, "BLOCKNL_MAX_VECTORS", 10)
-    df = QUERIES["llm_mrl_truncated_rerank"](spark, SF_SMALL)
-    plan = _plan(df)
-    assert "MapInPandas" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert [f.name for f in df.schema.fields] == [
-        "vec_id", "neighbor_id", "cos_micros", "rnk", "method",
-    ]
-    pdf = df.toPandas()
-    assert len(pdf) > 0
-    assert (pdf["method"] == "mrl_prefix16_rerank_bucketed").all()
-    for _, g in pdf.groupby("vec_id"):
-        g = g.sort_values("rnk")
-        assert list(g["rnk"]) == list(range(1, len(g) + 1))
-        assert (g["cos_micros"].diff().dropna() <= 0).all()
-        assert len(g) <= 5
+    with pytest.raises(ValueError, match="exceeds the block-NL bound") as e:
+        QUERIES["llm_mrl_truncated_rerank"](spark, SF_SMALL)
+    assert "llm_cosine_topk_lsh" in str(e.value)
 
 
 def test_recall_eval_refuses_approximate_ground_truth(spark, monkeypatch):
@@ -117,9 +98,8 @@ def test_recall_eval_refuses_approximate_ground_truth(spark, monkeypatch):
 
 
 def test_blocknl_broadcast_empty_corpus_is_2d(spark):
-    """Round-12 review: ann_ext2's copy of the prelude crashed on an
-    empty corpus (prefix slice on a 1-D np.array([])).  The shared
-    helper must return a 2-D matrix even for zero rows."""
+    """An empty corpus must stay a 2-D (0, dim) matrix: MRL's prefix
+    slice needs the second axis (a 1-D np.array([]) once crashed it)."""
     from climateiq_pipelines_spark.registry import load_table
 
     empty = (

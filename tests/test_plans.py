@@ -61,18 +61,20 @@ PYTHON_EVAL_OK = {
     "udaf_grouped_pandas",  # FlatMapGroupsInPandas
     "udtf_explode_sessions",  # MapInPandas
     "udtf_native_chunker",  # BatchEvalPythonUDTF (native @udtf API)
-    "llm_cosine_topk",  # Arrow block-NL (MapInPandas), measured 24x DuckDB
+    "llm_cosine_topk",  # Arrow block-NL (MapInArrow), measured 24x DuckDB
     "llm_mrl_truncated_rerank",  # same Arrow block-NL, prefix-dim stage 1
-    "llm_ann_recall_eval",  # composes llm_cosine_topk (MapInPandas ground truth)
+    "llm_ann_recall_eval",  # composes llm_cosine_topk (MapInArrow ground truth)
     "mm_decode_features",  # binary decode is Python by necessity
     "mm_ppm_decode",  # native P6 codec runs in Python (MapInPandas)
-    # compute-bound exact integer-dot re-rank: Spark evaluates zip_with/
-    # aggregate HOFs interpreted (not codegen), measured 5x slower than
-    # the Arrow+numpy twin on the million-candidate pair relation
+    # compute-bound exact integer-dot re-rank (FlatMapCoGroupsInArrow):
+    # Spark evaluates zip_with/aggregate HOFs interpreted (not codegen),
+    # measured 5x slower than the Arrow+numpy twin on the
+    # million-candidate pair relation
     "llm_ivf_topk",
-    # same lesson: per-cluster pair dots as one Arrow batch (each vector
-    # ships once per cluster) instead of a self-join materializing both
-    # 64-float arrays per pair through interpreted HOFs
+    # same lesson: per-cluster pair dots as one Arrow group
+    # (FlatMapGroupsInArrow; each vector ships once per cluster) instead
+    # of a self-join materializing both 64-float arrays per pair
+    # through interpreted HOFs
     "llm_semdedup",
     "llm_semdedup_pipeline",  # stage 2 is the same Arrow pair scorer
     "mm_wav_decode",  # native RIFF/PCM codec runs in Python (MapInPandas)
@@ -85,6 +87,19 @@ PY_EVAL_NODES = (
     "FlatMapGroupsInPandas",
     "FlatMapCoGroupsInPandas",
     "MapInArrow",
+    "FlatMapGroupsInArrow",
+    "FlatMapCoGroupsInArrow",
+)
+
+# The vector family runs fixedpoint's numpy kernel over Arrow batches:
+# none of these keys may plan a pandas conversion node.
+ARROW_VECTOR_KEYS = (
+    "llm_cosine_topk",
+    "llm_mrl_truncated_rerank",
+    "llm_ann_recall_eval",
+    "llm_ivf_topk",
+    "llm_semdedup",
+    "llm_semdedup_pipeline",
 )
 
 
@@ -122,6 +137,13 @@ def test_no_accidental_python_eval(key, spark):
         assert hit, f"{key} is declared a Python-eval key but plan has none"
     else:
         assert not hit, f"{key} unexpectedly runs Python {hit}:\n{plan}"
+
+
+@pytest.mark.parametrize("key", ARROW_VECTOR_KEYS)
+def test_vector_keys_plan_no_pandas_node(key, spark):
+    plan = plan_of(spark, key)
+    assert not re.search(r"\w+InPandas", plan), plan
+    assert "InArrow" in plan, plan
 
 
 # ------------------------------------------------------- per-key pinnings
@@ -193,20 +215,14 @@ def test_simhash_neardup_avoids_all_pairs(spark):
 # sanctioned here by (file, line-regex), with the bound stated.  A new
 # .take(N) in engine sources fails the sweep until audited.
 TAKE_OK = [
-    # llm_cosine_topk / _blocknl: .take(max_vectors+1) probe — the
+    # fixedpoint._blocknl_broadcast (llm_cosine_topk,
+    # llm_mrl_truncated_rerank): .take(max_vectors+1) probe — the
     # broadcast dimension of the Arrow block-NL, capped by the
-    # byte-budget constant; above it the key dispatches to the bucketed
-    # pure-DataFrame plan.  emb.take(1) reads one row for dim sniffing.
+    # byte-budget constant; above it both keys raise.  emb.take(1)
+    # reads one row for dim sniffing when no parquet dim hint exists.
     ("llm.py", r"\.take\(max\+1\)"),  # docstring reference to the probe
-    ("llm.py", r"emb\.take\(1\)"),
-    ("llm.py", r"emb\.take\(max_vectors \+ 1\)"),
-    # llm_mrl_truncated_rerank: same block-NL probe pair.
-    ("ann_ext2.py", r"emb\.take\(1\)"),
-    ("ann_ext2.py", r"emb\.take\(max_vectors \+ 1\)"),
-    # llm_ann_recall_eval (round 12): dim sniff for the refuse-loudly
-    # ground-truth guard; the bound probe itself is a count-only
-    # limit().count() (no payload collected — round-12 self-review).
-    ("ann_ext2.py", r"emb_probe\.take\(1\)"),
+    ("fixedpoint.py", r"emb\.take\(1\)"),
+    ("fixedpoint.py", r"emb\.take\(max_vectors \+ 1\)"),
     # llm_bloom_decontam: .take(1) of a collect_set aggregate bounded
     # by FILTER GEOMETRY (≤ m = 65,536 bit positions regardless of
     # corpus size — the r8 verdict's audited exemption).  Anchored to

@@ -31,7 +31,7 @@ SHOWCASE = [
     ("llm_minhash_neardup", "one-token PPJoin prefix self-join on the rarest token (df, token) with the length filter, distinct candidates, array_intersect verify — no probe job, no size dispatch"),
     ("llm_minhash_lsh", "one-pass 16-min signature aggregate, band-key self-join, no cartesian"),
     ("llm_simhash_neardup", "band equi-join candidates — the all-pairs oracle twin never executes"),
-    ("llm_ivf_topk", "cogrouped Arrow re-rank (FlatMapCoGroupsInPandas) after cell-key joins"),
+    ("llm_ivf_topk", "cogrouped Arrow re-rank (FlatMapCoGroupsInArrow, fixedpoint.np_topk) after cell-key joins"),
     ("llm_ivf_pq_topk", "ADC joins carry scalar longs only; exact re-rank limited to the shortlist"),
     ("llm_corpus_pipeline", "three digest-keyed shuffles, map-side partial aggregation throughout"),
     ("llm_winnow_neardup", "partitioned winnow window, digest posting-list self-join, sizes ride rows"),
@@ -39,12 +39,12 @@ SHOWCASE = [
     ("q4_order_priority", "LeftSemi join (EXISTS decorrelated) with non-equi >90-day residual"),
     ("q19_discounted_revenue", "OR-of-conjunctions split and pushed into BOTH parquet scans"),
     ("llm_ngram_contamination", "lead()-window shingles, eval-side distinct join, count per doc"),
-    ("llm_cosine_topk", "Arrow block-NL over a sparkContext-broadcast corpus (r6), byte-bounded dispatch"),
+    ("llm_cosine_topk", "Arrow block-NL (MapInArrow, fixedpoint.np_topk) over a sparkContext-broadcast corpus; raises above the byte-derived bound"),
     ("q8_market_share", "pushed date/type filters, bounded-dim broadcasts, 2-accumulator share agg"),
     ("q17_small_qty_revenue", "brand-pruned join before the partkey window, 1-row final aggregate"),
     ("q20_potential_promotion", "prefix-LIKE range pushdown, aggregated dominance window, LeftSemi tail"),
     ("q11_important_stock", "semi-filtered fact, one partkey shuffle, 1-row total broadcast-cross (scalar subquery)"),
-    ("llm_semdedup", "one label shuffle into per-cluster Arrow pair batches (FlatMapGroupsInPandas)"),
+    ("llm_semdedup", "one label shuffle into per-cluster Arrow pair groups (FlatMapGroupsInArrow, fixedpoint.np_int_dots)"),
     ("llm_dsir_weights", "windowless array-index grams, single checkpointed (doc,bucket,side) pass, broadcast ratio table"),
     ("graph_pagerank", "3 unrolled power-iteration rounds; AQE stage reuse dedupes the repeated (edge, deg) subtree — 2 shuffles/round"),
     ("llm_inverted_index", "one (token, doc) shuffle; WindowGroupLimit prunes posting lists at the top-5 cutoff"),
@@ -59,7 +59,7 @@ SHOWCASE = [
     ("llm_substring_span_dedup", "shared-shingle equi-join only (no cartesian), per-(pair,diagonal) islands window — partitions bounded by match runs"),
     ("llm_bloom_decontam", "r9 packed-long bitset: k element_at+bitmask probes per shingle against a 1024-long array literal — zero pre-filter shuffles; exact verify join on candidates only"),
     ("agg_linear_fit", "r9 cent-long moments: one round-to-cents conversion per row, long products, decimal accumulator only in the group state — pruned 3-column scan, map-side partial agg, one 3-row exchange"),
-    ("llm_mrl_truncated_rerank", "Arrow block-NL over broadcast corpus, prefix-width stage-1 scoring, shortlist-only full-dim rerank (MapInPandas)"),
+    ("llm_mrl_truncated_rerank", "Arrow block-NL over broadcast corpus, prefix-width stage-1 scoring, shortlist-only full-dim rerank in the same MapInArrow body as llm_cosine_topk; raises above the bound"),
     ("graph_label_propagation", "per-round broadcast label join + (node,label) partial agg + node-partitioned argmax window; checkpointed frontier truncates lineage"),
     ("llm_perceptron_quality", "per-round ONE map-side partial aggregate to a 9-long gradient collected as model-sized driver state (all-reduce); weights re-enter as literals"),
     ("events_attribution_touch", "both ignore-nulls carries share ONE user exchange + sort; 10-row final aggregate"),
