@@ -1,6 +1,7 @@
-"""Shared streaming-query runs: a wait that fails LOUDLY on a stalled
+"""Shared streaming-query runs: the one query start (its state
+partitions sized from its input), a wait that fails LOUDLY on a stalled
 query, the one memory-sink run, and the one update-mode foreachBatch
-start.
+run.
 
 Every streaming key waits through ``await_or_raise``.  If a wait gave
 up on a query that was still working and the ``finally`` then stopped
@@ -14,14 +15,18 @@ attributably, with its status and last progress in the error.
 
 from __future__ import annotations
 
+import fnmatch
+import os
 import uuid
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from climateiq_pipelines_spark.session import register_temp_view
 
 _NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_ADVISORY_BYTES = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
 
 
 # One stall window: a wait raises only after this long with the query
@@ -60,6 +65,92 @@ def await_or_raise(query: StreamingQuery) -> None:
         )
 
 
+def state_partition_count(
+    input_bytes: int, caller_partitions: int, advisory_bytes: int
+) -> int:
+    """A stream's state-partition count: one per advisory partition of
+    input (``spark.sql.adaptive.advisoryPartitionSizeInBytes``, the size
+    AQE coalesces batch shuffles to), at least 1 and never above the
+    caller's ``spark.sql.shuffle.partitions``.  So it is 1 below one
+    advisory partition of input, and at 100 TB (about 1.5 million
+    advisory partitions of 64 MB) it equals the caller's count."""
+    per_advisory = (input_bytes + advisory_bytes - 1) // advisory_bytes
+    return min(caller_partitions, max(1, per_advisory))
+
+
+def _source_bytes(df: DataFrame) -> int | None:
+    """Total size of the files ``df``'s streaming sources read, by
+    ``os.stat`` (no Spark job): each file-source directory's top-level
+    files, less hidden ones and filtered by its ``pathGlobFilter``,
+    counted once per source that reads it.  None when a source is not a
+    file directory (a size-less source keeps the caller's count)."""
+    total = 0
+    leaves = df._jdf.queryExecution().logical().collectLeaves()
+    for i in range(leaves.length()):
+        leaf = leaves.apply(i)
+        if not leaf.isStreaming():
+            continue
+        if leaf.nodeName() != "StreamingRelation":
+            return None
+        options = leaf.dataSource().options()
+        path = options.get("path")
+        if path.isEmpty() or not os.path.isdir(path.get()):
+            return None
+        glob = options.get("pathGlobFilter")
+        pattern = "*" if glob.isEmpty() else glob.get()
+        with os.scandir(path.get()) as entries:
+            total += sum(
+                e.stat().st_size
+                for e in entries
+                if e.is_file()
+                and not e.name.startswith(("_", "."))
+                and fnmatch.fnmatchcase(e.name, pattern)
+            )
+    return total
+
+
+def _run(
+    df: DataFrame,
+    writer: DataStreamWriter,
+    conf: tuple[tuple[str, str], ...] = (),
+) -> None:
+    """Start ``writer`` (a ``df.writeStream`` chain), the one stream
+    start in the package, and wait for it through
+    :func:`await_or_raise`.  For ``start()`` alone the session carries
+    ``conf`` and a ``spark.sql.shuffle.partitions`` sized from the
+    input by :func:`state_partition_count`: the state store runs one
+    task per partition on every micro-batch, and a stream's partition
+    count is fixed at its first start (AQE cannot coalesce it after).
+    ``start()`` clones the session into the stream, so every caller
+    value is restored as soon as it returns, unset again if it was
+    unset."""
+    spark = df.sparkSession
+    input_bytes = _source_bytes(df)
+    if input_bytes is not None:
+        java_utils = spark._jvm.org.apache.spark.network.util.JavaUtils
+        count = state_partition_count(
+            input_bytes,
+            int(spark.conf.get(_SHUFFLE_PARTITIONS)),
+            java_utils.byteStringAsBytes(spark.conf.get(_ADVISORY_BYTES)),
+        )
+        conf = ((_SHUFFLE_PARTITIONS, str(count)), *conf)
+    prior = [(k, spark.conf.get(k, None)) for k, _ in conf]
+    for k, v in conf:
+        spark.conf.set(k, v)
+    try:
+        query = writer.start()
+    finally:
+        for k, v in prior:
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    try:
+        await_or_raise(query)
+    finally:
+        query.stop()
+
+
 def run_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
     """Run the streaming frame ``df`` to completion (availableNow, output
     mode "append" or "complete") into a memory sink and return the sink
@@ -70,17 +161,13 @@ def run_to_memory(df: DataFrame, output_mode: str) -> DataFrame:
     the batch that emits the final windows and flushes timed-out state
     once the watermark passes them."""
     name = register_temp_view(f"cps_memory_{uuid.uuid4().hex[:12]}")
-    query = (
+    _run(
+        df,
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .trigger(availableNow=True),
     )
-    try:
-        await_or_raise(query)
-    finally:
-        query.stop()
     return df.sparkSession.table(name)
 
 
@@ -96,29 +183,15 @@ def run_update_foreach_batch(df: DataFrame, sink) -> None:
     that changed it, so the closing batch emits nothing and only costs
     a re-run of the stateful plan.  It is switched off with
     ``spark.sql.streaming.noDataMicroBatches.enabled=false`` for this
-    query alone: ``start()`` clones the session into the stream, so the
-    caller's value is restored as soon as it returns (unset again if it
-    was unset).
+    query alone (see :func:`_run`).
 
     APPEND-mode queries must NOT come through here: there the closing
     batch is the one that emits the final windows, once the watermark
     passes them (the keys behind :func:`run_to_memory`)."""
-    spark = df.sparkSession
-    prior = spark.conf.get(_NO_DATA_BATCHES, None)
-    spark.conf.set(_NO_DATA_BATCHES, "false")
-    try:
-        query = (
-            df.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        if prior is None:
-            spark.conf.unset(_NO_DATA_BATCHES)
-        else:
-            spark.conf.set(_NO_DATA_BATCHES, prior)
-    try:
-        await_or_raise(query)
-    finally:
-        query.stop()
+    _run(
+        df,
+        df.writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .trigger(availableNow=True),
+        ((_NO_DATA_BATCHES, "false"),),
+    )

@@ -1280,3 +1280,59 @@ def test_graph_cache_evicts_to_latest_entry(spark):
     S.memo("probe", "sf_b", lambda: "frame_b", lazy=True)
     assert S._SCOPE.lazy_memos["probe"] == {"sf_a": "frame_a", "sf_b": "frame_b"}
     S.release_blocks(spark)
+
+
+def test_gen_plans_normalizes_run_specific_names():
+    """Ids and temp names that differ between two generations of one
+    plan normalize to the same text."""
+    import tempfile
+
+    from tools.gen_plans import normalize
+
+    tmp = tempfile.gettempdir()
+    one = (
+        "Exchange hashpartitioning(c_nationkey#12, 8), ENSURE_REQUIREMENTS, "
+        "[plan_id=441]\nFileScan parquet spark_catalog.default."
+        f"cps_bkt_orders_39222fdab958[o_custkey#3L] Location: "
+        f"InMemoryFileIndex(1 paths)[file:{tmp}/cps_bucketed_join_yljaiqsv/orders]"
+    )
+    two = (
+        "Exchange hashpartitioning(c_nationkey#98, 8), ENSURE_REQUIREMENTS, "
+        "[plan_id=17]\nFileScan parquet spark_catalog.default."
+        f"cps_bkt_orders_0a1b2c3d4e5f[o_custkey#40L] Location: "
+        f"InMemoryFileIndex(1 paths)[file:{tmp}/cps_bucketed_join_ab_cd_9z/orders]"
+    )
+    assert normalize(one) == normalize(two)
+    assert normalize(one) == (
+        "Exchange hashpartitioning(c_nationkey, 8), ENSURE_REQUIREMENTS\n"
+        "FileScan parquet spark_catalog.default.cps_bkt_orders_<token>"
+        "[o_custkey] Location: InMemoryFileIndex(1 paths)"
+        "[file:<tmp>/cps_bucketed_join_<rand>/orders]"
+    )
+
+
+# A fixed PLANS.md subset: a plain relational key, the bucketed join
+# (temp catalog tables and dirs) and an Arrow key.
+PLANS_SUBSET = ("topk_global", "join_bucketed_colocated", "llm_semdedup")
+
+
+def test_plans_md_subset_regenerates_byte_for_byte():
+    """tools/gen_plans.py, run in its own session, prints each subset
+    key's section exactly as the committed PLANS.md holds it: a
+    regeneration diff shows plan changes only."""
+    import subprocess
+    import sys
+
+    out = subprocess.run(
+        [sys.executable, "tools/gen_plans.py", *PLANS_SUBSET],
+        cwd=REPO_ROOT,
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=600,
+    ).stdout
+    committed = Path(REPO_ROOT, "PLANS.md").read_text()
+    for key in PLANS_SUBSET:
+        m = re.search(rf"^## `{key}`\n.*?\n```\n\n", committed, re.M | re.S)
+        assert m, key
+        assert m.group(0) in out, key

@@ -6,6 +6,7 @@ applies to the sessionizer.
 
 from __future__ import annotations
 
+import os
 import threading
 
 import pytest
@@ -13,7 +14,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 from climateiq_pipelines_spark.plans import QUERIES
-from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.registry import (
+    load_table,
+    read_events_stream,
+    table_path,
+)
 
 from tests.conftest import SF_SMALL
 
@@ -161,14 +166,17 @@ def test_windowed_topk_demo_equals_batch_topk(spark):
 # await_util.run_update_foreach_batch).
 UPDATE_MODE_KEYS = ("stream_txn_exactly_once", "stream_foreachbatch_sink")
 NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 
 
 class _ProgressLog(StreamingQueryListener):
     """Records each micro-batch's (batch id, input rows) as the stream
-    reports its progress."""
+    reports its progress, and the last batch's state operators as
+    (name, shuffle partitions, state store instances)."""
 
     def __init__(self) -> None:
         self.batches: list[tuple[int, int]] = []
+        self.state_ops: list[tuple[str, int, int]] = []
         self.terminated = threading.Event()
 
     def onQueryStarted(self, event) -> None:
@@ -178,6 +186,11 @@ class _ProgressLog(StreamingQueryListener):
         self.batches.append(
             (event.progress.batchId, event.progress.numInputRows)
         )
+        self.state_ops = [
+            (op.operatorName, op.numShufflePartitions,
+             op.numStateStoreInstances)
+            for op in event.progress.stateOperators
+        ]
 
     def onQueryIdle(self, event) -> None:
         pass
@@ -203,10 +216,15 @@ def test_update_mode_key_runs_exactly_one_micro_batch(spark, key):
 
 
 @pytest.mark.parametrize("caller_value", [None, "true"])
-@pytest.mark.parametrize("key", UPDATE_MODE_KEYS)
+@pytest.mark.parametrize(
+    "key", (*UPDATE_MODE_KEYS, "stream_readstream_demo")
+)
 def test_update_mode_key_restores_no_data_batch_conf(spark, key, caller_value):
-    """The no-data-batch override is scoped to the key's own query: the
-    caller's setting is as it left it afterwards, unset included."""
+    """The overrides of the key's own query start (no-data batches off
+    in update mode, the state-partition count always) are scoped to
+    that query: the caller's settings are as it left them afterwards,
+    unset included."""
+    partitions = spark.conf.get(SHUFFLE_PARTITIONS)
     if caller_value is None:
         spark.conf.unset(NO_DATA_BATCHES)
     else:
@@ -214,8 +232,81 @@ def test_update_mode_key_restores_no_data_batch_conf(spark, key, caller_value):
     try:
         QUERIES[key](spark, SF_SMALL)
         assert spark.conf.get(NO_DATA_BATCHES, None) == caller_value
+        assert spark.conf.get(SHUFFLE_PARTITIONS) == partitions
     finally:
         spark.conf.unset(NO_DATA_BATCHES)
+
+
+def test_unset_shuffle_partitions_stays_unset(spark):
+    """A caller that never set the partition count still has it unset
+    after a key sized its stream's count."""
+    partitions = spark.conf.get(SHUFFLE_PARTITIONS)
+    spark.conf.unset(SHUFFLE_PARTITIONS)
+    try:
+        QUERIES["stream_readstream_demo"](spark, SF_SMALL)
+        assert spark.conf.get(SHUFFLE_PARTITIONS, None) is None
+    finally:
+        spark.conf.set(SHUFFLE_PARTITIONS, partitions)
+
+
+# Every key that starts a stream, with its state operators' (name,
+# shuffle partitions, state store instances) at sf0.001.
+STREAM_STATE_OPERATORS = {
+    "stream_txn_exactly_once": [("stateStoreSave", 1, 1)],
+    "stream_foreachbatch_sink": [("stateStoreSave", 1, 1)],
+    "stream_readstream_demo": [("stateStoreSave", 1, 1)],
+    "stream_stateful_sessions": [("applyInPandasWithState", 1, 1)],
+    "stream_sliding_demo": [("stateStoreSave", 1, 1)],
+    "stream_dedup_watermark_demo": [("dedupeWithinWatermark", 1, 1)],
+    "stream_stream_join_demo": [("symmetricHashJoin", 1, 4)],
+    "stream_windowed_topk_demo": [("stateStoreSave", 1, 1)],
+    "stream_state_timeout_flush": [("applyInPandasWithState", 1, 1)],
+}
+
+
+@pytest.mark.parametrize("key", sorted(STREAM_STATE_OPERATORS))
+def test_stream_state_partitions_follow_input(spark, key):
+    """Under a 200-partition session, a stream over sf0.001's events
+    (27 KB, far below one 64 MB advisory partition) runs its state on
+    one partition, not the caller's 200."""
+    partitions = spark.conf.get(SHUFFLE_PARTITIONS)
+    spark.conf.set(SHUFFLE_PARTITIONS, "200")
+    log = _ProgressLog()
+    spark.streams.addListener(log)
+    try:
+        QUERIES[key](spark, SF_SMALL)
+        assert log.terminated.wait(60)
+    finally:
+        spark.streams.removeListener(log)
+        spark.conf.set(SHUFFLE_PARTITIONS, partitions)
+    assert log.state_ops == STREAM_STATE_OPERATORS[key]
+
+
+def test_source_bytes_stats_the_files_each_source_reads(spark):
+    """A stream's input size is its file sources' stat'ed bytes, once
+    per source that reads them; a source without files has none."""
+    from climateiq_pipelines_spark.streaming.await_util import _source_bytes
+
+    events = os.path.getsize(table_path(SF_SMALL, "events"))
+    ev = read_events_stream(spark, SF_SMALL)
+    assert _source_bytes(ev) == events
+    assert _source_bytes(ev.union(ev)) == 2 * events
+    assert _source_bytes(spark.readStream.format("rate").load()) is None
+
+
+def test_state_partition_count_bounds():
+    """1 below one advisory partition of input, one per advisory
+    partition above it, and the caller's count at 100 TB."""
+    from climateiq_pipelines_spark.streaming.await_util import (
+        state_partition_count,
+    )
+
+    mb64 = 64 << 20
+    assert state_partition_count(0, 200, mb64) == 1
+    assert state_partition_count(mb64, 200, mb64) == 1
+    assert state_partition_count(mb64 + 1, 200, mb64) == 2
+    assert state_partition_count(100 * 10**12, 200, mb64) == 200
+    assert state_partition_count(mb64 + 1, 1, mb64) == 1
 
 
 def test_await_timeout_names_status_and_last_progress():
@@ -284,7 +375,6 @@ def test_run_to_memory_names_each_sink_uniquely(spark):
     """Two runs of one stream land in two registered memory views with
     equal contents; the next release drops both."""
     from climateiq_pipelines_spark import session as S
-    from climateiq_pipelines_spark.registry import read_events_stream
     from climateiq_pipelines_spark.streaming.await_util import run_to_memory
 
     S.release_blocks(spark)

@@ -3,7 +3,9 @@ the scale-relevant nodes called out, as a reviewable artifact of "the
 plan you'd want at 100×" (tests/test_plans.py pins these shapes in CI;
 this file makes them human-readable).
 
-Usage: python tools/gen_plans.py  (writes PLANS.md at the repo root)
+Usage: python tools/gen_plans.py [KEY ...]
+With no KEY it writes PLANS.md at the repo root; with keys it prints
+only their sections, as they would appear in PLANS.md.
 """
 
 from __future__ import annotations
@@ -11,6 +13,7 @@ from __future__ import annotations
 import os
 import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -66,7 +69,52 @@ SHOWCASE = [
 ]
 
 
-def main() -> None:
+def normalize(plan: str) -> str:
+    """Strip what changes from one generation to the next but says
+    nothing about the plan: expression ids (``#N``), exchange plan ids
+    (``[plan_id=N]``), the per-call token of temp catalog tables
+    (``cps_bkt_orders_<hex12>``) and the random suffix and root of
+    session temp dirs (``/tmp/cps_bucketed_join_<rand8>``)."""
+    plan = re.sub(r"#\d+L?", "", plan)
+    plan = re.sub(r", \[plan_id=\d+\]", "", plan)
+    plan = re.sub(r"\b(cps_\w+?)_[0-9a-f]{12}\b", r"\1_<token>", plan)
+    return re.sub(
+        re.escape(tempfile.gettempdir()) + r"/(cps_\w+?)_\w{8}(?!\w)",
+        r"<tmp>/\1_<rand>",
+        plan,
+    )
+
+
+def section(spark, key: str, note: str) -> str:
+    """One key's PLANS.md section: its normalized initial physical plan
+    at SF_DIR under the note saying what to look for."""
+    from climateiq_pipelines_spark.plans import QUERIES
+
+    df = QUERIES[key](spark, SF_DIR)
+    plan = spark._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple"
+    )
+    return "\n".join(
+        [
+            f"## `{key}`",
+            "",
+            f"**Scale shape:** {note}",
+            "",
+            "```",
+            normalize(plan).strip(),
+            "```",
+            "",
+        ]
+    )
+
+
+def main(keys: list[str]) -> None:
+    from climateiq_pipelines_spark.plans import QUERIES, load_all
+
+    notes = dict(SHOWCASE)
+    unknown = [k for k in keys if k not in notes]
+    if unknown:
+        sys.exit(f"not in SHOWCASE: {unknown}")
     from pyspark.sql import SparkSession
 
     spark = (
@@ -76,11 +124,10 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    from climateiq_pipelines_spark.plans import QUERIES, load_all
-
     load_all()
-
+    if keys:
+        print("\n".join(section(spark, key, notes[key]) for key in keys))
+        return
     lines = [
         "# PLANS — physical plans of the headline queries (generated)",
         "",
@@ -91,26 +138,9 @@ def main() -> None:
         "at 100× the data.",
         "",
     ]
-    for key, note in SHOWCASE:
-        fn = QUERIES.get(key)
-        if fn is None:
-            continue
-        df = fn(spark, SF_DIR)
-        plan = spark._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "simple"
-        )
-        # strip expression ids for readability/stability
-        plan = re.sub(r"#\d+L?", "", plan)
-        lines += [
-            f"## `{key}`",
-            "",
-            f"**Scale shape:** {note}",
-            "",
-            "```",
-            plan.strip(),
-            "```",
-            "",
-        ]
+    lines += [
+        section(spark, key, note) for key, note in SHOWCASE if key in QUERIES
+    ]
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
     with open(out, "w") as fh:
         fh.write("\n".join(lines) + "\n")
@@ -118,4 +148,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
