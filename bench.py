@@ -21,7 +21,9 @@ number comparable to bench records.  BENCH_QUERIES.json also records
 `compiles: {key: [first_run, second_run]}`, the classes whole-stage
 codegen compiled during each run (Spark's CodegenMetrics compilation
 count): a second run that compiles again shows codegen-cache
-evictions.
+evictions; and `build: {key: [build_s, py4j_commands]}`, the second
+run's plan-build seconds and the py4j commands the build sent from the
+main thread, memory commands left out (session.py4j_commands).
 
 HEADLINE policy: the suite is the BASELINE.md-comparable set plus every
 operator family's most expensive representative — NOT all 200 keys.
@@ -219,8 +221,11 @@ def main(keys: list[str] | None = None) -> None:
 
     # min-of-2 per query: run 1 includes per-plan codegen compilation;
     # run 2 is the steady-state time a resident engine would show.
+    from climateiq_pipelines_spark.session import py4j_commands
+
     timings: dict[str, float] = {}
     compiles: dict[str, list[int]] = {}
+    builds: dict[str, list[float | int]] = {}
     codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     compiled = codegen.METRIC_COMPILATION_TIME()
     total = 0.0
@@ -230,10 +235,16 @@ def main(keys: list[str] | None = None) -> None:
             continue
         best, n = None, 0
         compiles[key] = []
-        for _ in range(2):
+        for run in range(2):
             c0 = compiled.getCount()
             t0 = time.perf_counter()
-            n = len(fn(spark, sf_dir).toPandas())
+            if run:
+                with py4j_commands() as sent:
+                    df = fn(spark, sf_dir)
+                builds[key] = [round(time.perf_counter() - t0, 4), len(sent)]
+            else:
+                df = fn(spark, sf_dir)
+            n = len(df.toPandas())
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
             compiles[key].append(compiled.getCount() - c0)
@@ -260,6 +271,7 @@ def main(keys: list[str] | None = None) -> None:
         "n_queries": len(timings),
         "queries": timings,
         "compiles": compiles,
+        "build": builds,
         "sf": sf,
         "load_1m_before": load_before,
         "load_1m_after": round(os.getloadavg()[0], 2),

@@ -13,12 +13,12 @@ invariants below make every sum exact and engine-independent.
    partition-layout independent, and both engines round the same
    integer to the same double.  The term is written once
    (:func:`sql_micros`) and shared by the oracle text (:func:`sql_dsum`,
-   :func:`sql_davg`) and the engine's exact builder
-   (:func:`exact_agg`); :func:`micros` is its Column form for window
-   and projection sites.  A decimal accumulator would be exact too, but
-   decimal(25,6) exceeds 64-bit unscaled range and runs on Spark's
-   BigDecimal slow path (3x slower on the Q1 shape at sf0.1,
-   BASELINE.md); the long path stays in whole-stage codegen.
+   :func:`sql_davg`) and the engine's aggregate templates
+   (:func:`exact_sql`, :func:`exact_agg`); :func:`micros` is its Column
+   form for window and projection sites.  A decimal accumulator would
+   be exact too, but decimal(25,6) exceeds 64-bit unscaled range and
+   runs on Spark's BigDecimal slow path (3x slower on the Q1 shape at
+   sf0.1, BASELINE.md); the long path stays in whole-stage codegen.
 
 2. LIMB-SPLIT SUMS.  A long accumulator holds Σ|x|·1e6 per group: at
    money scale (~1e5 units) it overflows 2^63 near 9·10^7 rows.  Any
@@ -49,10 +49,11 @@ invariants below make every sum exact and engine-independent.
 4. WHICH SINGLE-LEVEL SITES ARE EXEMPT.  Groups whose size is a TPC-H
    constant independent of SF: per order (join_shuffle_fact, q3), per
    (part, supplier) (q2, q20), per customer (q10), per supplier (q15),
-   and window frames (:func:`davg_window`, per-key running sums).
+   and window frames (:func:`davg_over`, per-key running sums).
    stream_tumbling_window's davg is bounded by event rate x window
    length in a real stream.  q11 sums decimal(38,0) directly over a
-   small relation.
+   small relation.  These sites use the single-level ``dsum1`` /
+   ``davg1`` kinds.
 
 Library transcendentals (exp/ln/pow/...) may differ between the JVM
 and DuckDB's libm in the last ulp, so those outputs are rounded
@@ -77,23 +78,6 @@ def sql_micros(x: str) -> str:
     return f"floor(({x}) * {_SCALE})"
 
 
-def dsum(col: Column, alias: str) -> Column:
-    """Exact, engine-independent SUM of a double expression
-    (fixed-point micro-units; single-level, for bounded groups only).
-    """
-    return (F.sum(F.floor(col * _SCALE)).cast("double") / F.lit(float(_SCALE))).alias(
-        alias
-    )
-
-
-def davg(col: Column, alias: str) -> Column:
-    """Exact-sum mean: micro-unit sum / 1e6 / count, bit-stable across
-    engines and partition layouts."""
-    return (
-        F.sum(F.floor(col * _SCALE)).cast("double") / F.lit(float(_SCALE)) / F.count(col)
-    ).alias(alias)
-
-
 def _limb_sum(v: str) -> str:
     """Exact Σv of the int64 SQL term ``v`` (module docstring,
     invariant 2): three long limb sums recombined in decimal(38,0)."""
@@ -108,6 +92,7 @@ def _limb_sum(v: str) -> str:
 
 # One aggregate template per exact_agg kind over the SQL text ``{x}``.
 _MICRO_SUM = f"CAST({_limb_sum(sql_micros('{x}'))} AS DOUBLE) / {float(_SCALE)}"
+_MICRO_SUM1 = f"CAST(sum({sql_micros('{x}')}) AS DOUBLE) / {float(_SCALE)}"
 _KINDS = {
     "count": "count(1)",
     "countc": "count({x})",
@@ -115,6 +100,8 @@ _KINDS = {
     "isum": _limb_sum("{x}"),
     "dsum": _MICRO_SUM,
     "davg": _MICRO_SUM + " / count({x})",
+    "dsum1": _MICRO_SUM1,
+    "davg1": _MICRO_SUM1 + " / count({x})",
     "min": "min({x})",
     "max": "max({x})",
     "cdistinct": "CAST(size(collect_set({x})) AS BIGINT)",
@@ -122,17 +109,28 @@ _KINDS = {
 }
 
 
-def exact_aggs(aggs) -> list[Column]:
-    """The aggregate columns of ``aggs`` (specs as in :func:`exact_agg`),
-    rendered as ``F.expr`` text from the kind templates above.  A
-    ``dsum`` and a ``davg`` of one expression render the same limb sums,
-    which Catalyst computes once."""
+def _agg_texts(aggs) -> list[str]:
     out = []
     for kind, *x, alias in aggs:
         if kind not in _KINDS:
             raise ValueError(f"unknown exact_agg kind: {kind!r}")
-        out.append(F.expr(f"{_KINDS[kind].format(x=x[0] if x else None)} AS `{alias}`"))
+        out.append(f"{_KINDS[kind].format(x=x[0] if x else None)} AS `{alias}`")
     return out
+
+
+def exact_sql(aggs) -> str:
+    """The select list of ``aggs`` (specs as in :func:`exact_agg`) as
+    one Spark SQL text, rendered from the kind templates above, for a
+    builder's ``GROUP BY`` text.  A ``dsum`` and a ``davg`` of one
+    expression render the same limb sums, which Catalyst computes
+    once."""
+    return ", ".join(_agg_texts(aggs))
+
+
+def exact_aggs(aggs) -> list[Column]:
+    """:func:`exact_sql`'s aggregates as ``F.expr`` columns, for
+    DataFrame ``agg`` sites."""
+    return [F.expr(text) for text in _agg_texts(aggs)]
 
 
 def exact_agg(df: DataFrame, keys, aggs) -> DataFrame:
@@ -152,6 +150,8 @@ def exact_agg(df: DataFrame, keys, aggs) -> DataFrame:
       an int64 term, for integer moment sums whose total outgrows int64
     - ``("dsum", x, alias)`` / ``("davg", x, alias)`` -- exact micro-sum
       / exact-sum mean (double)
+    - ``("dsum1", x, alias)`` / ``("davg1", x, alias)`` -- the same as
+      one long sum, only for groups bounded by invariant 4
     - ``("min", x, alias)`` / ``("max", x, alias)`` -- order statistics
     - ``("cdistinct", x, alias)`` -- COUNT(DISTINCT x) for BOUNDED
       domains only: the partial carries collect_set(x), so its state
@@ -171,13 +171,13 @@ def micros(col: Column) -> Column:
     return F.floor(col * _SCALE)
 
 
-def davg_window(col: Column, w) -> Column:
-    """Window twin of :func:`davg`: exact micro-sum mean over a window
-    frame (q17's per-part average threshold shape)."""
+def davg_over(x: str, window: str) -> str:
+    """SQL text of the exact micro-sum mean of ``x`` over the window
+    ``window`` (a ``WINDOW`` clause name): the frame's micro-unit sum
+    / 1e6 / the frame's row count."""
     return (
-        F.sum(micros(col)).over(w).cast("double")
-        / F.lit(float(_SCALE))
-        / F.count(F.lit(1)).over(w)
+        f"CAST(sum({sql_micros(x)}) OVER {window} AS DOUBLE)"
+        f" / {float(_SCALE)} / count(1) OVER {window}"
     )
 
 
@@ -187,7 +187,7 @@ def fin(col: Column, alias: str, places: int = 6) -> Column:
 
 
 def sql_dsum(expr: str) -> str:
-    """DuckDB twin of :func:`dsum` (without alias)."""
+    """The oracle's exact micro-sum of ``expr`` (without alias)."""
     return (
         f"(CAST(SUM(CAST({sql_micros(expr)} AS BIGINT)) AS DOUBLE)"
         f" / {float(_SCALE)})"
@@ -195,7 +195,7 @@ def sql_dsum(expr: str) -> str:
 
 
 def sql_davg(expr: str) -> str:
-    """DuckDB twin of :func:`davg` (without alias)."""
+    """The oracle's exact-sum mean of ``expr`` (without alias)."""
     return (
         f"(CAST(SUM(CAST({sql_micros(expr)} AS BIGINT)) AS DOUBLE)"
         f" / {float(_SCALE)} / COUNT({expr}))"
@@ -203,10 +203,6 @@ def sql_davg(expr: str) -> str:
 
 
 REVENUE = "l_extendedprice * (1 - l_discount)"
-
-
-def revenue_col() -> Column:
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
 # Deterministic 3-way dataset-split contract, keyed on

@@ -24,12 +24,13 @@ from climateiq_pipelines_spark.functions.helpers import (
     REVENUE,
     exact_agg,
     exact_aggs,
+    exact_sql,
     fin,
     sql_davg,
     sql_dsum,
 )
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.registry import load_table, sql
 
 
 @register(
@@ -57,23 +58,20 @@ def agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     Q1's ~6 groups span all of lineitem, so every sum is limb-split
     (helpers module docstring, invariants 2 and 3); a sum and an
     average of one measure share its limb sums."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= F.lit("2000-01-01").cast("timestamp_ntz")
-    )
-    return exact_agg(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        [
-            ("dsum", "l_quantity", "sum_qty"),
-            ("dsum", "l_extendedprice", "sum_base_price"),
-            ("dsum", REVENUE, "sum_disc_price"),
-            ("dsum", REVENUE + " * (1 + l_tax)", "sum_charge"),
-            ("davg", "l_quantity", "avg_qty"),
-            ("davg", "l_extendedprice", "avg_price"),
-            ("davg", "l_discount", "avg_disc"),
-            ("count", "count_order"),
-        ],
-    )
+    return sql(spark, sf_dir, f"""
+        SELECT l_returnflag, l_linestatus,
+               {exact_sql([("dsum", "l_quantity", "sum_qty"),
+                           ("dsum", "l_extendedprice", "sum_base_price"),
+                           ("dsum", REVENUE, "sum_disc_price"),
+                           ("dsum", REVENUE + " * (1 + l_tax)", "sum_charge"),
+                           ("davg", "l_quantity", "avg_qty"),
+                           ("davg", "l_extendedprice", "avg_price"),
+                           ("davg", "l_discount", "avg_disc"),
+                           ("count", "count_order")])}
+        FROM {{lineitem}}
+        WHERE l_shipdate <= TIMESTAMP_NTZ '2000-01-01 00:00:00'
+        GROUP BY l_returnflag, l_linestatus
+    """)
 
 
 @register(
@@ -389,25 +387,17 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets with per-column GROUPING flags (bit-order
     portable, unlike a packed grouping_id)."""
-    customer = load_table(spark, sf_dir, "customer")
-    view = "cps_customer_gs"
-    customer.createOrReplaceTempView(view)
-    # sql_dsum is valid Spark SQL too (the explicit BIGINT cast is a
-    # no-op on Spark's floor) — round-13 review: the hand-inlined copy
-    # here was the one fixed-point sum outside the shared helper, the
-    # drift class helpers.py's SPLIT_SALT note records as a past
-    # incident.
-    return spark.sql(
-        f"""
+    # The () set sums over every customer, and each segment over a
+    # fifth of them: limb-split, exact below 2^42 rows per group
+    # (helpers invariant 3).
+    return sql(spark, sf_dir, f"""
         SELECT c_mktsegment, c_nationkey,
                CAST(grouping(c_mktsegment) AS INT) AS g_seg,
                CAST(grouping(c_nationkey) AS INT) AS g_nat,
-               COUNT(*) AS n_custs,
-               {sql_dsum('c_acctbal')} AS sum_bal
-        FROM {view}
+               {exact_sql([("count", "n_custs"), ("dsum", "c_acctbal", "sum_bal")])}
+        FROM {{customer}}
         GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
-        """
-    )
+    """)
 
 
 @register(

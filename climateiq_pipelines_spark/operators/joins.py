@@ -26,13 +26,13 @@ from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.functions.helpers import (
     REVENUE,
-    dsum,
     exact_agg,
-    revenue_col,
+    exact_aggs,
+    exact_sql,
     sql_dsum,
 )
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.registry import load_table, sql
 
 
 @register(
@@ -71,7 +71,7 @@ def join_shuffle_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
         .groupBy("o_orderkey", "o_orderstatus")
-        .agg(dsum(revenue_col(), "order_revenue"))
+        .agg(*exact_aggs([("dsum1", REVENUE, "order_revenue")]))
     )
 
 
@@ -101,38 +101,26 @@ def join_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
     date filter on orders is pushed into the parquet scan before the big
     join, so the shuffled volume is one year, not seven.
     """
-    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = load_table(spark, sf_dir, "nation")
-    customer = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supplier = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
-    ).select("o_orderkey", "o_custkey")
-    lineitem = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-
-    asia_nations = nation.join(
-        F.broadcast(region), nation.n_regionkey == region.r_regionkey
-    ).select("n_nationkey", "n_name")
-
-    joined = (
-        customer.join(F.broadcast(asia_nations), F.col("c_nationkey") == F.col("n_nationkey"))
-        .join(orders, F.col("o_custkey") == F.col("c_custkey"))
-        .join(lineitem, F.col("l_orderkey") == F.col("o_orderkey"))
-        # supplier is SF-proportional (10k rows/SF) — no broadcast hint;
-        # Catalyst/AQE broadcasts it while under the threshold and falls
-        # back to shuffle join at scale instead of OOMing the build side.
-        .join(
-            supplier,
-            (F.col("s_suppkey") == F.col("l_suppkey"))
-            & (F.col("s_nationkey") == F.col("c_nationkey")),
-        )
-    )
-    # per-nation revenue groups are fact-table-sized: limb-split sums,
-    # exact below 2^42 rows per group (helpers invariant 3)
-    return exact_agg(joined, ["n_name"], [("dsum", REVENUE, "revenue")])
+    # supplier is SF-proportional (10k rows/SF): no broadcast hint, so
+    # AQE broadcasts it while under the threshold and falls back to a
+    # shuffle join at scale instead of OOMing the build side.  Per-nation
+    # revenue groups are fact-table-sized: limb-split sums, exact below
+    # 2^42 rows per group (helpers invariant 3).
+    return sql(spark, sf_dir, f"""
+        SELECT /*+ BROADCAST(asia_nations) */ n_name,
+               {exact_sql([("dsum", REVENUE, "revenue")])}
+        FROM {{customer}}
+        JOIN (SELECT /*+ BROADCAST(r) */ n_nationkey, n_name
+              FROM {{nation}} JOIN {{region}} r ON n_regionkey = r_regionkey
+              WHERE r_name = 'ASIA') asia_nations
+          ON c_nationkey = n_nationkey
+        JOIN {{orders}} ON o_custkey = c_custkey
+        JOIN {{lineitem}} ON l_orderkey = o_orderkey
+        JOIN {{supplier}} ON s_suppkey = l_suppkey AND s_nationkey = c_nationkey
+        WHERE o_orderdate >= TIMESTAMP_NTZ '1996-01-01 00:00:00'
+          AND o_orderdate < TIMESTAMP_NTZ '1997-01-01 00:00:00'
+        GROUP BY n_name
+    """)
 
 
 @register(

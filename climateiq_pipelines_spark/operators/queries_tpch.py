@@ -15,17 +15,10 @@ with every other key.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from climateiq_pipelines_spark.functions.helpers import (
-    REVENUE,
-    dsum,
-    exact_agg,
-    revenue_col,
-    sql_dsum,
-)
+from climateiq_pipelines_spark.functions.helpers import REVENUE, exact_sql, sql_dsum
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.registry import sql
 
 
 @register(
@@ -56,33 +49,26 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer side broadcasts; lineitem shuffles once on l_orderkey;
     partial+final agg; TakeOrderedAndProject caps the tail. Cut-off
     1998-06-15 sits mid-range of the fixture's 1995-2001 dates."""
-    cust = (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-06-15").cast("timestamp_ntz")
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-06-15").cast("timestamp_ntz")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        # cust is segment-filtered but still SF-proportional (~30k rows/SF)
-        # — no broadcast hint; AQE broadcasts while small, shuffles at scale.
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(dsum(revenue_col(), "revenue"))
-        .select(
-            "l_orderkey",
-            "revenue",
-            F.col("o_orderdate").cast("date").cast("string").alias("order_day"),
-            "o_orderpriority",
+    # cust is segment-filtered but still SF-proportional (~30k rows/SF):
+    # no broadcast hint; AQE broadcasts while small, shuffles at scale.
+    return sql(spark, sf_dir, f"""
+        SELECT l_orderkey, revenue,
+               CAST(CAST(o_orderdate AS DATE) AS STRING) AS order_day,
+               o_orderpriority
+        FROM (
+          SELECT l_orderkey, o_orderdate, o_orderpriority,
+                 {exact_sql([("dsum1", REVENUE, "revenue")])}
+          FROM {{lineitem}}
+          JOIN {{orders}} ON l_orderkey = o_orderkey
+          JOIN {{customer}} ON o_custkey = c_custkey
+          WHERE c_mktsegment = 'BUILDING'
+            AND o_orderdate < TIMESTAMP_NTZ '1998-06-15 00:00:00'
+            AND l_shipdate > TIMESTAMP_NTZ '1998-06-15 00:00:00'
+          GROUP BY l_orderkey, o_orderdate, o_orderpriority
         )
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
+        ORDER BY revenue DESC, l_orderkey
+        LIMIT 10
+    """)
 
 
 @register(
@@ -108,21 +94,15 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE group over all of filtered lineitem is the most ceiling-exposed
     shape there is, so the sum is limb-split (helpers module
     docstring, invariants 2 and 3)."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
-        & (F.col("l_discount") >= 0.025)
-        & (F.col("l_discount") <= 0.075)
-        & (F.col("l_quantity") < 24)
-    )
-    return exact_agg(
-        li,
-        [],
-        [
-            ("dsum", "l_extendedprice * l_discount", "promo_revenue"),
-            ("count", "n_lineitems"),
-        ],
-    )
+    return sql(spark, sf_dir, f"""
+        SELECT {exact_sql([("dsum", "l_extendedprice * l_discount", "promo_revenue"),
+                           ("count", "n_lineitems")])}
+        FROM {{lineitem}}
+        WHERE l_shipdate >= TIMESTAMP_NTZ '1997-01-01 00:00:00'
+          AND l_shipdate < TIMESTAMP_NTZ '1998-01-01 00:00:00'
+          AND l_discount >= 0.025 AND l_discount <= 0.075
+          AND l_quantity < 24
+    """)
 
 
 @register(
@@ -150,27 +130,19 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders/customer, so the joins run on the reduced set and broadcast.
     Quantities are integer-valued doubles, so SUM is exact in both
     engines without the fixed-point detour."""
-    li = load_table(spark, sf_dir, "lineitem")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("total_qty"))
-        .filter(F.col("total_qty") > 300)
-    )
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    return (
-        # big is a HAVING-filtered aggregate of lineitem — selective but
-        # SF-proportional — no broadcast hint; AQE decides from runtime size.
-        orders.join(big, orders.o_orderkey == big.l_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .select(
-            "c_name",
-            "c_custkey",
-            "o_orderkey",
-            F.col("o_orderdate").cast("date").cast("string").alias("order_day"),
-            "o_totalprice",
-            "total_qty",
-        )
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(20)
-    )
+    # big is a HAVING-filtered aggregate of lineitem, selective but
+    # SF-proportional: no broadcast hint; AQE decides from runtime size.
+    return sql(spark, sf_dir, """
+        SELECT c_name, c_custkey, o_orderkey,
+               CAST(CAST(o_orderdate AS DATE) AS STRING) AS order_day,
+               o_totalprice, total_qty
+        FROM {orders}
+        JOIN (
+          SELECT l_orderkey, sum(l_quantity) AS total_qty
+          FROM {lineitem} GROUP BY l_orderkey
+          HAVING total_qty > 300
+        ) ON o_orderkey = l_orderkey
+        JOIN {customer} ON o_custkey = c_custkey
+        ORDER BY o_totalprice DESC, o_orderkey
+        LIMIT 20
+    """)

@@ -1,6 +1,5 @@
-"""Round-3 TPC-H composite extensions (Q7 / Q10 / Q12 shapes) — loaded
-after the driver's 50-entry correctness window (plans.load_all);
-covered by tools/driver_sim.py.
+"""TPC-H composites Q7 / Q10 / Q12 / Q22, each one Spark SQL text over
+the fixture tables (``registry.sql``).
 
 Same discipline as operators/queries_tpch.py: parameters adapted to the
 fixture's value ranges (nations are NATION_0..24, dates 1995-2001, no
@@ -11,17 +10,10 @@ its category axis and keeps the canonical conditional-count shape).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from climateiq_pipelines_spark.functions.helpers import (
-    REVENUE,
-    dsum,
-    exact_agg,
-    revenue_col,
-    sql_dsum,
-)
+from climateiq_pipelines_spark.functions.helpers import REVENUE, exact_sql, sql_dsum
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.registry import sql
 
 
 @register(
@@ -55,36 +47,29 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairing, but the two n_name IN (pair) halves DO push into each
     broadcast side as derived filters). Year extraction is exact
     integer date arithmetic in both engines."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
-    )
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    pair = ["NATION_12", "NATION_10"]  # probed: nonempty at sf0.001
-    sn = nation.filter(F.col("n_name").isin(pair)).select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    cn = nation.filter(F.col("n_name").isin(pair)).select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
-    )
-    shipped = (
-        li.join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-    )
     # nation-pair x year groups are fact-fraction-sized: limb-split
-    # sums, exact below 2^42 rows per group (helpers invariant 3)
-    return exact_agg(
-        shipped,
-        ["supp_nation", "cust_nation", "CAST(year(l_shipdate) AS BIGINT) AS l_year"],
-        [("dsum", REVENUE, "revenue")],
-    )
+    # sums, exact below 2^42 rows per group (helpers invariant 3).  The
+    # pair is probed nonempty at sf0.001.
+    return sql(spark, sf_dir, f"""
+        SELECT /*+ BROADCAST(sn, cn) */
+               supp_nation, cust_nation,
+               CAST(year(l_shipdate) AS BIGINT) AS l_year,
+               {exact_sql([("dsum", REVENUE, "revenue")])}
+        FROM {{lineitem}}
+        JOIN {{supplier}} ON l_suppkey = s_suppkey
+        JOIN {{orders}} ON l_orderkey = o_orderkey
+        JOIN {{customer}} ON o_custkey = c_custkey
+        JOIN (SELECT n_nationkey AS sn_key, n_name AS supp_nation FROM {{nation}}
+              WHERE n_name IN ('NATION_12', 'NATION_10')) sn
+          ON s_nationkey = sn_key
+        JOIN (SELECT n_nationkey AS cn_key, n_name AS cust_nation FROM {{nation}}
+              WHERE n_name IN ('NATION_12', 'NATION_10')) cn
+          ON c_nationkey = cn_key
+        WHERE l_shipdate >= TIMESTAMP_NTZ '1996-01-01 00:00:00'
+          AND l_shipdate < TIMESTAMP_NTZ '1998-01-01 00:00:00'
+          AND supp_nation <> cust_nation
+        GROUP BY supp_nation, cust_nation, CAST(year(l_shipdate) AS BIGINT)
+    """)
 
 
 @register(
@@ -115,92 +100,74 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation broadcasts; the order/lineitem chain shuffles on its FK
     keys; TakeOrderedAndProject bounds the result. Revenue is the
     shared fixed-point sum."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_returnflag") == "R"
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
-        & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp_ntz"))
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_nationkey"
-    )
-    nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(
-            dsum(revenue_col(), "revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
+    return sql(spark, sf_dir, f"""
+        SELECT /*+ BROADCAST(n) */ c_custkey, c_name, n_name,
+               {exact_sql([("dsum1", REVENUE, "revenue"), ("count", "n_items")])}
+        FROM {{lineitem}}
+        JOIN {{orders}} ON l_orderkey = o_orderkey
+        JOIN {{customer}} ON o_custkey = c_custkey
+        JOIN {{nation}} n ON c_nationkey = n_nationkey
+        WHERE l_returnflag = 'R'
+          AND o_orderdate >= TIMESTAMP_NTZ '1997-01-01 00:00:00'
+          AND o_orderdate < TIMESTAMP_NTZ '1997-07-01 00:00:00'
+        GROUP BY c_custkey, c_name, n_name
+        ORDER BY revenue DESC, c_custkey
+        LIMIT 20
+    """)
 
 
-# ONE query text for BOTH entry APIs (round-13 review batch F: the
-# oracle literal and the spark.sql body were the same ~15 lines
-# maintained twice, differing only in table names — an edit to one
-# copy compiled cleanly and surfaced only as an unattributed hash
-# mismatch; the key's entire point is that both APIs compile the one
-# query).
-_Q22_SQL = """
+@register(
+    "q22_global_sales_opportunity",
+    oracle="""
     WITH thresh AS (
       SELECT CAST(SUM(CAST(floor(c_acctbal * 100) AS BIGINT)) AS DOUBLE)
              / 100.0 / COUNT(*) AS avg_bal
-      FROM {cust} WHERE c_acctbal > 0.0
+      FROM customer WHERE c_acctbal > 0.0
     )
     SELECT c_nationkey,
            COUNT(*) AS n_custs,
            CAST(SUM(CAST(floor(c_acctbal * 100) AS BIGINT)) AS DOUBLE)
              / 100.0 AS total_bal
-    FROM {cust}, thresh
+    FROM customer, thresh
     WHERE c_acctbal > thresh.avg_bal
-      AND NOT EXISTS (SELECT 1 FROM {ord}
+      AND NOT EXISTS (SELECT 1 FROM orders
                       WHERE o_custkey = c_custkey
                         AND o_orderpriority = '1-URGENT')
     GROUP BY c_nationkey
-    """
-
-
-@register(
-    "q22_global_sales_opportunity",
-    oracle=_Q22_SQL.format(cust="customer", ord="orders"),
+    """,
 )
 def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape (global sales opportunity) — and the repo's
-    SQL-SURFACE demonstration: the whole query is ONE spark.sql()
-    string over temp views, exercising a scalar aggregate subquery
-    (above-average balance threshold) and NOT EXISTS (customers with no
-    URGENT orders — probed nonempty at sf0.001; every fixture customer
-    has SOME order), which Catalyst rewrites to the same broadcast/anti-join
-    physical shapes the DataFrame keys pin. Both entry APIs compile to
-    the one Catalyst IR — this key proves the SQL door is open.
+    """TPC-H Q22 shape (global sales opportunity): customers with an
+    above-average positive balance and no URGENT order, per nation.  A
+    scalar aggregate subquery gives the threshold, and NOT EXISTS
+    (probed nonempty at sf0.001; every fixture customer has SOME
+    order) is decorrelated by Catalyst into a left-anti join.
 
     Exactness: the threshold is an exact fixed-point mean
     (sum of floor(bal·100) int64s / 100 / count) — a naive AVG(double)
     differs across engines in the last ulp, which could flip a
-    boundary customer. Temp-view names carry a per-call token so
-    concurrent sessions never collide.
+    boundary customer.
 
     Plan: customer scans once per side but both with pushed
     projections; the scalar subquery broadcasts as a 1-row cross; the
     NOT EXISTS becomes a left-anti hash join keyed on custkey."""
-    import uuid
-
-    from climateiq_pipelines_spark.session import register_temp_view
-
-    token = uuid.uuid4().hex[:12]
-    # Registered so the next release drops them: unregistered per-call
-    # names would leave 2 dead catalog entries per evaluation for the
-    # session lifetime.
-    cust_v = register_temp_view(f"cps_q22_cust_{token}")
-    ord_v = register_temp_view(f"cps_q22_ord_{token}")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(cust_v)
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(ord_v)
-    return spark.sql(_Q22_SQL.format(cust=cust_v, ord=ord_v))
+    return sql(spark, sf_dir, """
+        WITH thresh AS (
+          SELECT CAST(sum(CAST(floor(c_acctbal * 100) AS BIGINT)) AS DOUBLE)
+                 / 100.0 / count(1) AS avg_bal
+          FROM {customer} WHERE c_acctbal > 0.0
+        )
+        SELECT c_nationkey,
+               count(1) AS n_custs,
+               CAST(sum(CAST(floor(c_acctbal * 100) AS BIGINT)) AS DOUBLE)
+                 / 100.0 AS total_bal
+        FROM {customer}, thresh
+        WHERE c_acctbal > thresh.avg_bal
+          AND NOT EXISTS (SELECT 1 FROM {orders}
+                          WHERE o_custkey = c_custkey
+                            AND o_orderpriority = '1-URGENT')
+        GROUP BY c_nationkey
+    """)
 
 
 @register(
@@ -229,19 +196,14 @@ def q12_priority_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins orders (the priority carrier) to the filtered lineitems; the
     conditional counts are a single partial+final aggregate (two
     codegen'd count-if accumulators, no second pass)."""
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy("l_returnflag")
-        .agg(
-            F.count(F.when(high, 1)).alias("high_line_count"),
-            F.count(F.when(~high, 1)).alias("low_line_count"),
-        )
-    )
+    return sql(spark, sf_dir, """
+        SELECT l_returnflag,
+               count(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 END)
+                 AS high_line_count,
+               count(CASE WHEN NOT o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 END)
+                 AS low_line_count
+        FROM {lineitem} JOIN {orders} ON l_orderkey = o_orderkey
+        WHERE l_shipdate >= TIMESTAMP_NTZ '1997-01-01 00:00:00'
+          AND l_shipdate < TIMESTAMP_NTZ '1998-01-01 00:00:00'
+        GROUP BY l_returnflag
+    """)

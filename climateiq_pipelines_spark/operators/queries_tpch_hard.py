@@ -1,8 +1,6 @@
-"""Round-5 TPC-H hard-shape extensions (Q21 / Q2 shapes) — the two
-most optimizer-demanding composites remaining: a semi+anti join
-composition and a correlated min-aggregate equality. Loaded after the
-driver's 50-entry correctness window (plans.load_all); covered by
-tools/driver_sim.py.
+"""TPC-H hard shapes Q21 / Q2, each one Spark SQL text over the fixture
+tables (``registry.sql``): a semi+anti join composition and a
+correlated min-aggregate equality.
 
 Fixture adaptations as elsewhere (no l_commitdate/l_receiptdate —
 "kept waiting" means shipped >60 days after the order date; no
@@ -13,12 +11,10 @@ part from lineitem).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
-from pyspark.sql import functions as F
 
-from climateiq_pipelines_spark.functions.helpers import davg, sql_davg
+from climateiq_pipelines_spark.functions.helpers import exact_sql, sql_davg
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.registry import sql
 
 
 @register(
@@ -54,45 +50,23 @@ def q21_suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried through semi, anti, and the supplier dim join (supplier
     broadcasts while small, policy as Q5). At 100 TB co-bucketing
     lineitem/orders by orderkey removes the dominant shuffle."""
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate"
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    late = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .filter(F.col("l_shipdate") > F.expr("timestampadd(DAY, 60, o_orderdate)"))
-        .select("l_orderkey", "l_suppkey")
-    )
-    other = li.select(
-        F.col("l_orderkey").alias("o2_orderkey"),
-        F.col("l_suppkey").alias("o2_suppkey"),
-    )
-    other_late = late.select(
-        F.col("l_orderkey").alias("o3_orderkey"),
-        F.col("l_suppkey").alias("o3_suppkey"),
-    )
-    waiting = (
-        late.join(
-            other,
-            (F.col("o2_orderkey") == F.col("l_orderkey"))
-            & (F.col("o2_suppkey") != F.col("l_suppkey")),
-            "left_semi",
+    return sql(spark, sf_dir, """
+        WITH late AS (
+          SELECT l_orderkey, l_suppkey
+          FROM {lineitem} JOIN {orders} ON l_orderkey = o_orderkey
+          WHERE l_shipdate > timestampadd(DAY, 60, o_orderdate)
         )
-        .join(
-            other_late,
-            (F.col("o3_orderkey") == F.col("l_orderkey"))
-            & (F.col("o3_suppkey") != F.col("l_suppkey")),
-            "left_anti",
-        )
-    )
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        waiting.join(supp, waiting.l_suppkey == supp.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-    )
+        SELECT s_name, count(1) AS numwait
+        FROM late
+        LEFT SEMI JOIN (SELECT l_orderkey AS o2_orderkey, l_suppkey AS o2_suppkey
+                        FROM {lineitem})
+          ON o2_orderkey = l_orderkey AND o2_suppkey <> l_suppkey
+        LEFT ANTI JOIN (SELECT l_orderkey AS o3_orderkey, l_suppkey AS o3_suppkey
+                        FROM late)
+          ON o3_orderkey = l_orderkey AND o3_suppkey <> l_suppkey
+        JOIN {supplier} ON l_suppkey = s_suppkey
+        GROUP BY s_name
+    """)
 
 
 @register(
@@ -132,25 +106,21 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the SQL. Plan: lineitem aggregates on (partkey, suppkey); the
     window partitions on partkey over the AGGREGATED frame (bounded by
     |suppliers-per-part|); part/supplier dims broadcast while small."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_extendedprice"
-    )
-    ps = li.groupBy("l_partkey", "l_suppkey").agg(
-        davg(F.col("l_extendedprice"), "avg_price")
-    )
-    w = W.partitionBy("l_partkey")
-    best = ps.withColumn("min_price", F.min("avg_price").over(w)).filter(
-        F.col("avg_price") == F.col("min_price")
-    )
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_name")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        best.join(part, best.l_partkey == part.p_partkey)
-        .join(supp, best.l_suppkey == supp.s_suppkey)
-        .select(
-            F.col("p_partkey").alias("partkey"),
-            "p_name",
-            "s_name",
-            F.round("avg_price", 6).alias("min_avg_price"),
+    return sql(spark, sf_dir, f"""
+        WITH ps AS (
+          SELECT l_partkey, l_suppkey,
+                 {exact_sql([("davg1", "l_extendedprice", "avg_price")])}
+          FROM {{lineitem}} GROUP BY l_partkey, l_suppkey
+        ),
+        best AS (
+          SELECT * FROM (
+            SELECT *, min(avg_price) OVER (PARTITION BY l_partkey) AS min_price
+            FROM ps
+          ) WHERE avg_price = min_price
         )
-    )
+        SELECT p_partkey AS partkey, p_name, s_name,
+               round(avg_price, 6) AS min_avg_price
+        FROM best
+        JOIN {{part}} ON l_partkey = p_partkey
+        JOIN {{supplier}} ON l_suppkey = s_suppkey
+    """)

@@ -1,6 +1,5 @@
-"""Round-5 TPC-H composite extensions (Q4 / Q13 / Q14 / Q19 shapes) —
-loaded after the driver's 50-entry correctness window (plans.load_all);
-covered by tools/driver_sim.py.
+"""TPC-H composites Q4 / Q13 / Q14 / Q19, each one Spark SQL text over
+the fixture tables (``registry.sql``).
 
 Same discipline as operators/queries_tpch.py and queries_tpch_ext.py:
 parameters adapted to the fixture's value ranges (no partsupp table, no
@@ -17,15 +16,10 @@ multi-table conjunctions exercising OR-predicate pushdown.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from climateiq_pipelines_spark.functions.helpers import (
-    REVENUE,
-    exact_agg,
-    sql_dsum,
-)
+from climateiq_pipelines_spark.functions.helpers import REVENUE, exact_sql, sql_dsum
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.registry import sql
 
 
 @register(
@@ -56,20 +50,16 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     5 groups. At 100 TB both sides shuffle on orderkey — co-bucketing
     orders/lineitem by orderkey (join_bucketed_colocated's layout)
     removes the shuffle entirely."""
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp_ntz"))
-        & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp_ntz"))
-    )
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    late = (F.col("l_orderkey") == F.col("o_orderkey")) & (
-        F.col("l_shipdate")
-        > F.expr("timestampadd(DAY, 90, o_orderdate)")
-    )
-    return (
-        orders.join(li, late, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
+    return sql(spark, sf_dir, """
+        SELECT o_orderpriority, count(1) AS order_count
+        FROM {orders}
+        LEFT SEMI JOIN {lineitem}
+          ON l_orderkey = o_orderkey
+         AND l_shipdate > timestampadd(DAY, 90, o_orderdate)
+        WHERE o_orderdate >= TIMESTAMP_NTZ '1996-07-01 00:00:00'
+          AND o_orderdate < TIMESTAMP_NTZ '1996-10-01 00:00:00'
+        GROUP BY o_orderpriority
+    """)
 
 
 @register(
@@ -103,19 +93,19 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram aggregate is at most |distinct counts| groups. At 100 TB
     the only large shuffle is the orders pre-aggregate (map-side
     partials shrink it) — the join side is |customers| rows."""
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    per_cust = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") != "1-URGENT")
-        .groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    counts = cust.join(
-        per_cust, cust.c_custkey == per_cust.o_custkey, "left"
-    ).select(F.coalesce(F.col("cnt"), F.lit(0).cast("long")).alias("c_count"))
-    return counts.groupBy("c_count").agg(
-        F.count(F.lit(1)).alias("custdist")
-    )
+    return sql(spark, sf_dir, """
+        SELECT c_count, count(1) AS custdist
+        FROM (
+          SELECT coalesce(cnt, 0L) AS c_count
+          FROM {customer}
+          LEFT JOIN (
+            SELECT o_custkey, count(1) AS cnt
+            FROM {orders} WHERE o_orderpriority <> '1-URGENT'
+            GROUP BY o_custkey
+          ) ON c_custkey = o_custkey
+        )
+        GROUP BY c_count
+    """)
 
 
 _PROMO_REVENUE = f"CASE WHEN p_type = 'PROMO' THEN {REVENUE} ELSE 0.0 END"
@@ -145,29 +135,19 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     policy), so the final division divides two bit-identical doubles —
     the engines' shares match exactly; round(…,6) is belt-and-braces.
     """
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-03-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp_ntz"))
-    )
-    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     # both accumulators are GLOBAL over a month of lineitem: limb-split
     # sums, exact below 2^42 rows (helpers invariant 3).
     # An empty month yields NULL/NULL -> NULL on both engines.
-    return (
-        exact_agg(
-            li.join(part, li.l_partkey == part.p_partkey),
-            [],
-            [
-                ("dsum", _PROMO_REVENUE, "promo_rev"),
-                ("dsum", REVENUE, "total_rev"),
-            ],
+    return sql(spark, sf_dir, f"""
+        SELECT round(100.0D * promo_rev / total_rev, 6) AS promo_share
+        FROM (
+          SELECT {exact_sql([("dsum", _PROMO_REVENUE, "promo_rev"),
+                             ("dsum", REVENUE, "total_rev")])}
+          FROM {{lineitem}} JOIN {{part}} ON l_partkey = p_partkey
+          WHERE l_shipdate >= TIMESTAMP_NTZ '1997-03-01 00:00:00'
+            AND l_shipdate < TIMESTAMP_NTZ '1997-04-01 00:00:00'
         )
-        .select(
-            F.round(
-                F.lit(100.0) * F.col("promo_rev") / F.col("total_rev"), 6
-            ).alias("promo_share")
-        )
-    )
+    """)
 
 
 @register(
@@ -197,34 +177,16 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate rows of both tables, and the full mixed predicate runs as
     the join residual. Group-less aggregate via the fixed-point long
     accumulator; one row out."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
-    )
-    part = load_table(spark, sf_dir, "part").select(
-        "p_partkey", "p_brand", "p_size"
-    )
-    tier = (
-        (
-            (F.col("p_brand") == "Brand#3")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(1, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#12")
-            & F.col("p_size").between(5, 25)
-            & F.col("l_quantity").between(10, 30)
-        )
-        | (
-            (F.col("p_brand") == "Brand#24")
-            & F.col("p_size").between(10, 40)
-            & F.col("l_quantity").between(20, 40)
-        )
-    )
     # a GLOBAL sum over the tier band: limb-split, exact below 2^42
     # rows (helpers invariant 3).  An empty band aggregates to one
     # NULL-revenue row on both engines.
-    return exact_agg(
-        li.join(part, li.l_partkey == part.p_partkey).filter(tier),
-        [],
-        [("dsum", REVENUE, "revenue")],
-    )
+    return sql(spark, sf_dir, f"""
+        SELECT {exact_sql([("dsum", REVENUE, "revenue")])}
+        FROM {{lineitem}} JOIN {{part}} ON l_partkey = p_partkey
+        WHERE (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
+               AND l_quantity BETWEEN 1 AND 20)
+           OR (p_brand = 'Brand#12' AND p_size BETWEEN 5 AND 25
+               AND l_quantity BETWEEN 10 AND 30)
+           OR (p_brand = 'Brand#24' AND p_size BETWEEN 10 AND 40
+               AND l_quantity BETWEEN 20 AND 40)
+    """)

@@ -1,22 +1,19 @@
-"""Round-6 TPC-H third wave (Q8 / Q9 / Q15 / Q16 / Q17 / Q20 shapes) —
-the remaining classic composites expressible over the fixture's tables.
-Loaded after the driver's 50-entry certification window
-(plans.load_all); covered by tools/driver_sim.py and rotation-targeted
-for round 7.
+"""TPC-H composites Q8 / Q9 / Q11 / Q15 / Q16 / Q17 / Q20, each one
+Spark SQL text over the fixture tables (``registry.sql``).
 
-Fixture adaptations (consistent with the Q2/Q21 wave): there is no
+Fixture adaptations (as for Q2/Q21): there is no
 partsupp table, no l_commitdate/l_receiptdate, and no p_container —
 supply relationships come from lineitem's (l_partkey, l_suppkey) pairs,
 nations are NATION_0..24, and part names are '<adjective> <noun>'
 ('small ring', 'red widget', ...). Every key keeps the ORIGINAL query's
-optimizer-relevant shape (the point of the wave): exact conditional
+optimizer-relevant shape: exact conditional
 share aggregate (Q8), multi-dim star join with a LIKE filter (Q9),
 max-equality over an aggregated view (Q15), anti-join + count-distinct
 grouping (Q16), correlated per-part average threshold (Q17), nested
 semi-join chain (Q20).
 
 Float policy as everywhere: all revenue/quantity sums go through the
-fixed-point long accumulator (helpers.dsum), so both engines produce
+fixed-point long accumulator (helpers.exact_sql), so both engines produce
 bit-identical doubles and the share divisions / threshold comparisons /
 max-equality picks are exact on both sides.
 """
@@ -24,20 +21,16 @@ max-equality picks are exact on both sides.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as W
-from pyspark.sql import functions as F
 
 from climateiq_pipelines_spark.functions.helpers import (
     REVENUE,
-    davg_window,
-    dsum,
-    exact_agg,
-    micros,
-    revenue_col,
+    davg_over,
+    exact_sql,
     sql_dsum,
+    sql_micros,
 )
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.registry import sql
 
 
 @register(
@@ -80,69 +73,36 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer/supplier carry no hints (SF-proportional — AQE promotes
     while small, policy as Q5). Share division divides two
     fixed-point-exact doubles, so engines agree bit-for-bit."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
-    ).select("o_orderkey", "o_custkey", F.year("o_orderdate").alias("o_year"))
-    part = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_type") == "PROMO")
-        .select("p_partkey")
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    sn = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    cn = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_region")
-    )
-    region = (
-        load_table(spark, sf_dir, "region")
-        .filter(F.col("r_name") == "ASIA")
-        .select("r_regionkey")
-    )
-    asia_cn = cn.join(
-        F.broadcast(region), cn.cn_region == F.col("r_regionkey")
-    ).select("cn_key")
-    rev = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(part, li.l_partkey == part.p_partkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(asia_cn), cust.c_nationkey == F.col("cn_key"))
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(sn), supp.s_nationkey == sn.sn_key)
-    )
     # two o_year groups over the region-filtered fact chain are
     # table-fraction-sized: both accumulators are limb-split sums,
     # exact below 2^42 rows per group (helpers invariant 3)
-    return (
-        exact_agg(
-            rev,
-            ["o_year"],
-            [
-                (
-                    "dsum",
-                    f"CASE WHEN supp_nation = 'NATION_3' THEN {REVENUE} ELSE 0.0 END",
-                    "nation_rev",
-                ),
-                ("dsum", REVENUE, "total_rev"),
-            ],
+    nation_rev = f"CASE WHEN supp_nation = 'NATION_3' THEN {REVENUE} ELSE 0.0 END"
+    return sql(spark, sf_dir, f"""
+        SELECT o_year, round(nation_rev / total_rev, 6) AS mkt_share
+        FROM (
+          SELECT /*+ BROADCAST(asia_cn, sn) */ o_year,
+                 {exact_sql([("dsum", nation_rev, "nation_rev"),
+                             ("dsum", REVENUE, "total_rev")])}
+          FROM {{lineitem}}
+          JOIN (SELECT o_orderkey, o_custkey, year(o_orderdate) AS o_year
+                FROM {{orders}}
+                WHERE o_orderdate >= TIMESTAMP_NTZ '1996-01-01 00:00:00'
+                  AND o_orderdate < TIMESTAMP_NTZ '1998-01-01 00:00:00')
+            ON l_orderkey = o_orderkey
+          JOIN {{part}} ON l_partkey = p_partkey
+          JOIN {{customer}} ON o_custkey = c_custkey
+          JOIN (SELECT /*+ BROADCAST(r) */ n_nationkey AS cn_key
+                FROM {{nation}} JOIN {{region}} r ON n_regionkey = r_regionkey
+                WHERE r_name = 'ASIA') asia_cn
+            ON c_nationkey = cn_key
+          JOIN {{supplier}} ON l_suppkey = s_suppkey
+          JOIN (SELECT n_nationkey AS sn_key, n_name AS supp_nation
+                FROM {{nation}}) sn
+            ON s_nationkey = sn_key
+          WHERE p_type = 'PROMO'
+          GROUP BY o_year
         )
-        .select(
-            "o_year",
-            F.round(F.col("nation_rev") / F.col("total_rev"), 6).alias(
-                "mkt_share"
-            ),
-        )
-    )
+    """)
 
 
 @register(
@@ -173,35 +133,22 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension), then orders for the year, then supplier→nation
     (broadcast, 25 rows). Aggregate is |nations|x|years| groups —
     map-side partials collapse the shuffle."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    part = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_name").contains("red"))
-        .select("p_partkey")
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", F.year("o_orderdate").alias("o_year")
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    sn = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("nation")
-    )
-    red = (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(sn), supp.s_nationkey == sn.sn_key)
-    )
     # nation x year groups over the part-filtered fact are
     # table-fraction-sized: limb-split sums, exact below 2^42 rows per
     # group (helpers invariant 3)
-    return exact_agg(
-        red, ["nation", "o_year"], [("dsum", REVENUE, "sum_profit")]
-    )
+    return sql(spark, sf_dir, f"""
+        SELECT /*+ BROADCAST(sn) */ nation, o_year,
+               {exact_sql([("dsum", REVENUE, "sum_profit")])}
+        FROM {{lineitem}}
+        JOIN {{part}} ON l_partkey = p_partkey
+        JOIN (SELECT o_orderkey, year(o_orderdate) AS o_year FROM {{orders}})
+          ON l_orderkey = o_orderkey
+        JOIN {{supplier}} ON l_suppkey = s_suppkey
+        JOIN (SELECT n_nationkey AS sn_key, n_name AS nation FROM {{nation}}) sn
+          ON s_nationkey = sn_key
+        WHERE contains(p_name, 'red')
+        GROUP BY nation, o_year
+    """)
 
 
 @register(
@@ -231,23 +178,23 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Equality on total_revenue is safe: both sides of the comparison are
     the same fixed-point-exact double computed once. Ties surface every
     max supplier, same as the SQL."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp_ntz"))
-    )
-    rev = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        dsum(revenue_col(), "total_revenue")
-    )
-    w = W.partitionBy()
-    best = rev.withColumn(
-        "max_rev", F.max("total_revenue").over(w)
-    ).filter(F.col("total_revenue") == F.col("max_rev"))
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return best.join(supp, best.supplier_no == supp.s_suppkey).select(
-        "s_suppkey",
-        "s_name",
-        F.round("total_revenue", 6).alias("total_revenue"),
-    )
+    return sql(spark, sf_dir, f"""
+        WITH rev AS (
+          SELECT l_suppkey AS supplier_no,
+                 {exact_sql([("dsum1", REVENUE, "total_revenue")])}
+          FROM {{lineitem}}
+          WHERE l_shipdate >= TIMESTAMP_NTZ '1996-01-01 00:00:00'
+            AND l_shipdate < TIMESTAMP_NTZ '1996-04-01 00:00:00'
+          GROUP BY l_suppkey
+        )
+        SELECT s_suppkey, s_name, round(total_revenue, 6) AS total_revenue
+        FROM (
+          SELECT * FROM (
+            SELECT *, max(total_revenue) OVER () AS max_rev FROM rev
+          ) WHERE total_revenue = max_rev
+        )
+        JOIN {{supplier}} ON supplier_no = s_suppkey
+    """)
 
 
 @register(
@@ -282,31 +229,18 @@ def q16_parts_supplier_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction happens map-side-combined on (partkey, suppkey) before
     the dimension join. Final count-distinct groups are bounded by
     |brand x type x size-subset|."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey"
-    ).distinct()
-    part = (
-        load_table(spark, sf_dir, "part")
-        .filter(
-            (F.col("p_brand") != "Brand#1")
-            & (F.col("p_type") != "PROMO")
-            & F.col("p_size").isin(1, 4, 9, 14, 23, 36, 45, 49)
-        )
-        .select("p_partkey", "p_brand", "p_type", "p_size")
-    )
-    complaints = (
-        load_table(spark, sf_dir, "supplier")
-        .filter(F.col("s_acctbal") < 0)
-        .select("s_suppkey")
-    )
-    kept = li.join(
-        complaints, li.l_suppkey == complaints.s_suppkey, "left_anti"
-    )
-    return (
-        kept.join(part, kept.l_partkey == part.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
+    return sql(spark, sf_dir, """
+        SELECT p_brand, p_type, p_size,
+               count(DISTINCT l_suppkey) AS supplier_cnt
+        FROM (SELECT DISTINCT l_partkey, l_suppkey FROM {lineitem})
+        LEFT ANTI JOIN (SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0)
+          ON l_suppkey = s_suppkey
+        JOIN {part} ON l_partkey = p_partkey
+        WHERE p_brand <> 'Brand#1'
+          AND p_type <> 'PROMO'
+          AND p_size IN (1, 4, 9, 14, 23, 36, 45, 49)
+        GROUP BY p_brand, p_type, p_size
+    """)
 
 
 @register(
@@ -342,29 +276,23 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter prunes part to ~1/25 and the join prunes lineitem before
     the window; the window partitions on l_partkey (bounded per-part
     state, one shuffle); the final sum is a 1-row aggregate."""
-    part = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_brand") == "Brand#1")
-        .select("p_partkey")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    brand_li = li.join(part, li.l_partkey == part.p_partkey)
-    w = W.partitionBy("l_partkey")
-    # helpers.davg_window (round-13 review batch F): the inline scale
-    # here sat next to an oracle built from sql_dsum — the documented
-    # scale-drift class.
-    avg_qty = davg_window(F.col("l_quantity"), w)
-    small = brand_li.withColumn("qty_limit", F.lit(0.2) * avg_qty).filter(
-        F.col("l_quantity") < F.col("qty_limit")
-    )
     # the final sum is GLOBAL over the small-quantity band: limb-split,
     # exact below 2^42 rows (helpers invariant 3).  Zero kept rows
     # aggregate to one NULL-revenue row on both engines.
-    return exact_agg(small, [], [("dsum", "l_extendedprice", "rev")]).select(
-        F.round(F.col("rev") / F.lit(7.0), 6).alias("avg_yearly")
-    )
+    return sql(spark, sf_dir, f"""
+        SELECT round(rev / 7.0D, 6) AS avg_yearly
+        FROM (
+          SELECT {exact_sql([("dsum", "l_extendedprice", "rev")])}
+          FROM (
+            SELECT l_partkey, l_quantity, l_extendedprice, p_partkey,
+                   0.2D * ({davg_over("l_quantity", "w")}) AS qty_limit
+            FROM {{lineitem}} JOIN {{part}} ON l_partkey = p_partkey
+            WHERE p_brand = 'Brand#1'
+            WINDOW w AS (PARTITION BY l_partkey)
+          )
+          WHERE l_quantity < qty_limit
+        )
+    """)
 
 
 @register(
@@ -409,30 +337,26 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier rows intact — no duplication regardless of how many parts
     a supplier dominates. Quantity sums are fixed-point exact, so the
     0.5x dominance cut is engine-identical."""
-    part = (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_name").startswith("small"))
-        .select("p_partkey")
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
-    ).select("l_partkey", "l_suppkey", "l_quantity")
-    shipped = (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(dsum(F.col("l_quantity"), "qty"))
-    )
-    w = W.partitionBy("l_partkey")
-    dominant = (
-        shipped.withColumn("part_total", F.sum("qty").over(w))
-        .filter(F.col("qty") > F.lit(0.5) * F.col("part_total"))
-        .select("l_suppkey")
-    )
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return supp.join(
-        dominant, supp.s_suppkey == dominant.l_suppkey, "left_semi"
-    )
+    return sql(spark, sf_dir, f"""
+        WITH shipped AS (
+          SELECT l_partkey, l_suppkey,
+                 {exact_sql([("dsum1", "l_quantity", "qty")])}
+          FROM {{lineitem}} JOIN {{part}} ON l_partkey = p_partkey
+          WHERE startswith(p_name, 'small')
+            AND l_shipdate >= TIMESTAMP_NTZ '1996-01-01 00:00:00'
+            AND l_shipdate < TIMESTAMP_NTZ '1997-01-01 00:00:00'
+          GROUP BY l_partkey, l_suppkey
+        )
+        SELECT s_suppkey, s_name
+        FROM {{supplier}}
+        LEFT SEMI JOIN (
+          SELECT l_suppkey FROM (
+            SELECT l_suppkey, qty,
+                   sum(qty) OVER (PARTITION BY l_partkey) AS part_total
+            FROM shipped
+          ) WHERE qty > 0.5D * part_total
+        ) ON s_suppkey = l_suppkey
+    """)
 
 
 @register(
@@ -468,58 +392,36 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     total — the canonical GROUP BY + scalar-subquery HAVING threshold.
 
     Exactness: both sides of the threshold stay in INTEGER micro-units
-    — the per-part sum accumulates in DECIMAL(38,0) (round-13: Spark
-    SUM(BIGINT) silently wraps while the oracle's DuckDB sum widens to
-    HUGEINT; decimal matches that widening, so the `v*200 > t` cut is
-    exact integer arithmetic at ANY SF, not just under the 2^63
-    headroom the previous form relied on).  The output value is the
-    single exact int→double conversion.
+    — the per-part sum accumulates in DECIMAL(38,0), matching the
+    oracle's DuckDB sum that widens BIGINT to HUGEINT, so the
+    `v*200 > t` cut is exact integer arithmetic at ANY SF, not only
+    under 2^63.  The output value is the single exact int→double
+    conversion.
 
     Plan: nation (25 rows, bounded) broadcasts into supplier; the ~1/25
     supplier slice left-semi-joins into lineitem UNHINTED — it is
     SF-proportional (supplier = SF x 10k rows in TPC-H), so AQE
     broadcasts it while under threshold (it does at every test SF) and
     falls back to shuffle instead of OOMing the build side at cluster
-    scale (the round-5 BROADCAST_OK policy); one partial-agg'd
+    scale (the policy of Q5); one partial-agg'd
     groupBy(l_partkey) shuffle builds vals; the grand total is a 1-row
     aggregate that broadcast-crossJoins back — the standard
     decorrelation of Q11's scalar subquery. At 1000 executors the only
     data-sized exchange is the single partkey shuffle."""
-    nation = (
-        load_table(spark, sf_dir, "nation")
-        .filter(F.col("n_name") == "NATION_7")
-        .select("n_nationkey")
-    )
-    sup = (
-        load_table(spark, sf_dir, "supplier")
-        .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey")
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    # DECIMAL(38,0) accumulation (round-13 review batch F): Spark's
-    # SUM(BIGINT) silently WRAPS on overflow while the oracle's DuckDB
-    # SUM(BIGINT) widens to HUGEINT — at large SF one nation's
-    # Σ|rev|·1e6 (×200 in the threshold) approaches 2^63 and the kept
-    # set would silently diverge.  decimal(38,0) matches the oracle's
-    # widening semantics exactly (the aggregates._MOM dialect-note
-    # policy); the threshold compare stays pure integer arithmetic.
-    vals = (
-        li.join(sup, li.l_suppkey == sup.s_suppkey, "left_semi")
-        .groupBy("l_partkey")
-        .agg(
-            F.sum(micros(revenue_col()).cast("decimal(38,0)")).alias(
-                "v_micros"
-            )
+    return sql(spark, sf_dir, f"""
+        WITH vals AS (
+          SELECT l_partkey,
+                 sum(CAST({sql_micros(REVENUE)} AS DECIMAL(38,0))) AS v_micros
+          FROM {{lineitem}}
+          LEFT SEMI JOIN (
+            SELECT /*+ BROADCAST(n) */ s_suppkey
+            FROM {{supplier}} JOIN {{nation}} n ON s_nationkey = n_nationkey
+            WHERE n_name = 'NATION_7'
+          ) ON l_suppkey = s_suppkey
+          GROUP BY l_partkey
         )
-    )
-    tot = vals.agg(F.sum("v_micros").alias("t_micros"))
-    return (
-        vals.crossJoin(F.broadcast(tot))
-        .filter(F.col("v_micros") * 200 > F.col("t_micros"))
-        .select(
-            "l_partkey",
-            (F.col("v_micros").cast("double") / F.lit(1e6)).alias("part_value"),
-        )
-    )
+        SELECT /*+ BROADCAST(tot) */ l_partkey,
+               CAST(v_micros AS DOUBLE) / 1000000.0D AS part_value
+        FROM vals CROSS JOIN (SELECT sum(v_micros) AS t_micros FROM vals) tot
+        WHERE v_micros * 200 > t_micros
+    """)

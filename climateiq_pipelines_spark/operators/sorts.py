@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from climateiq_pipelines_spark.functions.helpers import REVENUE, revenue_col
+from climateiq_pipelines_spark.functions.helpers import REVENUE
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import load_table
 from climateiq_pipelines_spark.session import checkpoint
@@ -184,7 +184,7 @@ def topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB-safe global top-k. Tie-broken on the (orderkey,
     linenumber) unique pair."""
     li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", revenue_col().alias("revenue")
+        "l_orderkey", "l_linenumber", F.expr(REVENUE).alias("revenue")
     )
     return li.orderBy(
         F.desc("revenue"), F.asc("l_orderkey"), F.asc("l_linenumber")

@@ -17,8 +17,6 @@ whale keys without salting.
 
 from __future__ import annotations
 
-import uuid
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.registry import load_table, sql
 
 
 @register(
@@ -335,11 +333,9 @@ def udtf_native_chunker(spark: SparkSession, sf_dir: str) -> DataFrame:
         1
     ).count():
         raise ValueError("doc exceeds the oracle's 2000-chunk bound")
-    from climateiq_pipelines_spark.session import register_temp_view
-
-    view = register_temp_view(f"cps_chunker_docs_{uuid.uuid4().hex[:12]}")
-    docs.select("doc_id", "text").createOrReplaceTempView(view)
-    return spark.sql(
-        f"SELECT doc_id, c.chunk_idx, c.n_tokens, c.chunk "
-        f"FROM {view}, LATERAL cps_chunk_doc(text) c"
+    return sql(
+        spark, sf_dir,
+        "SELECT doc_id, c.chunk_idx, c.n_tokens, c.chunk "
+        "FROM {docs}, LATERAL cps_chunk_doc(text) c",
+        docs=docs.select("doc_id", "text"),
     )

@@ -24,9 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from climateiq_pipelines_spark.functions.helpers import davg_window, micros
+from climateiq_pipelines_spark.functions.helpers import davg_over, micros
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.registry import load_table
+from climateiq_pipelines_spark.registry import load_table, sql
 
 
 @register(
@@ -161,20 +161,12 @@ def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def win_moving_avg_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """7-row moving average per user: exact micro-unit frame sum divided
     by the frame row count — identical expression tree in the oracle."""
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-6, W.currentRow)
-    )
-    return events.select(
-        "event_id",
-        "user_id",
-        "ts",
-        davg_window(F.col("value"), w).alias("moving_avg7"),
-    )
+    return sql(spark, sf_dir, f"""
+        SELECT event_id, user_id, ts, {davg_over("value", "w")} AS moving_avg7
+        FROM {{events}}
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
+                     ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
+    """)
 
 
 @register(

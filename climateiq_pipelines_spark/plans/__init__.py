@@ -6,8 +6,10 @@ declared rows-only in SURVEY §2) ``ORACLES[key] = <DuckDB SQL>``.
 The driver runs both sides at sf0.01 and compares row-count + schema +
 order-insensitive value-hash.
 
-There is no custom parser or IR: PySpark's DataFrame DSL is the query
-language and Catalyst is the only IR (SURVEY §3.3).
+There is no custom parser or IR: relational builders are Spark SQL text
+over ``registry.load_table`` frames (``registry.sql``), the DataFrame DSL
+carries UDF, streaming and iterative bodies, and Catalyst is the only IR
+(SURVEY §3.3).
 """
 
 from __future__ import annotations

@@ -50,7 +50,9 @@ import atexit
 import os
 import shutil
 import tempfile
-from typing import Any, Callable
+import threading
+from contextlib import contextmanager
+from typing import Any, Callable, Iterator
 
 from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
@@ -84,6 +86,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def py4j_commands() -> Iterator[list[str]]:
+    """Collect the py4j commands the calling thread sends inside the
+    block, memory commands (``m``) left out: py4j's finalizer thread and
+    Python's GC send those whenever they run, so they are no cost of
+    the block and would make one build's count vary run to run."""
+    from py4j.clientserver import ClientServerConnection
+    from py4j.java_gateway import GatewayConnection
+
+    thread = threading.get_ident()
+    sent: list[str] = []
+    saved = {cls: cls.send_command for cls in (ClientServerConnection, GatewayConnection)}
+    for cls, send in saved.items():
+        def counting(self, command, *args, _send=send, **kwargs):
+            if threading.get_ident() == thread and not command.startswith("m\n"):
+                sent.append(command)
+            return _send(self, command, *args, **kwargs)
+
+        cls.send_command = counting
+    try:
+        yield sent
+    finally:
+        for cls, send in saved.items():
+            cls.send_command = send
 
 
 class _Scope:

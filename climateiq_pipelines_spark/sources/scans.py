@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 
 from climateiq_pipelines_spark.functions.helpers import exact_agg, sql_dsum
 from climateiq_pipelines_spark.plans import register
-from climateiq_pipelines_spark.registry import TABLES, load_table
+from climateiq_pipelines_spark.registry import TABLES, load_table, sql
 from climateiq_pipelines_spark.session import new_temp_dir
 from climateiq_pipelines_spark.sources.merge_demo import (
     INSERT_PRICE,
@@ -47,10 +47,10 @@ def scan_parquet_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     with exactly 3 columns and PushedFilters [EqualTo(l_returnflag,R)] —
     column pruning + row-group skipping, the foundation of every other
     plan at 100 TB."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.filter(F.col("l_returnflag") == "R").select(
-        "l_orderkey", "l_quantity", "l_returnflag"
-    )
+    return sql(spark, sf_dir, """
+        SELECT l_orderkey, l_quantity, l_returnflag
+        FROM {lineitem} WHERE l_returnflag = 'R'
+    """)
 
 
 _COUNTS_ORACLE = "\nUNION ALL\n".join(

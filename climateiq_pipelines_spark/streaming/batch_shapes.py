@@ -28,13 +28,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from climateiq_pipelines_spark.functions.helpers import davg, sql_davg
+from climateiq_pipelines_spark.functions.helpers import exact_sql, sql_davg
 from climateiq_pipelines_spark.plans import register
 from climateiq_pipelines_spark.registry import (
     load_table,
     ntz_of_window_bound,
     read_events_stream,
     read_events_stream_micros,
+    sql,
 )
 from climateiq_pipelines_spark.streaming.await_util import run_to_memory
 
@@ -56,25 +57,16 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     to scalar start/end (driver hash takes no structs). Streaming twin:
     readStream.groupBy(window(ts,'1 day'), type) + watermark — see
     stream_readstream_demo."""
-    events = load_table(spark, sf_dir, "events")
-    win = F.window("ts", "1 day")
-    return (
-        events.groupBy(win, "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            # helpers.davg — the designated engine twin of sql_davg this
-            # key's oracle already uses (round-12 review: an inline copy
-            # here could drift from the shared fixed-point contract).
-            davg(F.col("value"), "avg_value"),
+    return sql(spark, sf_dir, f"""
+        SELECT window.start AS win_start, window.end AS win_end,
+               event_type, n_events, avg_value
+        FROM (
+          SELECT window, event_type,
+                 {exact_sql([("count", "n_events"), ("davg1", "value", "avg_value")])}
+          FROM {{events}}
+          GROUP BY window(ts, '1 day'), event_type
         )
-        .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
-            "event_type",
-            "n_events",
-            "avg_value",
-        )
-    )
+    """)
 
 
 @register(

@@ -35,11 +35,18 @@ def test_bench_prints_one_json_line_and_no_console_noise(tmp_path):
     lines = out.stdout.splitlines()
     assert len(lines) == 1, out.stdout
     assert json.loads(lines[0])["n_queries"] == 1
+    detail = json.loads((tmp_path / "detail.json").read_text())
     # per-run codegen compilation counts go to the detail file only
-    compiles = json.loads((tmp_path / "detail.json").read_text())["compiles"]
+    compiles = detail["compiles"]
     assert list(compiles) == ["llm_ngram_jaccard"], compiles
     runs = compiles["llm_ngram_jaccard"]
     assert len(runs) == 2 and all(type(c) is int and c >= 0 for c in runs), runs
+    # so does the second run's build layer: seconds and py4j commands
+    build = detail["build"]
+    assert list(build) == ["llm_ngram_jaccard"], build
+    build_s, commands = build["llm_ngram_jaccard"]
+    assert type(build_s) is float and build_s > 0, build
+    assert type(commands) is int and commands > 0, build
 
 
 def test_driver_session_turns_console_progress_off():

@@ -762,6 +762,34 @@ def test_release_blocks_drops_registered_temp_views(spark):
     assert name not in S._SCOPE.views
 
 
+def _sql_text_keys() -> list[str]:
+    """Keys whose builder runs a Spark SQL text (registry.sql or
+    spark.sql)."""
+    import inspect
+
+    return sorted(
+        k for k, fn in QUERIES.items()
+        if re.search(r"\bsql\(\s*spark\b|spark\.sql\(", inspect.getsource(fn))
+    )
+
+
+@pytest.mark.parametrize("key", _sql_text_keys())
+def test_sql_text_key_leaves_no_temp_view(spark, key):
+    """A SQL text binds its frames as temp views only while it is
+    analyzed: after the key's action and a keep-metadata release the
+    catalog holds no temp view the key created (a fixed or
+    unregistered name would outlive the call, shared across sf_dirs)."""
+    from climateiq_pipelines_spark.session import release_blocks
+
+    def temp_views() -> set[str]:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    QUERIES[key](spark, SF_SMALL).collect()
+    release_blocks(spark, keep_lazy_metadata=True)
+    assert temp_views() - before == set()
+
+
 def test_gate_count_memoizes_per_session_and_sfdir(spark):
     """The measured-payload broadcast gates cost one count() action per
     evaluation; the scalar is deterministic per (session, sf_dir), so
